@@ -1101,6 +1101,36 @@ def sample_ops(spark, sf):
         .unionByName(e).unionByName(g).orderBy("op", "doc_id", "v1")
 
 
+def _wds_gate_dir(sf: str) -> str:
+    """Fresh export dir for :func:`export_webdataset_manifest`, one per
+    (absolute sf path, process): two corpora sharing a basename, or two
+    concurrent runs (a bench beside a test session), never share or
+    rmtree each other's export. It is recreated each run, and the dirs
+    of exited processes are swept, so /tmp holds at most one tar copy
+    of the documents table per live process (a fresh mkdtemp per
+    invocation would accrete one per gate/bench/test run)."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    key = hashlib.sha1(os.path.abspath(sf).encode()).hexdigest()[:12]
+    prefix = os.path.join(tempfile.gettempdir(), f"delver_wds_gate_{key}_")
+    for stale in glob.glob(prefix + "*"):
+        pid = stale[len(prefix):]
+        if pid.isdigit() and int(pid) != os.getpid():
+            try:
+                os.kill(int(pid), 0)  # signal 0: existence probe only
+            except ProcessLookupError:
+                shutil.rmtree(stale, ignore_errors=True)
+            except PermissionError:
+                pass  # alive, another user's
+    out = prefix + str(os.getpid())
+    shutil.rmtree(out, ignore_errors=True)
+    return out
+
+
 def export_webdataset_manifest(spark, sf):
     """REAL WebDataset tar-shard export of the documents table (one
     ``{doc_id}.txt`` member per doc, 64 KiB fixed-range shards) — the
@@ -1112,18 +1142,10 @@ def export_webdataset_manifest(spark, sf):
     orders by doc_id). Tar bytes themselves are pinned vs a stdlib
     tarfile reference in tests/test_webdataset.py."""
     import os
-    import shutil
-    import tempfile
 
     from delver_spark.operators.webdataset import export_webdataset
 
-    # fixed per-sf dir, recreated each run — a fresh mkdtemp per
-    # invocation would accrete a tar copy of the documents table in
-    # /tmp on every gate/bench/test run (r5-s9 review finding)
-    out = os.path.join(tempfile.gettempdir(),
-                       "delver_wds_gate_" + os.path.basename(
-                           sf.rstrip("/") or "sf"))
-    shutil.rmtree(out, ignore_errors=True)
+    out = _wds_gate_dir(sf)
     return export_webdataset(
         spark, os.path.join(sf, "documents.parquet"), out, 65536,
         key_col="doc_id", data_col="text", fmt_col=None, ext="txt",

@@ -444,7 +444,7 @@ class ShardedCuckoo:
     def add_pairs_canonical(self, shard: np.ndarray, i1: np.ndarray,
                             fp: np.ndarray) -> int:
         """Round-commit add from PRE-DERIVED (shard, i1, fp) rows — the
-        engine's distributed form (frontier.cuckoo_pairs_for_urls hashes
+        engine's distributed form (frontier.seen_round_pass hashes
         and derives on the executors; only the 24-byte rows reach the
         driver). Bit-identical to :meth:`add_many_canonical` on the same
         url set: _derive is deterministic and both insert each shard's

@@ -9,7 +9,17 @@ Each round (SURVEY §3.1 "Spark translation"):
   with zero-copy binary views (X1-X11) → admission split (F6):
   same-domain candidates bloom-gated (F7/J3) vs cross-domain stash
   (append-only url_store) → assign enqueue_seq → union frontier delta →
-  treeAggregate bloom merge → snapshot commit (T8).
+  ONE seen-set pass (bitset words or cuckoo rows + admitted counts, one
+  collect) merged on the driver → snapshot commit (T8).
+
+A steady small-G round launches at most 10 Spark jobs: the dequeue
+collect (3: the tombstone broadcast, the host window's shuffle, the
+ordered take), the payload broadcasts and the extract checkpoint (2-3),
+the order job, which also carries each page's lineage candidate counts
+as higher-order columns (1), the admission checkpoint (2: origin
+broadcast, admit pass) and the seen-set pass (1). On a 4-core box each
+small job costs 0.1-0.64 s of process-tree CPU, so the count, not the
+data, sets a small round's cost.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -60,10 +70,9 @@ from .extract import EXTRACT_SCHEMA, make_extractor_arrow
 from .frontier import (
     FRONTIER_SCHEMA,
     STORE_SCHEMA,
-    bloom_bits_for_urls,
-    cuckoo_pairs_for_urls,
     dequeue,
     make_robots_udf,
+    seen_round_pass,
 )
 
 _STORE_SCHEMA_W_HOST = STORE_SCHEMA.add("host", "string", False)
@@ -78,6 +87,17 @@ def _outlink_domain(host_col):
     toks = F.split(host_col, "\\.")
     return F.when(F.size(toks) <= 1, host_col) \
         .otherwise(F.array_join(F.slice(toks, -2, 2), "."))
+
+
+def _in_list(col: str, values: list[str]):
+    """``col IN (values)`` parsed from ONE SQL string. ``Column.isin``
+    makes two JVM calls per value, ~1 s of process-tree CPU for a
+    512-url fetch list on a 4-core box; the parser takes the whole list
+    in one call and yields the same In/InSet predicate, which still
+    pushes down to the parquet scan. ``values`` must be non-empty."""
+    quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+              for v in values)
+    return F.expr(f"`{col}` IN ({','.join(quoted)})")
 
 
 def _explode_outlinks(extracted: DataFrame,
@@ -101,6 +121,29 @@ def _explode_outlinks(extracted: DataFrame,
                     _outlink_domain(F.col("l.host")).alias("domain")))
 
 
+def _page_cand_counts(max_depth: int) -> list:
+    """Each fetched page's ``same_n`` (same-domain candidates under the
+    depth gate — the dfs admission set) and ``stash_n`` (cross-domain
+    candidates) as JVM higher-order columns over ``outlinks``: the gates
+    of the exploded candidate split in ``_finish_round``, applied per page
+    with no explode, shuffle or extra job. Failed pages count 0, as the
+    explode drops them (``size(NULL)`` would read -1); a NULL domain on
+    either side fails both gates, as it does after the explode."""
+    def n_links(gate, pred):
+        return F.when(gate & F.col("success") & F.col("outlinks").isNotNull(),
+                      F.size(F.filter("outlinks", pred))).otherwise(0)
+
+    def link_domain(link):
+        return _outlink_domain(link["host"])
+
+    return [n_links(F.col("depth") < max_depth,
+                    lambda link: link_domain(link) == F.col("domain"))
+            .alias("same_n"),
+            n_links(F.lit(True),
+                    lambda link: link_domain(link) != F.col("domain"))
+            .alias("stash_n")]
+
+
 def _cuckoo_derive_canonical(batches, m: int, shards: int):
     """Shared executor-side derivation for the recrawl/expiry APIs
     (readmit_df / forget_df): canonicalize a batch of RAW urls, hash
@@ -108,7 +151,7 @@ def _cuckoo_derive_canonical(batches, m: int, shards: int):
     (keep, h1, h2, i1, fp, shard_i64) per non-empty batch — one place
     owns the canonicalize→hash→(i1, fp) chain so the insert and delete
     paths cannot desynchronize. (The round-commit path,
-    frontier.cuckoo_pairs_for_urls, hashes ALREADY-canonical urls
+    frontier.seen_round_pass, hashes ALREADY-canonical urls
     zero-copy from Arrow buffers instead — same _derive/shard_of.)"""
     from ..engine.cuckoo import _derive, shard_of
     from ..engine.murmur import hash128_batch
@@ -248,6 +291,10 @@ class CrawlEngine:
         self._shard_gc_paths: list[str] = []
         self.extractor = make_extractor_arrow(n_partitions,
                                               emit_text=collect_documents)
+        # dfs lineage count columns, built once: each Column is several
+        # JVM calls (~0.4 ms of CPU each), ~0.1 s a round if rebuilt
+        self._cand_cols = [] if mode == "news" \
+            else _page_cand_counts(self.max_depth)
 
         # mutable state. The frontier is held MOR-style (Iceberg
         # merge-on-read semantics over localCheckpoints): `frontier` is
@@ -446,27 +493,33 @@ class CrawlEngine:
                         hot_host_threshold=self.hot_host_threshold,
                         seq_hint=self.seq if self._seq_orderable else None,
                         out_stats=deq_stats,
-                        host_budgets=self.host_budgets or None) \
-            .localCheckpoint(eager=True)
-        _t = _mark('dequeue', _t)
+                        host_budgets=self.host_budgets or None)
         # ---- fetch (J1): small batches push an IN-filter into the parquet
         # scan (row-group pruning on url_canon stats) and broadcast the
         # pruned payload; huge batches (big-G rounds / scaling bench) go
         # through a distributed join against the payload table instead.
         small_batch = self.G <= 10000
+        batch_urls = None
         if small_batch:
-            batch_urls = [r["url"] for r in batch.select("url").collect()]
+            # ONE collect: the <= G rows reach the driver anyway (their
+            # urls are the fetch's IN-list), so they come back as an
+            # Arrow-backed local frame instead of a localCheckpoint job
+            # followed by a second collect of the checkpoint
+            batch_tbl = batch.toArrow()
+            batch = self.spark.createDataFrame(batch_tbl, batch.schema)
+            batch_urls = batch_tbl.column("url").to_pylist()
             batch_count = len(batch_urls)
-        elif "batch_count" in deq_stats:
-            # the big-path dequeue derived the count from its own ranking
-            # offsets — no extra count job
-            batch_count = deq_stats["batch_count"]
         else:
-            batch_count = batch.count()
+            batch = batch.localCheckpoint(eager=True)
+            # the big-path dequeue derives the count from its own ranking
+            # offsets — no extra count job
+            batch_count = deq_stats["batch_count"] \
+                if "batch_count" in deq_stats else batch.count()
+        _t = _mark('dequeue', _t)
         if batch_count == 0:
             return False
-        # MOR delete: the dequeued seqs become tombstones (batch is
-        # checkpointed, so this union holds only materialized frames)
+        # MOR delete: the dequeued seqs become tombstones (batch is local
+        # or checkpointed, so this union holds only materialized frames)
         seqs = batch.select("enqueue_seq")
         self._tombstones = seqs if self._tombstones is None \
             else self._tombstones.unionByName(seqs)
@@ -479,8 +532,7 @@ class CrawlEngine:
         # only.
         from ..session import scoped_arrow_batch
         with scoped_arrow_batch(self.spark, 256):
-            extracted = self._fetch_extract(
-                batch, batch_count, batch_urls if small_batch else None)
+            extracted = self._fetch_extract(batch, batch_count, batch_urls)
         _t = _mark('fetch_extract', _t)
 
         # post-extract work is a DAG of independent Spark jobs — run them
@@ -499,7 +551,7 @@ class CrawlEngine:
         IN-pushdown plan (the list is the already-collected batch keys)."""
         payload_cols = ["bytes", "fmt", "caption", "phash", "pix_md5"]
         if batch_urls is not None:
-            payload = self.pages.filter(F.col("url_canon").isin(batch_urls))
+            payload = self.pages.filter(_in_list("url_canon", batch_urls))
             if self.golden is not None:
                 payload = payload.join(
                     self.golden.withColumnRenamed("pixels", "golden_pixels"),
@@ -574,16 +626,28 @@ class CrawlEngine:
                       rnd: int, timings, _mark, _t):
         """Post-extract work for every round, as a concurrent job DAG.
 
-        The jobs {order artifacts, lineage candidate counts, bloom bits of
-        fetched urls} depend only on ``extracted``; they run on a thread
-        pool WHILE the critical path (f_pos -> fused Arrow admission ->
-        sequence assignment) runs its shuffle. Likewise {bloom bits of
-        admitted urls, per-partition admitted counts} overlap the frontier
-        union checkpoint. Driver-side job-launch latency (~0.3-0.5 s x 9
-        jobs) is the dominant serial cost of a round at this scale; the
-        overlap removes most of it. All merges (lineage dict, bitmap OR)
-        happen on the driver after the gather, so the result is
-        bit-identical to the serial order (tests/test_crawl_spark.py
+        Jobs, for every G and both seen filters:
+
+        - the order job (thread pool, depends only on ``extracted``):
+          crawl-order / quarantine / document artifacts plus the fetched
+          and quarantined counts per partition, and — dfs — each page's
+          same-domain and cross-domain candidate counts as higher-order
+          columns (``_page_cand_counts``), summed per partition. News
+          mode runs one more count job: its gate calls the robots
+          pandas UDF, which cannot run inside a higher-order function;
+        - the critical path: fused Arrow admission (markers ∪ candidates
+          -> one colocating pass -> sequence rank -> admitted checkpoint);
+        - ONE seen-set pass over the round's inserts (non-quarantined
+          fetched urls ∪ admitted ``(url, partition_id)``;
+          ``frontier.seen_round_pass``): per-partition admitted counts
+          plus the bitset words or the cuckoo ``(shard, i1, fp)`` rows,
+          one ``toArrow``. It overlaps the stash union.
+
+        Driver-side job launches are the dominant serial cost of a round
+        at this scale (0.1-0.64 s of CPU each on a 4-core box). All
+        merges (lineage dict, bitmap OR, canonical cuckoo commit) happen
+        on the driver after the gather, so the result is bit-identical
+        to the serial order (tests/test_crawl_spark.py
         test_big_g_path_matches_oracle pins this)."""
         from concurrent.futures import ThreadPoolExecutor
 
@@ -620,12 +684,26 @@ class CrawlEngine:
                     .drop("page_domain", "domain", "page_url"))
             stash = cands.filter(F.col("domain") != F.col("page_domain"))
         fetch_seq0 = self.fetch_seq
+        # dfs lineage counts ride the order job as per-page columns; news
+        # keeps a count job (its gate calls the robots pandas UDF, which
+        # cannot run inside a higher-order function)
+        cand_cols = self._cand_cols
+        cand_names = [] if news else ["same_n", "stash_n"]
 
         def job_order():
+            """Order artifacts + {partition_id: lineage counters}."""
+            def counters(n, same_n=0, stash_n=0):
+                return {"fetched": int(n), "deduped": int(same_n),
+                        "enqueued": 0, "stashed": int(stash_n)}
+
             if self.collect_order:
-                ext_pd = extracted.drop("outlinks").toPandas().sort_values("pos")
-                by_part = {int(k): int(v) for k, v in
-                           ext_pd.groupby("partition_id").size().items()}
+                ext_pd = extracted.select("*", *cand_cols) \
+                    .drop("outlinks").toPandas().sort_values("pos")
+                g = ext_pd.groupby("partition_id")
+                sums = g[cand_names].sum() if cand_names else None
+                agg = {int(k): counters(n, *(sums.loc[k] if cand_names
+                                             else ()))
+                       for k, n in g.size().items()}
                 rows = [{"seq": fetch_seq0 + int(r.pos), "url_canon": r.url_canon,
                          "depth": int(r.depth), "round": rnd, "host": r.host,
                          "success": bool(r.success)}
@@ -639,14 +717,18 @@ class CrawlEngine:
                     mask = ext_pd["success"] & ext_pd["quarantined"].isna()
                     if news:  # articles only: processArticle skips depth 0
                         mask &= ext_pd["depth"] > 0
-                    doc = ext_pd[mask].copy()
+                    doc = ext_pd[mask].drop(columns=cand_names)
                     doc["round"] = rnd
-                return by_part, rows, doc, quar, len(quar)
-            parts = extracted.groupBy("partition_id").agg(
-                F.count("*").alias("count"),
-                F.sum(F.when(F.col("quarantined").isNotNull(), 1)
-                      .otherwise(0)).alias("q_n")).collect()
-            by_part = {int(r["partition_id"]): int(r["count"]) for r in parts}
+                return agg, rows, doc, quar, len(quar)
+            parts = extracted.select("*", *cand_cols) \
+                .groupBy("partition_id").agg(
+                    F.count("*").alias("count"),
+                    F.sum(F.when(F.col("quarantined").isNotNull(), 1)
+                          .otherwise(0)).alias("q_n"),
+                    *[F.sum(c).alias(c) for c in cand_names]).collect()
+            agg = {int(r["partition_id"]): counters(
+                       r["count"], *(r[c] for c in cand_names))
+                   for r in parts}
             q_total = sum(int(r["q_n"]) for r in parts)
             if q_total:
                 (extracted.filter(F.col("quarantined").isNotNull())
@@ -672,19 +754,11 @@ class CrawlEngine:
                                   if c in extracted.columns])
                  .withColumn("round", F.lit(rnd))
                  .write.mode("overwrite").parquet(dd))
-            return by_part, None, None, None, q_total
+            return agg, None, None, None, q_total
 
-        def job_cand_counts():
-            if news:
-                return (same.groupBy("partition_id")
-                        .agg(F.count("*").alias("same_n"))
-                        .withColumn("stash_n", F.lit(0)).collect())
-            return (cands.groupBy("partition_id").agg(
-                F.sum(F.when((F.col("domain") == F.col("page_domain"))
-                             & (F.col("page_depth") < self.max_depth), 1)
-                      .otherwise(0)).alias("same_n"),
-                F.sum(F.when(F.col("domain") != F.col("page_domain"), 1)
-                      .otherwise(0)).alias("stash_n")).collect())
+        def job_news_cand_counts():
+            return (same.groupBy("partition_id")
+                    .agg(F.count("*").alias("same_n")).collect())
 
         # partitioning scaled to the round: toy rounds (bench.py's 2k-G
         # corpus, unit tests) run the SAME plan at 1 partition — no
@@ -692,31 +766,17 @@ class CrawlEngine:
         par = max(sc.defaultParallelism, 4)
         n_parts = max(1, min(par, batch_count // 2000))
 
-        def job_bits_fetched():
-            if news:
-                # news.go never markVisited's the fetched page — only
-                # admitted outlinks enter the seen-set
-                return np.zeros(len(self.bloom.gen0.words), dtype=np.uint64)
-            # quarantined rows never reached the accumulator → no
-            # markVisited for them (queue/file.go DLQ semantics)
-            return bloom_bits_for_urls(
-                extracted.filter(F.col("quarantined").isNull())
-                .select("url_canon"), self.bloom.max_n,
-                self.bloom.p, partitions=min(par, batch_count // 20000 + 1))
-
         cuckoo_mode = self.seen_filter == "cuckoo"
         pool = ThreadPoolExecutor(max_workers=4)
         probe_bc = None
         try:
             fut_order = pool.submit(job_order)
-            fut_cand = pool.submit(job_cand_counts)
-            # cuckoo mode has no bitset jobs: the round's inserts flow as
-            # derived (shard, i1, fp) rows in ONE job after admission
-            fut_bits_f = None if cuckoo_mode else pool.submit(job_bits_fetched)
+            fut_cand = pool.submit(job_news_cand_counts) if news else None
 
             # ---- critical path: fused Arrow admission (F6/F7) --------------
-            # ONE shuffle by url colocates all proposals of a url TOGETHER
-            # WITH a marker row per fetched url (cogroup-via-union: urls
+            # ONE shuffle by url (a coalesce when the round is one task)
+            # colocates all proposals of a url TOGETHER WITH a marker row
+            # per fetched url (cogroup-via-union: urls
             # are unique in `extracted`, so the fetched-pos gate needs no
             # groupBy stage, no driver collect, and no O(batch)-sized
             # broadcast — only the bloom bitset is broadcast). A single
@@ -740,9 +800,9 @@ class CrawlEngine:
                                         else self.bloom.to_bytes())
             same_schema = same.schema
             cands_tagged = same.withColumn("f_pos", F.lit(None).cast("long"))
+            # marker rows carry only (url, f_pos); the union fills every
+            # candidate column with NULL
             markers = extracted.filter(F.col("quarantined").isNull()).select(
-                *[F.lit(None).cast(f.dataType).alias(f.name)
-                  for f in same_schema.fields if f.name != "url"],
                 F.col("url_canon").alias("url"),
                 F.col("pos").cast("long").alias("f_pos"))
 
@@ -813,7 +873,14 @@ class CrawlEngine:
 
             news_flag = news
             winners_in = cands_tagged if news \
-                else cands_tagged.unionByName(markers)
+                else cands_tagged.unionByName(markers,
+                                              allowMissingColumns=True)
+
+            def colocate(df, n, key):
+                # all proposals of a url must reach one task; a one-task
+                # round gets there by coalesce, without a shuffle job
+                return df.coalesce(1) if n == 1 \
+                    else df.repartition(n, F.col(key))
             if sharded_probe:
                 # route candidates BY SHARD so the admit tasks are
                 # shard-local. Correct because shard_of(h2) is a pure
@@ -841,15 +908,13 @@ class CrawlEngine:
                         shard_of(h2, probe_shards).astype(np.int64),
                         pa.int64())
 
-                winners = (winners_in
-                           .withColumn("shard", shard_udf(F.col("url")))
-                           .repartition(min(n_parts, probe_shards),
-                                        F.col("shard"))
-                           .mapInArrow(admit, same_schema))
+                winners = colocate(
+                    winners_in.withColumn("shard", shard_udf(F.col("url"))),
+                    min(n_parts, probe_shards), "shard") \
+                    .mapInArrow(admit, same_schema)
             else:
-                winners = (winners_in
-                           .repartition(n_parts, F.col("url"))
-                           .mapInArrow(admit, same_schema))
+                winners = colocate(winners_in, n_parts, "url") \
+                    .mapInArrow(admit, same_schema)
             # scalable global sequence: pid-sharded sort + per-pid offsets
             # in one Arrow pass — no single-partition window at big G.
             # Toy rounds are already one partition: a plain window rank
@@ -883,36 +948,24 @@ class CrawlEngine:
             if timings is not None:
                 timings["adm_admit_ckpt"] = timings.get("adm_admit_ckpt", 0.0) \
                     + _time.perf_counter() - _ta
-            admitted_count = admitted.count()
             _t = _mark('admission', _t)
-            self.seq += admitted_count
 
-            if cuckoo_mode:
-                # the round's insert set: markVisited'd pages ∪ admitted
-                # urls (admitted only in news mode — news.go never marks
-                # the fetched page); quarantined rows never markVisited
-                ins = admitted.select("url")
-                if not news:
-                    ins = (extracted.filter(F.col("quarantined").isNull())
-                           .select(F.col("url_canon").alias("url"))
-                           .unionByName(ins))
-                fut_seen = pool.submit(
-                    cuckoo_pairs_for_urls, ins, self.cuckoo.shards,
-                    self.cuckoo.filters[0].m,
-                    min(par, (batch_count + admitted_count) // 20000 + 1))
-            else:
-                fut_bits_a = pool.submit(
-                    bloom_bits_for_urls, admitted.select("url"),
-                    self.bloom.max_n, self.bloom.p,
-                    min(par, admitted_count // 20000 + 1))
-            fut_adm_counts = pool.submit(
-                lambda: admitted.groupBy("partition_id").count().collect())
-
-            # ---- state updates (overlap with the two jobs above) -----------
-            # MOR append + maybe-compact instead of an O(frontier) rewrite
-            self._append_delta(admitted.drop("partition_id", "page_pos"),
-                               admitted_count)
-            self._maybe_compact()
+            # ---- seen-set delta + admitted counts: ONE pass, one collect
+            # over the round's insert set — markVisited'd pages ∪ admitted
+            # urls (admitted only in news mode: news.go never marks the
+            # fetched page; quarantined rows never markVisited). It
+            # overlaps the stash union below.
+            ins = admitted.select("url", "partition_id")
+            if not news:
+                ins = (extracted.filter(F.col("quarantined").isNull())
+                       .select(F.col("url_canon").alias("url"),
+                               F.lit(None).cast("int").alias("partition_id"))
+                       .unionByName(ins))
+            seen_params = (self.cuckoo.shards, self.cuckoo.filters[0].m) \
+                if cuckoo_mode else (self.bloom.max_n, self.bloom.p)
+            fut_seen = pool.submit(seen_round_pass, ins, self.seen_filter,
+                                   seen_params,
+                                   min(par, batch_count // 10000 + 1))
 
             if stash is not None:
                 stash_rows = stash.select(
@@ -927,10 +980,18 @@ class CrawlEngine:
                 if self._store_unions >= 4:  # bound the lazy union chain
                     self.url_store = self.url_store.localCheckpoint(eager=True)
                     self._store_unions = 0
+
+            adm_counts, seen_delta = fut_seen.result()
+            admitted_count = sum(adm_counts.values())
+            self.seq += admitted_count
+            # MOR append + maybe-compact instead of an O(frontier) rewrite
+            self._append_delta(admitted.drop("partition_id", "page_pos"),
+                               admitted_count)
+            self._maybe_compact()
             _t = _mark('state_updates', _t)
 
             # ---- gather + driver-side merges -------------------------------
-            fetched_by_part, order_rows, doc, quar, q_n = fut_order.result()
+            agg, order_rows, doc, quar, q_n = fut_order.result()
             if order_rows is not None:
                 self.crawl_order.extend(order_rows)
             if doc is not None:
@@ -939,17 +1000,12 @@ class CrawlEngine:
                 self.quarantine.extend(quar)
             self.fetch_seq += batch_count
 
-            agg = {p: {"fetched": n, "deduped": 0, "enqueued": 0, "stashed": 0}
-                   for p, n in fetched_by_part.items()}
-            for r in fut_cand.result():
-                c = agg.setdefault(int(r["partition_id"]),
-                                   {"fetched": 0, "deduped": 0,
-                                    "enqueued": 0, "stashed": 0})
-                c["deduped"] += int(r["same_n"])
-                c["stashed"] += int(r["stash_n"])
-            for r in fut_adm_counts.result():
-                agg[int(r["partition_id"])]["enqueued"] += int(r["count"])
-                agg[int(r["partition_id"])]["deduped"] -= int(r["count"])
+            if fut_cand is not None:
+                for r in fut_cand.result():
+                    agg[int(r["partition_id"])]["deduped"] += int(r["same_n"])
+            for part, n in adm_counts.items():
+                agg[part]["enqueued"] += n
+                agg[part]["deduped"] -= n
             for part in sorted(agg):
                 self.lineage.append(
                     {"round": rnd, "partition": int(part), **agg[part]})
@@ -959,12 +1015,11 @@ class CrawlEngine:
                 # semantics — oracle/crawler.py __init__): per-shard
                 # sorted-unique insert of the derived rows, bit-identical
                 # to the oracle's add_many_canonical on the same url set
-                pr = fut_seen.result()
-                self.cuckoo.add_pairs_canonical(pr[:, 0], pr[:, 1],
-                                                pr[:, 2])
+                self.cuckoo.add_pairs_canonical(seen_delta[:, 0],
+                                                seen_delta[:, 1],
+                                                seen_delta[:, 2])
                 _t = _mark('bloom_merge', _t)
                 return
-            bits = fut_bits_f.result() | fut_bits_a.result()
             # quarantined rows never markVisited → not counted as inserts;
             # news mode marks ONLY admitted outlinks (no page inserts)
             total_added = admitted_count if news \
@@ -974,7 +1029,7 @@ class CrawlEngine:
                 # crosses a bound): no rotation can occur anywhere in the
                 # round's op sequence, so the distributed bitset OR is
                 # bit-identical to the oracle's per-page add/add_many
-                self.bloom.merge_words(bits, added_n=total_added)
+                self.bloom.merge_words(seen_delta, added_n=total_added)
             else:
                 # rotation boundary: replay the round's bloom ops exactly
                 # (page add, then the page's admitted batch) driver-side —

@@ -5,9 +5,13 @@ Scale notes (10^10-row frontier, SURVEY §4.2):
     partitioning) followed by a global top-G, which Spark executes as
     TakeOrdered (per-partition top-G, then merge of G-row heaps) — no
     single-partition global sort ever touches the full frontier;
-  - the bloom is built per-partition in numpy and OR-merged with
-    ``treeAggregate(depth=2)`` (BASELINE.json names this topology), then
-    broadcast for the next round's membership probes;
+  - a crawl round's seen-set delta is built per task in numpy by
+    :func:`seen_round_pass` — in the same pass that counts the admitted
+    rows — and OR-merged on the driver after one collect of at most
+    one bitset per task; :func:`bloom_bits_for_urls` keeps the
+    ``treeAggregate(depth=2)`` merge (BASELINE.json names this topology)
+    for inputs with no round bound. The merged bitmap is broadcast for
+    the next round's membership probes;
   - the politeness budget is applied BEFORE any salting (it is a semantic
     limit, not an optimization — SURVEY §4.2.2).
 """
@@ -238,23 +242,18 @@ def bloom_bits_for_urls(urls_df: DataFrame, max_n: int, p: float,
     def build(it):
         import pyarrow as pa
 
+        from ..engine.murmur import string_buf_views
         local = BloomFilter(max_n, p)
         any_rows = False
         for rb in it:
             arr = rb.column(0)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
             if len(arr) == 0:
                 continue
             any_rows = True
             # hash straight from the Arrow string buffers — zero python
             # string objects for the whole batch
-            bufs = arr.buffers()
-            offsets = np.frombuffer(bufs[1], dtype=np.int32,
-                                    count=len(arr) + 1 + arr.offset)[arr.offset:]
-            data = np.frombuffer(bufs[2], dtype=np.uint8)[offsets[0]:offsets[-1]]
-            lens = np.diff(offsets).astype(np.int64)
-            local._set_positions(local.probes_batch_buf(data, lens))
+            local._set_positions(
+                local.probes_batch_buf(*string_buf_views(arr)))
         if any_rows:
             yield pa.RecordBatch.from_arrays(
                 [pa.array([local.words.tobytes()], type=pa.binary())],
@@ -275,35 +274,101 @@ def cuckoo_pairs_for_urls(urls_df: DataFrame, shards: int, m: int,
     ``ShardedCuckoo.add_pairs_canonical`` applies them. Unlike bloom
     bitsets, cuckoo inserts can't OR-merge, so the rows themselves are
     the minimal transferable round state. Returns an (n, 3) int64 array;
-    i1 < m and fp <= 0xFFFF make the int64 view lossless."""
-    import pyarrow as pa
+    i1 < m and fp <= 0xFFFF make the int64 view lossless. (The same
+    kernel as the crawl round's :func:`seen_round_pass`, with no
+    admitted rows to count.)"""
+    rows = urls_df.select(F.col(urls_df.columns[0]).alias("url"),
+                          F.lit(None).cast("int").alias("partition_id"))
+    return seen_round_pass(rows, "cuckoo", (shards, m), partitions)[1]
 
-    from ..engine.cuckoo import _derive, shard_of
-    from ..engine.murmur import hash128_batch_buf
 
+def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
+                    partitions: int | None = None):
+    """A crawl round's seen-set inserts and admitted counts in ONE Arrow
+    pass and one ``toArrow`` collect.
+
+    ``rows`` is ``(url string, partition_id int)``: every url the round
+    inserts, with ``partition_id`` set on the admitted rows and NULL on
+    rows that only insert (the round's fetched pages). Each task hashes
+    its urls zero-copy from the Arrow string buffers and emits one row
+    per partition_id it saw (the admitted count) plus one ``blob`` row
+    with its seen-set delta: the bitset words of a ``BloomFilter(max_n,
+    p)`` (``seen_filter="bloom"``, ``params=(max_n, p)``), or the derived
+    cuckoo ``(shard, i1, fp)`` rows as row-major int64 triples
+    (``"cuckoo"``, ``params=(shards, m)``). The driver merges: bitsets
+    OR, cuckoo rows concatenate (the caller's per-shard canonical commit
+    sorts them) and counts add, so the result does not depend on the
+    partitioning.
+
+    Returns ``(counts, delta)``: ``{partition_id: admitted rows}`` and
+    the OR-merged uint64 words (bloom) or an (n, 3) int64 array
+    (cuckoo)."""
+    assert seen_filter in ("bloom", "cuckoo")
     if partitions is not None:
-        urls_df = urls_df.coalesce(max(1, partitions))
+        # callers size this from the round: small rounds want ONE
+        # bitset, not one per input partition (each is m/8 bytes
+        # through the collect)
+        rows = rows.coalesce(max(1, partitions))
+    if seen_filter == "bloom":
+        nwords = len(BloomFilter(*params).words)
 
-    def derive_pass(it):
+    def seen_pass(it):
+        import pyarrow as pa
+
+        from ..engine.murmur import hash128_batch_buf, string_buf_views
+        if seen_filter == "bloom":
+            local = BloomFilter(*params)
+        else:
+            from ..engine.cuckoo import _derive, shard_of
+            shards, m = params
+            derived = []
+        counts: dict[int, int] = {}
+        any_rows = False
         for rb in it:
-            arr = rb.column(0)
-            if isinstance(arr, pa.ChunkedArray):
-                arr = arr.combine_chunks()
-            if len(arr) == 0:
+            if rb.num_rows == 0:
                 continue
-            from ..engine.murmur import string_buf_views
-            h1, h2 = hash128_batch_buf(*string_buf_views(arr))
-            i1, fp = _derive(h1, h2, m)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(shard_of(h2, shards).view(np.int64)),
-                 pa.array(i1.view(np.int64)),
-                 pa.array(fp.view(np.int64))],
-                names=["shard", "i1", "fp"])
+            any_rows = True
+            pids = rb.column(1).drop_null().to_numpy()
+            for pid, n in zip(*np.unique(pids, return_counts=True)):
+                counts[int(pid)] = counts.get(int(pid), 0) + int(n)
+            h1, h2 = hash128_batch_buf(*string_buf_views(rb.column(0)))
+            if seen_filter == "bloom":
+                local._set_positions(local._probes_from_hash(h1, h2))
+            else:
+                i1, fp = _derive(h1, h2, m)
+                derived.append(np.stack([shard_of(h2, shards).view(np.int64),
+                                         i1.view(np.int64),
+                                         fp.view(np.int64)], axis=1))
+        if not any_rows:
+            return
+        blob = local.words.tobytes() if seen_filter == "bloom" \
+            else np.concatenate(derived).tobytes()
+        pids = list(counts)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(pids + [None], pa.int64()),
+             pa.array([counts[p] for p in pids] + [None], pa.int64()),
+             pa.array([None] * len(pids) + [blob], pa.binary())],
+            names=["partition_id", "n", "blob"])
 
-    tbl = (urls_df.mapInArrow(derive_pass, "shard long, i1 long, fp long")
-           .toArrow())
-    return np.stack([tbl.column(c).to_numpy(zero_copy_only=False)
-                     for c in ("shard", "i1", "fp")], axis=1)
+    tbl = rows.mapInArrow(
+        seen_pass, "partition_id long, n long, blob binary").toArrow()
+    counts: dict[int, int] = {}
+    blobs = []
+    for pid, n, blob in zip(*(tbl.column(c).to_pylist()
+                              for c in ("partition_id", "n", "blob"))):
+        if pid is None:
+            blobs.append(blob)
+        else:
+            counts[pid] = counts.get(pid, 0) + n
+    if seen_filter == "bloom":
+        words = np.zeros(nwords, dtype=np.uint64)
+        for b in blobs:
+            words |= np.frombuffer(b, dtype=np.uint64)
+        return counts, words
+    if not blobs:
+        return counts, np.zeros((0, 3), dtype=np.int64)
+    return counts, np.concatenate(
+        [np.frombuffer(b, dtype=np.int64).reshape(-1, 3) for b in blobs])
 
 
 _SENTINEL = np.int64(1 << 62)

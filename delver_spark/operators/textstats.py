@@ -374,8 +374,8 @@ def ngram_decontaminate_bloom(docs: DataFrame, bench: DataFrame,
     closure; its declarative path broadcast-hash-joins it). Here the
     bench grams compress to a Bloom bitmap (~``-ln p / ln²2`` ≈ 28.8
     bits/gram at p=1e-6 — two orders of magnitude under the string set)
-    built distributedly and OR-merged via treeAggregate, the exact
-    machinery the crawl seen-set uses (frontier.bloom_bits_for_urls).
+    built distributedly and OR-merged via treeAggregate
+    (frontier.bloom_bits_for_urls).
 
     Stages — the corpus is scanned ONCE and never shuffled:
 
@@ -615,9 +615,11 @@ def mixture_upsample(df: DataFrame, rates_milli: dict[str, int],
     # mixes repeat sources single-digit times; 100 epochs (100_000
     # milli) bounds the explode fan-out so a unit-confusion typo
     # (micro-fractions, percents x1000) fails loudly instead of
-    # becoming a map-side row bomb at corpus scale.
+    # becoming a map-side row bomb at corpus scale. bool is an int
+    # subclass, and True would silently read as 1 milli.
     vals = list(rates_milli.values()) + [default_milli]
-    if not all(isinstance(r, int) and 0 <= r <= 100_000 for r in vals):
+    if not all(isinstance(r, int) and not isinstance(r, bool)
+               and 0 <= r <= 100_000 for r in vals):
         raise ValueError("rates are integer milli-fractions in "
                          "[0, 100000] (1000 = one epoch)")
     rate = _group_rate(rates_milli, group_col, default_milli)

@@ -205,3 +205,87 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
     assert eng2.host_budgets == budgets
     eng2.run()
     assert _order_tuples_engine(eng2) == _order_tuples_oracle(oracle)
+
+
+def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
+    """One steady small-G dfs round launches at most 10 Spark jobs: the
+    lineage candidate counts ride the order job, the seen-set delta and
+    admitted counts come from ONE pass, and the dequeue is one collect.
+    Jobs are counted across run_round from the status tracker, ungrouped
+    — the round's pool threads do not inherit a job group, so a group
+    tag would miss their jobs."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    wd = str(tmp_path_factory.mktemp("crawl_jobs"))
+    eng = CrawlEngine(spark, unit_corpus, wd)
+    eng.seed()
+    assert eng.run_round()  # round 0 has no tombstones yet
+    before = set(st.getJobIdsForGroup(None))
+    assert eng.run_round()
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
+def test_page_candidate_counts_equal_explode_groupby(spark):
+    """The per-page ``same_n``/``stash_n`` columns summed per partition
+    equal the explode + groupBy counts they replace, on pages that hit
+    every branch: failed fetches (NULL and empty outlinks, and a failed
+    page that still carries outlinks), quarantined rows, single-token
+    hosts (the no-dot domain branch), NULL link hosts and pages at
+    max_depth."""
+    from pyspark.sql import functions as F
+
+    from delver_spark.operators.crawl import (_explode_outlinks,
+                                              _page_cand_counts)
+    from delver_spark.operators.extract import EXTRACT_SCHEMA
+
+    max_depth = 2
+
+    def links(*hosts):
+        return [(i, f"http://{h}/p{i}" if h else "http://x/", h)
+                for i, h in enumerate(hosts)]
+
+    # (pos, depth, domain, partition_id, success, outlinks, quarantined)
+    pages = [
+        (0, 0, "a.test", 0, True, links("a.test", "www.a.test", "b.test",
+                                        "localhost"), None),
+        (1, 1, "a.test", 0, True, links("sub.a.test", "c.test"), None),
+        (2, 2, "a.test", 1, True, links("a.test", "b.test"), None),  # at max
+        (3, 3, "b.test", 1, True, links("b.test"), None),  # past max
+        (4, 0, "a.test", 1, False, None, None),  # failed, NULL outlinks
+        (5, 0, "a.test", 4, False, [], None),  # failed, empty outlinks
+        (6, 0, "a.test", 4, False, links("a.test", "b.test"), None),
+        (7, 0, "a.test", 4, False, None, "ValueError: bad payload"),
+        (8, 0, "a.test", 2, True, links("a.test"), "ValueError: late"),
+        (9, 0, "localhost", 3, True, links("localhost", "intranet",
+                                           "a.test"), None),  # no dot
+        (10, 1, "intranet", 3, True, links(None, "intranet"), None),
+        (11, 0, "a.test", 3, True, [], None),  # success, no links
+    ]
+    names = ["pos", "depth", "domain", "partition_id", "success",
+             "outlinks", "quarantined"]
+    full = {f.name: None for f in EXTRACT_SCHEMA.fields}
+    rows = [dict(full, **dict(zip(names, p)), url_canon=f"http://p{p[0]}/",
+                 host=p[2]) for p in pages]
+    extracted = spark.createDataFrame(rows, EXTRACT_SCHEMA)
+
+    cands = _explode_outlinks(extracted)
+    want = {r["partition_id"]: (r["same_n"], r["stash_n"]) for r in
+            cands.groupBy("partition_id").agg(
+                F.sum(F.when((F.col("domain") == F.col("page_domain"))
+                             & (F.col("page_depth") < max_depth), 1)
+                      .otherwise(0)).alias("same_n"),
+                F.sum(F.when(F.col("domain") != F.col("page_domain"), 1)
+                      .otherwise(0)).alias("stash_n")).collect()}
+    got = {r["partition_id"]: (r["same_n"], r["stash_n"]) for r in
+           extracted.select("partition_id", *_page_cand_counts(max_depth))
+           .groupBy("partition_id")
+           .agg(F.sum("same_n").alias("same_n"),
+                F.sum("stash_n").alias("stash_n")).collect()}
+    # partition 4 holds only failed pages: no candidates, so no group
+    assert got.pop(4) == (0, 0)
+    assert got == want
+    assert want == {0: (3, 3), 1: (0, 1), 2: (1, 0), 3: (2, 2)}

@@ -65,3 +65,32 @@ def test_entry_smoke(spark):
 
 def test_every_query_has_oracle():
     assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+
+
+def test_wds_gate_dir_per_path_and_process(tmp_path):
+    """The webdataset gate's export dir is keyed by the ABSOLUTE sf path
+    and the pid: same-basename corpora never collide, a rerun recreates
+    its own dir, dirs of exited processes are swept and a live
+    process's dir is left alone."""
+    import os
+    import shutil
+    import subprocess
+
+    a = entrymod._wds_gate_dir(str(tmp_path / "x" / "sf0.01"))
+    b = entrymod._wds_gate_dir(str(tmp_path / "y" / "sf0.01"))
+    assert a != b and a.endswith(f"_{os.getpid()}")
+    os.makedirs(a)
+    open(os.path.join(a, "old.tar"), "wb").close()
+    prefix = a[:-len(str(os.getpid()))]
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    dead, live = prefix + str(gone.pid), prefix + "1"
+    os.makedirs(dead)
+    os.makedirs(live)
+    try:
+        assert entrymod._wds_gate_dir(str(tmp_path / "x" / "sf0.01")) == a
+        assert not os.path.exists(a)  # recreated by the export itself
+        assert not os.path.exists(dead) and os.path.exists(live)
+    finally:
+        for d in (a, dead, live):
+            shutil.rmtree(d, ignore_errors=True)

@@ -11,6 +11,7 @@ from delver_spark.operators.frontier import (
     bloom_bits_for_urls,
     dequeue,
     salted_repartition,
+    seen_round_pass,
 )
 
 
@@ -136,6 +137,39 @@ def test_bloom_bits_match_driver_side(spark):
     ref = BloomFilter(2000, 0.01)
     ref.add_many(urls)
     assert np.array_equal(words, ref.words)
+
+
+def test_seen_round_pass_matches_driver_side(spark):
+    """One pass returns the admitted counts per partition_id (NULL rows
+    insert but are not counted) and the seen-set delta — the bloom words
+    and the cuckoo rows equal a driver-side build over every url, under
+    any partitioning and task count."""
+    from delver_spark.engine.cuckoo import ShardedCuckoo
+
+    urls = [f"http://d{i % 7}.test/p/{i}" for i in range(600)]
+    rows = [(u, None if i % 3 == 0 else i % 5) for i, u in enumerate(urls)]
+    want_counts = {}
+    for _, pid in rows:
+        if pid is not None:
+            want_counts[pid] = want_counts.get(pid, 0) + 1
+    df = spark.createDataFrame(rows, "url string, partition_id int")
+    ref = BloomFilter(2000, 0.01)
+    ref.add_many(urls)
+    ck_ref = ShardedCuckoo.empty(4, 2000)
+    ck_ref.add_many_canonical(urls)
+    for frame, parts in ((df, 1), (df.repartition(7), None)):
+        counts, words = seen_round_pass(frame, "bloom", (2000, 0.01), parts)
+        assert counts == want_counts
+        assert np.array_equal(words, ref.words)
+        counts, pairs = seen_round_pass(
+            frame, "cuckoo", (4, ck_ref.filters[0].m), parts)
+        assert counts == want_counts and pairs.shape == (600, 3)
+        ck = ShardedCuckoo.empty(4, 2000)
+        ck.add_pairs_canonical(pairs[:, 0], pairs[:, 1], pairs[:, 2])
+        assert ck.to_bytes() == ck_ref.to_bytes()
+    counts, words = seen_round_pass(df.filter("false"), "bloom",
+                                    (2000, 0.01), 1)
+    assert counts == {} and not words.any()
 
 
 def test_salted_repartition_spreads_hot_key(spark):

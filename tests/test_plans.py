@@ -3,6 +3,7 @@ broadcast joins must actually reach the scan (SURVEY §4.1; the 100 TB
 design depends on these, so they are pinned as tests)."""
 
 import __spark_entry__ as entrymod
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
@@ -65,6 +66,31 @@ def test_in_filter_pushdown_for_fetch(spark, tmp_path):
     pruned = pages.filter(F.col("url_canon").isin(["u1", "u2", "u3"]))
     plan = _plan(pruned)
     assert "PushedFilters" in plan and "url_canon" in plan.split("PushedFilters")[1].split("\n")[0]
+
+
+def test_engine_in_list_exact_and_pushed(spark, tmp_path):
+    """The engine builds the fetch IN-list from one SQL string
+    (crawl._in_list): quotes, backslashes, escape-like sequences and
+    non-ASCII must match exactly, and the predicate must still push
+    down to the payload scan."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from delver_spark.operators.crawl import _in_list
+
+    odd = ["http://a.test/it's", "http://a.test/back\\slash",
+           "http://a.test/\\n\\u0041%_", "http://ü.test/ß?q='x'",
+           'http://a.test/"dq"']
+    urls = [f"u{i}" for i in range(50)] + odd + ["http://a.test/its"]
+    d = tmp_path / "pages.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"url_canon": urls}), str(d / "part-0.parquet"))
+    pages = spark.read.parquet(str(d))
+    want = odd + ["u7"]
+    pruned = pages.filter(_in_list("url_canon", want))
+    assert sorted(r.url_canon for r in pruned.collect()) == sorted(want)
+    plan = _plan(pruned)
+    assert "url_canon" in plan.split("PushedFilters")[1].split("\n")[0]
 
 
 def test_whole_stage_codegen_on_textstats(spark):
@@ -198,6 +224,18 @@ def test_mixture_upsample_semantics(spark):
     assert "Python" not in _plan(mixture_upsample(d, {"en": 2500}))
     with pytest.raises(ValueError):
         mixture_upsample(d, {"en": -1})
+
+
+@pytest.mark.parametrize("rates,default", [({"en": True}, 1000),
+                                           ({"en": 2000}, False)])
+def test_mixture_upsample_rejects_bool_rates(spark, rates, default):
+    """bool is an int subclass: True must not pass as 1 milli (nor False
+    as 0) — the rate check exists to make unit typos fail loudly."""
+    from delver_spark.operators.textstats import mixture_upsample
+
+    d = spark.createDataFrame([(1, "en")], "doc_id long, lang string")
+    with pytest.raises(ValueError):
+        mixture_upsample(d, rates, default_milli=default)
 
 
 def test_deterministic_split_semantics(spark):

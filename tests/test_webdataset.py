@@ -293,3 +293,40 @@ def test_size_col_skips_payload_read(spark, tmp_path):
     for f in sorted(os.listdir(oa)):
         if f.endswith(".tar"):
             assert open(oa / f, "rb").read() == open(ob / f, "rb").read()
+
+
+def test_read_batches_bound_counts_caption_bytes(tmp_path):
+    """Caption-heavy shard: every batch the tar scan emits holds at most
+    ``batch_bytes`` of payload PLUS caption bytes (or one oversized
+    row), and the batches concatenate to every sample in member order.
+    Payload alone is tiny here, so a payload-only bound would pack the
+    whole shard into one batch over 20x the bound."""
+    from delver_spark.operators.webdataset import _tar_row_batches
+
+    path = str(tmp_path / "shard-000000.tar")
+    want = []
+    with tarfile.open(path, "w") as tf:
+        for i in range(200):
+            key, data = f"img-{i:05d}", bytes([i % 256]) * 8
+            cap = ("é" * (300 + i % 17)) if i % 5 else None
+            for name, blob in ((f"{key}.ppm", data),
+                               *(((f"{key}.txt", cap.encode()),)
+                                 if cap is not None else ())):
+                info = tarfile.TarInfo(name)
+                info.size = len(blob)
+                tf.addfile(info, io.BytesIO(blob))
+            want.append((key, data, "ppm", cap))
+
+    bound = 4096
+    batches = list(_tar_row_batches(path, bound, caption=True))
+    assert len(batches) > 1
+    for b in batches:
+        size = sum(len(d) for d in b["bytes"]) + sum(
+            len(c.encode()) for c in b["cap"] if c is not None)
+        assert size <= bound or len(b["key"]) == 1
+    got = [row for b in batches
+           for row in zip(b["key"], b["bytes"], b["fmt"], b["cap"])]
+    assert got == want
+    # caption=False drops the .txt members, so only payload counts
+    plain = list(_tar_row_batches(path, bound, caption=False))
+    assert len(plain) == 1 and plain[0]["cap"] == [None] * 200
