@@ -153,18 +153,3 @@ class BloomFilter:
         n = int(blob[i2 + 1 : i3])
         words = np.frombuffer(blob[i3 + 1 :], dtype=np.uint64)
         return cls(max_n, p, words=words, n=n)
-
-
-def make_partition_bitset_builder(max_n: int, p: float):
-    """Returns f(iter_of_url_lists) usable in RDD.treeAggregate: builds a
-    local words bitset from an iterable of url strings."""
-    proto = BloomFilter(max_n, p)
-
-    def build(urls) -> np.ndarray:
-        local = BloomFilter(max_n, p)
-        urls = list(urls)
-        if urls:
-            local._set_positions(local.probes_batch(urls))
-        return local.words
-
-    return build, proto

@@ -174,11 +174,3 @@ class RollingBloomFilter:
             off += ln
         rbf = cls(bloom_count, blooms[0].max_n, blooms[0].p, blooms=blooms)
         return rbf
-
-
-def blooms_from_bytes(blob: bytes) -> list[BloomFilter]:
-    """Generation list from either serialization (rolling multi-gen blob
-    or a plain single-bloom blob) — the admission task's probe loader."""
-    if blob.startswith(_MAGIC):
-        return RollingBloomFilter.from_bytes(blob).blooms
-    return [BloomFilter.from_bytes(blob)]

@@ -7,10 +7,12 @@ Each round (SURVEY §3.1 "Spark translation"):
   small rounds; broadcast-keys-into-the-scan for big rounds so image
   bytes are never shuffled) → decode + extract in ONE mapInArrow pass
   with zero-copy binary views (X1-X11) → admission split (F6):
-  same-domain candidates bloom-gated (F7/J3) vs cross-domain stash
+  same-domain candidates seen-set-gated (F7/J3) vs cross-domain stash
   (append-only url_store) → assign enqueue_seq → union frontier delta →
-  ONE seen-set pass (bitset words or cuckoo rows + admitted counts, one
-  collect) merged on the driver → snapshot commit (T8).
+  ONE seen-set pass (the seen-set delta + admitted counts, one collect)
+  committed on the driver → snapshot commit (T8). The seen-set — the
+  rolling bloom or the sharded cuckoo, and how it is probed — lives
+  behind one interface in operators/seen.py.
 
 A steady small-G round launches at most 10 Spark jobs: the dequeue
 collect (3: the tombstone broadcast, the host window's shuffle, the
@@ -44,14 +46,14 @@ not per round, so no full-store shuffle ever runs (SURVEY J4/O5 + Badger
 Set overwrite semantics, resource/maps/persistent.go:23-41).
 
 Determinism contract: matches delver_spark.oracle.crawler.OracleCrawler
-bit-for-bit on crawl order and bloom bitmap (tests/test_crawl_spark.py).
+bit-for-bit on crawl order and seen-set bytes (tests/test_crawl_spark.py,
+tests/test_crawl_cuckoo.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -60,10 +62,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..engine.bloom import BloomFilter
-from ..engine.cuckoo import ShardedCuckoo
 from ..engine.robots import RobotsCache
-from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import canonicalize, host_of
 from ..sources.snapshot import SnapshotStore
 from .extract import EXTRACT_SCHEMA, make_extractor_arrow
@@ -74,6 +73,7 @@ from .frontier import (
     make_robots_udf,
     seen_round_pass,
 )
+from .seen import from_blob, new_seen
 
 _STORE_SCHEMA_W_HOST = STORE_SCHEMA.add("host", "string", False)
 
@@ -144,27 +144,56 @@ def _page_cand_counts(max_depth: int) -> list:
             .alias("stash_n")]
 
 
-def _cuckoo_derive_canonical(batches, m: int, shards: int):
-    """Shared executor-side derivation for the recrawl/expiry APIs
-    (readmit_df / forget_df): canonicalize a batch of RAW urls, hash
-    with murmur3-128 and derive the seen-set rows. Yields
-    (keep, h1, h2, i1, fp, shard_i64) per non-empty batch — one place
-    owns the canonicalize→hash→(i1, fp) chain so the insert and delete
-    paths cannot desynchronize. (The round-commit path,
-    frontier.seen_round_pass, hashes ALREADY-canonical urls
-    zero-copy from Arrow buffers instead — same _derive/shard_of.)"""
-    from ..engine.cuckoo import _derive, shard_of
-    from ..engine.murmur import hash128_batch
+def _admit_pass(probe, news: bool, out_cols: list[str]):
+    """The fused admission's mapInArrow body: per colocated partition,
+    the seen-set probe, the fetched-pos gate and winner selection
+    (frontier.admission_keep_mask[_news] has the semantics). It MUST see
+    the partition as one frame: a per-batch min-page would admit a url
+    from two pages (tests pin this with a tiny Arrow batch size). Urls
+    hash zero-copy from the string buffers and winners leave by
+    Table.filter — no python string ever materializes."""
+    def admit(it):
+        import pyarrow.compute as pc
 
-    for rb in batches:
-        keep = [c for c in (canonicalize(u) for u in
-                            rb.column(0).to_pylist())
-                if c is not None]
-        if not keep:
-            continue
-        h1, h2 = hash128_batch(np.array(keep, dtype=object))
-        i1, fp = _derive(h1, h2, m)
-        yield keep, h1, h2, i1, fp, shard_of(h2, shards).astype(np.int64)
+        from ..engine.murmur import hash128_batch_buf, string_buf_views
+        from .frontier import admission_keep_mask, admission_keep_mask_news
+        seen = probe.load()
+        tbls = [pa.Table.from_batches([rb]) for rb in it]
+        if not tbls:
+            return
+        # NOT combine_chunks'd: a >2 GB url column in one shuffle
+        # partition cannot collapse to a single int32-offset chunk
+        # (ArrowInvalid) — hash per chunk and concatenate instead,
+        # so oversized partitions stay correct, just slower
+        t = pa.concat_tables(tbls)
+        if t.num_rows == 0:
+            return
+        datas, lens = [], []
+        for arr in t.column("url").chunks:
+            if len(arr) == 0:
+                continue
+            d, ln = string_buf_views(arr)
+            datas.append(d)
+            lens.append(ln)
+        h1, h2 = hash128_batch_buf(
+            datas[0] if len(datas) == 1 else np.concatenate(datas),
+            lens[0] if len(lens) == 1 else np.concatenate(lens))
+        page_pos = pc.fill_null(t.column("page_pos"), -1).to_numpy()
+        if news:
+            # news winner rule: single FIRST proposal per url by
+            # (page_pos, link_pos) — SetBytes inside urlAllowed
+            # dedupes within-page too; no marker rows exist
+            link_pos = t.column("link_pos").to_numpy(zero_copy_only=False)
+            keep = admission_keep_mask_news(h1, h2, page_pos, link_pos, seen)
+        else:
+            f_pos = pc.fill_null(t.column("f_pos"), -1).to_numpy()
+            keep = admission_keep_mask(h1, h2, page_pos, f_pos, f_pos >= 0,
+                                       seen)
+        if keep.any():
+            # drops f_pos and any routing column the colocation added
+            yield from t.filter(pa.array(keep)).select(out_cols).to_batches()
+
+    return admit
 
 
 class CrawlEngine:
@@ -184,9 +213,10 @@ class CrawlEngine:
         self.collect_documents = collect_documents
         # "dfs" = dfs_basic accumulator (same-domain gate, stash, refill);
         # "news" = news accumulator (functions/news.py gates at admission
-        # incl. per-outlink robots, bloom marks admitted urls only, no
+        # incl. per-outlink robots, seen-set marks admitted urls only, no
         # stash/refill, maxDepth=1, articles = depth>0 fetched pages)
-        assert mode in ("dfs", "news")
+        if mode not in ("dfs", "news"):
+            raise ValueError(f"mode must be 'dfs' or 'news', got {mode!r}")
         self.mode = mode
         # rows-per-host count above which the dequeue pre-cuts a host with
         # the exact salted two-phase ranking (frontier.dequeue docstring).
@@ -241,54 +271,9 @@ class CrawlEngine:
         self.robots_ok = None
         self._robots_bc = None
 
-        # the seen-set is the reference's ROLLING bloom (rotate-on-overflow,
-        # newest-first write, any-match read — rolling_bloom.go): overflow
-        # no longer kills the crawl, it rotates a generation exactly as the
-        # reference does (including the lost-insert quirk; see
-        # engine/rolling_bloom.py and _finish_round's replay path)
-        self.bloom = RollingBloomFilter(p.get("bloom_count", 1),
-                                        p["bloom_max_n"], p["bloom_p"])
-        # seen_filter="cuckoo" swaps in the deletion-capable sharded
-        # cuckoo (engine/cuckoo.py — the north star's named alternative).
-        # Semantics are DEFINED in oracle/crawler.py (the spec): same
-        # round-snapshot probe contract; the round's insert set commits
-        # at round END in canonical per-shard order, which is
-        # partition-invariant, so the distributed engine's filter is
-        # bit-identical to the oracle's without any per-op replay. The
-        # payoff is readmit(): per-URL recrawl the bloom cannot express.
-        assert seen_filter in ("bloom", "cuckoo")
-        self.seen_filter = seen_filter
-        self.cuckoo = ShardedCuckoo.empty(
-            p.get("cuckoo_shards", 4),
-            p.get("cuckoo_capacity") or p["bloom_max_n"]) \
-            if seen_filter == "cuckoo" else None
-        # seen_probe="sharded" (cuckoo only): the admission pass routes
-        # candidates by shard_of(h2) and each task lazily loads ONLY its
-        # shards' blobs from the workdir (engine.cuckoo.ShardFileProbe)
-        # instead of broadcasting the whole filter — O(filter) total read
-        # volume vs O(executors x filter) broadcast, the plan that still
-        # works when a 10^10-URL filter (~20 GB) exceeds any broadcast.
-        # PERFORMANCE-ONLY knob: probe results are identical, so crawl
-        # order/lineage/filter bytes are unchanged (equality-pinned).
-        assert seen_probe in ("broadcast", "sharded")
-        assert seen_probe == "broadcast" or seen_filter == "cuckoo", \
-            "seen_probe='sharded' requires the cuckoo seen-set"
-        self.seen_probe = seen_probe
-        self._seen_shard_dir = os.path.join(workdir, "seen_shards")
-        self._shard_manifest: dict[int, str] | None = None  # None = unsynced
-        self._shard_sync_n = 0
-        # per-ENGINE-INSTANCE tag in every shard filename: a resumed (or
-        # second) engine on the same workdir must never reuse a path —
-        # python workers cache blobs BY PATH on the immutability promise,
-        # and a reused name with different contents serves a stale filter
-        # (caught by test_sharded_probe_survives_resume: the post-resume
-        # round probed the pre-resume filter and over-admitted)
-        self._shard_run_tag = uuid.uuid4().hex[:8]
-        # paths superseded by the PREVIOUS sync — deletable at the next
-        # one (keep-last-2: the round in flight reads the current
-        # manifest, the previous round's outputs are materialized before
-        # its round ends, so nothing can still read two generations back)
-        self._shard_gc_paths: list[str] = []
+        # the URL-seen set (operators/seen.py): the rolling bloom, or the
+        # sharded cuckoo whose payoff is readmit(), per-URL recrawl
+        self.seen = new_seen(seen_filter, p, workdir, seen_probe)
         self.extractor = make_extractor_arrow(n_partitions,
                                               emit_text=collect_documents)
         # dfs lineage count columns, built once: each Column is several
@@ -331,6 +316,13 @@ class CrawlEngine:
         self.lineage: list[dict] = []
         self.documents: list[pd.DataFrame] = []
         self.quarantine: list[dict] = []
+
+    # the seen-set's kind and probe plan, and its filter (None for the
+    # family not in use)
+    seen_filter = property(lambda self: self.seen.kind)
+    seen_probe = property(lambda self: self.seen.probe)
+    bloom = property(lambda self: self.seen.bloom)
+    cuckoo = property(lambda self: self.seen.cuckoo)
 
     # ------------------------------------------------------------------ seed
     def seed(self):
@@ -383,51 +375,6 @@ class CrawlEngine:
             self._tombstones = None
             self._tomb_count = 0
             self._base_count = self.frontier_count
-
-    # ----------------------------------------------------------- bloom bounds
-    def _round_fits_bloom(self, total_added: int) -> bool:
-        """True iff NO bloom op of this round can fail the reference's
-        bounds check (bloom.go:228-246: n >= maxN or p̂(n) >= p, checked
-        BEFORE each op). Both bounds are monotone in n and the largest
-        pre-op n is ``gen0.n + total_added - 1``, so checking there covers
-        every op — when it passes, the distributed bitset merge equals
-        the sequential per-op inserts bit-for-bit."""
-        import math
-        if total_added == 0:
-            return True  # no ops this round → no bound can trip
-        g = self.bloom.gen0
-        worst = g.n + total_added - 1
-        if worst >= g.max_n:
-            return False
-        kf, mf = g.k_float, g.m_float
-        p_hat = (1 - math.exp(-kf * (worst + 0.5) / (mf - 1))) ** kf
-        return p_hat < g.p
-
-    def _replay_bloom_ops(self, extracted: DataFrame, admitted: DataFrame):
-        """Exact sequential replay of the round's bloom ops for rotation
-        boundaries: for each fetched page in pos order, ``add(url)`` then
-        ``add_many(admitted urls of that page)`` — the oracle's op
-        sequence (dfs_basic.go:48,121-123) — against the rolling filter,
-        so rotation (and the reference's lost-insert quirk) lands on
-        exactly the same op. Errors are dropped like the reference's
-        log-and-continue. Collects are G-bounded and run at most once per
-        maxN/G rounds."""
-        fetched = sorted(
-            (r["pos"], r["url_canon"])
-            for r in extracted.filter(F.col("quarantined").isNull())
-            .select("pos", "url_canon").collect())
-        adm = sorted(
-            ((r["page_pos"], r["enqueue_seq"], r["url"])
-             for r in admitted.select("page_pos", "enqueue_seq",
-                                      "url").collect()))
-        by_page: dict[int, list[str]] = {}
-        for page_pos, _, url in adm:
-            by_page.setdefault(int(page_pos), []).append(url)
-        for pos, url in fetched:
-            self.bloom.add(url)
-            to_visit = by_page.get(int(pos))
-            if to_visit:
-                self.bloom.add_many(to_visit)
 
     # ---------------------------------------------------------------- refill
     def _refresh_robots(self, rnd: int):
@@ -622,39 +569,179 @@ class CrawlEngine:
         return extracted
 
     # ---------------------------------------------------- round finish
+    def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int):
+        """Order artifacts + {partition_id: lineage counters}. dfs
+        lineage candidate counts ride this job as per-page columns."""
+        news = self.mode == "news"
+        cand_names = [] if news else ["same_n", "stash_n"]
+
+        def counters(n, same_n=0, stash_n=0):
+            return {"fetched": int(n), "deduped": int(same_n),
+                    "enqueued": 0, "stashed": int(stash_n)}
+
+        if self.collect_order:
+            ext_pd = extracted.select("*", *self._cand_cols) \
+                .drop("outlinks").toPandas().sort_values("pos")
+            g = ext_pd.groupby("partition_id")
+            sums = g[cand_names].sum() if cand_names else None
+            agg = {int(k): counters(n, *(sums.loc[k] if cand_names
+                                         else ()))
+                   for k, n in g.size().items()}
+            rows = [{"seq": fetch_seq0 + int(r.pos), "url_canon": r.url_canon,
+                     "depth": int(r.depth), "round": rnd, "host": r.host,
+                     "success": bool(r.success)}
+                    for r in ext_pd.itertuples()]
+            quar = [{"url_canon": r.url_canon, "error": r.quarantined,
+                     "round": rnd}
+                    for r in ext_pd[ext_pd["quarantined"].notna()]
+                    .itertuples()]
+            doc = None
+            if self.collect_documents:
+                mask = ext_pd["success"] & ext_pd["quarantined"].isna()
+                if news:  # articles only: processArticle skips depth 0
+                    mask &= ext_pd["depth"] > 0
+                doc = ext_pd[mask].drop(columns=cand_names)
+                doc["round"] = rnd
+            return agg, rows, doc, quar, len(quar)
+        parts = extracted.select("*", *self._cand_cols) \
+            .groupBy("partition_id").agg(
+                F.count("*").alias("count"),
+                F.sum(F.when(F.col("quarantined").isNotNull(), 1)
+                      .otherwise(0)).alias("q_n"),
+                *[F.sum(c).alias(c) for c in cand_names]).collect()
+        agg = {int(r["partition_id"]): counters(
+                   r["count"], *(r[c] for c in cand_names))
+               for r in parts}
+        q_total = sum(int(r["q_n"]) for r in parts)
+        if q_total:
+            (extracted.filter(F.col("quarantined").isNotNull())
+             .select("url_canon", F.col("quarantined").alias("error"),
+                     F.lit(rnd).alias("round"))
+             .write.mode("overwrite")
+             .parquet(self.store.state_dir("quarantine", rnd)))
+        d = self.store.state_dir("crawl_order", rnd)
+        (extracted.select(
+            (F.col("pos") + F.lit(fetch_seq0)).alias("seq"),
+            "url_canon", "depth", F.lit(rnd).alias("round"), "host",
+            "success")
+         .write.mode("overwrite").parquet(d))
+        if self.collect_documents:
+            # distributed twin of the driver-buffer document artifact:
+            # successful rows written per round, bytes stay executor-side
+            dd = self.store.state_dir("documents", rnd)
+            doc_f = F.col("success") & F.col("quarantined").isNull()
+            if news:
+                doc_f = doc_f & (F.col("depth") > 0)
+            (extracted.filter(doc_f).drop(
+                "outlinks", *[c for c in ("countries", "companies")
+                              if c in extracted.columns])
+             .withColumn("round", F.lit(rnd))
+             .write.mode("overwrite").parquet(dd))
+        return agg, None, None, None, q_total
+
+    def _admit(self, extracted: DataFrame, same: DataFrame, probe,
+               batch_count: int, rnd: int, n_parts: int, par: int,
+               timings) -> DataFrame:
+        """The round's critical path, fused Arrow admission (F6/F7): ONE
+        colocating pass (``probe.colocate``) brings all proposals of a
+        url TOGETHER WITH a marker row per fetched url (cogroup-via-union:
+        urls are unique in ``extracted``, so the fetched-pos gate needs no
+        groupBy, no driver collect and no O(batch) broadcast), then
+        :func:`_admit_pass`, a sequence rank and the origin join. Returns
+        the admitted checkpoint, ``partition_id`` and ``page_pos`` kept."""
+        import time as _time
+
+        news = self.mode == "news"
+        winners_in = same.withColumn("f_pos", F.lit(None).cast("long"))
+        if not news:  # news.go never marks the fetched page: no markers
+            # marker rows carry only (url, f_pos); the union fills every
+            # candidate column with NULL
+            markers = extracted.filter(F.col("quarantined").isNull()).select(
+                F.col("url_canon").alias("url"),
+                F.col("pos").cast("long").alias("f_pos"))
+            winners_in = winners_in.unionByName(markers,
+                                                allowMissingColumns=True)
+        winners = probe.colocate(winners_in, n_parts).mapInArrow(
+            _admit_pass(probe, news, same.schema.names), same.schema)
+        # scalable global sequence: pid-sharded sort + per-pid offsets
+        # in one Arrow pass — no single-partition window at big G.
+        # Toy rounds are already one partition: a plain window rank
+        # there is the same work in a third of the jobs.
+        if n_parts == 1:
+            ranked = winners.withColumn("rn", F.row_number().over(
+                Window.orderBy("page_pos", "link_pos")).cast("long") - 1)
+        else:
+            from .frontier import assign_global_rank
+            chunk = max(1, (batch_count + par - 1) // par)
+            ranked = assign_global_rank(
+                winners, ["page_pos", "link_pos"],
+                F.floor(F.col("page_pos") / F.lit(chunk)), "rn",
+                partitions=n_parts, timings=timings)
+        origin_by_pos = extracted.select(
+            F.col("pos").alias("page_pos"),
+            F.col("url_canon").alias("origin"))
+        _ta = _time.perf_counter()
+        admitted = (ranked
+                    .join(F.broadcast(origin_by_pos), "page_pos")
+                    .select(
+                        F.lit(0).alias("priority"),
+                        F.lit(rnd).alias("enqueue_round"),
+                        (F.lit(self.seq) + F.col("rn")).alias("enqueue_seq"),
+                        F.col("url"), F.col("host"),
+                        (F.col("page_depth") + 1).alias("depth"),
+                        F.col("origin"),
+                        F.col("partition_id"), F.col("page_pos"))
+                    .localCheckpoint(eager=True))
+        if timings is not None:
+            timings["adm_admit_ckpt"] = timings.get("adm_admit_ckpt", 0.0) \
+                + _time.perf_counter() - _ta
+        return admitted
+
+    def _seen_ops(self, extracted: DataFrame, admitted: DataFrame):
+        """The round's seen-set inserts as the oracle's write transactions
+        (G-bounded collects). dfs: per fetched page in pos order, its url,
+        then its admitted urls (dfs_basic.go:48,121-123); news: one
+        admitted url at a time in enqueue order (SetBytes in urlAllowed)."""
+        if self.mode == "news":
+            return [[r["url"]] for r in sorted(
+                admitted.select("enqueue_seq", "url").collect())]
+        by_page: dict[int, list[str]] = {}
+        for r in sorted(admitted.select("page_pos", "enqueue_seq",
+                                        "url").collect()):
+            by_page.setdefault(r["page_pos"], []).append(r["url"])
+        ops = []
+        for pos, url in sorted(extracted.filter(F.col("quarantined").isNull())
+                               .select("pos", "url_canon").collect()):
+            ops += [[url], by_page[pos]] if pos in by_page else [[url]]
+        return ops
+
     def _finish_round(self, extracted: DataFrame, batch_count: int,
                       rnd: int, timings, _mark, _t):
         """Post-extract work for every round, as a concurrent job DAG.
 
-        Jobs, for every G and both seen filters:
+        Jobs, for every G and every seen-set:
 
-        - the order job (thread pool, depends only on ``extracted``):
-          crawl-order / quarantine / document artifacts plus the fetched
-          and quarantined counts per partition, and — dfs — each page's
-          same-domain and cross-domain candidate counts as higher-order
-          columns (``_page_cand_counts``), summed per partition. News
-          mode runs one more count job: its gate calls the robots
-          pandas UDF, which cannot run inside a higher-order function;
-        - the critical path: fused Arrow admission (markers ∪ candidates
-          -> one colocating pass -> sequence rank -> admitted checkpoint);
+        - the order job (:meth:`_order_job`, thread pool): artifacts,
+          per-partition fetched/quarantined counts and — dfs — the pages'
+          candidate counts (``_page_cand_counts``). News runs one more
+          count job: its gate calls the robots pandas UDF, which cannot
+          run inside a higher-order function;
+        - the critical path: fused Arrow admission (:meth:`_admit`);
         - ONE seen-set pass over the round's inserts (non-quarantined
           fetched urls ∪ admitted ``(url, partition_id)``;
           ``frontier.seen_round_pass``): per-partition admitted counts
-          plus the bitset words or the cuckoo ``(shard, i1, fp)`` rows,
-          one ``toArrow``. It overlaps the stash union.
+          plus the seen-set delta, one ``toArrow``, overlapping the
+          stash union.
 
         Driver-side job launches are the dominant serial cost of a round
         at this scale (0.1-0.64 s of CPU each on a 4-core box). All
-        merges (lineage dict, bitmap OR, canonical cuckoo commit) happen
-        on the driver after the gather, so the result is bit-identical
-        to the serial order (tests/test_crawl_spark.py
-        test_big_g_path_matches_oracle pins this)."""
+        merges (lineage dict, seen-set commit) happen on the driver after
+        the gather, so the result is bit-identical to the serial order
+        (tests/test_crawl_spark.py test_big_g_path_matches_oracle pins
+        this). The seen-set owns its probe plan and commit (seen.py)."""
         from concurrent.futures import ThreadPoolExecutor
 
-        sc = self.spark.sparkContext
-
         news = self.mode == "news"
-        # lazy definitions shared by the jobs
         cands = _explode_outlinks(extracted, with_page_host=news)
         if news:
             # news.go urlAllowed as the candidate gate: exact host +
@@ -683,271 +770,24 @@ class CrawlEngine:
                     # allocation, which anti-scales with worker count)
                     .drop("page_domain", "domain", "page_url"))
             stash = cands.filter(F.col("domain") != F.col("page_domain"))
-        fetch_seq0 = self.fetch_seq
-        # dfs lineage counts ride the order job as per-page columns; news
-        # keeps a count job (its gate calls the robots pandas UDF, which
-        # cannot run inside a higher-order function)
-        cand_cols = self._cand_cols
-        cand_names = [] if news else ["same_n", "stash_n"]
-
-        def job_order():
-            """Order artifacts + {partition_id: lineage counters}."""
-            def counters(n, same_n=0, stash_n=0):
-                return {"fetched": int(n), "deduped": int(same_n),
-                        "enqueued": 0, "stashed": int(stash_n)}
-
-            if self.collect_order:
-                ext_pd = extracted.select("*", *cand_cols) \
-                    .drop("outlinks").toPandas().sort_values("pos")
-                g = ext_pd.groupby("partition_id")
-                sums = g[cand_names].sum() if cand_names else None
-                agg = {int(k): counters(n, *(sums.loc[k] if cand_names
-                                             else ()))
-                       for k, n in g.size().items()}
-                rows = [{"seq": fetch_seq0 + int(r.pos), "url_canon": r.url_canon,
-                         "depth": int(r.depth), "round": rnd, "host": r.host,
-                         "success": bool(r.success)}
-                        for r in ext_pd.itertuples()]
-                quar = [{"url_canon": r.url_canon, "error": r.quarantined,
-                         "round": rnd}
-                        for r in ext_pd[ext_pd["quarantined"].notna()]
-                        .itertuples()]
-                doc = None
-                if self.collect_documents:
-                    mask = ext_pd["success"] & ext_pd["quarantined"].isna()
-                    if news:  # articles only: processArticle skips depth 0
-                        mask &= ext_pd["depth"] > 0
-                    doc = ext_pd[mask].drop(columns=cand_names)
-                    doc["round"] = rnd
-                return agg, rows, doc, quar, len(quar)
-            parts = extracted.select("*", *cand_cols) \
-                .groupBy("partition_id").agg(
-                    F.count("*").alias("count"),
-                    F.sum(F.when(F.col("quarantined").isNotNull(), 1)
-                          .otherwise(0)).alias("q_n"),
-                    *[F.sum(c).alias(c) for c in cand_names]).collect()
-            agg = {int(r["partition_id"]): counters(
-                       r["count"], *(r[c] for c in cand_names))
-                   for r in parts}
-            q_total = sum(int(r["q_n"]) for r in parts)
-            if q_total:
-                (extracted.filter(F.col("quarantined").isNotNull())
-                 .select("url_canon", F.col("quarantined").alias("error"),
-                         F.lit(rnd).alias("round"))
-                 .write.mode("overwrite")
-                 .parquet(self.store.state_dir("quarantine", rnd)))
-            d = self.store.state_dir("crawl_order", rnd)
-            (extracted.select(
-                (F.col("pos") + F.lit(fetch_seq0)).alias("seq"),
-                "url_canon", "depth", F.lit(rnd).alias("round"), "host",
-                "success")
-             .write.mode("overwrite").parquet(d))
-            if self.collect_documents:
-                # distributed twin of the driver-buffer document artifact:
-                # successful rows written per round, bytes stay executor-side
-                dd = self.store.state_dir("documents", rnd)
-                doc_f = F.col("success") & F.col("quarantined").isNull()
-                if news:
-                    doc_f = doc_f & (F.col("depth") > 0)
-                (extracted.filter(doc_f).drop(
-                    "outlinks", *[c for c in ("countries", "companies")
-                                  if c in extracted.columns])
-                 .withColumn("round", F.lit(rnd))
-                 .write.mode("overwrite").parquet(dd))
-            return agg, None, None, None, q_total
-
-        def job_news_cand_counts():
-            return (same.groupBy("partition_id")
-                    .agg(F.count("*").alias("same_n")).collect())
-
         # partitioning scaled to the round: toy rounds (bench.py's 2k-G
         # corpus, unit tests) run the SAME plan at 1 partition — no
         # 32-task shuffles over 2k rows; big-G rounds get full width
-        par = max(sc.defaultParallelism, 4)
+        par = max(self.spark.sparkContext.defaultParallelism, 4)
         n_parts = max(1, min(par, batch_count // 2000))
 
-        cuckoo_mode = self.seen_filter == "cuckoo"
         pool = ThreadPoolExecutor(max_workers=4)
-        probe_bc = None
+        probe = None
         try:
-            fut_order = pool.submit(job_order)
-            fut_cand = pool.submit(job_news_cand_counts) if news else None
-
-            # ---- critical path: fused Arrow admission (F6/F7) --------------
-            # ONE shuffle by url (a coalesce when the round is one task)
-            # colocates all proposals of a url TOGETHER WITH a marker row
-            # per fetched url (cogroup-via-union: urls
-            # are unique in `extracted`, so the fetched-pos gate needs no
-            # groupBy stage, no driver collect, and no O(batch)-sized
-            # broadcast — only the bloom bitset is broadcast). A single
-            # Arrow pass over each whole partition then applies the bloom
-            # probe, the fetched-pos gate, and min-page winner selection.
-            # The pass MUST see the partition as one frame: Arrow slices
-            # partitions into batches, and a per-batch min-page would admit
-            # the same url from two pages (tests pin this with a tiny
-            # Arrow batch size).
-            # seen_probe="sharded": no filter broadcast at all — dirty
-            # shard blobs sync to the workdir and the admission shuffle
-            # routes by shard_of(h2) so each task file-loads only its
-            # shards (ShardFileProbe docstring has the 10^10 argument).
-            sharded_probe = cuckoo_mode and self.seen_probe == "sharded"
-            probe_manifest = probe_shards = None
-            if sharded_probe:
-                probe_manifest = self._sync_shard_files()
-                probe_shards = self.cuckoo.shards
-            else:
-                probe_bc = sc.broadcast(self.cuckoo.to_bytes() if cuckoo_mode
-                                        else self.bloom.to_bytes())
-            same_schema = same.schema
-            cands_tagged = same.withColumn("f_pos", F.lit(None).cast("long"))
-            # marker rows carry only (url, f_pos); the union fills every
-            # candidate column with NULL
-            markers = extracted.filter(F.col("quarantined").isNull()).select(
-                F.col("url_canon").alias("url"),
-                F.col("pos").cast("long").alias("f_pos"))
-
-            def admit(it):
-                # Arrow-native: hash urls zero-copy from the string
-                # buffers, group by the 128-bit hash in numpy, keep
-                # winners with Table.filter — no python string ever
-                # materializes (frontier.admission_keep_mask has the
-                # gate semantics and the collision argument).
-                import pyarrow as pa
-                import pyarrow.compute as pc
-
-                from ..engine.murmur import hash128_batch_buf
-                from ..engine.rolling_bloom import blooms_from_bytes
-                from .frontier import admission_keep_mask
-                if probe_manifest is not None:  # sharded file-backed probe
-                    from ..engine.cuckoo import ShardFileProbe
-                    bf = ShardFileProbe(probe_shards, probe_manifest)
-                else:
-                    raw = probe_bc.value
-                    if raw[:5] == b"SCK1\n":  # cuckoo seen-set (magic-tagged)
-                        from ..engine.cuckoo import ShardedCuckoo
-                        bf = ShardedCuckoo.from_bytes(raw)
-                    else:
-                        bf = blooms_from_bytes(raw)
-                tbls = [pa.Table.from_batches([rb]) for rb in it]
-                if not tbls:
-                    return
-                # NOT combine_chunks'd: a >2 GB url column in one shuffle
-                # partition cannot collapse to a single int32-offset chunk
-                # (ArrowInvalid) — hash per chunk and concatenate instead,
-                # so oversized partitions stay correct, just slower
-                t = pa.concat_tables(tbls)
-                if t.num_rows == 0:
-                    return
-                from ..engine.murmur import string_buf_views
-                datas, lens = [], []
-                for arr in t.column("url").chunks:
-                    if len(arr) == 0:
-                        continue
-                    d, ln = string_buf_views(arr)
-                    datas.append(d)
-                    lens.append(ln)
-                h1, h2 = hash128_batch_buf(
-                    datas[0] if len(datas) == 1 else np.concatenate(datas),
-                    lens[0] if len(lens) == 1 else np.concatenate(lens))
-                page_pos = pc.fill_null(t.column("page_pos"), -1).to_numpy()
-                if news_flag:
-                    # news winner rule: single FIRST proposal per url by
-                    # (page_pos, link_pos) — SetBytes inside urlAllowed
-                    # dedupes within-page too; no marker rows exist
-                    from .frontier import admission_keep_mask_news
-                    link_pos = t.column("link_pos").to_numpy(
-                        zero_copy_only=False)
-                    keep = admission_keep_mask_news(h1, h2, page_pos,
-                                                    link_pos, bf)
-                else:
-                    f_pos = pc.fill_null(t.column("f_pos"), -1).to_numpy()
-                    is_marker = f_pos >= 0
-                    keep = admission_keep_mask(h1, h2, page_pos, f_pos,
-                                               is_marker, bf)
-                if not keep.any():
-                    return
-                drop = ["f_pos", "shard"] if "shard" in t.column_names \
-                    else ["f_pos"]
-                out = t.filter(pa.array(keep)).drop_columns(drop)
-                yield from out.to_batches()
-
-            news_flag = news
-            winners_in = cands_tagged if news \
-                else cands_tagged.unionByName(markers,
-                                              allowMissingColumns=True)
-
-            def colocate(df, n, key):
-                # all proposals of a url must reach one task; a one-task
-                # round gets there by coalesce, without a shuffle job
-                return df.coalesce(1) if n == 1 \
-                    else df.repartition(n, F.col(key))
-            if sharded_probe:
-                # route candidates BY SHARD so the admit tasks are
-                # shard-local. Correct because shard_of(h2) is a pure
-                # function of the url: all proposals of a url (and its
-                # marker row) share a shard, so winner selection still
-                # sees every proposal together. The shard key derives via
-                # a SCALAR arrow_udf — Spark ships ONLY the url column to
-                # the python worker (a full-frame mapInArrow pre-pass
-                # measured 1.35x on the 400k round from round-tripping
-                # every column through Arrow IPC); hashing is the same
-                # zero-copy buffer walk the admit pass uses.
-                from pyspark.sql.functions import arrow_udf
-
-                @arrow_udf("long")
-                def shard_udf(urls):
-                    import pyarrow as pa
-
-                    from ..engine.cuckoo import shard_of
-                    from ..engine.murmur import (hash128_batch_buf,
-                                                 string_buf_views)
-                    if len(urls) == 0:
-                        return pa.array([], pa.int64())
-                    _, h2 = hash128_batch_buf(*string_buf_views(urls))
-                    return pa.array(
-                        shard_of(h2, probe_shards).astype(np.int64),
-                        pa.int64())
-
-                winners = colocate(
-                    winners_in.withColumn("shard", shard_udf(F.col("url"))),
-                    min(n_parts, probe_shards), "shard") \
-                    .mapInArrow(admit, same_schema)
-            else:
-                winners = colocate(winners_in, n_parts, "url") \
-                    .mapInArrow(admit, same_schema)
-            # scalable global sequence: pid-sharded sort + per-pid offsets
-            # in one Arrow pass — no single-partition window at big G.
-            # Toy rounds are already one partition: a plain window rank
-            # there is the same work in a third of the jobs.
-            if n_parts == 1:
-                ranked = winners.withColumn("rn", F.row_number().over(
-                    Window.orderBy("page_pos", "link_pos")).cast("long") - 1)
-            else:
-                from .frontier import assign_global_rank
-                chunk = max(1, (batch_count + par - 1) // par)
-                ranked = assign_global_rank(
-                    winners, ["page_pos", "link_pos"],
-                    F.floor(F.col("page_pos") / F.lit(chunk)), "rn",
-                    partitions=n_parts, timings=timings)
-            origin_by_pos = extracted.select(
-                F.col("pos").alias("page_pos"),
-                F.col("url_canon").alias("origin"))
-            import time as _time
-            _ta = _time.perf_counter()
-            admitted = (ranked
-                        .join(F.broadcast(origin_by_pos), "page_pos")
-                        .select(
-                            F.lit(0).alias("priority"),
-                            F.lit(rnd).alias("enqueue_round"),
-                            (F.lit(self.seq) + F.col("rn")).alias("enqueue_seq"),
-                            F.col("url"), F.col("host"),
-                            (F.col("page_depth") + 1).alias("depth"),
-                            F.col("origin"),
-                            F.col("partition_id"), F.col("page_pos"))
-                        .localCheckpoint(eager=True))
-            if timings is not None:
-                timings["adm_admit_ckpt"] = timings.get("adm_admit_ckpt", 0.0) \
-                    + _time.perf_counter() - _ta
+            fut_order = pool.submit(self._order_job, extracted, rnd,
+                                    self.fetch_seq)
+            fut_cand = pool.submit(
+                lambda: same.groupBy("partition_id")
+                .agg(F.count("*").alias("same_n")).collect()) \
+                if news else None
+            probe = self.seen.open_probe(self.spark.sparkContext)
+            admitted = self._admit(extracted, same, probe, batch_count, rnd,
+                                   n_parts, par, timings)
             _t = _mark('admission', _t)
 
             # ---- seen-set delta + admitted counts: ONE pass, one collect
@@ -961,10 +801,8 @@ class CrawlEngine:
                        .select(F.col("url_canon").alias("url"),
                                F.lit(None).cast("int").alias("partition_id"))
                        .unionByName(ins))
-            seen_params = (self.cuckoo.shards, self.cuckoo.filters[0].m) \
-                if cuckoo_mode else (self.bloom.max_n, self.bloom.p)
-            fut_seen = pool.submit(seen_round_pass, ins, self.seen_filter,
-                                   seen_params,
+            fut_seen = pool.submit(seen_round_pass, ins, self.seen.kind,
+                                   self.seen.pass_params,
                                    min(par, batch_count // 10000 + 1))
 
             if stash is not None:
@@ -1010,47 +848,16 @@ class CrawlEngine:
                 self.lineage.append(
                     {"round": rnd, "partition": int(part), **agg[part]})
 
-            if cuckoo_mode:
-                # round-END canonical commit (the defined cuckoo-mode
-                # semantics — oracle/crawler.py __init__): per-shard
-                # sorted-unique insert of the derived rows, bit-identical
-                # to the oracle's add_many_canonical on the same url set
-                self.cuckoo.add_pairs_canonical(seen_delta[:, 0],
-                                                seen_delta[:, 1],
-                                                seen_delta[:, 2])
-                _t = _mark('bloom_merge', _t)
-                return
             # quarantined rows never markVisited → not counted as inserts;
             # news mode marks ONLY admitted outlinks (no page inserts)
             total_added = admitted_count if news \
                 else batch_count - q_n + admitted_count
-            if self._round_fits_bloom(total_added):
-                # fast path (every round except the ~1-in-maxN/G that
-                # crosses a bound): no rotation can occur anywhere in the
-                # round's op sequence, so the distributed bitset OR is
-                # bit-identical to the oracle's per-page add/add_many
-                self.bloom.merge_words(seen_delta, added_n=total_added)
-            else:
-                # rotation boundary: replay the round's bloom ops exactly
-                # (page add, then the page's admitted batch) driver-side —
-                # O(G) work, same bound as the batch itself — so the
-                # rotation fires at the same op and loses the same insert
-                # as the oracle/reference (rolling_bloom.go quirk)
-                if news:
-                    # news inserts are one add() per admitted url in
-                    # enqueue order (SetBytes inside urlAllowed)
-                    for r in sorted(admitted.select("enqueue_seq", "url")
-                                    .collect()):
-                        self.bloom.add(r["url"])
-                else:
-                    self._replay_bloom_ops(extracted, admitted)
+            self.seen.commit(seen_delta, total_added,
+                             lambda: self._seen_ops(extracted, admitted))
             _t = _mark('bloom_merge', _t)
         finally:
-            # destroyed on every exit path — nothing past the admitted
-            # checkpoint reads it, and leaking one bitset per failed round
-            # would accumulate executor memory for the session's lifetime
-            if probe_bc is not None:
-                probe_bc.destroy()
+            if probe is not None:
+                probe.release()
             pool.shutdown(wait=True)
 
     # ------------------------------------------------------------------- run
@@ -1064,61 +871,8 @@ class CrawlEngine:
             if checkpoint_every and self.round % checkpoint_every == 0:
                 self.checkpoint()
         self.checkpoint()
-        out = {"rounds": self.round, "fetched": self.fetch_seq,
-               "frontier_ops": self.seq}
-        if self.seen_filter == "cuckoo":
-            out["cuckoo_n"] = out["seen_n"] = self.cuckoo.n
-        else:
-            # only meaningful in bloom mode (the bloom is unused and
-            # all-zero under the cuckoo seen-set)
-            out["bloom_bits"] = int(np.count_nonzero(self.bloom.words))
-            out["seen_n"] = self.bloom.n
-        return out
-
-    def _sync_shard_files(self) -> dict[int, str]:
-        """Write the cuckoo's DIRTY shard blobs to the workdir as
-        immutable versioned files and return the full shard->path
-        manifest (seen_probe="sharded"). First sync writes every shard;
-        later syncs rewrite only shards mutated since (round commits,
-        readmit/forget deletes). Immutable names (never overwritten)
-        keep worker-side caches valid and make stage retries re-read
-        exactly the blobs the round started with; the tmp+rename makes
-        each file's appearance atomic. At 10^10 scale this directory
-        lives on the cluster's shared store and the per-round write is
-        O(changed shards), the same class as the round's insert volume."""
-        os.makedirs(self._seen_shard_dir, exist_ok=True)
-        if self._shard_manifest is None:
-            to_write = range(self.cuckoo.shards)
-            manifest: dict[int, str] = {}
-        else:
-            to_write = sorted(self.cuckoo.dirty)
-            manifest = dict(self._shard_manifest)
-        ver = self._shard_sync_n
-        superseded = []
-        for s in to_write:
-            path = os.path.join(
-                self._seen_shard_dir,
-                f"shard{s:05d}_v{ver:06d}_{self._shard_run_tag}.bin")
-            tmp = path + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(self.cuckoo.filters[s].to_bytes())
-            os.replace(tmp, path)
-            if s in manifest:
-                superseded.append(manifest[s])
-            manifest[s] = path
-        # GC superseded blobs with a one-generation lag (keep-last-2):
-        # without this a long sharded crawl accretes O(dirty bytes)/round
-        # of dead immutable files on the shared store forever
-        for old in self._shard_gc_paths:
-            try:
-                os.unlink(old)
-            except FileNotFoundError:
-                pass
-        self._shard_gc_paths = superseded
-        self._shard_sync_n += 1
-        self.cuckoo.dirty.clear()
-        self._shard_manifest = manifest
-        return manifest
+        return {"rounds": self.round, "fetched": self.fetch_seq,
+                "frontier_ops": self.seq, **self.seen.stats()}
 
     def readmit(self, urls) -> int:
         """Recrawl API (cuckoo mode only — the per-URL forget the rolling
@@ -1127,23 +881,18 @@ class CrawlEngine:
         seen-set and re-enqueue it at depth 0 with origin 'readmit', so
         subsequent :meth:`run` rounds refetch it. Mirrors
         ``OracleCrawler.readmit`` exactly (priority-0 rows keep the
-        big-path order invariant). Returns the number re-enqueued."""
-        assert self.seen_filter == "cuckoo", \
-            "readmit requires the cuckoo seen-set"
+        big-path order invariant). Returns the number re-enqueued.
+        Raises ValueError under the bloom seen-set."""
+        canon = [c for c in map(canonicalize, urls) if c is not None]
+        self.seen.delete_urls(canon)
         if self.frontier is None:
             # seed first or seed() would later RESET frontier_count and
             # orphan the readmit delta; seeds keep the first seqs
             # (oracle parity: OracleCrawler.readmit seeds too)
             self.seed()
-        rows = []
-        for u in urls:
-            c = canonicalize(u)
-            if c is None:
-                continue
-            self.cuckoo.delete(c)
-            rows.append((0, self.round, self.seq, c, host_of(c), 0,
-                         "readmit"))
-            self.seq += 1
+        rows = [(0, self.round, self.seq + i, c, host_of(c), 0, "readmit")
+                for i, c in enumerate(canon)]
+        self.seq += len(rows)
         if rows:
             df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA) \
                 .localCheckpoint(eager=True)
@@ -1164,35 +913,13 @@ class CrawlEngine:
         bucket edits (same G-bounded contract as the round commit).
         Equivalent to ``readmit(victims sorted by unsigned (h1, h2))``
         — pinned in t:test_crawl_cuckoo. Returns the number re-enqueued
-        (invalid/uncanonicalizable urls are dropped)."""
-        assert self.seen_filter == "cuckoo", \
-            "readmit requires the cuckoo seen-set"
+        (invalid/uncanonicalizable urls are dropped). Raises ValueError
+        under the bloom seen-set."""
+        derived = self.seen.derive_df(urls_df, with_keys=True)
         if self.frontier is None:
             self.seed()  # see readmit(): never let seed() run AFTER us
         from .frontier import assign_global_rank
 
-        m, shards = self.cuckoo.filters[0].m, self.cuckoo.shards
-        flip = np.uint64(1 << 63)
-
-        def derive_pass(it):
-            for got in _cuckoo_derive_canonical(it, m, shards):
-                keep, h1, h2, i1, fp, sh = got
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(keep, pa.string()),
-                     pa.array([host_of(c) for c in keep], pa.string()),
-                     pa.array(sh),
-                     pa.array(i1.view(np.int64)),
-                     pa.array(fp.view(np.int64)),
-                     # sign-flip so int64 ORDER == uint64 order
-                     pa.array((h1 ^ flip).view(np.int64)),
-                     pa.array((h2 ^ flip).view(np.int64))],
-                    names=["url", "host", "shard", "i1", "fp",
-                           "h1s", "h2s"])
-
-        derived = urls_df.mapInArrow(
-            derive_pass,
-            "url string, host string, shard long, i1 long, fp long, "
-            "h1s long, h2s long")
         st: dict = {}
         # pid = top 16 bits of h1s: monotone in the (h1s, h2s) order,
         # uniform under murmur — the assign_global_rank contract
@@ -1211,11 +938,7 @@ class CrawlEngine:
         n = st.get("total", 0)
         if n == 0:
             return 0
-        pr = rows.select("shard", "i1", "fp").toArrow()
-        self.cuckoo.delete_pairs(
-            pr.column("shard").to_numpy(zero_copy_only=False),
-            pr.column("i1").to_numpy(zero_copy_only=False).view(np.uint64),
-            pr.column("fp").to_numpy(zero_copy_only=False).view(np.uint64))
+        self.seen.delete_rows(rows.select("shard", "i1", "fp").toArrow())
         self._append_delta(rows.drop("shard", "i1", "fp"), n)
         self.seq += n
         return n
@@ -1230,26 +953,9 @@ class CrawlEngine:
         24-byte derived rows reach the driver-resident filter. Same
         deletion contract as ``CuckooFilter.delete`` (only forget urls
         that were actually inserted). Returns the number of stored
-        entries removed (duplicates and never-inserted urls no-op)."""
-        assert self.seen_filter == "cuckoo", \
-            "forget requires the cuckoo seen-set"
-        m, shards = self.cuckoo.filters[0].m, self.cuckoo.shards
-
-        def derive_pass(it):
-            for _, _, _, i1, fp, sh in _cuckoo_derive_canonical(
-                    it, m, shards):
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(sh),
-                     pa.array(i1.view(np.int64)),
-                     pa.array(fp.view(np.int64))],
-                    names=["shard", "i1", "fp"])
-
-        pr = urls_df.mapInArrow(
-            derive_pass, "shard long, i1 long, fp long").toArrow()
-        return self.cuckoo.delete_pairs(
-            pr.column("shard").to_numpy(zero_copy_only=False),
-            pr.column("i1").to_numpy(zero_copy_only=False).view(np.uint64),
-            pr.column("fp").to_numpy(zero_copy_only=False).view(np.uint64))
+        entries removed (duplicates and never-inserted urls no-op).
+        Raises ValueError under the bloom seen-set."""
+        return self.seen.delete_rows(self.seen.derive_df(urls_df).toArrow())
 
     # ------------------------------------------------------------- checkpoint
     def checkpoint(self):
@@ -1258,9 +964,7 @@ class CrawlEngine:
         sdir = self.store.state_dir("url_store", rnd)
         self._frontier_view().write.mode("overwrite").parquet(fdir)
         self.url_store.write.mode("overwrite").parquet(sdir)
-        self.store.save_bloom(rnd, self.cuckoo.to_bytes()
-                              if self.seen_filter == "cuckoo"
-                              else self.bloom.to_bytes())
+        self.store.save_bloom(rnd, self.seen.to_bytes())
         if self.crawl_order:
             d = self.store.state_dir("crawl_order", rnd)
             os.makedirs(d, exist_ok=True)
@@ -1294,8 +998,7 @@ class CrawlEngine:
             # informational only (restore reads the blob itself); named
             # for the seen-set mode, not "bloom_n", since cuckoo counts
             # land here too
-            "seen_n": self.cuckoo.n if self.seen_filter == "cuckoo"
-            else self.bloom.n,
+            "seen_n": self.seen.n,
             "frontier_dir": fdir, "url_store_dir": sdir, "mode": self.mode,
             "seen_filter": self.seen_filter,
             # performance-only, but restored so a resumed sharded-probe
@@ -1309,35 +1012,27 @@ class CrawlEngine:
     @classmethod
     def resume(cls, spark: SparkSession, corpus_dir: str, workdir: str,
                n_partitions: int = 8, collect_documents: bool = True) -> "CrawlEngine":
-        eng = cls(spark, corpus_dir, workdir, n_partitions, collect_documents)
-        m = eng.store.last_manifest()
+        m = SnapshotStore(workdir).last_manifest()
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {workdir}")
+        # construct in the snapshot's mode: mode-built state (the dfs
+        # lineage columns) must match, or a resumed news crawl writes dfs
+        # columns into its documents. host_budgets is SEMANTIC — without
+        # it a resumed crawl would silently revert to the uniform B
+        probe = m.get("seen_probe", "broadcast")
+        eng = cls(spark, corpus_dir, workdir, n_partitions, collect_documents,
+                  mode=m.get("mode", "dfs"),
+                  seen_filter=m.get("seen_filter", "bloom"), seen_probe=probe,
+                  host_budgets=m.get("host_budgets"))
         eng.round = m["round"]
-        eng.mode = m.get("mode", "dfs")
         eng.seq = m["seq"]
         eng.fetch_seq = m["fetch_seq"]
         eng.frontier_count = m["frontier_count"]
-        # semantic politeness overrides travel with the snapshot; without
-        # this a resumed crawl would silently revert to the uniform B
-        eng.host_budgets = m.get("host_budgets") or {}
-        blob = eng.store.load_bloom(m["round"])
-        if blob.startswith(b"SCK1\n"):
-            # cuckoo seen-set snapshot (magic-tagged single blob)
-            eng.seen_filter = "cuckoo"
-            eng.cuckoo = ShardedCuckoo.from_bytes(blob)
-            # probe plan sticks across resume (manifest None ⇒ the first
-            # round re-syncs every shard file from the restored filter)
-            eng.seen_probe = m.get("seen_probe", "broadcast")
-        elif blob.startswith(b"RBF1\n"):
-            # full-generation snapshot (NOT the reference's save-gen0-only
-            # Save quirk — resume == uninterrupted requires all generations)
-            eng.bloom = RollingBloomFilter.from_bytes(blob)
-        else:  # pre-rolling snapshot: single generation
-            eng.bloom = RollingBloomFilter(
-                eng.params.get("bloom_count", 1),
-                eng.params["bloom_max_n"], eng.params["bloom_p"],
-                blooms=[BloomFilter.from_bytes(blob)])
+        # the blob decides the filter; the probe plan sticks across
+        # resume (an unsynced shard manifest makes the first sharded
+        # round re-sync every shard file from the restored filter)
+        eng.seen = from_blob(eng.store.load_bloom(m["round"]), eng.params,
+                             workdir, probe)
         eng.frontier = spark.read.schema(FRONTIER_SCHEMA) \
             .parquet(m["frontier_dir"]).localCheckpoint(eager=True)
         eng._base_count = eng.frontier_count

@@ -206,23 +206,6 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
     return batch.withColumn("pos", F.row_number().over(w_pos) - 1)
 
 
-def make_bloom_probe(spark: SparkSession, bloom: BloomFilter):
-    """Vectorized membership probe against a broadcast of the current
-    bloom bitmap (SURVEY J3). Returns (udf, broadcast_handle)."""
-    bc = spark.sparkContext.broadcast(bloom.to_bytes())
-
-    @pandas_udf("boolean")
-    def probe(urls: pd.Series) -> pd.Series:
-        from ..engine.rolling_bloom import blooms_from_bytes
-        out = None
-        for bf in blooms_from_bytes(bc.value):
-            hit = bf.contains_batch(urls.tolist())
-            out = hit if out is None else (out | hit)
-        return pd.Series(out)
-
-    return probe, bc
-
-
 def bloom_bits_for_urls(urls_df: DataFrame, max_n: int, p: float,
                         partitions: int | None = None) -> np.ndarray:
     """Per-partition numpy bitsets OR-merged via treeAggregate(depth=2)
@@ -376,7 +359,7 @@ _SENTINEL = np.int64(1 << 62)
 
 def _seen_mask(seen, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     """Seen-set membership from murmur halves — a single BloomFilter, a
-    generation LIST (rolling bloom, any-match read per
+    rolling bloom or its generation LIST (any-match read per
     rolling_bloom.go:203-213: all generations share (max_n, p) hence m
     and the probe positions, so membership is an OR of the per-generation
     bit tests over one shared position array), or any filter exposing
@@ -384,7 +367,8 @@ def _seen_mask(seen, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     engine/cuckoo.py)."""
     if hasattr(seen, "contains_batch_hashed"):
         return seen.contains_batch_hashed(h1, h2)
-    blooms = seen if isinstance(seen, list) else [seen]
+    blooms = seen if isinstance(seen, list) else getattr(seen, "blooms",
+                                                         [seen])
     pos = blooms[0]._probes_from_hash(h1, h2)
     widx = (pos >> np.uint64(6)).astype(np.int64)
     shift = pos & np.uint64(63)
@@ -637,8 +621,8 @@ def bloom_probe_distributed(cands: DataFrame, url_col: str,
     plus an ``in_bloom`` boolean column.
 
     This is the 10^10-scale fallback for SURVEY J3; the broadcast probe
-    (make_bloom_probe / the fused admission pass) is the fast path while
-    the bitmap fits executor memory."""
+    of the fused admission pass (operators/seen.py) is the fast path
+    while the bitmap fits executor memory."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 

@@ -352,20 +352,20 @@ def test_sharded_probe_crawl_equals_oracle(spark, unit_corpus,
 
     # the manifest covers every shard with existing immutable files, and
     # round 0's sync wrote all of them
-    assert eng._shard_sync_n >= 1
-    assert set(eng._shard_manifest) == set(range(eng.cuckoo.shards))
-    for p in eng._shard_manifest.values():
+    assert eng.seen._sync_n >= 1
+    assert set(eng.seen._manifest) == set(range(eng.cuckoo.shards))
+    for p in eng.seen._manifest.values():
         assert os.path.exists(p)
-    assert len(os.listdir(eng._seen_shard_dir)) >= eng.cuckoo.shards
+    assert len(os.listdir(eng.seen._shard_dir)) >= eng.cuckoo.shards
 
     # incremental-sync pin: the final round's commit left a dirty set;
     # a sync must rewrite EXACTLY those shards (new versioned paths) and
     # leave every clean shard's manifest entry untouched
     dirty = set(eng.cuckoo.dirty)
     assert dirty  # the last commit inserted something
-    m0 = dict(eng._shard_manifest)
-    eng._sync_shard_files()
-    changed = {s for s in m0 if eng._shard_manifest[s] != m0[s]}
+    m0 = dict(eng.seen._manifest)
+    eng.seen._sync_shard_files()
+    changed = {s for s in m0 if eng.seen._manifest[s] != m0[s]}
     assert changed == dirty
     assert not eng.cuckoo.dirty
 
@@ -387,9 +387,9 @@ def test_sharded_probe_survives_resume(spark, tmp_path_factory):
     e1.run(max_rounds=2)  # commits, then "dies"
     e2 = CrawlEngine.resume(spark, corp, wd)
     assert e2.seen_probe == "sharded"
-    assert e2._shard_manifest is None  # fresh engine: first round re-syncs
+    assert e2.seen._manifest is None  # fresh engine: first round re-syncs
     e2.run()
-    assert e2._shard_sync_n >= 1  # the sharded path actually ran
+    assert e2.seen._sync_n >= 1  # the sharded path actually ran
     assert _order_tuples_engine(e2) == _order_tuples_oracle(oracle)
     assert e2.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
 
@@ -429,3 +429,27 @@ def test_sharded_probe_big_g_equals_oracle(spark, tmp_path_factory):
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
+
+
+@pytest.mark.parametrize("call", ["readmit", "readmit_df", "forget_df",
+                                  "sharded_bloom"])
+def test_caller_errors_raise_value_error(spark, unit_corpus, tmp_path,
+                                         call):
+    """Caller errors are ValueErrors, not asserts (``python -O`` strips
+    those): the recrawl/expiry calls need a seen-set that can delete, so
+    a bloom engine refuses them before seeding anything, and the sharded
+    probe needs the cuckoo."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    wd = str(tmp_path)
+    if call == "sharded_bloom":
+        with pytest.raises(ValueError):
+            CrawlEngine(spark, unit_corpus, wd, seen_probe="sharded")
+        return
+    eng = CrawlEngine(spark, unit_corpus, wd)
+    urls = ["http://d000.test/p/000001"]
+    arg = urls if call == "readmit" \
+        else spark.createDataFrame([(u,) for u in urls], "url string")
+    with pytest.raises(ValueError):
+        getattr(eng, call)(arg)
+    assert eng.frontier is None  # refused before seed()

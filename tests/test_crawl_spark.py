@@ -155,6 +155,30 @@ def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
                           eng2.bloom.bit_positions())
 
 
+def test_resume_from_single_generation_blob(spark, unit_corpus,
+                                            tmp_path_factory, oracle_result):
+    """A pre-rolling snapshot holds one plain BloomFilter blob (no RBF1
+    magic): resume makes it generation 0 of a rolling bloom sized from
+    the corpus params, and the crawl still ends equal to the oracle."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    wd = str(tmp_path_factory.mktemp("crawl_resume_legacy"))
+    eng1 = CrawlEngine(spark, unit_corpus, wd)
+    eng1.run(max_rounds=3)
+    assert len(eng1.bloom.blooms) == 1  # so the legacy blob is lossless
+    gen0 = eng1.bloom.gen0.to_bytes()
+    eng1.store.save_bloom(eng1.round, gen0)
+
+    eng2 = CrawlEngine.resume(spark, unit_corpus, wd)
+    assert eng2.seen_filter == "bloom"
+    assert [b.to_bytes() for b in eng2.bloom.blooms] == [gen0]
+    assert eng2.bloom.bloom_count == eng2.params.get("bloom_count", 1)
+    eng2.run()
+    assert _order_tuples_engine(eng2) == _order_tuples_oracle(oracle_result)
+    assert np.array_equal(oracle_result.bloom.bit_positions(),
+                          eng2.bloom.bit_positions())
+
+
 def test_host_budget_overrides_match_oracle(spark, tmp_path_factory):
     """Crawl-delay politeness in the round loop: per-host dequeue-budget
     overrides (incl. a 0 = fully blocked host) are SEMANTIC, so both

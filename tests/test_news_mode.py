@@ -179,7 +179,9 @@ def test_news_big_g_path_matches_oracle(spark, tmp_path_factory):
 
 
 def test_news_resume_equals_uninterrupted(spark, news_corpus, news_oracle,
-                                          tmp_path_factory):
+                                          news_engine, tmp_path_factory):
+    import pyarrow.parquet as pq
+
     from delver_spark.operators.crawl import CrawlEngine
 
     wd = str(tmp_path_factory.mktemp("crawl_news_resume"))
@@ -192,6 +194,14 @@ def test_news_resume_equals_uninterrupted(spark, news_corpus, news_oracle,
     so = list(zip(df["seq"], df["url_canon"]))
     oo = [(r["seq"], r["url_canon"]) for r in news_oracle.crawl_order]
     assert so == oo
+    # the resumed engine is a news engine throughout: its document parts
+    # carry the uninterrupted run's columns (no dfs lineage columns)
+
+    def doc_columns(eng):
+        return {tuple(pq.read_table(p).column_names)
+                for p in eng.store.part_dirs("documents", eng.round)}
+    assert len(doc_columns(news_engine)) == 1
+    assert doc_columns(eng2) == doc_columns(news_engine)
 
 
 def test_news_rotation_and_poison_combined(spark, tmp_path_factory):

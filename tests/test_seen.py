@@ -1,0 +1,72 @@
+"""The seen-set interface (operators/seen.py), once per filter family and
+probe plan: committing a round's ``frontier.seen_round_pass`` delta
+equals the driver-side adds on the same urls, the probe plan reports
+those urls inside a Spark task, and the snapshot blob restores
+byte-identically."""
+
+import numpy as np
+import pytest
+
+PARAMS = {"bloom_max_n": 5000, "bloom_p": 0.001, "bloom_count": 2,
+          "cuckoo_shards": 4}
+URLS = [f"http://h{i % 13}.test/p/{i}" for i in range(600)]
+
+
+@pytest.mark.parametrize("kind,probe", [("bloom", "broadcast"),
+                                        ("cuckoo", "broadcast"),
+                                        ("cuckoo", "sharded")])
+def test_seen_set_contract(spark, tmp_path, kind, probe):
+    from delver_spark.engine.cuckoo import ShardedCuckoo
+    from delver_spark.engine.rolling_bloom import RollingBloomFilter
+    from delver_spark.operators.frontier import seen_round_pass
+    from delver_spark.operators.seen import from_blob, new_seen
+
+    wd = str(tmp_path)
+    seen = new_seen(kind, PARAMS, wd, probe)
+    assert (seen.kind, seen.probe) == (kind, probe)
+
+    # round commit == driver-side adds
+    rows = spark.createDataFrame([(u, None) for u in URLS],
+                                 "url string, partition_id int")
+    _, delta = seen_round_pass(rows, seen.kind, seen.pass_params, 2)
+    seen.commit(delta, len(URLS),
+                lambda: pytest.fail("no rotation boundary in this round"))
+    if kind == "bloom":
+        ref = RollingBloomFilter(2, 5000, 0.001)
+        for u in URLS:
+            ref.add(u)
+    else:
+        ref = ShardedCuckoo.empty(4, 5000)
+        ref.add_many_canonical(np.array(URLS, dtype=object))
+    assert seen.to_bytes() == ref.to_bytes()
+    assert seen.n == len(URLS)
+
+    # the probe plan, colocated and loaded in the tasks, reports them
+    def hits(it):
+        import pyarrow as pa
+
+        from delver_spark.engine.murmur import (hash128_batch_buf,
+                                                string_buf_views)
+        from delver_spark.operators.frontier import _seen_mask
+        loaded = probe_plan.load()
+        for rb in it:
+            if rb.num_rows:
+                h1, h2 = hash128_batch_buf(*string_buf_views(rb.column(0)))
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(_seen_mask(loaded, h1, h2))], names=["hit"])
+
+    probe_plan = seen.open_probe(spark.sparkContext)
+    try:
+        urls_df = spark.createDataFrame([(u,) for u in URLS], "url string")
+        got = probe_plan.colocate(urls_df, 2) \
+            .mapInArrow(hits, "hit boolean").toArrow()
+    finally:
+        probe_plan.release()
+    assert got.num_rows == len(URLS)
+    assert all(got.column("hit").to_pylist())
+
+    # snapshot → restore is byte-identical and keeps the probe plan
+    blob = seen.to_bytes()
+    back = from_blob(blob, PARAMS, wd, probe)
+    assert (back.kind, back.probe) == (kind, probe)
+    assert back.to_bytes() == blob
