@@ -22,12 +22,11 @@ Design for 100 TB:
   with ``min_count``; pruning preserves the denominator invariant
   (a surviving k-gram's (k-1)-gram context count >= its own count, so
   the context always survives too).
-- **Scoring** ships the pruned count table to tasks (closure for the
-  default path; the declarative twin keeps counts distributed and
-  joins — the fallback when the model exceeds worker memory) and runs
-  ONE narrow zero-shuffle pass over the corpus. This is exactly how
-  CCNet deploys KenLM: model file resident per worker, stream the
-  corpus through it.
+- **Scoring** ships the pruned count table to tasks in the UDF closure
+  and runs ONE narrow zero-shuffle pass over the corpus. This is
+  exactly how CCNet deploys KenLM: model file resident per worker,
+  stream the corpus through it; ``min_count`` (and training on a
+  sample) is the lever that keeps the model within worker memory.
 
 Exactness (the cross-engine gate contract): all outputs are integers.
 Each token's Stupid-Backoff score S = 0.4^b * c_hit/c_ctx (b = back-off
@@ -48,7 +47,7 @@ DECIMAL).
 
 Tokenization: ``[A-Za-z0-9]+`` runs, each token ASCII-lowercased
 AFTER extraction. Lowercasing only ever sees ASCII (the class
-guarantees it), so Python ``str.lower``, Spark ``lower``, and DuckDB
+guarantees it), so Python ``str.lower`` and the DuckDB twin's
 ``lower`` agree by construction — full-string ``lower()`` would hit
 Unicode edge cases (U+0130 expands to i + combining dot and SPLITS a
 token run differently per engine).
@@ -79,100 +78,43 @@ def _py_tokens(text: str | None) -> list[str]:
     return [t.lower() for t in _TOKEN_RE.findall(text)]
 
 
-def _tokens_col(text_col: str):
-    """Array column of lowercased tokens — the Spark twin of
-    :func:`_py_tokens` (char-class-only pattern + per-token ASCII
-    lower, identical in Java regex / RE2 / Python re)."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(TOKEN_PATTERN), 0)
-    return F.transform(toks, lambda t: F.lower(t))
-
-
-def _token_stream(df: DataFrame, text_col: str, order: int,
-                  id_col: str | None = None) -> DataFrame:
-    """Declarative (id, pos, tok, p1[, p2]) stream: one projection, no
-    shuffle — contexts come from ``element_at`` on the token array
-    (O(1) per position; NOT the per-position ``slice`` that was
-    measured compute-bound in the r5 gram profiling)."""
-    d = df.withColumn("_ws", _tokens_col(text_col))
-    seq = F.when(F.size("_ws") >= 1,
-                 F.sequence(F.lit(1), F.size("_ws"))) \
-        .otherwise(F.array().cast("array<int>"))
-
-    def pick(i, back):
-        c = F.element_at(F.col("_ws"), i - back)
-        return F.when(i >= back + 1, c) if back else c
-
-    st = F.transform(seq, lambda i: F.struct(
-        i.alias("pos"), pick(i, 0).alias("tok"),
-        *[pick(i, b).alias(f"p{b}") for b in range(1, order)]))
-    head = [id_col] if id_col else []
-    return (d.select(*head, F.explode(st).alias("_t"))
-            .select(*head, "_t.*"))
-
-
-def _gram_col(order_k: int):
-    """Null-propagating space-joined gram of the stream row's last
-    ``order_k`` tokens (F.concat, NOT concat_ws: a missing context must
-    yield a NULL gram, never silently collapse into a shorter one)."""
-    parts = []
-    for b in range(order_k - 1, 0, -1):
-        parts += [F.col(f"p{b}"), F.lit(" ")]
-    parts.append(F.col("tok"))
-    return F.concat(*parts) if order_k > 1 else F.col("tok")
-
-
 def train_ngram_lm(df: DataFrame, order: int = 3,
-                   text_col: str = "text",
-                   use_arrow: bool = True) -> DataFrame:
+                   text_col: str = "text") -> DataFrame:
     """Count all 1..``order``-grams of the token stream; returns
     ``(k, gram, n)`` (gram = space-joined lowercased tokens). NULL
     texts contribute nothing. ``order`` is capped at 3 (the CCNet/
     Stupid-Backoff regime this module quantizes exactly).
 
-    ``use_arrow=True`` (default, the scale path): per-batch Counter →
-    one groupBy sum — ONE corpus pass for all orders. The declarative
-    plan (equality reference) recomputes the token stream per order.
-    """
+    Per-batch Counter → one groupBy sum — ONE corpus pass for all
+    orders."""
+    import pyarrow as pa
+
     if not 1 <= order <= 3:
         raise ValueError("order must be 1..3")
-    if use_arrow:
-        import pyarrow as pa
 
-        def count(batches):
-            from collections import Counter
-            for rb in batches:
-                cnt: Counter = Counter()
-                for t in rb.column(0).to_pylist():
-                    ws = _py_tokens(t)
-                    for i, w in enumerate(ws):
-                        cnt[(1, w)] += 1
-                        if order >= 2 and i >= 1:
-                            cnt[(2, ws[i - 1] + " " + w)] += 1
-                        if order >= 3 and i >= 2:
-                            cnt[(3, ws[i - 2] + " " + ws[i - 1]
-                                 + " " + w)] += 1
-                ks = [k for (k, _) in cnt]
-                gs = [g for (_, g) in cnt]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(ks, pa.int32()), pa.array(gs, pa.string()),
-                     pa.array([cnt[kg] for kg in cnt], pa.int64())],
-                    names=["k", "gram", "n"])
+    def count(batches):
+        from collections import Counter
+        for rb in batches:
+            cnt: Counter = Counter()
+            for t in rb.column(0).to_pylist():
+                ws = _py_tokens(t)
+                for i, w in enumerate(ws):
+                    cnt[(1, w)] += 1
+                    if order >= 2 and i >= 1:
+                        cnt[(2, ws[i - 1] + " " + w)] += 1
+                    if order >= 3 and i >= 2:
+                        cnt[(3, ws[i - 2] + " " + ws[i - 1]
+                             + " " + w)] += 1
+            ks = [k for (k, _) in cnt]
+            gs = [g for (_, g) in cnt]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ks, pa.int32()), pa.array(gs, pa.string()),
+                 pa.array([cnt[kg] for kg in cnt], pa.int64())],
+                names=["k", "gram", "n"])
 
-        partial = df.select(text_col).mapInArrow(count, _COUNT_SCHEMA)
-        return partial.groupBy("k", "gram") \
-            .agg(F.sum("n").cast("long").alias("n"))
-
-    parts = []
-    for k in range(1, order + 1):
-        st = _token_stream(df.select(text_col), text_col, order) \
-            .filter(F.col("pos") >= k)
-        parts.append(st.groupBy(_gram_col(k).alias("gram"))
-                     .agg(F.count("*").cast("long").alias("n"))
-                     .select(F.lit(k).alias("k"), "gram", "n"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    partial = df.select(text_col).mapInArrow(count, _COUNT_SCHEMA)
+    return partial.groupBy("k", "gram") \
+        .agg(F.sum("n").cast("long").alias("n"))
 
 
 def _score_doc(ws: list[str], order: int, c, total: int):
@@ -203,80 +145,72 @@ def _score_doc(ws: list[str], order: int, c, total: int):
 
 def lm_score(docs: DataFrame, counts: DataFrame, order: int = 3,
              min_count: int = 1, id_col: str = "doc_id",
-             text_col: str = "text", use_arrow: bool = True) -> DataFrame:
+             text_col: str = "text") -> DataFrame:
     """Score every doc against the count table: returns ``(id, n_tokens,
     hits3, hits2, hits1, oov, score_q)`` — all int64, ordered by id.
     ``hitsK`` counts tokens resolved at order K; ``oov`` counts tokens
     absent even as unigrams; ``score_q`` sums the quantized token
     scores (see module docstring). NULL/empty texts yield all-zero rows.
+    Every input row is scored on its own, so NULL and repeated ids are
+    passed through as they are.
 
     ``min_count`` prunes grams with n < min_count before scoring (the
     CCNet model-size lever); the total-token normalizer N is the
     UNPRUNED unigram mass, so pruning only moves tokens to lower
     orders, never inflates survivors' scores.
 
-    ``use_arrow=True`` (default): counts are collected driver-side and
-    ride the UDF closure — one zero-shuffle corpus pass; bound: the
-    pruned model must fit per worker (CCNet's own deployment shape).
-    ``use_arrow=False``: declarative twin — token stream + left joins
-    against the (distributed, broadcast-hinted) count table; the
-    fallback when the model exceeds worker memory. Ids must be unique
-    (at most one NULL): the declarative plan aggregates per id, so
-    duplicate-id rows would each receive their group's combined score
-    while the arrow path scores each row independently."""
+    The pruned counts are collected once and ride the UDF closure — one
+    zero-shuffle corpus pass; bound: the pruned model must fit per
+    worker (CCNet's own deployment shape)."""
+    import pyarrow as pa
+
+    from delver_spark.operators.extract import col_simple_type
+
     if not 1 <= order <= 3:
         raise ValueError("order must be 1..3")
-    if use_arrow:
-        import pyarrow as pa
+    # ONE collect job: gather counts, derive the unpruned normalizer
+    # N and the pruned dicts in-process (three serial Spark jobs
+    # here were 2-3 s of the score stage's wall clock at any corpus
+    # size — scale-invariant serial cost, bench_lm.py). The filter
+    # keeps ALL unigrams (N must be the unpruned unigram mass) but
+    # drops pruned higher-order grams BEFORE the collect — on a
+    # Zipf corpus the singleton bi/trigrams are the majority of
+    # distinct grams, and shipping them out of the cluster just to
+    # discard them would defeat min_count as the model-size lever.
+    c: dict[int, dict[str, int]] = {k: {} for k in range(1, order + 1)}
+    total = 0
+    rows = counts.filter((F.col("k") == 1)
+                         | (F.col("n") >= min_count)).collect()
+    for r in rows:
+        if r.k == 1:
+            total += r.n
+        if r.k <= order and r.n >= min_count:
+            c[r.k][r.gram] = r.n
+    if total <= 0:
+        raise ValueError("empty model: no unigram mass in counts")
+    id_type = col_simple_type(docs, id_col)
+    schema = f"{id_col} {id_type}, " + ", ".join(
+        f"{s} long" for s in _SCORE_COLS)
 
-        from delver_spark.operators.extract import col_simple_type
+    def run(batches):
+        for rb in batches:
+            texts = rb.column(1).to_pylist()
+            rows = [[] for _ in range(6)]
+            for t in texts:
+                ws = _py_tokens(t)
+                hits, q = _score_doc(ws, order, c, total)
+                vals = [len(ws), hits[3] if order >= 3 else 0,
+                        hits[2] if order >= 2 else 0, hits[1],
+                        hits[0], q]
+                for j, v in enumerate(vals):
+                    rows[j].append(v)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0)] + [pa.array(r, pa.int64())
+                                  for r in rows],
+                names=[id_col] + _SCORE_COLS)
 
-        # ONE driver job: collect counts, derive the unpruned normalizer
-        # N and the pruned dicts in-process (three serial Spark jobs
-        # here were 2-3 s of the score stage's wall clock at any corpus
-        # size — scale-invariant serial cost, bench_lm.py). The filter
-        # keeps ALL unigrams (N must be the unpruned unigram mass) but
-        # drops pruned higher-order grams BEFORE the collect — on a
-        # Zipf corpus the singleton bi/trigrams are the majority of
-        # distinct grams, and shipping them to the driver just to
-        # discard them would defeat min_count as the model-size lever.
-        c: dict[int, dict[str, int]] = {k: {} for k in range(1, order + 1)}
-        total = 0
-        rows = counts.filter((F.col("k") == 1)
-                             | (F.col("n") >= min_count)).collect()
-        for r in rows:
-            if r.k == 1:
-                total += r.n
-            if r.k <= order and r.n >= min_count:
-                c[r.k][r.gram] = r.n
-        if total <= 0:
-            raise ValueError("empty model: no unigram mass in counts")
-        id_type = col_simple_type(docs, id_col)
-        schema = f"{id_col} {id_type}, " + ", ".join(
-            f"{s} long" for s in _SCORE_COLS)
-
-        def run(batches):
-            for rb in batches:
-                texts = rb.column(1).to_pylist()
-                rows = [[] for _ in range(6)]
-                for t in texts:
-                    ws = _py_tokens(t)
-                    hits, q = _score_doc(ws, order, c, total)
-                    vals = [len(ws), hits[3] if order >= 3 else 0,
-                            hits[2] if order >= 2 else 0, hits[1],
-                            hits[0], q]
-                    for j, v in enumerate(vals):
-                        rows[j].append(v)
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(0)] + [pa.array(r, pa.int64())
-                                      for r in rows],
-                    names=[id_col] + _SCORE_COLS)
-
-        return (docs.select(id_col, text_col).mapInArrow(run, schema)
-                .orderBy(id_col))
-
-    return _lm_score_declarative(docs, counts, order, min_count, id_col,
-                                 text_col)
+    return (docs.select(id_col, text_col).mapInArrow(run, schema)
+            .orderBy(id_col))
 
 
 def lm_partition(scored: DataFrame, milli_bounds=(333, 667),
@@ -317,73 +251,3 @@ def lm_partition(scored: DataFrame, milli_bounds=(333, 667),
               .otherwise("tail"))
     return ranked.withColumn(out_col, bucket).drop("_negq", "_r")
 
-
-def _lm_score_declarative(docs, counts, order, min_count, id_col,
-                          text_col):
-    # stream + left joins (NULL gram keys simply never match — left
-    # joins keep every token row, so the r4 null-key-drop hazard does
-    # not apply to the gram joins). Counts must be self-consistent
-    # (train_ngram_lm output + the uniform min_count prune): a matched
-    # k-gram whose context is absent would yield a NULL denominator and
-    # silently drop that token's q from the sum — the arrow path
-    # KeyErrors loudly on the same inconsistency.
-    total = int(counts.filter(F.col("k") == 1)
-                .agg(F.sum("n")).collect()[0][0] or 0)
-    if total <= 0:
-        raise ValueError("empty model: no unigram mass in counts")
-    pruned = counts.filter(F.col("n") >= min_count) if min_count > 1 \
-        else counts
-    st = _token_stream(docs.select(id_col, text_col), text_col, order,
-                       id_col=id_col)
-    for k in range(1, order + 1):
-        hit = F.broadcast(pruned.filter(F.col("k") == k)
-                          .select(F.col("gram").alias(f"_g{k}"),
-                                  F.col("n").alias(f"_n{k}")))
-        st = st.join(hit, _gram_col(k) == F.col(f"_g{k}"), "left")
-        if k > 1:  # context (k-1)-gram over positions i-k+1..i-1
-            parts = []
-            for b in range(k - 1, 1, -1):
-                parts += [F.col(f"p{b}"), F.lit(" ")]
-            parts.append(F.col("p1"))
-            ctx = F.concat(*parts) if k > 2 else F.col("p1")
-            den = F.broadcast(pruned.filter(F.col("k") == k - 1)
-                              .select(F.col("gram").alias(f"_dg{k}"),
-                                      F.col("n").alias(f"_d{k}")))
-            st = st.join(den, ctx == F.col(f"_dg{k}"), "left")
-
-    lvl = F.lit(0)
-    q = F.lit(0).cast("long")
-    for k in range(1, order + 1):
-        top = F.least(F.col("pos") - 1, F.lit(order - 1)) + 1
-        b = top - k  # back-off steps; >= 0 wherever pos >= k
-        bnum = F.when(b == 2, 4).when(b == 1, 2).otherwise(1)
-        bden = F.when(b == 2, 25).when(b == 1, 5).otherwise(1)
-        num = F.col(f"_n{k}") * SCALE * bnum
-        den_base = F.col(f"_d{k}") if k > 1 else F.lit(total)
-        den = den_base * bden
-        cond = F.col(f"_n{k}").isNotNull() & (F.col("pos") >= k)
-        lvl = F.when(cond, k).otherwise(lvl)
-        q = F.when(cond, F.expr(f"_qn{k} div _qd{k}")).otherwise(q)
-        st = st.withColumn(f"_qn{k}", num.cast("long")) \
-            .withColumn(f"_qd{k}", den.cast("long"))
-    st = st.withColumn("_lvl", lvl).withColumn("_q", q)
-    agg = st.groupBy(id_col).agg(
-        *[F.sum(F.when(F.col("_lvl") == k, 1).otherwise(0)).cast("long")
-          .alias(f"hits{k}") for k in (3, 2, 1)],
-        F.sum(F.when(F.col("_lvl") == 0, 1).otherwise(0)).cast("long")
-        .alias("oov"),
-        F.sum("_q").cast("long").alias("score_q"))
-    base = docs.select(
-        id_col, F.coalesce(F.size(_tokens_col(text_col)), F.lit(0))
-        .cast("long").alias("n_tokens"))
-    # null-safe key pair (the r4 rule: a plain equi-join would zero out
-    # a NULL-id doc's scores — the arrow path passes NULL ids through):
-    # (isnull, coalesce) columns keep this an AQE-splittable equi-join
-    nk = [F.col(id_col).isNull().alias("_idn"),
-          F.coalesce(F.col(id_col).cast("string"), F.lit("")).alias("_idc")]
-    out = base.select("*", *nk).join(
-        agg.select("*", *nk).drop(id_col), ["_idn", "_idc"], "left")
-    return out.select(
-        id_col, "n_tokens",
-        *[F.coalesce(F.col(s), F.lit(0)).cast("long").alias(s)
-          for s in _SCORE_COLS[1:]]).orderBy(id_col)

@@ -11,8 +11,9 @@ shuffling expensive):
                   (quality desc, id) — one hash-shuffle window over
                   stage-1 survivors only
   3. contaminated word-n-gram benchmark decontamination
-                  (textstats.ngram_decontaminate) — broadcast joins
-                  both ways, corpus never shuffled
+                  (textstats.ngram_decontaminate) — one narrow pass
+                  with the bench gram set in the UDF closure, hits
+                  broadcast-joined back, corpus never shuffled
   4. quota        per-language top-N balancing — one window over
                   survivors (salt the dominant language upstream with
                   textstats.language_quota for skewed corpora)

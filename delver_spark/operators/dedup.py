@@ -567,11 +567,6 @@ def _round_half_away(x):
                     np.where(under, c + 1, c))
 
 
-# id types the per-cell kernel can carry through its pandas output
-# (checked driver-side, same policy as _GRAM_ID_TYPES)
-_SEMDEDUP_ID_TYPES = {"bigint": "int64", "int": "int32"}
-
-
 def _semdedup_cells_arrow(q0: DataFrame, threshold_milli: int,
                           id_col: str, cell_col: str) -> DataFrame:
     """The entire per-cell SemDeDup kernel (centroid cosine, pair
@@ -580,32 +575,34 @@ def _semdedup_cells_arrow(q0: DataFrame, threshold_milli: int,
     is cell-LOCAL, so the quadratic pair stage runs as a numpy matmul
     instead of a Catalyst zip_with/aggregate per pair — measured ~80x
     on the pair stage (bench_semdedup.py; the HOF chain costs ~8 µs
-    per 64-dim pair, this kernel ~0.1). Arithmetic mirrors the declarative
-    plan operation for operation (exact int64 dots; float64 products
-    of exactly-converted ints; round half-away-from-zero), so the two
-    plans are bit-identical — pinned in tests/test_dedup_scale.py and
-    by the driver gate twin; the round uses :func:`_round_half_away`
-    (near-tie-corrected), not the naive floor trick. Degenerate inputs
-    raise LOUDLY instead of silently diverging from the declarative
-    plan (which NaN-mangles them): zero vectors, zero CENTROID sums
-    (cells whose quantized vectors cancel — 0/0 cosine would cast NaN
-    to INT64_MIN here), and NULL/ragged embeddings (the declarative
-    plan null-propagates those; filter upstream or use
-    ``use_arrow=False`` if you need that behavior).
+    per 64-dim pair, this kernel ~0.1). Arithmetic: exact int64 dots;
+    float64 products of exactly-converted ints; round half-away-from-
+    zero via :func:`_round_half_away` (near-tie-corrected, not the
+    naive floor trick) — bit-identical to the DuckDB gate twin and the
+    sequential reference in tests/test_dedup_scale.py.
+
+    Ids keep their own type: the kernel sorts them (Python order of
+    ``str`` equals Spark's UTF-8 byte order) and works on row
+    positions from then on — union by min position, keeper ties on
+    position, ``component = vids[root]`` — so integral, decimal and
+    string ids all work. Nested id types (array/map/struct) are
+    rejected at plan time. Degenerate inputs raise LOUDLY: NULL ids,
+    zero vectors, zero CENTROID sums (cells whose quantized vectors
+    cancel — 0/0 cosine), and NULL/ragged embeddings; filter them
+    upstream.
 
     Memory bound per task: one cell's n_c×dim int64 matrix + its
     n_c×n_c cosine block — the paper's k ∝ n rule (bounded cells) is
     the operating contract, same as the docstring above."""
     from delver_spark.operators.extract import col_simple_type
 
+    if isinstance(q0.schema["_vid"].dataType,
+                  (T.ArrayType, T.MapType, T.StructType)):
+        raise TypeError(f"semdedup: unsupported id type "
+                        f"{col_simple_type(q0, '_vid')!r} (nested types "
+                        f"have no id order)")
     cell_t = col_simple_type(q0, "_cell")
     id_t = col_simple_type(q0, "_vid")
-    if id_t not in _SEMDEDUP_ID_TYPES:
-        raise TypeError(f"semdedup(use_arrow=True): unsupported id type "
-                        f"{id_t!r} (supported: "
-                        f"{sorted(_SEMDEDUP_ID_TYPES)}); "
-                        f"use_arrow=False handles any type")
-    np_id = _SEMDEDUP_ID_TYPES[id_t]
     out_schema = (f"{id_col} {id_t}, {cell_col} {cell_t}, "
                   f"component {id_t}, cent_cos_milli long, keep boolean")
     thr = int(threshold_milli)
@@ -614,14 +611,17 @@ def _semdedup_cells_arrow(q0: DataFrame, threshold_milli: int,
         import numpy as np
         import pandas as pd
 
+        if pdf["_vid"].isna().any():
+            raise ValueError("semdedup: NULL id in a non-NULL cell "
+                             "(the keeper and component need an id; "
+                             "filter upstream)")
         vids = pdf["_vid"].to_numpy()
         order = np.argsort(vids)
-        vids = vids[order].astype(np.int64)
+        vids = vids[order]
         qcol = pdf["q"].iloc[order]
         if qcol.isna().any():
-            raise ValueError("semdedup: NULL embedding (the arrow "
-                             "kernel rejects it; filter upstream or "
-                             "use_arrow=False to null-propagate)")
+            raise ValueError("semdedup: NULL embedding (filter "
+                             "upstream)")
         try:
             X = np.asarray([np.asarray(v, dtype=np.int64)
                             for v in qcol], dtype=np.int64)
@@ -666,21 +666,20 @@ def _semdedup_cells_arrow(q0: DataFrame, threshold_milli: int,
                 else:
                     parent[ra] = rb
         root = np.array([find(i) for i in range(n)])
-        comp = vids[root]
         keep = np.zeros(n, dtype=bool)
         best: dict = {}
         for i in range(n):
             r = root[i]
             cur = best.get(r)
-            key = (cc[i], vids[i])
-            if cur is None or key < cur[0]:
-                best[r] = (key, i)
+            key = (cc[i], i)        # position order == id order
+            if cur is None or key < cur:
+                best[r] = key
         for _, i in best.values():
             keep[i] = True
         return pd.DataFrame({
-            id_col: vids.astype(np_id),
+            id_col: vids,
             cell_col: pdf["_cell"].iloc[order].to_numpy(),
-            "component": comp.astype(np_id),
+            "component": vids[root],
             "cent_cos_milli": cc, "keep": keep})
 
     return q0.groupBy("_cell").applyInPandas(fn, schema=out_schema)
@@ -688,9 +687,7 @@ def _semdedup_cells_arrow(q0: DataFrame, threshold_milli: int,
 
 def semdedup(emb: DataFrame, id_col: str = "vec_id",
              vec_col: str = "embedding", cell_col: str = "label",
-             threshold_milli: int = 950,
-             broadcast_centroids: bool = True,
-             use_arrow: bool = True) -> DataFrame:
+             threshold_milli: int = 950) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
     scoped to pre-computed clusters. Pairwise cosine is evaluated ONLY
     within a cluster (an IVF cell / k-means label — here ``cell_col``,
@@ -706,8 +703,7 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id",
     ``(id, cell, component, cent_cos_milli, keep)`` — singletons keep
     themselves; ``component`` = min id of the within-cell dup group.
     NULL-cell (unclustered) vectors are explicit singletons
-    ``(id, NULL, id, NULL, true)`` — never silently dropped by the
-    cell equi-joins.
+    ``(id, NULL, id, NULL, true)`` — never silently dropped.
 
     Exactness: vectors quantize to int milli (round HALF_UP); the
     "centroid" is the UNNORMALIZED per-cell integer sum (same artifact
@@ -716,37 +712,25 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id",
     exact integer arithmetic and the single sqrt/round is the same IEEE
     op in any engine. Norm products cast to double BEFORE multiplying
     (nm·nc overflows int64 past ~3k-member cells; double(nm)*double(nc)
-    is the form both the DuckDB twin and this plan use, keeping the two
-    bit-identical above 2^53 too).
+    is the form both the DuckDB twin and this kernel use, keeping the
+    two bit-identical above 2^53 too).
 
-    Scale shape — ``use_arrow=True`` (default, r5-s3): ONE shuffle by
-    cell id, then the entire per-cell kernel (centroid cosine, pair
-    matmul, union-find, keeper) runs locally in numpy via
-    applyInPandas (``_semdedup_cells_arrow`` — ~80x on the pair
-    stage vs the Catalyst zip_with-per-pair chain, bench_semdedup.py);
-    per-task memory is one cell's matrix + cosine block, bounded by
-    the k ∝ n rule. ``use_arrow=False`` keeps the declarative plan
-    (the equality reference and the shape for engines without
-    applyInPandas): one narrow explode+groupBy for the centroid sums
-    (map-side partial agg; output = n_cells × dim), centroid arrays
-    broadcast-joined back (``broadcast_centroids=False`` falls back to
-    a shuffle join when n_cells × dim is itself huge), one within-cell
-    self-join for pairs, min-label components over within-cell edges
-    (diameter ≤ cell size, converges in 2-3 rounds for dup clusters),
-    and a map-side ``min_by`` keeper agg — no window over the corpus,
-    no driver collect. The isNull flag leads the min_by struct (r4
-    review rule) so a NULL centroid-cosine (zero vector) can never win
-    keeper by NULL-ordering accident. Both plans bit-identical on the
-    planted corpus AND vs the DuckDB twin (t:test_dedup_scale; gate
-    re-verified)."""
+    Scale shape: ONE shuffle by cell id, then the entire per-cell
+    kernel (centroid cosine, pair matmul, union-find, keeper) runs
+    locally in numpy via applyInPandas (:func:`_semdedup_cells_arrow`
+    — ~80x on the pair stage vs a Catalyst zip_with-per-pair chain,
+    bench_semdedup.py); per-task memory is one cell's matrix + cosine
+    block, bounded by the k ∝ n rule. No window over the corpus, no
+    collect. Hash-equal to the DuckDB twin (gate
+    ``dedup_semdedup``)."""
     q0 = emb.select(
         F.col(id_col).alias("_vid"), F.col(cell_col).alias("_cell"),
         F.transform(F.col(vec_col),
                     lambda x: F.round(x.cast("double") * 1000)
                     .cast("long")).alias("q"))
-    # NULL-cell (unclustered) vectors would silently vanish through the
-    # equi-joins below (r4 review rule) — route them around the
-    # pipeline as explicit singletons instead
+    # NULL-cell (unclustered) vectors share no cluster (the cell groupBy
+    # would lump them into one) — route them around the kernel as
+    # explicit singletons instead
     nulls = (q0.filter(F.col("_cell").isNull())
              .select(F.col("_vid").alias(id_col),
                      F.col("_cell").alias(cell_col),
@@ -754,137 +738,49 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id",
                      F.lit(None).cast("long").alias("cent_cos_milli"),
                      F.lit(True).alias("keep")))
     q = q0.filter(F.col("_cell").isNotNull())
-
-    if use_arrow:
-        # one shuffle by cell, then the whole per-cell kernel runs
-        # locally in numpy — see _semdedup_cells_arrow (bit-identical
-        # to the declarative plan below, ~80x on the pair stage)
-        return (_semdedup_cells_arrow(q, threshold_milli, id_col,
-                                      cell_col)
-                .unionByName(nulls).orderBy(id_col))
-
-    # per-cell unnormalized integer centroid (the IVF index artifact)
-    ex = q.select("_cell", F.posexplode("q").alias("i", "v"))
-    cent = (ex.groupBy("_cell", "i").agg(F.sum("v").alias("s"))
-            .groupBy("_cell")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "s"))).alias("p"))
-            .select("_cell",
-                    F.transform("p", lambda x: x["s"]).alias("c")))
-    if broadcast_centroids:
-        cent = F.broadcast(cent)
-    cdot = F.aggregate(F.zip_with("q", "c", lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-    nm = F.aggregate(F.transform("q", lambda x: x * x),
-                     F.lit(0).cast("long"), lambda acc, x: acc + x)
-    # nc in DECIMAL(38,0): centroid components reach n_cell·10³, so
-    # their squares overflow int64 past ~3M-member cells — long
-    # arithmetic would WRAP silently in Spark while the HUGEINT twin
-    # errors (r5 review finding); decimal keeps it exact to ~10³⁸
-    nc = F.aggregate(
-        F.transform("c", lambda x: x.cast("decimal(19,0)")
-                    * x.cast("decimal(19,0)")),
-        F.lit(0).cast("decimal(38,0)"), lambda acc, x: acc + x)
-    scored = (q.join(cent, "_cell")
-              .withColumn(
-                  "cent_cos_milli",
-                  F.round(cdot * 1000.0
-                          / F.sqrt(nm.cast("double") * nc.cast("double")))
-                  .cast("long"))
-              .select("_vid", "_cell", "q", "cent_cos_milli"))
-
-    # within-cell near-dup edges: exact int-cosine, same form as
-    # embedding_cosine_pairs but the join key is the cell
-    a = q.select(F.col("_vid").alias("doc_a"), "_cell",
-                 F.col("q").alias("qa"))
-    b = q.select(F.col("_vid").alias("doc_b"), "_cell",
-                 F.col("q").alias("qb"))
-    dot = F.aggregate(F.zip_with("qa", "qb", lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)
-    na = F.aggregate(F.transform("qa", lambda x: x * x),
-                     F.lit(0).cast("long"), lambda acc, x: acc + x)
-    nb = F.aggregate(F.transform("qb", lambda x: x * x),
-                     F.lit(0).cast("long"), lambda acc, x: acc + x)
-    edges = (a.join(b, "_cell").filter(F.col("doc_a") < F.col("doc_b"))
-             .withColumn("cos_milli",
-                         F.round(dot * 1000.0
-                                 / F.sqrt(na.cast("double")
-                                          * nb.cast("double")))
-                         .cast("long"))
-             .filter(F.col("cos_milli") >= threshold_milli)
-             .select("doc_a", "doc_b"))
-    comps = connected_components(edges).withColumnRenamed("doc_id", "_vid")
-
-    labeled = (scored.join(comps, "_vid", "left")
-               .withColumn("component",
-                           F.coalesce("component", F.col("_vid"))))
-    winners = labeled.groupBy("component").agg(
-        F.min_by(F.col("_vid"),
-                 F.struct(F.col("cent_cos_milli").isNull().alias("u"),
-                          F.col("cent_cos_milli").alias("cc"),
-                          F.col("_vid").alias("t"))).alias("_keeper"))
-    return (labeled.join(winners, "component")
-            .select(F.col("_vid").alias(id_col),
-                    F.col("_cell").alias(cell_col),
-                    "component", "cent_cos_milli",
-                    (F.col("_vid") == F.col("_keeper")).alias("keep"))
-            .unionByName(nulls)
-            .orderBy(id_col))
-
-
-# Spark simpleString -> pyarrow factory name for the gram-table id
-# column (pyarrow resolved lazily; the membership check runs
-# driver-side so unsupported types fail at plan time, not per-task)
-_GRAM_ID_TYPES = {"bigint": "int64", "int": "int32", "string": "string"}
+    return (_semdedup_cells_arrow(q, threshold_milli, id_col, cell_col)
+            .unionByName(nulls).orderBy(id_col))
 
 
 def _grams_arrow(docs: DataFrame, n: int, id_col: str,
                  text_col: str) -> DataFrame:
-    """The gram table (id, pos, h) as ONE narrow mapInArrow pass —
-    byte-identical to the declarative explode (python
-    ``hashlib.md5(gram.encode('utf-8'))`` == Spark ``F.md5`` == DuckDB
-    ``md5``; 1-based pos matches ``slice``'s indexing; None text yields
-    no grams like the when(k>=1) null-propagation). Exists because the
-    Catalyst transform-over-sequence + per-position slice + array_join
-    + md5 chain was MEASURED compute-bound (~130 s for 26M grams at
-    500k docs/local[2] — the per-position slice allocation dominates),
-    while the python pass does the same work in ~30 s. Equality pinned
-    in tests/test_quality_ops.py."""
+    """The gram table (id, pos, h) as ONE narrow mapInArrow pass: words
+    are the lowercased text split on single spaces with empties dropped
+    (the DuckDB twin's tokenizer), ``h`` is python
+    ``hashlib.md5(gram.encode('utf-8'))`` (== DuckDB ``md5``), ``pos``
+    is 1-based, None text yields no grams. The id column is carried by
+    Arrow ``take`` on row indices, so any id type passes through
+    unchanged. Exists because a Catalyst transform-over-sequence +
+    per-position slice + array_join + md5 chain was MEASURED
+    compute-bound (~130 s for 26M grams at 500k docs/local[2] — the
+    per-position slice allocation dominates), while the python pass
+    does the same work in ~30 s."""
     import pyarrow as pa
 
     from delver_spark.operators.extract import col_simple_type
 
-    id_type = col_simple_type(docs, id_col)
-    if id_type not in _GRAM_ID_TYPES:
-        # driver-side, not a worker KeyError mid-task; callers
-        # (duplicate_spans / ngram_decontaminate) fall back to the
-        # equality-pinned declarative gram plan for exotic id types
-        raise TypeError(
-            f"_grams_arrow: unsupported id type {id_type!r} "
-            f"(supported: {sorted(_GRAM_ID_TYPES)})")
-    schema = f"{id_col} {id_type}, pos int, h string"
+    schema = f"{id_col} {col_simple_type(docs, id_col)}, pos int, h string"
 
     def run(batches):
         import hashlib
 
         for rb in batches:
-            ids = rb.column(0).to_pylist()
             texts = rb.column(1).to_pylist()
-            out_i, out_p, out_h = [], [], []
-            for did, t in zip(ids, texts):
+            out_r, out_p, out_h = [], [], []
+            for j, t in enumerate(texts):
                 if t is None:
                     continue
                 ws = [w for w in t.lower().split(" ") if w]
                 join = " ".join
                 md5 = hashlib.md5
                 for i in range(len(ws) - n + 1):
-                    out_i.append(did)
+                    out_r.append(j)
                     out_p.append(i + 1)
                     out_h.append(md5(join(ws[i:i + n])
                                      .encode("utf-8")).hexdigest())
-            pa_id = getattr(pa, _GRAM_ID_TYPES[id_type])()
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_i, pa_id), pa.array(out_p, pa.int32()),
-                 pa.array(out_h, pa.string())],
+                [rb.column(0).take(pa.array(out_r, pa.int64())),
+                 pa.array(out_p, pa.int32()), pa.array(out_h, pa.string())],
                 names=[id_col, "pos", "h"])
 
     return docs.select(id_col, text_col).mapInArrow(run, schema)
@@ -893,8 +789,7 @@ def _grams_arrow(docs: DataFrame, n: int, id_col: str,
 def duplicate_spans(docs: DataFrame, window: int = 8,
                     id_col: str = "doc_id",
                     text_col: str = "text",
-                    skew_safe: bool = False,
-                    use_arrow: bool = True) -> DataFrame:
+                    skew_safe: bool = False) -> DataFrame:
     """Cross-document repeated-passage detection — exact SUBSTRING-level
     dedup (the Lee et al. 2022 "Deduplicating Training Data Makes
     Language Models Better" suffix-array pass, re-shaped for Spark):
@@ -935,39 +830,12 @@ def duplicate_spans(docs: DataFrame, window: int = 8,
     windows) — the inherent cost of substring granularity; stride
     sampling trades recall for a proportionally smaller shuffle.
 
-    ``use_arrow`` (default True, r5): generate the gram table with
-    ``_grams_arrow`` (one narrow python pass, byte-identical md5 rows)
-    instead of the Catalyst transform/slice/array_join chain, which was
-    measured compute-bound on per-position slice allocation (~2x the
-    whole stage at 500k docs). Both gram sources feed the SAME
-    window/groupBy + island-merge plan; equality pinned in
-    tests/test_quality_ops.py."""
+    The gram table comes from :func:`_grams_arrow` (one narrow python
+    pass; any id type) and feeds the window/groupBy + island-merge
+    plan."""
     from pyspark.sql import Window as W
 
-    from delver_spark.operators.extract import col_simple_type
-
-    id_type = col_simple_type(docs, id_col)
-    if use_arrow and id_type in _GRAM_ID_TYPES:
-        # one narrow python pass generates the identical gram table —
-        # the declarative HOF chain below is compute-bound on its
-        # per-position slice (see _grams_arrow; equality-pinned).
-        # Exotic id types fall through to the declarative plan, which
-        # handles any Catalyst type
-        g = _grams_arrow(docs, window, id_col, text_col)
-    else:
-        words = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                         lambda x: x != "")
-        k = F.size(words) - (window - 1)
-        grams = F.when(k >= 1, F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.struct(
-                i.alias("pos"),
-                F.md5(F.array_join(F.slice(words, i, window), " "))
-                .alias("h"))
-        )).otherwise(F.array().cast("array<struct<pos:int,h:string>>"))
-        g = (docs.select(id_col, F.explode(grams).alias("g"))
-             .select(id_col, F.col("g.pos").alias("pos"),
-                     F.col("g.h").alias("h")))
+    g = _grams_arrow(docs, window, id_col, text_col)
     if skew_safe:
         dup = g.groupBy("h").agg(F.count("*").alias("cnt")) \
             .filter(F.col("cnt") > 1).select("h")

@@ -133,7 +133,7 @@ def col_simple_type(df, col: str) -> str:
     """``simpleString`` of one column's Catalyst type — the shared
     lookup for mapInArrow operators that carry an id column through to
     their output schema (bpe.token_counts, dedup._grams_arrow,
-    textstats._decontaminate_arrow, similarity._assign_cells). One
+    textstats.ngram_decontaminate, similarity._assign_cells). One
     helper so the idiom can't drift per call site (r5 review)."""
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     return types[col]

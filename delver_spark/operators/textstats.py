@@ -206,11 +206,9 @@ def pii_scrub(df: DataFrame, id_col: str = "doc_id",
 
 
 def _gram_hits(text: str | None, bench_set: frozenset, n: int) -> int:
-    """Occurrence count of benchmark ``n``-grams in one text — the
-    python twin of the declarative gram explode: lower → split on the
-    single-space regex → drop empties → join each n-window with a
-    space. None text has no grams (matches when(k>=1,...)
-    null-propagation in the SQL plan)."""
+    """Occurrence count of benchmark ``n``-grams in one text: lower →
+    split on the single space → drop empties → join each n-window with
+    a space (the DuckDB twin's tokenizer). None text has no grams."""
     if text is None:
         return 0
     ws = [w for w in text.lower().split(" ") if w]
@@ -221,13 +219,31 @@ def _gram_hits(text: str | None, bench_set: frozenset, n: int) -> int:
     return c
 
 
-def _decontaminate_arrow(docs: DataFrame, bench: DataFrame, n: int,
-                         id_col: str, text_col: str) -> DataFrame:
-    """One narrow mapInArrow pass; the benchmark gram set rides the UDF
-    closure (spark broadcasts the pickled closure to workers once). The
-    bench texts are collected driver-side and grammed with the SAME
-    python tokenizer the pass uses — one tokenizer, zero drift."""
+def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
+                        id_col: str = "doc_id",
+                        text_col: str = "text") -> DataFrame:
+    """Benchmark decontamination (the GPT-3 appendix-C / Dolma shape):
+    flag corpus documents sharing any word ``n``-gram with a benchmark
+    set. Docs shorter than ``n`` words produce no grams and are
+    trivially clean.
+
+    Returns every corpus doc with its matching-gram count and a
+    ``contaminated`` flag (count > 0), ordered by id.
+
+    Plan: the bench texts are collected and grammed with
+    the SAME python tokenizer the corpus pass uses (one tokenizer, zero
+    drift); the distinct gram set rides the UDF closure (Spark ships
+    the pickled closure to workers once) into ONE narrow mapInArrow
+    pass over the corpus — no gram explode, no join, no shuffle. A
+    Catalyst transform-over-sequence + per-position ``slice`` gram
+    explode was MEASURED compute-bound on the slice allocation (~130 s
+    at 500k docs/local[2]), while the python split + join + set-probe
+    runs the same semantics at ~25 µs/doc. The gram set must fit in
+    worker memory (eval suites are KB-MB against TB corpora); for
+    bigger bench sets use :func:`ngram_decontaminate_bloom`."""
     import pyarrow as pa
+
+    from delver_spark.operators.extract import col_simple_type
 
     bench_set = set()
     for r in bench.select(text_col).collect():
@@ -238,8 +254,6 @@ def _decontaminate_arrow(docs: DataFrame, bench: DataFrame, n: int,
         for i in range(len(ws) - n + 1):
             bench_set.add(" ".join(ws[i:i + n]))
     bench_fz = frozenset(bench_set)
-
-    from delver_spark.operators.extract import col_simple_type
 
     id_type = col_simple_type(docs, id_col)
     schema = f"{id_col} {id_type}, n_hits long, contaminated boolean"
@@ -255,73 +269,6 @@ def _decontaminate_arrow(docs: DataFrame, bench: DataFrame, n: int,
                 names=[id_col, "n_hits", "contaminated"])
 
     return (docs.select(id_col, text_col).mapInArrow(run, schema)
-            .orderBy(id_col))
-
-
-def ngram_decontaminate(docs: DataFrame, bench: DataFrame, n: int = 5,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        broadcast_hits: bool = True,
-                        use_arrow: bool = True) -> DataFrame:
-    """Benchmark decontamination (the GPT-3 appendix-C / Dolma shape):
-    flag corpus documents sharing any word ``n``-gram with a benchmark
-    set. The benchmark side is tiny relative to the corpus (eval suites
-    are KBs, corpora are TBs), so its distinct gram set is broadcast
-    into the corpus-side join: the 100 TB side is never shuffled — one
-    scan, a broadcast-hash semi-join on the gram, a groupBy over only
-    the MATCHING (doc, gram) rows, and a broadcast of the resulting hit
-    counts back onto the corpus ids (the hit set is bounded by the
-    contaminated-doc count, which decontamination presumes small; pass
-    ``broadcast_hits=False`` to shuffle-join instead if a benchmark
-    contaminates a macroscopic fraction of the corpus). Docs shorter
-    than ``n`` words produce no grams and are trivially clean.
-
-    Returns every corpus doc with its matching-gram count and a
-    ``contaminated`` flag (count > 0).
-
-    Plans (output-equality pinned in tests/test_quality_ops.py):
-
-    - ``use_arrow=True`` (default): ONE narrow mapInArrow pass with the
-      benchmark gram set broadcast as an in-process python set — no
-      gram explode, no join, no shuffle at all. This exists because the
-      declarative plan was MEASURED compute-bound on its nested
-      higher-order functions, not on the join: at 500k docs/local[2]
-      the transform-over-sequence + per-position slice costs ~130 s and
-      an equivalent fingerprint variant (longs instead of gram strings)
-      costs the same 152 s — the per-position ``slice`` allocation IS
-      the cost, and a python pass doing split + join + set-probe runs
-      the same semantics at ~25 µs/doc. The gram set must fit in worker
-      memory (eval suites are KB-MB against TB corpora — the same
-      asymmetry the broadcast join relied on).
-    - ``use_arrow=False``: the original declarative explode +
-      broadcast-hash semi-join (kept as the equality reference and for
-      gram sets too big to hold per worker)."""
-    from pyspark.sql.functions import broadcast
-
-    if use_arrow:
-        return _decontaminate_arrow(docs, bench, n, id_col, text_col)
-
-    def grams(frame: DataFrame, out: str) -> DataFrame:
-        words = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                         lambda x: x != "")
-        k = F.size(words) - (n - 1)
-        g = F.when(k >= 1, F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(words, i, n), " "))
-        ).otherwise(F.array().cast("array<string>"))
-        return frame.select(id_col, F.explode(g).alias(out))
-
-    bench_grams = grams(bench, "gram").select("gram").distinct()
-    hits = (grams(docs, "gram")
-            .join(broadcast(bench_grams), "gram")
-            .groupBy(id_col).agg(F.count("*").alias("n_hits")))
-    if broadcast_hits:
-        hits = broadcast(hits)
-    return (docs.select(id_col)
-            .join(hits, id_col, "left")
-            .select(id_col,
-                    F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-                    (F.coalesce(F.col("n_hits"), F.lit(0)) > 0)
-                    .alias("contaminated"))
             .orderBy(id_col))
 
 
@@ -368,14 +315,12 @@ def ngram_decontaminate_bloom(docs: DataFrame, bench: DataFrame,
                               n: int = 5, id_col: str = "doc_id",
                               text_col: str = "text", p: float = 1e-6,
                               verify: bool = True) -> DataFrame:
-    """Benchmark decontamination for bench sets too big to broadcast or
-    hold per worker — the bound both existing plans share
-    (:func:`ngram_decontaminate`'s arrow path ships the gram SET in the
-    closure; its declarative path broadcast-hash-joins it). Here the
-    bench grams compress to a Bloom bitmap (~``-ln p / ln²2`` ≈ 28.8
-    bits/gram at p=1e-6 — two orders of magnitude under the string set)
-    built distributedly and OR-merged via treeAggregate
-    (frontier.bloom_bits_for_urls).
+    """Benchmark decontamination for bench sets too big to hold per
+    worker — the bound of :func:`ngram_decontaminate`, which ships the
+    whole gram SET in the UDF closure. Here the bench grams compress to
+    a Bloom bitmap (~``-ln p / ln²2`` ≈ 28.8 bits/gram at p=1e-6 — two
+    orders of magnitude under the string set) built distributedly and
+    OR-merged via treeAggregate (frontier.bloom_bits_for_urls).
 
     Stages — the corpus is scanned ONCE and never shuffled:
 

@@ -297,22 +297,15 @@ def test_semdedup_equals_sequential_reference(planted_emb):
 
 def test_semdedup_structure(planted_emb):
     """Structural invariants: exactly one keeper per component; a
-    component never spans cells (the pair stage is cluster-scoped);
-    the arrow per-cell kernel, the declarative plan, and its
-    shuffle-centroid variant all agree row for row."""
+    component never spans cells (the pair stage is cluster-scoped)."""
     import collections
-    out = D.semdedup(planted_emb).collect()          # arrow (default)
+    out = D.semdedup(planted_emb).collect()
     keep_per_comp = collections.Counter(r.component for r in out if r.keep)
     assert set(keep_per_comp.values()) == {1}
     cells_per_comp = collections.defaultdict(set)
     for r in out:
         cells_per_comp[r.component].add(r.label)
     assert all(len(s) == 1 for s in cells_per_comp.values())
-    decl = D.semdedup(planted_emb, use_arrow=False).collect()
-    assert sorted(map(tuple, decl)) == sorted(map(tuple, out))
-    no_bcast = D.semdedup(planted_emb, broadcast_centroids=False,
-                          use_arrow=False).collect()
-    assert sorted(map(tuple, no_bcast)) == sorted(map(tuple, out))
 
 
 def test_split_oversized_cells(spark):
@@ -387,9 +380,10 @@ def test_round_half_away_three_engines(spark):
 
 
 def test_semdedup_arrow_degenerate_inputs(spark):
-    """The arrow kernel rejects inputs the declarative plan would
-    NaN-mangle: zero centroid sums (canceling vectors) and NULL
-    embeddings — loud errors, not INT64_MIN or a worker crash."""
+    """The per-cell kernel rejects inputs it cannot score: zero
+    centroid sums (canceling vectors), NULL embeddings, NULL ids in a
+    non-NULL cell, and nested id types — loud errors, not INT64_MIN
+    or a worker crash."""
     import pytest as _pt
 
     cancel = spark.createDataFrame(
@@ -402,9 +396,16 @@ def test_semdedup_arrow_degenerate_inputs(spark):
         "vec_id long, embedding array<float>, label int")
     with _pt.raises(Exception, match="NULL embedding"):
         D.semdedup(nulls).collect()
+    # a NULL id must not turn into INT64_MIN and take the keeper slot
+    null_id = spark.createDataFrame(
+        [(None, [1.0, 0.0], 7), (1, [1.0, 0.001], 7), (2, [0.0, 1.0], 7)],
+        "vec_id long, embedding array<float>, label int")
+    with _pt.raises(Exception, match="NULL id"):
+        D.semdedup(null_id).collect()
+    from pyspark.sql import functions as F
     with _pt.raises(TypeError, match="unsupported id type"):
         D.semdedup(cancel.withColumn(
-            "vec_id", cancel.vec_id.cast("string")))
+            "vec_id", F.array(cancel.vec_id.cast("int"))))
 
 
 def test_semdedup_null_cell_singletons(spark):

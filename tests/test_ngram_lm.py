@@ -1,6 +1,6 @@
 """N-gram LM quality scoring (functions/ngram_lm.py): train counts vs a
-brute-force Counter, arrow vs declarative score plans, both vs an
-INDEPENDENT pure-python Stupid-Backoff reference (fractions-based — no
+brute-force Counter, scores vs an INDEPENDENT pure-python
+Stupid-Backoff reference (fractions-based — no
 shared quantization code), hand-computed golden values, OOV / empty /
 NULL / short docs, min_count pruning, partition invariance."""
 
@@ -95,17 +95,6 @@ def test_train_counts_match_bruteforce(spark, frames):
     assert got == want
 
 
-def test_train_arrow_equals_declarative(spark, frames):
-    train, _ = frames
-    a = sorted(map(tuple,
-                   ngram_lm.train_ngram_lm(train, use_arrow=True)
-                   .collect()))
-    d = sorted(map(tuple,
-                   ngram_lm.train_ngram_lm(train, use_arrow=False)
-                   .collect()))
-    assert a == d
-
-
 def _score_rows(spark, frames, **kw):
     train, docs = frames
     counts = ngram_lm.train_ngram_lm(train)
@@ -113,9 +102,8 @@ def _score_rows(spark, frames, **kw):
             for r in ngram_lm.lm_score(docs, counts, **kw).collect()}
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_score_matches_reference(spark, frames, use_arrow):
-    got = _score_rows(spark, frames, use_arrow=use_arrow)
+def test_score_matches_reference(spark, frames):
+    got = _score_rows(spark, frames)
     ref_c = _ref_counts(TRAIN, 3)
     total = sum(ref_c[1].values())
     for doc_id, text in SCORE:
@@ -166,9 +154,8 @@ def test_case_folding(spark, frames):
         _ref_score("the cat sat", ref_c, 3, total)["score_q"]
 
 
-@pytest.mark.parametrize("use_arrow", [True, False])
-def test_min_count_prune(spark, frames, use_arrow):
-    got = _score_rows(spark, frames, min_count=2, use_arrow=use_arrow)
+def test_min_count_prune(spark, frames):
+    got = _score_rows(spark, frames, min_count=2)
     ref_c = _ref_counts(TRAIN, 3)
     total = sum(ref_c[1].values())  # N stays the UNPRUNED unigram mass
     for doc_id, text in SCORE:
@@ -203,25 +190,40 @@ def test_order_2(spark, frames):
 
 
 def test_null_id_row_scored_in_both_plans(spark, frames):
-    """r5-s9 review pin: a NULL-id doc with real text must get its true
-    score in BOTH plans — the declarative keeper join is null-safe via
-    the (isnull, coalesce) key pair (the r4 null-key rule), not a plain
-    equi-join that would zero it out."""
+    """r5-s9 review pin: a NULL-id doc with real text gets its true
+    score (the reference's), the same as a non-NULL-id doc with the
+    same text — it is never zeroed out by a per-id join."""
     train, _ = frames
     counts = ngram_lm.train_ngram_lm(train)
     docs = spark.createDataFrame(
         [(None, "the cat ran"), (1, "the cat ran")],
         "doc_id long, text string")
-    a = sorted(map(tuple, ngram_lm.lm_score(docs, counts).collect()),
-               key=str)
-    d = sorted(map(tuple,
-                   ngram_lm.lm_score(docs, counts,
-                                     use_arrow=False).collect()),
-               key=str)
-    assert a == d
-    by_id = {r[0]: r for r in a}
-    assert by_id[None][1:] == by_id[1][1:]  # same text, same score
-    assert by_id[None][-1] > 0
+    got = {r.doc_id: r.asDict()
+           for r in ngram_lm.lm_score(docs, counts).collect()}
+    ref_c = _ref_counts(TRAIN, 3)
+    want = _ref_score("the cat ran", ref_c, 3, sum(ref_c[1].values()))
+    for doc_id in (None, 1):
+        assert {k: got[doc_id][k] for k in want} == want, doc_id
+    assert want["score_q"] > 0
+
+
+def test_duplicate_ids_scored_per_row(spark, frames):
+    """Rows sharing an id are scored independently: each keeps the
+    reference score of its own text (nothing is aggregated per id)."""
+    train, _ = frames
+    counts = ngram_lm.train_ngram_lm(train)
+    texts = ["the cat sat on the mat", "zebra the cat"]
+    docs = spark.createDataFrame([(7, t) for t in texts],
+                                 "doc_id long, text string")
+    rows = ngram_lm.lm_score(docs, counts).collect()
+    ref_c = _ref_counts(TRAIN, 3)
+    total = sum(ref_c[1].values())
+    want = sorted(tuple(_ref_score(t, ref_c, 3, total).values())
+                  for t in texts)
+    assert want[0] != want[1]
+    got = sorted(tuple(r[1:]) for r in rows)
+    assert [r.doc_id for r in rows] == [7, 7]
+    assert got == want
 
 
 def test_lm_partition_rank_cut(spark, frames):

@@ -5,6 +5,7 @@ the cross-engine (DuckDB-twin) equality is pinned separately by
 test_entry_contract.py on the sf0.01 tables + planted docs."""
 
 import hashlib
+from decimal import Decimal
 
 import pytest
 
@@ -114,20 +115,13 @@ def test_plan_shapes(spark, docs):
     for op in (T.repetition_stats, T.pii_scrub):
         plan = op(docs)._jdf.queryExecution().executedPlan().toString()
         assert "hashpartitioning" not in plan, plan
-    # decontamination default (r5): ONE narrow mapInArrow pass — no
-    # join, no hash shuffle; the only exchange is the orderBy
+    # decontamination: ONE narrow mapInArrow pass — no join, no hash
+    # shuffle; the only exchange is the orderBy
     bench = docs.limit(1)
     plan = T.ngram_decontaminate(docs, bench)._jdf \
         .queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan and "Join" not in plan, plan
     assert "hashpartitioning" not in plan, plan
-    # the declarative reference plan: joins broadcast on BOTH sides
-    # (bench grams in, hit counts out) — the corpus is never
-    # sort-merge-joined
-    plan = T.ngram_decontaminate(docs, bench, use_arrow=False)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan, plan
-    assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 def test_decontaminate_bench_dedup(spark):
@@ -417,10 +411,10 @@ def test_assemble_skew_safe_equal(spark):
 
 
 def test_decontaminate_arrow_equals_sql_plan(spark):
-    """The r5 mapInArrow decontamination pass (one narrow pass, gram set
-    in the closure) must equal the declarative explode + broadcast
-    semi-join plan exactly — incl. None text, short docs, multi-space,
-    case folding, and multi-occurrence grams."""
+    """The mapInArrow decontamination pass (one narrow pass, gram set
+    in the closure) on hand-computed rows: None text (corpus and
+    bench side), short docs, multi-space runs, case folding, and
+    multi-occurrence grams."""
     from delver_spark.operators.textstats import ngram_decontaminate
 
     docs = spark.createDataFrame(
@@ -434,24 +428,22 @@ def test_decontaminate_arrow_equals_sql_plan(spark):
     bench = spark.createDataFrame(
         [(0, "the quick brown fox jumps"), (1, None)],
         "doc_id long, text string")
-    a = [tuple(r) for r in
-         ngram_decontaminate(docs, bench, n=5, use_arrow=True).collect()]
-    b = [tuple(r) for r in
-         ngram_decontaminate(docs, bench, n=5, use_arrow=False).collect()]
-    assert a == b
-    got = {r[0]: (r[1], r[2]) for r in a}
-    assert got[1] == (1, True)      # case-folded single occurrence
-    assert got[2] == (2, True)      # the same gram twice = 2 hits
-    assert got[3] == (0, False)     # None text has no grams
-    assert got[4] == (0, False)
-    assert got[6] == (1, True)      # multi-space runs filtered out
+    got = [tuple(r) for r in
+           ngram_decontaminate(docs, bench, n=5).collect()]
+    assert got == [
+        (1, 1, True),       # case-folded single occurrence
+        (2, 2, True),       # the same gram twice = 2 hits
+        (3, 0, False),      # None text has no grams
+        (4, 0, False),      # shorter than n
+        (5, 0, False),
+        (6, 1, True)]       # multi-space runs filtered out
 
 
 def test_duplicate_spans_arrow_equals_sql_gram_plan(spark):
-    """The r5 python gram pass must yield byte-identical spans to the
-    declarative explode — same md5, same 1-based positions, same island
-    merge — across plan combinations, incl. None text and intra-doc
-    repeats; and cut_spans over it must agree."""
+    """The python gram pass feeding both span plans, on hand-computed
+    spans: 1-based positions, the island merge, None text and an
+    intra-doc repeat — for both ``skew_safe`` values; and cut_spans
+    over it."""
     from delver_spark.operators.dedup import cut_spans, duplicate_spans
 
     passage = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -462,18 +454,21 @@ def test_duplicate_spans_arrow_equals_sql_gram_plan(spark):
          (4, None),
          (5, "totally unique words that appear nowhere else at all ok")],
         "doc_id long, text string")
-    ref = sorted(tuple(r) for r in duplicate_spans(
-        docs, window=8, use_arrow=False).collect())
-    assert ref, "test is vacuous: no spans found"
+    # the 10-word passage holds 3 8-word windows; every copy of it is
+    # one maximal span, the two copies in doc 3 are 12 words apart
+    want = [(1, 3, 12), (2, 1, 10), (3, 1, 10), (3, 13, 22)]
     for skew in (False, True):
         got = sorted(tuple(r) for r in duplicate_spans(
-            docs, window=8, skew_safe=skew, use_arrow=True).collect())
-        assert got == ref, (skew, got, ref)
-    a = sorted(tuple(r) for r in cut_spans(
-        docs, duplicate_spans(docs, window=8, use_arrow=True)).collect())
-    b = sorted(tuple(r) for r in cut_spans(
-        docs, duplicate_spans(docs, window=8, use_arrow=False)).collect())
-    assert a == b
+            docs, window=8, skew_safe=skew).collect())
+        assert got == want, (skew, got)
+    cut = {r["doc_id"]: r["text"] for r in cut_spans(
+        docs, duplicate_spans(docs, window=8)).collect()}
+    assert cut == {
+        1: "one two three four",
+        2: "five six seven eight nine ten eleven twelve",
+        3: "middle words",
+        4: None,
+        5: "totally unique words that appear nowhere else at all ok"}
 
 
 def test_decontaminate_bloom_equals_exact(spark):
@@ -526,3 +521,77 @@ def test_decontaminate_bloom_corpus_not_shuffled(spark, docs):
     assert "MapInArrow" in plan, plan
     assert "SortMergeJoin" not in plan or \
         plan.index("SortMergeJoin") > plan.index("MapInArrow"), plan
+
+
+_MATRIX_TEXTS = [
+    "the cat sat on the mat today",
+    "a dog sat on the mat today too",
+    "the cat sat on the mat today",      # exact copy of doc 0
+    None,
+    "nothing repeats in this one at all",
+    "sat on the mat today",
+]
+
+
+def _id_matrix_outputs(spark, id_type, to_id):
+    """duplicate_spans, ngram_decontaminate, lm_score and semdedup over
+    one corpus whose ids are ``to_id(i)`` typed ``id_type``."""
+    import numpy as np
+
+    from delver_spark.functions import ngram_lm
+    from delver_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(to_id(i), t) for i, t in enumerate(_MATRIX_TEXTS)],
+        f"doc_id {id_type}, text string")
+    bench = spark.createDataFrame([(0, "sat on the mat")],
+                                  "doc_id long, text string")
+    counts = ngram_lm.train_ngram_lm(docs)
+    rng = np.random.default_rng(11)
+    vecs = []
+    for g in range(8):          # cells 1/2 + NULL; a near-dup per even g
+        v, cell = rng.normal(size=4), None if g == 7 else g % 2 + 1
+        vecs.append((v, cell))
+        if g % 2 == 0:
+            vecs.append((v + rng.normal(scale=0.01, size=4), cell))
+    emb = spark.createDataFrame(
+        [(to_id(i), [float(x) for x in v], cell)
+         for i, (v, cell) in enumerate(vecs)],
+        f"vec_id {id_type}, embedding array<float>, label int")
+    return {
+        "spans": [tuple(r) for r in
+                  D.duplicate_spans(docs, window=4).collect()],
+        "decon": [tuple(r) for r in
+                  T.ngram_decontaminate(docs, bench, n=4).collect()],
+        "lm": [tuple(r) for r in ngram_lm.lm_score(docs, counts).collect()],
+        "sem": [tuple(r) for r in D.semdedup(emb).collect()],
+    }
+
+
+@pytest.fixture(scope="module")
+def bigint_id_outputs(spark):
+    out = _id_matrix_outputs(spark, "bigint", lambda i: i)
+    assert out["spans"] and any(r[2] for r in out["decon"])
+    assert any(not r[4] for r in out["sem"])  # a dup was dropped
+    return out
+
+
+@pytest.mark.parametrize("id_type,to_id", [
+    ("smallint", lambda i: i),
+    ("decimal(12,0)", Decimal),
+    ("string", lambda i: f"doc-{i:03d}"),
+])
+def test_id_type_matrix(spark, bigint_id_outputs, id_type, to_id):
+    """Every id type passes through the gram, decontamination, LM and
+    SemDeDup passes: the output equals the bigint-id output with the
+    ids mapped (the mappings preserve id order, so row order, span
+    merges, components and keepers all line up)."""
+    got = _id_matrix_outputs(spark, id_type, to_id)
+
+    def mapped(rows, id_fields):
+        return [tuple(to_id(v) if j in id_fields else v
+                      for j, v in enumerate(r)) for r in rows]
+
+    want = {k: mapped(v, {0}) for k, v in bigint_id_outputs.items()}
+    want["sem"] = mapped(bigint_id_outputs["sem"], {0, 2})
+    assert got == want
