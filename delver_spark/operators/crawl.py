@@ -3,10 +3,8 @@
 Each round (SURVEY §3.1 "Spark translation"):
 
   refill-if-empty (S3) → dequeue under politeness budget (O1/O2, window +
-  TakeOrdered) → payload join (J1: IN-filter pushdown + broadcast for
-  small rounds; broadcast-keys-into-the-scan for big rounds so image
-  bytes are never shuffled) → decode + extract in ONE mapInArrow pass
-  with zero-copy binary views (X1-X11) → admission split (F6):
+  TakeOrdered) → payload join (J1) → decode + extract in ONE mapInArrow
+  pass with zero-copy binary views (X1-X11) → admission split (F6):
   same-domain candidates seen-set-gated (F7/J3) vs cross-domain stash
   (append-only url_store) → assign enqueue_seq → union frontier delta →
   ONE seen-set pass (the seen-set delta + admitted counts, one collect)
@@ -14,14 +12,30 @@ Each round (SURVEY §3.1 "Spark translation"):
   rolling bloom or the sharded cuckoo, and how it is probed — lives
   behind one interface in operators/seen.py.
 
-A steady small-G round launches at most 10 Spark jobs: the dequeue
+Each round picks its physical plan from its BOUND, the most rows it can
+dequeue: ``min(G, frontier_count)``, where ``frontier_count`` is the
+exact row count the merge-on-read bookkeeping keeps on the driver. The
+bound only picks the plan; the dequeue limit stays G, so the crawl is the
+same under either plan. At or below ``BIG_ROUND_FLOOR`` a round takes
+the small-round plan: the dequeue is one ``toArrow`` that comes back as
+a local relation, the fetch pushes an IN-list into the payload scan and
+broadcast-joins the pruned payload, and the order/quarantine/document
+artifacts go to the driver buffer. Above it, the big-round plan: the
+dequeue ranks distributed (``frontier.dequeue`` ``seq_hint``), the
+extract tasks read their payload row-group splits directly
+(``sources/payload_scan.py``, payload bytes never shuffle) and the
+artifacts are written by Spark every round. ``collect_order=True`` or
+``False`` forces one artifact layout; both layouts write one schema.
+
+A steady small round launches at most 10 Spark jobs: the dequeue
 collect (3: the tombstone broadcast, the host window's shuffle, the
 ordered take), the payload broadcasts and the extract checkpoint (2-3),
 the order job, which also carries each page's lineage candidate counts
 as higher-order columns (1), the admission checkpoint (2: origin
 broadcast, admit pass) and the seen-set pass (1). On a 4-core box each
 small job costs 0.1-0.64 s of process-tree CPU, so the count, not the
-data, sets a small round's cost.
+data, sets a small round's cost — which is why a G=20000 crawl whose
+frontier holds a few hundred urls takes the small plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -76,6 +90,50 @@ from .frontier import (
 from .seen import from_blob, new_seen
 
 _STORE_SCHEMA_W_HOST = STORE_SCHEMA.add("host", "string", False)
+
+# A round whose bound min(G, frontier_count) exceeds this many rows takes
+# the big-round plan (module docstring); tests lower the engine's private
+# copy, ``CrawlEngine._big_round_floor``, to force it at unit scale.
+BIG_ROUND_FLOOR = 10_000
+
+# the append-only artifact tables (SnapshotStore part dirs)
+_PART_TABLES = ("crawl_order", "lineage", "quarantine", "documents")
+
+
+def _order_rows(extracted: DataFrame, rnd: int, fetch_seq0: int) -> DataFrame:
+    return extracted.select(
+        (F.col("pos") + F.lit(fetch_seq0)).alias("seq"), "url_canon",
+        "depth", F.lit(rnd).alias("round"), "host", "success")
+
+
+def _quarantine_rows(extracted: DataFrame, rnd: int) -> DataFrame:
+    return extracted.filter(F.col("quarantined").isNotNull()).select(
+        "url_canon", F.col("quarantined").alias("error"),
+        F.lit(rnd).alias("round"))
+
+
+def _document_rows(extracted: DataFrame, rnd: int, news: bool) -> DataFrame:
+    doc_f = F.col("success") & F.col("quarantined").isNull()
+    if news:  # articles only: processArticle skips depth 0
+        doc_f = doc_f & (F.col("depth") > 0)
+    return (extracted.filter(doc_f)
+            .drop("outlinks", "countries", "companies")
+            .withColumn("round", F.lit(rnd)))
+
+
+def _artifact_schemas(spark: SparkSession) -> dict:
+    """The Arrow schemas of the Spark-written artifact parts, for the
+    driver buffer's flush to write too: a table whose rounds were written
+    by both layouts then reads in one ``spark.read.parquet``. Derived from
+    the Spark-side projections over an empty extract frame (no job),
+    nullability included (``round`` is a non-NULL literal)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ext = spark.createDataFrame([], EXTRACT_SCHEMA)
+    return {name: to_arrow_schema(df.schema)
+            for name, df in (("crawl_order", _order_rows(ext, 0, 0)),
+                             ("quarantine", _quarantine_rows(ext, 0)),
+                             ("documents", _document_rows(ext, 0, False)))}
 
 
 def _outlink_domain(host_col):
@@ -242,14 +300,14 @@ class CrawlEngine:
         self.B = p["per_host_budget"]
         self.G = p["global_budget"]
         self.max_rounds = p["max_rounds"]
-        # collect_order=False keeps even the crawl-order/documents artifacts
-        # fully distributed (Spark parquet writes). Default is by round
-        # size: big-G engines (the scaling-bench regime) must never
-        # bottleneck a round on a driver toPandas, small-G rounds are
-        # cheaper through the driver buffer (one pandas frame vs a
-        # per-round distributed write job).
-        self.collect_order = (self.G <= 10000) if collect_order is None \
-            else collect_order
+        # the order/quarantine/documents artifact layout. None (default)
+        # chooses per round by its bound: a big round must never
+        # bottleneck on a driver toPandas, a small round is cheaper through
+        # the driver buffer (one pandas frame vs per-round write jobs).
+        # False forces Spark parquet writes every round, True the buffer.
+        self.collect_order = collect_order
+        self._big_round_floor = BIG_ROUND_FLOOR
+        self._flush_schemas: dict | None = None
 
         # payload table: at 100 TB this is the Iceberg table bucketed/sorted
         # by url_canon; per-round access is an IN-filter over <= G keys that
@@ -435,20 +493,20 @@ class CrawlEngine:
             if self._refill(rnd) == 0:
                 return False
 
+        # the round's plan comes from its bound, the most rows it can
+        # dequeue (module docstring). Only the plan: the dequeue limit
+        # stays G, so a wrong frontier_count can never change the crawl
+        big = min(self.G, self.frontier_count) > self._big_round_floor
         deq_stats: dict = {}
         batch = dequeue(self._frontier_view(), self.B, self.G,
                         hot_host_threshold=self.hot_host_threshold,
-                        seq_hint=self.seq if self._seq_orderable else None,
+                        seq_hint=self.seq if big and self._seq_orderable
+                        else None,
                         out_stats=deq_stats,
                         host_budgets=self.host_budgets or None)
-        # ---- fetch (J1): small batches push an IN-filter into the parquet
-        # scan (row-group pruning on url_canon stats) and broadcast the
-        # pruned payload; huge batches (big-G rounds / scaling bench) go
-        # through a distributed join against the payload table instead.
-        small_batch = self.G <= 10000
         batch_urls = None
-        if small_batch:
-            # ONE collect: the <= G rows reach the driver anyway (their
+        if not big:
+            # ONE collect: the <= bound rows reach the driver anyway (their
             # urls are the fetch's IN-list), so they come back as an
             # Arrow-backed local frame instead of a localCheckpoint job
             # followed by a second collect of the checkpoint
@@ -458,8 +516,8 @@ class CrawlEngine:
             batch_count = len(batch_urls)
         else:
             batch = batch.localCheckpoint(eager=True)
-            # the big-path dequeue derives the count from its own ranking
-            # offsets — no extra count job
+            # the distributed rank derives the count from its own offsets
+            # — no extra count job
             batch_count = deq_stats["batch_count"] \
                 if "batch_count" in deq_stats else batch.count()
         _t = _mark('dequeue', _t)
@@ -473,10 +531,13 @@ class CrawlEngine:
         self._tomb_count += batch_count
         self.frontier_count -= batch_count
 
-        # Payload rows are ~10 KB of binary each: the 256-row Arrow batch
-        # rule (measured rationale in session.scoped_arrow_batch — the
-        # one shared copy of this logic), scoped to the fetch/extract job
-        # only.
+        # ---- fetch (J1): a small round pushes its IN-list into the parquet
+        # scan (row-group pruning on url_canon stats) and broadcasts the
+        # pruned payload; a big round's extract tasks read the payload
+        # splits directly. Payload rows are ~10 KB of binary each: the
+        # 256-row Arrow batch rule (measured rationale in
+        # session.scoped_arrow_batch — the one shared copy of this logic),
+        # scoped to the fetch/extract job only.
         from ..session import scoped_arrow_batch
         with scoped_arrow_batch(self.spark, 256):
             extracted = self._fetch_extract(batch, batch_count, batch_urls)
@@ -485,8 +546,12 @@ class CrawlEngine:
         # post-extract work is a DAG of independent Spark jobs — run them
         # concurrently so driver-side job-launch latency (the dominant
         # serial per-round cost) overlaps; one admission code path for
-        # every round size
-        self._finish_round(extracted, batch_count, rnd, timings, _mark, _t)
+        # every round size. The artifacts go to the driver buffer on a
+        # small round, to per-round Spark writes on a big one
+        buffered = not big if self.collect_order is None \
+            else self.collect_order
+        self._finish_round(extracted, batch_count, rnd, buffered, timings,
+                           _mark, _t)
         self.round += 1
         return True
 
@@ -494,8 +559,9 @@ class CrawlEngine:
     def _fetch_extract(self, batch: DataFrame, batch_count: int,
                        batch_urls: list | None) -> DataFrame:
         """Fetch + extract for one round; returns the checkpointed
-        ``extracted`` frame. ``batch_urls`` non-None selects the small-batch
-        IN-pushdown plan (the list is the already-collected batch keys)."""
+        ``extracted`` frame. ``batch_urls`` non-None selects the small-round
+        IN-pushdown plan (the list is the already-collected batch keys);
+        None, the big-round plan."""
         payload_cols = ["bytes", "fmt", "caption", "phash", "pix_md5"]
         if batch_urls is not None:
             payload = self.pages.filter(_in_list("url_canon", batch_urls))
@@ -569,9 +635,14 @@ class CrawlEngine:
         return extracted
 
     # ---------------------------------------------------- round finish
-    def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int):
+    def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int,
+                   buffered: bool):
         """Order artifacts + {partition_id: lineage counters}. dfs
-        lineage candidate counts ride this job as per-page columns."""
+        lineage candidate counts ride this job as per-page columns.
+        ``buffered`` returns the artifacts for the driver buffer; else
+        Spark writes them into the part dirs of the snapshot round that
+        will commit them (``rnd + 1``: an uncommitted round's parts stay
+        invisible, see ``SnapshotStore``)."""
         news = self.mode == "news"
         cand_names = [] if news else ["same_n", "stash_n"]
 
@@ -579,7 +650,7 @@ class CrawlEngine:
             return {"fetched": int(n), "deduped": int(same_n),
                     "enqueued": 0, "stashed": int(stash_n)}
 
-        if self.collect_order:
+        if buffered:
             ext_pd = extracted.select("*", *self._cand_cols) \
                 .drop("outlinks").toPandas().sort_values("pos")
             g = ext_pd.groupby("partition_id")
@@ -613,30 +684,15 @@ class CrawlEngine:
                    r["count"], *(r[c] for c in cand_names))
                for r in parts}
         q_total = sum(int(r["q_n"]) for r in parts)
+        writes = [("crawl_order", _order_rows(extracted, rnd, fetch_seq0))]
         if q_total:
-            (extracted.filter(F.col("quarantined").isNotNull())
-             .select("url_canon", F.col("quarantined").alias("error"),
-                     F.lit(rnd).alias("round"))
-             .write.mode("overwrite")
-             .parquet(self.store.state_dir("quarantine", rnd)))
-        d = self.store.state_dir("crawl_order", rnd)
-        (extracted.select(
-            (F.col("pos") + F.lit(fetch_seq0)).alias("seq"),
-            "url_canon", "depth", F.lit(rnd).alias("round"), "host",
-            "success")
-         .write.mode("overwrite").parquet(d))
+            writes.append(("quarantine", _quarantine_rows(extracted, rnd)))
         if self.collect_documents:
-            # distributed twin of the driver-buffer document artifact:
             # successful rows written per round, bytes stay executor-side
-            dd = self.store.state_dir("documents", rnd)
-            doc_f = F.col("success") & F.col("quarantined").isNull()
-            if news:
-                doc_f = doc_f & (F.col("depth") > 0)
-            (extracted.filter(doc_f).drop(
-                "outlinks", *[c for c in ("countries", "companies")
-                              if c in extracted.columns])
-             .withColumn("round", F.lit(rnd))
-             .write.mode("overwrite").parquet(dd))
+            writes.append(("documents", _document_rows(extracted, rnd, news)))
+        for name, df in writes:
+            df.write.mode("overwrite").parquet(
+                self.store.state_dir(name, rnd + 1))
         return agg, None, None, None, q_total
 
     def _admit(self, extracted: DataFrame, same: DataFrame, probe,
@@ -664,7 +720,7 @@ class CrawlEngine:
         winners = probe.colocate(winners_in, n_parts).mapInArrow(
             _admit_pass(probe, news, same.schema.names), same.schema)
         # scalable global sequence: pid-sharded sort + per-pid offsets
-        # in one Arrow pass — no single-partition window at big G.
+        # in one Arrow pass — no single-partition window on big rounds.
         # Toy rounds are already one partition: a plain window rank
         # there is the same work in a third of the jobs.
         if n_parts == 1:
@@ -716,14 +772,16 @@ class CrawlEngine:
         return ops
 
     def _finish_round(self, extracted: DataFrame, batch_count: int,
-                      rnd: int, timings, _mark, _t):
+                      rnd: int, buffered: bool, timings, _mark, _t):
         """Post-extract work for every round, as a concurrent job DAG.
 
-        Jobs, for every G and every seen-set:
+        Jobs, for every round plan and every seen-set:
 
-        - the order job (:meth:`_order_job`, thread pool): artifacts,
-          per-partition fetched/quarantined counts and — dfs — the pages'
-          candidate counts (``_page_cand_counts``). News runs one more
+        - the order job (:meth:`_order_job`, thread pool): artifacts
+          (``buffered``: one collect for the driver buffer, else
+          per-round Spark writes), per-partition fetched/quarantined
+          counts and — dfs — the pages' candidate counts
+          (``_page_cand_counts``). News runs one more
           count job: its gate calls the robots pandas UDF, which cannot
           run inside a higher-order function;
         - the critical path: fused Arrow admission (:meth:`_admit`);
@@ -772,7 +830,7 @@ class CrawlEngine:
             stash = cands.filter(F.col("domain") != F.col("page_domain"))
         # partitioning scaled to the round: toy rounds (bench.py's 2k-G
         # corpus, unit tests) run the SAME plan at 1 partition — no
-        # 32-task shuffles over 2k rows; big-G rounds get full width
+        # 32-task shuffles over 2k rows; big rounds get full width
         par = max(self.spark.sparkContext.defaultParallelism, 4)
         n_parts = max(1, min(par, batch_count // 2000))
 
@@ -780,7 +838,7 @@ class CrawlEngine:
         probe = None
         try:
             fut_order = pool.submit(self._order_job, extracted, rnd,
-                                    self.fetch_seq)
+                                    self.fetch_seq, buffered)
             fut_cand = pool.submit(
                 lambda: same.groupBy("partition_id")
                 .agg(F.count("*").alias("same_n")).collect()) \
@@ -965,32 +1023,29 @@ class CrawlEngine:
         self._frontier_view().write.mode("overwrite").parquet(fdir)
         self.url_store.write.mode("overwrite").parquet(sdir)
         self.store.save_bloom(rnd, self.seen.to_bytes())
+        # the buffers flush into the part dirs of the round this manifest
+        # commits, in the Spark-written parts' schema (lineage is only
+        # ever buffered)
         if self.crawl_order:
-            d = self.store.state_dir("crawl_order", rnd)
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(pa.Table.from_pylist(self.crawl_order),
-                           os.path.join(d, "part.parquet"))
+            self._flush(rnd, "crawl_order", pa.Table.from_pylist(
+                self.crawl_order, schema=self._buffer_schema("crawl_order")))
             self.crawl_order = []
         if self.lineage:
-            d = self.store.state_dir("lineage", rnd)
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(pa.Table.from_pylist(self.lineage),
-                           os.path.join(d, "part.parquet"))
+            self._flush(rnd, "lineage", pa.Table.from_pylist(self.lineage))
             self.lineage = []
         if self.quarantine:
-            d = self.store.state_dir("quarantine", rnd)
-            os.makedirs(d, exist_ok=True)
-            pq.write_table(pa.Table.from_pylist(self.quarantine),
-                           os.path.join(d, "part.parquet"))
+            self._flush(rnd, "quarantine", pa.Table.from_pylist(
+                self.quarantine, schema=self._buffer_schema("quarantine")))
             self.quarantine = []
         if self.documents:
-            d = self.store.state_dir("documents", rnd)
-            os.makedirs(d, exist_ok=True)
-            docs = pd.concat(self.documents, ignore_index=True)
-            docs = docs.drop(columns=[c for c in ("countries", "companies")
-                                      if c in docs.columns])
-            pq.write_table(pa.Table.from_pandas(docs, preserve_index=False),
-                           os.path.join(d, "part.parquet"))
+            # from_pandas keeps the schema's columns (countries and
+            # companies are not artifact columns) and casts each to its
+            # Spark type: a NULL-holding int column comes back from
+            # toPandas as float64, an all-NULL string one as object
+            self._flush(rnd, "documents", pa.Table.from_pandas(
+                pd.concat(self.documents, ignore_index=True),
+                schema=self._buffer_schema("documents"),
+                preserve_index=False))
             self.documents = []
         self.store.commit({
             "round": rnd, "seq": self.seq, "fetch_seq": self.fetch_seq,
@@ -1007,6 +1062,16 @@ class CrawlEngine:
             # SEMANTIC engine knob — resume == uninterrupted requires it
             "host_budgets": self.host_budgets,
         })
+
+    def _buffer_schema(self, name: str) -> pa.Schema:
+        if self._flush_schemas is None:
+            self._flush_schemas = _artifact_schemas(self.spark)
+        return self._flush_schemas[name]
+
+    def _flush(self, rnd: int, name: str, table: pa.Table):
+        d = self.store.state_dir(name, rnd)
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(table, os.path.join(d, "part.parquet"))
 
     # ----------------------------------------------------------------- resume
     @classmethod
@@ -1025,6 +1090,9 @@ class CrawlEngine:
                   seen_filter=m.get("seen_filter", "bloom"), seen_probe=probe,
                   host_budgets=m.get("host_budgets"))
         eng.round = m["round"]
+        # a dead run's uncommitted parts would land beside this run's
+        # re-run rounds, under another name if the layout differs
+        eng.store.drop_after(_PART_TABLES, eng.round)
         eng.seq = m["seq"]
         eng.fetch_seq = m["fetch_seq"]
         eng.frontier_count = m["frontier_count"]

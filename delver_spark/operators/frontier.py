@@ -74,7 +74,6 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
             hot_host_threshold: int | None = None,
             n_salts: int = 64,
             seq_hint: int | None = None,
-            big_path_floor: int = 10000,
             out_stats: dict | None = None,
             host_budgets: dict | None = None) -> DataFrame:
     """Greedy dequeue under per-host + global budgets in
@@ -105,15 +104,18 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
       invariant that frontier order collapses to enqueue_seq alone:
       every row has the same priority and enqueue_round is monotone
       non-decreasing in enqueue_seq (true by construction for the crawl
-      engine — one global counter assigns both). Then for
-      ``global_budget > big_path_floor`` the batch is selected by the
-      DISTRIBUTED exact ranking (assign_global_rank sharded on
-      floor(seq/chunk)) instead of TakeOrdered's single-point merge +
-      single-partition pos window — the two core-count-independent
+      engine — one global counter assigns both). Then the batch is
+      selected by the DISTRIBUTED exact ranking (assign_global_rank
+      sharded on floor(seq/chunk)) instead of TakeOrdered's single-point
+      merge + single-partition pos window — the two core-count-independent
       ~1.5 s/round costs of the sustained drain (profile_round.py r4).
-      Equality with the plain path is pinned by
+      The caller chooses the plan by passing ``seq_hint`` or not: the
+      ranking launches several jobs, so it only pays off for big batches,
+      and the crawl engine passes it only for a round whose bound
+      ``min(G, frontier_count)`` exceeds its big-round floor. Equality
+      with the plain path is pinned by
       tests/test_frontier_ops.py::test_dequeue_big_path_exact_equal.
-    ``out_stats``, if given, receives ``batch_count`` when the big path
+    ``out_stats``, if given, receives ``batch_count`` when the ranking
     runs (derived from the ranking's own counts — saves the caller's
     count job).
 
@@ -187,7 +189,7 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
                     .drop("host_rank"))
         if budgets_df is not None:
             eligible = eligible.drop("_budget")
-    if seq_hint is not None and global_budget > big_path_floor:
+    if seq_hint is not None:
         spark = frontier.sparkSession
         parts = max(spark.sparkContext.defaultParallelism, 4)
         chunk = max(1, (seq_hint + parts - 1) // parts)

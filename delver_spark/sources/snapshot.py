@@ -4,9 +4,18 @@ Iceberg-snapshot semantics without the Iceberg runtime jar (offline env;
 SURVEY §7 step 5): each committed round writes immutable state dirs plus a
 ``manifest.json`` that is renamed into place LAST. A crawl killed mid-round
 leaves a stale manifest → resume re-reads the last committed round exactly
-(T8: failed round = no commit). Append-only tables (crawl_order, documents,
-lineage) are per-round part directories listed by the manifest, so an
-uncommitted round's parts are invisible.
+(T8: failed round = no commit).
+
+Append-only tables (crawl_order, documents, quarantine, lineage) are
+per-round part directories: ``<name>/round_NNNNNN`` holds the parts that
+the manifest of round N commits, and a reader lists the dirs up to the
+manifest's round (:meth:`SnapshotStore.part_dirs`). So every writer names
+a part dir by the snapshot round that commits it — the crawl engine's
+driver buffer flushes into its checkpoint round, and a Spark-written
+part of crawl round r goes to ``round_{r+1}``, the first manifest that
+commits r — and an uncommitted round's parts are invisible. Resume
+drops the dirs past the committed round (:meth:`SnapshotStore.drop_after`),
+so a re-run round never lands beside a dead attempt's parts.
 
 On a real deployment this maps 1:1 onto Iceberg table snapshots
 (``writeTo(...).append()`` + snapshot expiry); the semantics the engine
@@ -58,6 +67,18 @@ class SnapshotStore:
                 if os.path.isdir(p) and os.listdir(p):
                     out.append(p)
         return out
+
+    def drop_after(self, names, committed_round: int):
+        """Delete the part dirs of ``names`` past ``committed_round``:
+        the uncommitted output of a crawl that died after its last
+        commit."""
+        for name in names:
+            base = os.path.join(self.root, name)
+            if not os.path.isdir(base):
+                continue
+            for d in os.listdir(base):
+                if d.startswith("round_") and int(d[6:]) > committed_round:
+                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
 
     # -- bloom ------------------------------------------------------------------
     def save_bloom(self, rnd: int, blob: bytes):

@@ -154,8 +154,9 @@ def test_news_mode_cuckoo_matches_oracle(spark, tmp_path_factory):
 
 
 def test_big_g_path_cuckoo_matches_oracle(spark, tmp_path_factory):
-    """G > 10000 selects the big-batch plan — the cuckoo pairs job and
-    canonical commit must stay bit-exact there too."""
+    """The big-round plan, forced at unit scale by the engine's private
+    floor — the cuckoo pairs job and canonical commit must stay
+    bit-exact there too."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -165,6 +166,7 @@ def test_big_g_path_cuckoo_matches_oracle(spark, tmp_path_factory):
     oracle = run_oracle(d, seen_filter="cuckoo")
     wd = str(tmp_path_factory.mktemp("crawl_bigg_ck"))
     eng = CrawlEngine(spark, d, wd, seen_filter="cuckoo")
+    eng._big_round_floor = 0
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
@@ -414,8 +416,8 @@ def test_sharded_probe_news_mode_equals_oracle(spark, tmp_path_factory):
 
 
 def test_sharded_probe_big_g_equals_oracle(spark, tmp_path_factory):
-    """G > 10000 selects the big-batch round plan — the sharded probe
-    must stay bit-exact on that leg as well."""
+    """The big-round plan, forced at unit scale by the engine's private
+    floor — the sharded probe must stay bit-exact on that leg as well."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -426,6 +428,7 @@ def test_sharded_probe_big_g_equals_oracle(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl_bigg_ck_sh"))
     eng = CrawlEngine(spark, d, wd, seen_filter="cuckoo",
                       seen_probe="sharded")
+    eng._big_round_floor = 0
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()

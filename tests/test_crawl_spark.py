@@ -1,6 +1,8 @@
 """Spark engine ≡ Python oracle: crawl order, bloom bitmap, lineage
 (the BASELINE.json north_rule correctness contract), plus resume."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -31,6 +33,32 @@ def _order_tuples_engine(eng):
     df = eng.crawl_order_df()
     return list(df[["seq", "url_canon", "depth", "round", "host", "success"]]
                 .itertuples(index=False, name=None))
+
+
+def _lineage_tuples(rows):
+    return [tuple(r[k] for k in ("round", "partition", "fetched", "deduped",
+                                 "enqueued", "stashed")) for r in rows]
+
+
+def _spy_dequeue_plans(monkeypatch, crawl):
+    """Record, per engine dequeue, whether it took the distributed rank
+    (the big-round plan passes seq_hint)."""
+    hints = []
+    real = crawl.dequeue
+
+    def spy(*args, **kwargs):
+        hints.append(kwargs.get("seq_hint") is not None)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(crawl, "dequeue", spy)
+    return hints
+
+
+def _spark_written(part_dir):
+    """A part dir written by Spark (the big-round plan), not flushed
+    from the driver buffer."""
+    names = os.listdir(part_dir)
+    return "_SUCCESS" in names and "part.parquet" not in names
 
 
 def test_crawl_order_exact_match(oracle_result, engine_result):
@@ -67,10 +95,12 @@ def test_payload_invariant_all_rows(engine_result):
     assert len(qjpg_psnr) > 0 and (qjpg_psnr >= 40.0).all()
 
 
-def test_big_g_path_matches_oracle(spark, tmp_path_factory):
-    """G > 10000 selects the big-batch plan (fused Arrow admission,
-    broadcast-keys fetch, pid-sharded rank) — must stay bit-exact."""
+def test_big_g_path_matches_oracle(spark, tmp_path_factory, monkeypatch):
+    """The big-round plan (distributed dequeue rank, broadcast-keys
+    fetch, per-round Spark-written artifacts), forced at unit scale by
+    the engine's private floor — must stay bit-exact."""
     from delver_spark.fixtures.gen import generate_corpus
+    from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
 
     d = str(tmp_path_factory.mktemp("corpus_bigg"))
@@ -79,7 +109,14 @@ def test_big_g_path_matches_oracle(spark, tmp_path_factory):
     oracle = run_oracle(d)
     wd = str(tmp_path_factory.mktemp("crawl_bigg"))
     eng = CrawlEngine(spark, d, wd)
+    eng._big_round_floor = 0
+    hints = _spy_dequeue_plans(monkeypatch, crawl)
     eng.run()
+    # the big plan ran every round: the distributed rank, and the
+    # order artifact written by Spark (no driver-buffer part)
+    assert len(hints) >= eng.round > 0 and all(hints)
+    parts = eng.store.part_dirs("crawl_order", eng.round)
+    assert parts and all(_spark_written(p) for p in parts)
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert np.array_equal(oracle.bloom.bit_positions(),
                           eng.bloom.bit_positions())
@@ -105,6 +142,7 @@ def test_big_g_admission_url_groups_span_arrow_batches(spark, tmp_path_factory):
     spark.conf.set(key, "16")
     try:
         eng = CrawlEngine(spark, d, wd)
+        eng._big_round_floor = 0  # the big-round plan every round
         eng.run()
     finally:
         spark.conf.set(key, old)
@@ -117,7 +155,8 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
     """The frontier's merge-on-read state (tombstones + deltas) compacts
     into a new base when tombstones exceed the floor. Force compaction
     EVERY round (floor=1) on a big-G corpus whose per-host budget
-    actually binds — results must stay bit-identical to the oracle."""
+    actually binds, under the big-round plan — results must stay
+    bit-identical to the oracle."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -128,6 +167,7 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl_compact"))
     eng = CrawlEngine(spark, d, wd)
     eng._compact_floor = 1
+    eng._big_round_floor = 0
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert np.array_equal(oracle.bloom.bit_positions(),
@@ -251,6 +291,131 @@ def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
     assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
+def test_big_g_small_round_job_budget(spark, tmp_path_factory,
+                                      monkeypatch):
+    """A G=20000 engine whose frontier holds a few dozen urls plans each
+    round by that bound, not by G: a steady round takes the small-round
+    plan and launches at most 10 Spark jobs, the budget of
+    test_small_g_round_job_budget (the big-round plan launches ~16)."""
+    from delver_spark.fixtures.gen import generate_corpus
+    from delver_spark.operators import crawl
+    from delver_spark.operators.crawl import CrawlEngine
+
+    d = str(tmp_path_factory.mktemp("corpus_bigg_jobs"))
+    generate_corpus(d, n_pages=150, n_hosts=8, seed=11, max_rounds=5,
+                    global_budget=20000, per_host_budget=50)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    eng = CrawlEngine(spark, d, str(tmp_path_factory.mktemp("crawl_bj")))
+    hints = _spy_dequeue_plans(monkeypatch, crawl)
+    eng.seed()
+    assert eng.run_round()  # round 0 has no tombstones yet
+    before = set(st.getJobIdsForGroup(None))
+    assert eng.run_round()
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert hints == [False, False]
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+
+
+@pytest.fixture(scope="module")
+def mixed_plan_corpus(tmp_path_factory):
+    """G=20000; the bloom crawl's round bounds over its 8 rounds are 10,
+    48, 67, 58, 32 (a refill), 5, 20 (a refill) and 1. No golden pixels,
+    so a big round fetches through the direct payload scan."""
+    from delver_spark.fixtures.gen import generate_corpus
+
+    d = str(tmp_path_factory.mktemp("corpus_mixed_plan"))
+    generate_corpus(d, n_pages=200, n_hosts=12, seed=7, max_rounds=8,
+                    global_budget=20000, per_host_budget=50,
+                    golden_pixel_cap=0)
+    return d
+
+
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
+                                         tmp_path, monkeypatch,
+                                         seen_filter):
+    """A floor of 40 rows makes the crawl switch plans as its frontier
+    grows and drains: small, big, big, big, then small rounds. Crawl
+    order, lineage and seen-set bytes equal the oracle's, and the
+    driver's ``frontier_count`` (which picks the plan) equals the
+    frontier's real row count after every round. bloom: dfs with
+    documents, checkpointed every round, so every artifact table holds
+    parts of both layouts and reads in one ``spark.read.parquet``;
+    cuckoo: ``readmit_df`` after round 3, checkpoints after round 1 (the
+    first big round: its Spark parts and round 0's buffered rows share
+    the part dir of snapshot round 2) and at the end."""
+    from delver_spark.engine.murmur import hash128_batch
+    from delver_spark.oracle.crawler import OracleCrawler, load_corpus
+    from delver_spark.operators import crawl
+    from delver_spark.operators.crawl import CrawlEngine
+    from delver_spark.sources import payload_scan
+
+    d = mixed_plan_corpus
+    rounds, readmit_after = 8, 3
+    pages, robots, seeds, p = load_corpus(d)
+    oc = OracleCrawler(
+        pages, robots, seeds, max_depth=p["max_depth"],
+        per_host_budget=p["per_host_budget"],
+        global_budget=p["global_budget"], max_rounds=rounds,
+        bloom_max_n=p["bloom_max_n"], bloom_p=p["bloom_p"],
+        seen_filter=seen_filter)
+    victims = []
+    if seen_filter == "cuckoo":
+        oc.max_rounds = readmit_after
+        first = oc.run()
+        victims = [r["url_canon"] for r in first.crawl_order[1:12:3]]
+        h1, h2 = hash128_batch(np.array(victims, dtype=object))
+        oc.readmit([victims[i] for i in np.lexsort((h2, h1))])
+        oc.max_rounds = rounds
+    oracle = oc.run()
+
+    hints = _spy_dequeue_plans(monkeypatch, crawl)
+    direct = []
+    real_direct = payload_scan.fetch_extract_direct
+
+    def spy_direct(*args, **kwargs):
+        direct.append(1)
+        return real_direct(*args, **kwargs)
+
+    monkeypatch.setattr(payload_scan, "fetch_extract_direct", spy_direct)
+    eng = CrawlEngine(spark, d, str(tmp_path), seen_filter=seen_filter)
+    eng._big_round_floor = 40
+    eng.seed()
+    for r in range(rounds):
+        if r == readmit_after and victims:
+            df = spark.createDataFrame([(u,) for u in victims], "url string")
+            assert eng.readmit_df(df) == len(victims)
+            assert eng.frontier_count == eng._frontier_view().count()
+        if not eng.run_round():
+            break
+        assert eng.frontier_count == eng._frontier_view().count(), r
+        if seen_filter == "bloom" or r == 1:
+            eng.checkpoint()
+    eng.checkpoint()
+
+    assert True in hints and False in hints[hints.index(True):], hints
+    assert len(direct) == sum(hints) > 0
+    assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
+    assert _lineage_tuples(eng.lineage_df().to_dict("records")) == \
+        _lineage_tuples(oracle.lineage)
+    if seen_filter == "cuckoo":
+        assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
+        mixed = eng.store.state_dir("crawl_order", 2)
+        assert {"_SUCCESS", "part.parquet"} <= set(os.listdir(mixed))
+        return
+    assert np.array_equal(oracle.bloom.bit_positions(),
+                          eng.bloom.bit_positions())
+    assert eng.bloom.n == oracle.bloom.n
+    n_docs = sum(r["success"] for r in oracle.crawl_order)
+    for name, n in (("crawl_order", len(oracle.crawl_order)),
+                    ("documents", n_docs)):
+        parts = eng.store.part_dirs(name, eng.round)
+        assert {_spark_written(p) for p in parts} == {True, False}, name
+        assert spark.read.parquet(*parts).count() == n, name
 
 
 def test_page_candidate_counts_equal_explode_groupby(spark):

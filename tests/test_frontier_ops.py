@@ -39,8 +39,8 @@ def test_dequeue_big_path_exact_equal(spark):
     """The distributed big-round dequeue (seq_hint + assign_global_rank)
     must return EXACTLY the plain path's (rows, pos) — with and without
     an active per-host budget, across multiple enqueue rounds, with a
-    deliberately skewed host. big_path_floor=0 forces the big path at
-    unit scale."""
+    deliberately skewed host. Passing seq_hint selects the big path at
+    any batch size."""
     rng = np.random.default_rng(7)
     rows = []
     seq = 0
@@ -54,8 +54,8 @@ def test_dequeue_big_path_exact_equal(spark):
     for B, G in ((5, 300), (1 << 30, 500), (50, 1200), (7, 2000)):
         plain = dequeue(fr, B, G).orderBy("pos").collect()
         stats: dict = {}
-        big = dequeue(fr, B, G, seq_hint=seq, big_path_floor=0,
-                      out_stats=stats).orderBy("pos").collect()
+        big = dequeue(fr, B, G, seq_hint=seq, out_stats=stats) \
+            .orderBy("pos").collect()
         assert [tuple(r) for r in big] == [tuple(r) for r in plain], (B, G)
         assert stats["batch_count"] == len(plain), (B, G)
 

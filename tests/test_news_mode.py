@@ -155,9 +155,11 @@ def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):
 
 
 def test_news_big_g_path_matches_oracle(spark, tmp_path_factory):
-    """News admission through the BIG-G plan (direct payload scan,
-    n_parts > 1 admission shuffle, distributed order artifacts) must
-    stay bit-exact too."""
+    """News admission through the big-round plan (distributed dequeue
+    rank, broadcast-keys fetch, per-round Spark-written order and
+    document artifacts), forced at unit scale by the engine's private
+    floor, must stay bit-exact too. A 150-page crawl never reaches the
+    n_parts > 1 admission shuffle (2000 rows per partition)."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -169,6 +171,7 @@ def test_news_big_g_path_matches_oracle(spark, tmp_path_factory):
     assert any(r["depth"] == 1 for r in oracle.crawl_order)
     wd = str(tmp_path_factory.mktemp("crawl_news_bigg"))
     eng = CrawlEngine(spark, d, wd, mode="news")
+    eng._big_round_floor = 0
     eng.run()
     df = eng.crawl_order_df()
     so = list(zip(df["seq"], df["url_canon"]))

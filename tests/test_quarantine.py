@@ -80,9 +80,10 @@ def test_poison_changes_crawl_vs_clean(poison_corpus):
 
 def test_poison_row_quarantined_on_big_g_distributed_path(
         spark, tmp_path_factory):
-    """The distributed-artifact branch (big-G default) writes the
-    quarantine parquet per round instead of buffering — same oracle
-    equality, artifact read back through quarantine_df."""
+    """The big-round plan (forced at unit scale by the engine's private
+    floor) writes the quarantine parquet per round with Spark instead of
+    buffering — same oracle equality, artifact read back through
+    quarantine_df."""
     import shutil
 
     from delver_spark.fixtures.gen import generate_corpus
@@ -108,8 +109,13 @@ def test_poison_row_quarantined_on_big_g_distributed_path(
     oracle = run_oracle(d, poison_urls={victim})
     wd = str(tmp_path_factory.mktemp("crawl_poison_bigg"))
     eng = CrawlEngine(spark, d, wd)
-    assert eng.collect_order is False  # big-G default: distributed artifacts
+    eng._big_round_floor = 0
     eng.run()
+    # the round wrote Spark parts: no driver-buffer part.parquet
+    parts = eng.store.part_dirs("quarantine", eng.round)
+    assert len(parts) == 1
+    assert "_SUCCESS" in os.listdir(parts[0])
+    assert "part.parquet" not in os.listdir(parts[0])
     q = eng.quarantine_df()
     assert list(q["url_canon"]) == [victim]
     oo = [(r["seq"], r["url_canon"]) for r in oracle.crawl_order]
@@ -118,3 +124,85 @@ def test_poison_row_quarantined_on_big_g_distributed_path(
     assert so == oo
     assert np.array_equal(oracle.bloom.bit_positions(),
                           eng.bloom.bit_positions())
+
+
+def _parquet_schemas(eng, name):
+    """{Arrow schema} over every parquet file of a table's committed
+    parts, key-value metadata dropped (pandas and Spark each add their
+    own)."""
+    out = set()
+    for d in eng.store.part_dirs(name, eng.round):
+        for f in os.listdir(d):
+            if f.endswith(".parquet"):
+                out.add(pq.read_schema(os.path.join(d, f)).remove_metadata())
+    return out
+
+
+def test_artifact_schema_same_in_both_layouts(spark, poison_corpus,
+                                              tmp_path):
+    """The driver-buffer flush writes the Spark-written parts' schema
+    (int32 depth/round, int32 sentiment, string quarantined), so a table
+    whose rounds were written by both layouts reads in one
+    ``spark.read.parquet``."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    d, victim = poison_corpus
+    engines = {}
+    for buffered in (True, False):
+        eng = CrawlEngine(spark, d, str(tmp_path / str(buffered)),
+                          collect_order=buffered)
+        eng.run()
+        engines[buffered] = eng
+    for name in ("crawl_order", "documents", "quarantine"):
+        got = {b: _parquet_schemas(e, name) for b, e in engines.items()}
+        assert len(got[True]) == 1 and got[True] == got[False], (name, got)
+        parts = [p for e in engines.values()
+                 for p in e.store.part_dirs(name, e.round)]
+        rows = spark.read.parquet(*parts).collect()
+        assert len(rows) == sum(
+            pq.read_metadata(os.path.join(p, f)).num_rows
+            for p in parts for f in os.listdir(p) if f.endswith(".parquet"))
+        if name == "quarantine":
+            assert [r["url_canon"] for r in rows] == [victim, victim]
+
+
+def test_uncommitted_spark_parts_invisible_after_resume(spark, poison_corpus,
+                                                        tmp_path):
+    """Spark-written parts of a round that never committed stay
+    invisible: checkpoint after round 0, run round 1 (the poisoned
+    page's round) without a checkpoint, resume. Only round 0 shows in
+    crawl_order_df, quarantine_df and the documents parts. The resumed
+    crawl (default layout: the driver buffer) then re-runs round 1 and
+    ends equal to the oracle, with nothing of the dead attempt left."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    d, victim = poison_corpus
+    oracle = run_oracle(d, poison_urls={victim})
+    wd = str(tmp_path)
+    eng = CrawlEngine(spark, d, wd, collect_order=False)
+    eng.seed()
+    assert eng.run_round()
+    eng.checkpoint()
+    assert eng.run_round()  # dies before its checkpoint
+
+    eng2 = CrawlEngine.resume(spark, d, wd)
+    assert eng2.round == 1
+    assert set(eng2.crawl_order_df()["round"]) == {0}
+    assert eng2.quarantine_df().empty
+    docs = [pq.read_table(p) for p in eng2.store.part_dirs("documents",
+                                                           eng2.round)]
+    assert docs and {r for t in docs
+                     for r in t.column("round").to_pylist()} == {0}
+
+    eng2.run()
+    oo = [(r["seq"], r["url_canon"], r["round"], r["success"])
+          for r in oracle.crawl_order]
+    df = eng2.crawl_order_df()
+    assert list(df[["seq", "url_canon", "round", "success"]]
+                .itertuples(index=False, name=None)) == oo
+    assert list(eng2.quarantine_df()["url_canon"]) == [victim]
+    n_docs = sum(pq.read_metadata(os.path.join(p, f)).num_rows
+                 for p in eng2.store.part_dirs("documents", eng2.round)
+                 for f in os.listdir(p) if f.endswith(".parquet"))
+    assert n_docs == sum(r["success"] and r["url_canon"] != victim
+                         for r in oracle.crawl_order)
