@@ -15,8 +15,8 @@ host/enqueue_seq plus narrow passes — cost is linear in rows with NO
 driver-resident state (the driver holds counters only). The salted
 hot-host guard (opt-in, exactness asserted below) bounds a hot host's
 final-window input to n_salts x B rows regardless of how hot it is.
-Bloom scale: §4.2.3 of SURVEY.md — broadcast to ~10^9 keys, then the
-bit-identical distributed-bitmap probe (frontier.bloom_probe_distributed).
+Bloom scale: §4.2.3 of SURVEY.md — the engine broadcasts the filter,
+which fits executor memory to ~10^9 keys.
 The frontier delta update measured here REWRITES the surviving rows
 (versioned-parquet snapshot layout); on the 10^10 deployment the same
 commit is an Iceberg merge-on-read DELETE of the G dequeued keys plus

@@ -89,7 +89,7 @@ def one_round(cpus: int, corpus: str) -> tuple[float, int]:
     wd = tempfile.mkdtemp(prefix=f"delver_scale_{cpus}_")
     try:
         eng = CrawlEngine(spark, corpus, wd,
-                          collect_documents=False, collect_order=False,
+                          collect_documents=False,
                           mode=os.environ.get("SPARK_GRAFT_SCALE_MODE",
                                               "dfs"),
                           seen_filter=os.environ.get(

@@ -75,10 +75,6 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     return _DECODERS[fmt](data)
 
 
-def is_lossless(fmt: str) -> bool:
-    return fmt == "ppm"
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
     if mse == 0:

@@ -20,12 +20,13 @@ same under either plan. At or below ``BIG_ROUND_FLOOR`` a round takes
 the small-round plan: the dequeue is one ``toArrow`` that comes back as
 a local relation, the fetch pushes an IN-list into the payload scan and
 broadcast-joins the pruned payload, and the order/quarantine/document
-artifacts go to the driver buffer. Above it, the big-round plan: the
-dequeue ranks distributed (``frontier.dequeue`` ``seq_hint``), the
-extract tasks read their payload row-group splits directly
-(``sources/payload_scan.py``, payload bytes never shuffle) and the
-artifacts are written by Spark every round. ``collect_order=True`` or
-``False`` forces one artifact layout; both layouts write one schema.
+artifacts come back in one ``toArrow`` into the driver buffer, flushed
+at checkpoints. Above it, the big-round plan: the dequeue ranks
+distributed (``frontier.dequeue`` ``seq_hint``), the extract tasks read
+their payload row-group splits directly (``sources/payload_scan.py``,
+payload bytes never shuffle) and Spark writes the artifacts every
+round. Each artifact is defined once (``_artifacts``), so both layouts
+write one schema.
 
 A steady small round launches at most 10 Spark jobs: the dequeue
 collect (3: the tombstone broadcast, the host window's shuffle, the
@@ -100,40 +101,35 @@ BIG_ROUND_FLOOR = 10_000
 _PART_TABLES = ("crawl_order", "lineage", "quarantine", "documents")
 
 
-def _order_rows(extracted: DataFrame, rnd: int, fetch_seq0: int) -> DataFrame:
-    return extracted.select(
-        (F.col("pos") + F.lit(fetch_seq0)).alias("seq"), "url_canon",
-        "depth", F.lit(rnd).alias("round"), "host", "success")
+# the documents artifact: every extract column but the outlinks and the
+# entity lists, plus the round
+_DOC_COLS = [f.name for f in EXTRACT_SCHEMA.fields
+             if f.name not in ("outlinks", "countries", "companies")]
 
 
-def _quarantine_rows(extracted: DataFrame, rnd: int) -> DataFrame:
-    return extracted.filter(F.col("quarantined").isNotNull()).select(
-        "url_canon", F.col("quarantined").alias("error"),
-        F.lit(rnd).alias("round"))
-
-
-def _document_rows(extracted: DataFrame, rnd: int, news: bool) -> DataFrame:
-    doc_f = F.col("success") & F.col("quarantined").isNull()
-    if news:  # articles only: processArticle skips depth 0
-        doc_f = doc_f & (F.col("depth") > 0)
-    return (extracted.filter(doc_f)
-            .drop("outlinks", "countries", "companies")
-            .withColumn("round", F.lit(rnd)))
-
-
-def _artifact_schemas(spark: SparkSession) -> dict:
-    """The Arrow schemas of the Spark-written artifact parts, for the
-    driver buffer's flush to write too: a table whose rounds were written
-    by both layouts then reads in one ``spark.read.parquet``. Derived from
-    the Spark-side projections over an empty extract frame (no job),
-    nullability included (``round`` is a non-NULL literal)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    ext = spark.createDataFrame([], EXTRACT_SCHEMA)
-    return {name: to_arrow_schema(df.schema)
-            for name, df in (("crawl_order", _order_rows(ext, 0, 0)),
-                             ("quarantine", _quarantine_rows(ext, 0)),
-                             ("documents", _document_rows(ext, 0, False)))}
+def _artifacts(rnd: int, fetch_seq0: int, news: bool,
+               documents: bool) -> dict:
+    """The one definition of each artifact table a round appends to:
+    ``{name: (row predicate, columns)}``, SQL over the extract frame.
+    Spark writes ``extracted.filter(pred).selectExpr(*cols)``; the driver
+    buffer collects every table as a struct column of ``cols`` plus
+    ``pred`` as a mask (:meth:`CrawlEngine._order_job`). ``round`` is a
+    non-NULL INT literal in both."""
+    arts = {
+        "crawl_order": ("true", [f"pos + {fetch_seq0} AS seq", "url_canon",
+                                 "depth", f"{rnd} AS round", "host",
+                                 "success"]),
+        "quarantine": ("quarantined IS NOT NULL",
+                       ["url_canon", "quarantined AS error",
+                        f"{rnd} AS round"]),
+    }
+    if documents:
+        # news: articles only, processArticle skips depth 0
+        arts["documents"] = (
+            "success AND quarantined IS NULL" + (" AND depth > 0" if news
+                                                 else ""),
+            _DOC_COLS + [f"{rnd} AS round"])
+    return arts
 
 
 def _outlink_domain(host_col):
@@ -257,7 +253,6 @@ def _admit_pass(probe, news: bool, out_cols: list[str]):
 class CrawlEngine:
     def __init__(self, spark: SparkSession, corpus_dir: str, workdir: str,
                  n_partitions: int = 8, collect_documents: bool = True,
-                 collect_order: bool | None = None,
                  hot_host_threshold: int | None = None,
                  mode: str = "dfs",
                  param_overrides: dict | None = None,
@@ -300,14 +295,7 @@ class CrawlEngine:
         self.B = p["per_host_budget"]
         self.G = p["global_budget"]
         self.max_rounds = p["max_rounds"]
-        # the order/quarantine/documents artifact layout. None (default)
-        # chooses per round by its bound: a big round must never
-        # bottleneck on a driver toPandas, a small round is cheaper through
-        # the driver buffer (one pandas frame vs per-round write jobs).
-        # False forces Spark parquet writes every round, True the buffer.
-        self.collect_order = collect_order
         self._big_round_floor = BIG_ROUND_FLOOR
-        self._flush_schemas: dict | None = None
 
         # payload table: at 100 TB this is the Iceberg table bucketed/sorted
         # by url_canon; per-round access is an IN-filter over <= G keys that
@@ -369,11 +357,9 @@ class CrawlEngine:
         self.fetch_seq = 0
         self.round = 0
         self._store_unions = 0
-        # driver-side buffers, flushed-and-cleared at checkpoints
-        self.crawl_order: list[dict] = []
-        self.lineage: list[dict] = []
-        self.documents: list[pd.DataFrame] = []
-        self.quarantine: list[dict] = []
+        # the driver buffer: {artifact table: its uncommitted rows, in
+        # the Spark-written parts' schema}, flushed at checkpoints
+        self.buffers: dict[str, pa.Table] = {}
 
     # the seen-set's kind and probe plan, and its filter (None for the
     # family not in use)
@@ -479,15 +465,7 @@ class CrawlEngine:
         return n
 
     # ------------------------------------------------------------- one round
-    def run_round(self, timings: dict | None = None) -> bool:
-        import time as _time
-
-        def _mark(name, t0):
-            if timings is not None:
-                timings[name] = timings.get(name, 0.0) + _time.perf_counter() - t0
-            return _time.perf_counter()
-
-        _t = _time.perf_counter()
+    def run_round(self) -> bool:
         rnd = self.round
         if self.frontier_count == 0:
             if self._refill(rnd) == 0:
@@ -520,7 +498,6 @@ class CrawlEngine:
             # — no extra count job
             batch_count = deq_stats["batch_count"] \
                 if "batch_count" in deq_stats else batch.count()
-        _t = _mark('dequeue', _t)
         if batch_count == 0:
             return False
         # MOR delete: the dequeued seqs become tombstones (batch is local
@@ -541,17 +518,13 @@ class CrawlEngine:
         from ..session import scoped_arrow_batch
         with scoped_arrow_batch(self.spark, 256):
             extracted = self._fetch_extract(batch, batch_count, batch_urls)
-        _t = _mark('fetch_extract', _t)
 
         # post-extract work is a DAG of independent Spark jobs — run them
         # concurrently so driver-side job-launch latency (the dominant
         # serial per-round cost) overlaps; one admission code path for
         # every round size. The artifacts go to the driver buffer on a
         # small round, to per-round Spark writes on a big one
-        buffered = not big if self.collect_order is None \
-            else self.collect_order
-        self._finish_round(extracted, batch_count, rnd, buffered, timings,
-                           _mark, _t)
+        self._finish_round(extracted, batch_count, rnd, buffered=not big)
         self.round += 1
         return True
 
@@ -637,67 +610,59 @@ class CrawlEngine:
     # ---------------------------------------------------- round finish
     def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int,
                    buffered: bool):
-        """Order artifacts + {partition_id: lineage counters}. dfs
-        lineage candidate counts ride this job as per-page columns.
-        ``buffered`` returns the artifacts for the driver buffer; else
-        Spark writes them into the part dirs of the snapshot round that
-        will commit them (``rnd + 1``: an uncommitted round's parts stay
-        invisible, see ``SnapshotStore``)."""
+        """The round's artifacts (:func:`_artifacts`) + {partition_id:
+        lineage counters} + the quarantined count, in one job. dfs lineage
+        candidate counts ride it as per-page columns. ``buffered``: one
+        ``toArrow`` carries every artifact as a struct column plus its
+        predicate as a mask column, and the split tables return for the
+        driver buffer. (A NULL struct for a filtered-out row would fail
+        the ``toArrow``: ``round`` is a non-NULL child.) Else Spark
+        writes them into the part dirs of the snapshot round that will
+        commit them (``rnd + 1``: an uncommitted round's parts stay
+        invisible, see ``SnapshotStore``) and no tables return."""
         news = self.mode == "news"
         cand_names = [] if news else ["same_n", "stash_n"]
+        arts = _artifacts(rnd, fetch_seq0, news, self.collect_documents)
 
         def counters(n, same_n=0, stash_n=0):
             return {"fetched": int(n), "deduped": int(same_n),
                     "enqueued": 0, "stashed": int(stash_n)}
 
         if buffered:
-            ext_pd = extracted.select("*", *self._cand_cols) \
-                .drop("outlinks").toPandas().sort_values("pos")
-            g = ext_pd.groupby("partition_id")
-            sums = g[cand_names].sum() if cand_names else None
-            agg = {int(k): counters(n, *(sums.loc[k] if cand_names
-                                         else ()))
-                   for k, n in g.size().items()}
-            rows = [{"seq": fetch_seq0 + int(r.pos), "url_canon": r.url_canon,
-                     "depth": int(r.depth), "round": rnd, "host": r.host,
-                     "success": bool(r.success)}
-                    for r in ext_pd.itertuples()]
-            quar = [{"url_canon": r.url_canon, "error": r.quarantined,
-                     "round": rnd}
-                    for r in ext_pd[ext_pd["quarantined"].notna()]
-                    .itertuples()]
-            doc = None
-            if self.collect_documents:
-                mask = ext_pd["success"] & ext_pd["quarantined"].isna()
-                if news:  # articles only: processArticle skips depth 0
-                    mask &= ext_pd["depth"] > 0
-                doc = ext_pd[mask].drop(columns=cand_names)
-                doc["round"] = rnd
-            return agg, rows, doc, quar, len(quar)
+            t = extracted.select(
+                "pos", "partition_id", *self._cand_cols,
+                *[F.expr(f"struct({', '.join(cols)}) AS {name}")
+                  for name, (_, cols) in arts.items()],
+                *[F.expr(f"{pred} AS in_{name}")
+                  for name, (pred, _) in arts.items()]
+            ).toArrow().sort_by("pos")
+            tables = {name: pa.Table.from_struct_array(t.column(name))
+                      .filter(t.column("in_" + name)) for name in arts}
+            sums = t.group_by("partition_id").aggregate(
+                [([], "count_all")] + [(c, "sum") for c in cand_names])
+            agg = {int(r["partition_id"]): counters(
+                       r["count_all"], *(r[c + "_sum"] for c in cand_names))
+                   for r in sums.to_pylist()}
+            return agg, tables, tables["quarantine"].num_rows
         parts = extracted.select("*", *self._cand_cols) \
             .groupBy("partition_id").agg(
                 F.count("*").alias("count"),
-                F.sum(F.when(F.col("quarantined").isNotNull(), 1)
-                      .otherwise(0)).alias("q_n"),
+                F.expr(f"count_if({arts['quarantine'][0]})").alias("q_n"),
                 *[F.sum(c).alias(c) for c in cand_names]).collect()
         agg = {int(r["partition_id"]): counters(
                    r["count"], *(r[c] for c in cand_names))
                for r in parts}
         q_total = sum(int(r["q_n"]) for r in parts)
-        writes = [("crawl_order", _order_rows(extracted, rnd, fetch_seq0))]
-        if q_total:
-            writes.append(("quarantine", _quarantine_rows(extracted, rnd)))
-        if self.collect_documents:
-            # successful rows written per round, bytes stay executor-side
-            writes.append(("documents", _document_rows(extracted, rnd, news)))
-        for name, df in writes:
-            df.write.mode("overwrite").parquet(
-                self.store.state_dir(name, rnd + 1))
-        return agg, None, None, None, q_total
+        for name, (pred, cols) in arts.items():
+            if name != "quarantine" or q_total:
+                extracted.filter(pred).selectExpr(*cols).write \
+                    .mode("overwrite").parquet(
+                        self.store.state_dir(name, rnd + 1))
+        return agg, {}, q_total
 
     def _admit(self, extracted: DataFrame, same: DataFrame, probe,
-               batch_count: int, rnd: int, n_parts: int, par: int,
-               timings) -> DataFrame:
+               batch_count: int, rnd: int, n_parts: int,
+               par: int) -> DataFrame:
         """The round's critical path, fused Arrow admission (F6/F7): ONE
         colocating pass (``probe.colocate``) brings all proposals of a
         url TOGETHER WITH a marker row per fetched url (cogroup-via-union:
@@ -705,8 +670,6 @@ class CrawlEngine:
         groupBy, no driver collect and no O(batch) broadcast), then
         :func:`_admit_pass`, a sequence rank and the origin join. Returns
         the admitted checkpoint, ``partition_id`` and ``page_pos`` kept."""
-        import time as _time
-
         news = self.mode == "news"
         winners_in = same.withColumn("f_pos", F.lit(None).cast("long"))
         if not news:  # news.go never marks the fetched page: no markers
@@ -732,26 +695,21 @@ class CrawlEngine:
             ranked = assign_global_rank(
                 winners, ["page_pos", "link_pos"],
                 F.floor(F.col("page_pos") / F.lit(chunk)), "rn",
-                partitions=n_parts, timings=timings)
+                partitions=n_parts)
         origin_by_pos = extracted.select(
             F.col("pos").alias("page_pos"),
             F.col("url_canon").alias("origin"))
-        _ta = _time.perf_counter()
-        admitted = (ranked
-                    .join(F.broadcast(origin_by_pos), "page_pos")
-                    .select(
-                        F.lit(0).alias("priority"),
-                        F.lit(rnd).alias("enqueue_round"),
-                        (F.lit(self.seq) + F.col("rn")).alias("enqueue_seq"),
-                        F.col("url"), F.col("host"),
-                        (F.col("page_depth") + 1).alias("depth"),
-                        F.col("origin"),
-                        F.col("partition_id"), F.col("page_pos"))
-                    .localCheckpoint(eager=True))
-        if timings is not None:
-            timings["adm_admit_ckpt"] = timings.get("adm_admit_ckpt", 0.0) \
-                + _time.perf_counter() - _ta
-        return admitted
+        return (ranked
+                .join(F.broadcast(origin_by_pos), "page_pos")
+                .select(
+                    F.lit(0).alias("priority"),
+                    F.lit(rnd).alias("enqueue_round"),
+                    (F.lit(self.seq) + F.col("rn")).alias("enqueue_seq"),
+                    F.col("url"), F.col("host"),
+                    (F.col("page_depth") + 1).alias("depth"),
+                    F.col("origin"),
+                    F.col("partition_id"), F.col("page_pos"))
+                .localCheckpoint(eager=True))
 
     def _seen_ops(self, extracted: DataFrame, admitted: DataFrame):
         """The round's seen-set inserts as the oracle's write transactions
@@ -772,14 +730,14 @@ class CrawlEngine:
         return ops
 
     def _finish_round(self, extracted: DataFrame, batch_count: int,
-                      rnd: int, buffered: bool, timings, _mark, _t):
+                      rnd: int, buffered: bool):
         """Post-extract work for every round, as a concurrent job DAG.
 
         Jobs, for every round plan and every seen-set:
 
-        - the order job (:meth:`_order_job`, thread pool): artifacts
-          (``buffered``: one collect for the driver buffer, else
-          per-round Spark writes), per-partition fetched/quarantined
+        - the order job (:meth:`_order_job`, thread pool): the artifact
+          tables (``buffered``: one ``toArrow`` into the driver buffer,
+          else per-round Spark writes), per-partition fetched/quarantined
           counts and — dfs — the pages' candidate counts
           (``_page_cand_counts``). News runs one more
           count job: its gate calls the robots pandas UDF, which cannot
@@ -845,8 +803,7 @@ class CrawlEngine:
                 if news else None
             probe = self.seen.open_probe(self.spark.sparkContext)
             admitted = self._admit(extracted, same, probe, batch_count, rnd,
-                                   n_parts, par, timings)
-            _t = _mark('admission', _t)
+                                   n_parts, par)
 
             # ---- seen-set delta + admitted counts: ONE pass, one collect
             # over the round's insert set — markVisited'd pages ∪ admitted
@@ -884,16 +841,9 @@ class CrawlEngine:
             self._append_delta(admitted.drop("partition_id", "page_pos"),
                                admitted_count)
             self._maybe_compact()
-            _t = _mark('state_updates', _t)
 
             # ---- gather + driver-side merges -------------------------------
-            agg, order_rows, doc, quar, q_n = fut_order.result()
-            if order_rows is not None:
-                self.crawl_order.extend(order_rows)
-            if doc is not None:
-                self.documents.append(doc)
-            if quar:
-                self.quarantine.extend(quar)
+            agg, tables, q_n = fut_order.result()
             self.fetch_seq += batch_count
 
             if fut_cand is not None:
@@ -902,9 +852,14 @@ class CrawlEngine:
             for part, n in adm_counts.items():
                 agg[part]["enqueued"] += n
                 agg[part]["deduped"] -= n
-            for part in sorted(agg):
-                self.lineage.append(
-                    {"round": rnd, "partition": int(part), **agg[part]})
+            tables["lineage"] = pa.Table.from_pylist(
+                [{"round": rnd, "partition": part, **agg[part]}
+                 for part in sorted(agg)])
+            for name, t in tables.items():
+                if t.num_rows:
+                    self.buffers[name] = pa.concat_tables(
+                        [self.buffers[name], t]) if name in self.buffers \
+                        else t
 
             # quarantined rows never markVisited → not counted as inserts;
             # news mode marks ONLY admitted outlinks (no page inserts)
@@ -912,7 +867,6 @@ class CrawlEngine:
                 else batch_count - q_n + admitted_count
             self.seen.commit(seen_delta, total_added,
                              lambda: self._seen_ops(extracted, admitted))
-            _t = _mark('bloom_merge', _t)
         finally:
             if probe is not None:
                 probe.release()
@@ -1024,29 +978,12 @@ class CrawlEngine:
         self.url_store.write.mode("overwrite").parquet(sdir)
         self.store.save_bloom(rnd, self.seen.to_bytes())
         # the buffers flush into the part dirs of the round this manifest
-        # commits, in the Spark-written parts' schema (lineage is only
-        # ever buffered)
-        if self.crawl_order:
-            self._flush(rnd, "crawl_order", pa.Table.from_pylist(
-                self.crawl_order, schema=self._buffer_schema("crawl_order")))
-            self.crawl_order = []
-        if self.lineage:
-            self._flush(rnd, "lineage", pa.Table.from_pylist(self.lineage))
-            self.lineage = []
-        if self.quarantine:
-            self._flush(rnd, "quarantine", pa.Table.from_pylist(
-                self.quarantine, schema=self._buffer_schema("quarantine")))
-            self.quarantine = []
-        if self.documents:
-            # from_pandas keeps the schema's columns (countries and
-            # companies are not artifact columns) and casts each to its
-            # Spark type: a NULL-holding int column comes back from
-            # toPandas as float64, an all-NULL string one as object
-            self._flush(rnd, "documents", pa.Table.from_pandas(
-                pd.concat(self.documents, ignore_index=True),
-                schema=self._buffer_schema("documents"),
-                preserve_index=False))
-            self.documents = []
+        # commits (lineage is only ever buffered)
+        for name, t in self.buffers.items():
+            d = self.store.state_dir(name, rnd)
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(t, os.path.join(d, "part.parquet"))
+        self.buffers = {}
         self.store.commit({
             "round": rnd, "seq": self.seq, "fetch_seq": self.fetch_seq,
             "frontier_count": self.frontier_count,
@@ -1062,16 +999,6 @@ class CrawlEngine:
             # SEMANTIC engine knob — resume == uninterrupted requires it
             "host_budgets": self.host_budgets,
         })
-
-    def _buffer_schema(self, name: str) -> pa.Schema:
-        if self._flush_schemas is None:
-            self._flush_schemas = _artifact_schemas(self.spark)
-        return self._flush_schemas[name]
-
-    def _flush(self, rnd: int, name: str, table: pa.Table):
-        d = self.store.state_dir(name, rnd)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(table, os.path.join(d, "part.parquet"))
 
     # ----------------------------------------------------------------- resume
     @classmethod
@@ -1115,31 +1042,25 @@ class CrawlEngine:
         return eng
 
     # -------------------------------------------------------------- accessors
+    def _artifact_df(self, name: str, order: list[str]) -> pd.DataFrame:
+        """One artifact table as of now (committed parts + the driver
+        buffer), sorted by ``order``."""
+        frames = [pq.read_table(p).to_pandas()
+                  for p in self.store.part_dirs(name, self.round)]
+        if name in self.buffers:
+            frames.append(self.buffers[name].to_pandas())
+        df = pd.concat(frames, ignore_index=True) if frames \
+            else pd.DataFrame(columns=order)
+        return df.sort_values(order).reset_index(drop=True)
+
     def crawl_order_df(self) -> pd.DataFrame:
-        """Full committed crawl order (flushed parts + buffer)."""
-        parts = self.store.part_dirs("crawl_order", self.round)
-        frames = [pq.read_table(p).to_pandas() for p in parts]
-        if self.crawl_order:
-            frames.append(pd.DataFrame(self.crawl_order))
-        return (pd.concat(frames, ignore_index=True).sort_values("seq")
-                .reset_index(drop=True)) if frames else pd.DataFrame()
+        return self._artifact_df("crawl_order", ["seq"])
 
     def quarantine_df(self) -> pd.DataFrame:
-        """Committed DLQ rows (url_canon, error, round) + buffer."""
-        parts = self.store.part_dirs("quarantine", self.round)
-        frames = [pq.read_table(p).to_pandas() for p in parts]
-        if self.quarantine:
-            frames.append(pd.DataFrame(self.quarantine))
-        return (pd.concat(frames, ignore_index=True)
-                .sort_values(["round", "url_canon"]).reset_index(drop=True)
-                ) if frames else pd.DataFrame(
-                    columns=["url_canon", "error", "round"])
+        return self._artifact_df("quarantine", ["round", "url_canon"])
 
     def lineage_df(self) -> pd.DataFrame:
-        parts = self.store.part_dirs("lineage", self.round)
-        frames = [pq.read_table(p).to_pandas() for p in parts]
-        if self.lineage:
-            frames.append(pd.DataFrame(self.lineage))
-        return (pd.concat(frames, ignore_index=True)
-                .sort_values(["round", "partition"]).reset_index(drop=True)
-                ) if frames else pd.DataFrame()
+        return self._artifact_df("lineage", ["round", "partition"])
+
+    def documents_df(self) -> pd.DataFrame:
+        return self._artifact_df("documents", ["round", "pos"])

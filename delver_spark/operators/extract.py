@@ -75,16 +75,6 @@ EXTRACT_SCHEMA = T.StructType([
 ])
 
 
-def make_extractor(n_partitions: int = 8):
-    """Build the mapInPandas body with ``n_partitions`` captured in the
-    closure (cleanly serialized to executors)."""
-
-    def extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _extract(it, n_partitions)
-
-    return extract_batches
-
-
 def make_extractor_arrow(n_partitions: int = 8, emit_text: bool = True):
     """mapInArrow variant: converts each RecordBatch to pandas with the
     binary payload column REPLACED by zero-copy numpy views into the Arrow

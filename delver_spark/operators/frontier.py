@@ -108,7 +108,7 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
       selected by the DISTRIBUTED exact ranking (assign_global_rank
       sharded on floor(seq/chunk)) instead of TakeOrdered's single-point
       merge + single-partition pos window — the two core-count-independent
-      ~1.5 s/round costs of the sustained drain (profile_round.py r4).
+      ~1.5 s/round costs of the sustained drain.
       The caller chooses the plan by passing ``seq_hint`` or not: the
       ranking launches several jobs, so it only pays off for big batches,
       and the crawl engine passes it only for a round whose bound
@@ -465,91 +465,38 @@ def admission_keep_mask_news(h1: np.ndarray, h2: np.ndarray,
 
 def assign_global_rank(df: DataFrame, order_cols: list[str], pid_expr,
                        out_col: str = "rn", partitions: int | None = None,
-                       timings: dict | None = None,
                        out_stats: dict | None = None) -> DataFrame:
     """Distributed 0-based global rank by ``order_cols`` (must be a unique
-    key) — no single-partition window, no row pickling, no sampling pass.
-
-    ``pid_expr`` is a caller-supplied integer Column that is MONOTONE
-    non-decreasing w.r.t. the order (e.g. floor(major_key / chunk)): rows
-    are hash-shuffled by it, sorted within partitions, then per-pid offsets
-    (one tiny collect) plus per-pid running counters are added in a single
-    Arrow pass."""
-    spark = df.sparkSession
-    if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism, 4)
-    import time as _time
-    cols = [F.col(c) for c in order_cols]
-    t0 = _time.perf_counter()
-    sorted_df = (df.withColumn("_pid", pid_expr.cast("long"))
-                 .repartition(partitions, F.col("_pid"))
-                 .sortWithinPartitions(*cols)
-                 .localCheckpoint(eager=True))
-    t1 = _time.perf_counter()
-    counts = dict(sorted_df.groupBy("_pid").count().collect())
-    if timings is not None:
-        timings["adm_rank_ckpt"] = timings.get("adm_rank_ckpt", 0.0) + t1 - t0
-        timings["adm_rank_counts"] = timings.get("adm_rank_counts", 0.0) \
-            + _time.perf_counter() - t1
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if out_stats is not None:
-        out_stats["total"] = acc  # row count, free from the offsets pass
-    schema = sorted_df.drop("_pid").schema.add(out_col, "long")
-
-    def add_rank(it):
-        seen: dict[int, int] = {}
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pids = pdf["_pid"].to_numpy()
-            rn = np.empty(len(pdf), dtype=np.int64)
-            # pids appear in contiguous runs (sorted by order_cols and pid
-            # is monotone in them)
-            start = 0
-            while start < len(pdf):
-                pid = int(pids[start])
-                end = start
-                while end < len(pdf) and pids[end] == pid:
-                    end += 1
-                base = offsets[pid] + seen.get(pid, 0)
-                rn[start:end] = np.arange(base, base + (end - start))
-                seen[pid] = seen.get(pid, 0) + (end - start)
-                start = end
-            out = pdf.drop(columns=["_pid"])
-            out[out_col] = rn
-            yield out
-
-    return sorted_df.mapInPandas(add_rank, schema)
+    key): :func:`assign_global_prefix_sum` of weight 1, same contract and
+    jobs. ``out_stats``, if given, receives ``total``, the row count."""
+    return _global_prefix_sum(df, order_cols, pid_expr, None, out_col,
+                              partitions, out_stats)
 
 
 def assign_global_prefix_sum(df: DataFrame, order_cols: list[str], pid_expr,
                              weight_col: str, out_col: str = "psum",
                              partitions: int | None = None) -> DataFrame:
     """Distributed EXCLUSIVE prefix sum of ``weight_col`` in ``order_cols``
-    order — the weighted generalization of :func:`assign_global_rank`
-    (rank == prefix sum of weight 1). Same contract: ``order_cols`` is a
-    unique key, ``pid_expr`` is an integer Column monotone non-decreasing
-    in that order; rows shuffle once by pid, per-pid weight totals come
-    from one tiny collect, and a single Arrow pass adds
-    ``out_col = sum of all earlier rows' weights`` (first row gets 0).
+    order — no single-partition window, no row pickling, no sampling
+    pass. ``order_cols`` is a unique key; ``pid_expr`` is a
+    caller-supplied integer Column MONOTONE non-decreasing in that order
+    (e.g. floor(major_key / chunk)). Rows shuffle once by pid and sort
+    within partitions, per-pid weight totals come from one tiny collect,
+    and a single Arrow pass adds ``out_col = sum of all earlier rows'
+    weights`` (first row gets 0).
 
     Weights must be non-negative integers (the result is exact int64,
     so an engine twin — e.g. DuckDB ``sum() OVER (... ROWS BETWEEN
-    UNBOUNDED PRECEDING AND 1 PRECEDING)`` — is bit-identical).
+    UNBOUNDED PRECEDING AND 1 PRECEDING)`` — is bit-identical)."""
+    return _global_prefix_sum(df, order_cols, pid_expr, weight_col, out_col,
+                              partitions, None)
 
-    Deliberately NOT unified with assign_global_rank (rank ==
-    prefix-sum of weight 1, so the bodies mirror each other): the rank
-    variant is the crawl admission hot path, carries timings/out_stats
-    instrumentation the engine's profiler depends on, and is pinned by
-    the bit-exact oracle suite — rewiring it through this function buys
-    ~40 shared lines at the cost of churning that path. If you change
-    the shared invariants (pid monotone in order, contiguous pid runs
-    after sortWithinPartitions, per-pid carry across Arrow batches),
-    change BOTH."""
+
+def _global_prefix_sum(df: DataFrame, order_cols: list[str], pid_expr,
+                       weight_col: str | None, out_col: str,
+                       partitions: int | None,
+                       out_stats: dict | None) -> DataFrame:
+    """The body of both: ``weight_col=None`` counts rows (the rank)."""
     spark = df.sparkSession
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 4)
@@ -558,15 +505,16 @@ def assign_global_prefix_sum(df: DataFrame, order_cols: list[str], pid_expr,
                  .repartition(partitions, F.col("_pid"))
                  .sortWithinPartitions(*cols)
                  .localCheckpoint(eager=True))
-    totals = {r["_pid"]: r["_w"] for r in
-              sorted_df.groupBy("_pid")
-              .agg(F.sum(F.col(weight_col).cast("long")).alias("_w"))
-              .collect()}
+    weight = F.count("*") if weight_col is None \
+        else F.sum(F.col(weight_col).cast("long"))
+    totals = dict(sorted_df.groupBy("_pid").agg(weight).collect())
     offsets = {}
     acc = 0
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += int(totals[pid])
+    if out_stats is not None:
+        out_stats["total"] = acc  # free from the offsets pass
     schema = sorted_df.drop("_pid").schema.add(out_col, "long")
 
     def add_psum(it):
@@ -575,8 +523,11 @@ def assign_global_prefix_sum(df: DataFrame, order_cols: list[str], pid_expr,
             if len(pdf) == 0:
                 continue
             pids = pdf["_pid"].to_numpy()
-            w = pdf[weight_col].to_numpy().astype(np.int64)
+            w = np.ones(len(pdf), dtype=np.int64) if weight_col is None \
+                else pdf[weight_col].to_numpy().astype(np.int64)
             ps = np.empty(len(pdf), dtype=np.int64)
+            # pids appear in contiguous runs (sorted by order_cols and pid
+            # is monotone in them)
             start = 0
             while start < len(pdf):
                 pid = int(pids[start])
@@ -596,71 +547,6 @@ def assign_global_prefix_sum(df: DataFrame, order_cols: list[str], pid_expr,
             yield out
 
     return sorted_df.mapInPandas(add_psum, schema)
-
-
-def bloom_words_df(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
-    """The bloom bitmap as a DataFrame of (word_idx:long, word:long) —
-    the distributed representation for scales where the bitmap no longer
-    broadcasts (10^10 keys at p=0.001 is a ~26 GB bitmap; broadcast is
-    the right plan up to ~10^9). Words are the same uint64 lanes the
-    in-memory filter uses, reinterpreted as int64."""
-    import pandas as pd
-    widx = np.flatnonzero(bloom.words)  # sparse: only non-zero words
-    pdf = pd.DataFrame({"word_idx": widx.astype(np.int64),
-                        "word": bloom.words[widx].view(np.int64)})
-    return spark.createDataFrame(pdf, "word_idx long, word long")
-
-
-def bloom_probe_distributed(cands: DataFrame, url_col: str,
-                            words: DataFrame, max_n: int,
-                            p: float) -> DataFrame:
-    """Membership probe with BIT-IDENTICAL semantics to the in-memory
-    filter, but against the distributed bitmap: each candidate explodes
-    into its k probe positions, positions join the words table on
-    word_idx (zero words are absent — a miss is a zero word), and a
-    candidate is a member iff every probe bit is set. Cost is O(k x G)
-    join rows per round — G-bounded, never O(bitmap). Returns ``cands``
-    plus an ``in_bloom`` boolean column.
-
-    This is the 10^10-scale fallback for SURVEY J3; the broadcast probe
-    of the fused admission pass (operators/seen.py) is the fast path
-    while the bitmap fits executor memory."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    proto = BloomFilter(max_n, p)
-    k = proto.k
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def probe_positions(urls: pd.Series) -> pd.Series:
-        local = BloomFilter(max_n, p)
-        pos = local.probes_batch(urls.tolist())  # (n, k) uint64
-        return pd.Series(list(pos.astype(np.int64)))
-
-    # a unique row id carries each candidate through the explode/regroup
-    # so exact-duplicate candidate rows KEEP their multiplicity — grouping
-    # on the candidate columns instead would silently collapse them, and
-    # the reference's same-page duplicate-admission quirk depends on
-    # duplicates surviving to the admission stage
-    with_id = cands.withColumn("_rid", F.monotonically_increasing_id())
-    probes = (with_id.withColumn("_pos", probe_positions(F.col(url_col)))
-              .withColumn("_p", F.explode("_pos")).drop("_pos")
-              .withColumn("_widx", (F.col("_p") / F.lit(64)).cast("long"))
-              .withColumn("_bit", F.col("_p") % F.lit(64)))
-    joined = probes.join(words.withColumnRenamed("word_idx", "_widx"),
-                         "_widx", "left")
-    # SQL shiftright accepts a column shift amount; arithmetic shift's
-    # sign extension never touches bit 0 for shifts < 64, and at bit 63
-    # the sign IS the probed bit — so `& 1` is exact for all 64 lanes
-    bit_set = F.when(
-        F.col("word").isNotNull()
-        & (F.expr("shiftright(word, CAST(_bit AS INT)) & 1") == 1),
-        1).otherwise(0)
-    group_cols = [c for c in cands.columns]
-    return (joined.withColumn("_hit", bit_set)
-            .groupBy("_rid", *group_cols)
-            .agg((F.sum("_hit") == F.lit(k)).alias("in_bloom"))
-            .drop("_rid"))
 
 
 def make_robots_udf(spark: SparkSession, rules_by_host: dict):

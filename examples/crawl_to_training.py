@@ -19,7 +19,8 @@ Usage: ``python examples/crawl_to_training.py [n_pages]`` (default
 prints per-stage rows + timings. At cluster scale the corpus is an
 Iceberg/parquet table of (image_id, bytes, w, h, fmt, caption, phash)
 pages, the crawl-order artifact is the engine's distributed parquet
-write (collect_order=False), and out_dir is an object-store prefix —
+write (rounds above crawl.BIG_ROUND_FLOOR), and out_dir is an
+object-store prefix —
 no stage here holds payload bytes on the driver or shuffles them.
 """
 

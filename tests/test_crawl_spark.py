@@ -83,11 +83,7 @@ def test_lineage_counters_match(oracle_result, engine_result):
 def test_payload_invariant_all_rows(engine_result):
     """BASELINE.json input_hint per-row invariant: decoded-pixel allclose
     (ppm), PSNR >= 40 dB (qjpg, vs golden pixels), phash equality."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    parts = engine_result.store.part_dirs("documents", engine_result.round)
-    docs = pd.concat([pq.read_table(p).to_pandas() for p in parts])
+    docs = engine_result.documents_df()
     assert len(docs) > 0
     assert docs["payload_ok"].all()
     assert docs["phash_ok"].all()

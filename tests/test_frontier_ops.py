@@ -60,31 +60,6 @@ def test_dequeue_big_path_exact_equal(spark):
         assert stats["batch_count"] == len(plain), (B, G)
 
 
-def test_distributed_bloom_probe_bit_identical(spark):
-    """The 10^10-scale distributed-bitmap probe must return EXACTLY the
-    in-memory filter's answer for every url — members, non-members, and
-    any false positives alike."""
-    from delver_spark.operators.frontier import (
-        bloom_probe_distributed,
-        bloom_words_df,
-    )
-
-    bf = BloomFilter(2000, 0.01)
-    members = [f"http://h{i % 7}.test/p/{i}" for i in range(800)]
-    bf.add_many(members)
-    probes = members[::7] + [f"http://other{i}.test/x" for i in range(500)]
-    want = dict(zip(probes, bf.contains_batch(probes)))
-
-    words = bloom_words_df(spark, bf)
-    cands = spark.createDataFrame([(u,) for u in probes], "url string")
-    got = {r["url"]: r["in_bloom"] for r in
-           bloom_probe_distributed(cands, "url", words,
-                                   bf.max_n, bf.p).collect()}
-    assert got == {u: bool(v) for u, v in want.items()}
-    # sanity: the probe set must exercise both outcomes
-    assert any(want.values()) and not all(want.values())
-
-
 def test_dequeue_hot_host_guard_exact(spark):
     """The salted two-phase ranking for hot hosts must return the
     bit-identical batch (rows AND pos) as the plain window."""

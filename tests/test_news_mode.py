@@ -68,14 +68,7 @@ def test_news_lineage_matches_oracle(news_oracle, news_engine):
 
 
 def test_news_articles_match_oracle(news_oracle, news_engine):
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    parts = news_engine.store.part_dirs("documents", news_engine.round)
-    frames = [pq.read_table(p).to_pandas() for p in parts]
-    if news_engine.documents:
-        frames.append(pd.concat(news_engine.documents, ignore_index=True))
-    docs = pd.concat(frames, ignore_index=True)
+    docs = news_engine.documents_df()
     got = sorted(zip(docs["url_canon"], docs["round"]))
     want = sorted((d["url_canon"], d["round"]) for d in news_oracle.documents)
     assert got == want
@@ -144,12 +137,7 @@ def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):
     assert np.array_equal(res.bloom.bit_positions(),
                           eng.bloom.bit_positions())
     # every successfully fetched request became an article
-    parts = eng.store.part_dirs("documents", eng.round)
-    import pandas as pd
-    frames = [pq.read_table(p).to_pandas() for p in parts]
-    if eng.documents:
-        frames.append(pd.concat(eng.documents, ignore_index=True))
-    docs = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+    docs = eng.documents_df()
     fetched_ok = set(order[order["success"]]["url_canon"])
     assert set(docs["url_canon"]) == fetched_ok
 

@@ -141,29 +141,42 @@ def _parquet_schemas(eng, name):
 def test_artifact_schema_same_in_both_layouts(spark, poison_corpus,
                                               tmp_path):
     """The driver-buffer flush writes the Spark-written parts' schema
-    (int32 depth/round, int32 sentiment, string quarantined), so a table
-    whose rounds were written by both layouts reads in one
-    ``spark.read.parquet``."""
+    (int32 depth/round, int32 sentiment, string quarantined) and the
+    same rows, so a table whose rounds were written by both layouts
+    reads in one ``spark.read.parquet``. The Spark-written layout is
+    forced by the big-round plan (the engine's private floor at 0)."""
+    import pandas as pd
+
     from delver_spark.operators.crawl import CrawlEngine
 
     d, victim = poison_corpus
     engines = {}
     for buffered in (True, False):
-        eng = CrawlEngine(spark, d, str(tmp_path / str(buffered)),
-                          collect_order=buffered)
+        eng = CrawlEngine(spark, d, str(tmp_path / str(buffered)))
+        if not buffered:
+            eng._big_round_floor = 0
         eng.run()
         engines[buffered] = eng
-    for name in ("crawl_order", "documents", "quarantine"):
+    for name, key in (("crawl_order", ["seq"]),
+                      ("documents", ["round", "pos"]),
+                      ("quarantine", ["round", "url_canon"])):
         got = {b: _parquet_schemas(e, name) for b, e in engines.items()}
         assert len(got[True]) == 1 and got[True] == got[False], (name, got)
-        parts = [p for e in engines.values()
-                 for p in e.store.part_dirs(name, e.round)]
-        rows = spark.read.parquet(*parts).collect()
+        parts = {b: e.store.part_dirs(name, e.round)
+                 for b, e in engines.items()}
+        assert all(parts.values()), name
+        rows = spark.read.parquet(*parts[True], *parts[False]).collect()
         assert len(rows) == sum(
             pq.read_metadata(os.path.join(p, f)).num_rows
-            for p in parts for f in os.listdir(p) if f.endswith(".parquet"))
+            for ps in parts.values() for p in ps
+            for f in os.listdir(p) if f.endswith(".parquet"))
         if name == "quarantine":
             assert [r["url_canon"] for r in rows] == [victim, victim]
+        tables = {b: spark.read.parquet(*ps).toPandas().sort_values(key)
+                  .reset_index(drop=True) for b, ps in parts.items()}
+        assert len(tables[True]) > 0, name
+        pd.testing.assert_frame_equal(tables[True], tables[False],
+                                      obj=name)
 
 
 def test_uncommitted_spark_parts_invisible_after_resume(spark, poison_corpus,
@@ -173,13 +186,16 @@ def test_uncommitted_spark_parts_invisible_after_resume(spark, poison_corpus,
     page's round) without a checkpoint, resume. Only round 0 shows in
     crawl_order_df, quarantine_df and the documents parts. The resumed
     crawl (default layout: the driver buffer) then re-runs round 1 and
-    ends equal to the oracle, with nothing of the dead attempt left."""
+    ends equal to the oracle, with nothing of the dead attempt left. The
+    first engine writes Spark parts: the big-round plan, forced by the
+    engine's private floor at 0."""
     from delver_spark.operators.crawl import CrawlEngine
 
     d, victim = poison_corpus
     oracle = run_oracle(d, poison_urls={victim})
     wd = str(tmp_path)
-    eng = CrawlEngine(spark, d, wd, collect_order=False)
+    eng = CrawlEngine(spark, d, wd)
+    eng._big_round_floor = 0
     eng.seed()
     assert eng.run_round()
     eng.checkpoint()

@@ -183,12 +183,7 @@ def test_news_stream_equals_batch(spark, tmp_path_factory):
     eng._base_count = len(rows)
     eng.seq = len(rows)
     eng.run()
-    parts = eng.store.part_dirs("documents", eng.round)
-    frames = [pq.read_table(p).to_pandas() for p in parts]
-    if eng.documents:
-        frames.append(pd.concat(eng.documents, ignore_index=True))
-    want = (pd.concat(frames, ignore_index=True)
-            [["url_canon", "title", "text_len", "lang"]]
+    want = (eng.documents_df()[["url_canon", "title", "text_len", "lang"]]
             .sort_values("url_canon").reset_index(drop=True))
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
