@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Cuckoo seen-probe A/B on the real crawl round: broadcast vs sharded
-file-backed probe (seen_probe="sharded") on the same pre-filled
+file-backed probe on the same pre-filled
 400k-page drain (bench_scaling.one_round, big-G path), best-of-2 each,
 one core count (SPARK_GRAFT_CPUS, default 8).
 
@@ -9,8 +9,10 @@ whole-filter broadcast for the shard-routed admission shuffle + lazy
 per-task blob loads (engine.cuckoo.ShardFileProbe). At this scale the
 filter is ~1 MB, so the broadcast is free and the sharded plan pays
 its extra narrow Arrow pass (the shard-key derivation) — the expected
-reading is sharded/broadcast slightly above 1. The plan exists for the
-regime the sandbox can't reach: a 10^10-URL filter (~20 GB) exceeds
+reading is sharded/broadcast slightly above 1, and the engine picks the
+broadcast here by itself: the sharded leg forces the shard plan through
+the seen-set's private floor (``CuckooSeen._sharded_floor = 0``). The
+plan exists for the regime the sandbox can't reach: a 10^10-URL filter (~20 GB) exceeds
 any broadcast bound, and broadcast cost is O(executors x filter bytes)
 while the sharded probe's read volume is O(filter bytes) total with
 worker-side caching of unchanged shards (only DIRTY shards re-read
@@ -31,6 +33,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench_scaling  # noqa: E402
 
+from delver_spark.operators.seen import CuckooSeen  # noqa: E402
+
 
 def main():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 8))
@@ -44,7 +48,7 @@ def main():
     os.environ["SPARK_GRAFT_SCALE_SHARDS"] = str(shards)
     out = {}
     for probe in ("broadcast", "sharded"):
-        os.environ["SPARK_GRAFT_SCALE_PROBE"] = probe
+        CuckooSeen._sharded_floor = 0 if probe == "sharded" else None
         best, fetched = None, 0
         for _ in range(reps):
             dt, n = bench_scaling.one_round(cpus, corpus)

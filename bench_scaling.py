@@ -94,8 +94,6 @@ def one_round(cpus: int, corpus: str) -> tuple[float, int]:
                                               "dfs"),
                           seen_filter=os.environ.get(
                               "SPARK_GRAFT_SCALE_SEEN", "bloom"),
-                          seen_probe=os.environ.get(
-                              "SPARK_GRAFT_SCALE_PROBE", "broadcast"),
                           # sharded-probe admission parallelism is capped
                           # by the shard count, so the probe A/B needs
                           # shards >= the shuffle width

@@ -28,7 +28,8 @@ json tags):
   - ``cuckoo_filter`` (NOT a reference type — the engine's own
     deletion-capable seen-set, engine/cuckoo.py; ``shards``/
     ``capacity``): selects ``CrawlEngine(seen_filter="cuckoo")``.
-    Mutually exclusive with the bloom resources.
+    Mutually exclusive with the bloom resources. The seen-set derives
+    its probe plan (operators/seen.py): a ``probe`` parameter is ignored.
   - ``channel_queue``/``timer``/``persistent_map``/``multi_host_map``:
     accepted for config parity; Spark absorbs them (in-JVM exchanges,
     the round loop, broadcast maps), so they carry no parameters here.
@@ -233,21 +234,6 @@ def build_engine(spark, app: Application | str | dict, *,
                     f"cuckoo_filter {cuckoos[0].name}: capacity must be "
                     ">= 1")
             overrides["cuckoo_capacity"] = int(p["capacity"])
-        if "probe" in p:
-            if p["probe"] not in ("broadcast", "sharded"):
-                raise ConfigError(
-                    f"cuckoo_filter {cuckoos[0].name}: probe must be "
-                    "'broadcast' or 'sharded', got "
-                    f"{p['probe']!r}")
-            if engine_kwargs.setdefault("seen_probe", p["probe"]) \
-                    != p["probe"]:
-                # same ambiguity class as seen_filter above: an explicit
-                # kwarg contradicting the resource must RAISE, never
-                # silently drop the resource's probe plan
-                raise ConfigError(
-                    f"cuckoo_filter {cuckoos[0].name}: probe="
-                    f"{p['probe']!r} conflicts with explicit seen_probe="
-                    f"{engine_kwargs['seen_probe']!r}")
     if blooms:
         p = blooms[0].parameters
         if blooms[0].type == "bloom_filter":

@@ -325,7 +325,7 @@ class ShardedCuckoo:
         self.shards = len(filters)
         # shards mutated since the last consumer clear() — drives the
         # incremental shard-file sync of the crawl engine's
-        # seen_probe="sharded" mode (only changed blobs rewrite)
+        # shard probe plan (only changed blobs rewrite)
         self.dirty: set[int] = set()
 
     @staticmethod
@@ -524,7 +524,7 @@ class ShardedCuckoo:
         return cls(filters)
 
 
-# -- file-backed shard probe (seen_probe="sharded") ---------------------------
+# -- file-backed shard probe (the seen-set's shard plan) ----------------------
 # Worker-side cache of shard filters keyed by file path. Shard files are
 # IMMUTABLE (the engine writes each sync to a NEW versioned name), so a
 # cached entry can never go stale; python workers are reused across tasks
@@ -533,7 +533,8 @@ class ShardedCuckoo:
 # when one admission partition spans more shards than the cap (every
 # probe then re-reads every blob from shared storage each round — the
 # exact cost the cache exists to avoid). Default 1 GiB per worker,
-# tunable via DELVER_SHARD_CACHE_BYTES.
+# tunable via DELVER_SHARD_CACHE_BYTES. A cuckoo seen-set larger than
+# this budget takes the shard plan (operators/seen.py CuckooSeen.probe).
 _SHARD_FILE_CACHE: dict[str, CuckooFilter] = {}  # insertion order = LRU
 _SHARD_FILE_CACHE_BYTES = 0
 

@@ -86,7 +86,6 @@ from .frontier import (
     STORE_SCHEMA,
     dequeue,
     make_robots_udf,
-    seen_round_pass,
 )
 from .seen import from_blob, new_seen
 
@@ -257,8 +256,14 @@ class CrawlEngine:
                  mode: str = "dfs",
                  param_overrides: dict | None = None,
                  seen_filter: str = "bloom",
-                 seen_probe: str = "broadcast",
                  host_budgets: dict | None = None):
+        # the one record of the options: a checkpoint writes it into the
+        # manifest and resume() constructs the engine from it
+        self.options = dict(
+            n_partitions=n_partitions, collect_documents=collect_documents,
+            hot_host_threshold=hot_host_threshold, mode=mode,
+            param_overrides=param_overrides, seen_filter=seen_filter,
+            host_budgets=host_budgets)
         self.spark = spark
         self.corpus_dir = corpus_dir
         self.workdir = workdir
@@ -319,7 +324,7 @@ class CrawlEngine:
 
         # the URL-seen set (operators/seen.py): the rolling bloom, or the
         # sharded cuckoo whose payoff is readmit(), per-URL recrawl
-        self.seen = new_seen(seen_filter, p, workdir, seen_probe)
+        self.seen = new_seen(seen_filter, p, workdir)
         self.extractor = make_extractor_arrow(n_partitions,
                                               emit_text=collect_documents)
         # dfs lineage count columns, built once: each Column is several
@@ -339,10 +344,10 @@ class CrawlEngine:
         # + background compaction.
         # True ⇒ frontier order provably collapses to enqueue_seq (all
         # priorities 0; round/seq share one counter) and the dequeue may
-        # take the distributed big-round path. seed()/resume() verify it
-        # against the actual seed priorities; callers that install a
-        # frontier directly (bench/profile prefills) inherit True and
-        # must use priority-0 rows (all in-repo prefills do).
+        # take the distributed big-round path. seed() verifies it against
+        # the seed priorities and the snapshot carries it; callers that
+        # install a frontier directly (bench/profile prefills) inherit
+        # True and must use priority-0 rows (all in-repo prefills do).
         self._seq_orderable = True
         self.frontier: DataFrame | None = None
         self._frontier_delta: DataFrame | None = None
@@ -361,8 +366,8 @@ class CrawlEngine:
         # the Spark-written parts' schema}, flushed at checkpoints
         self.buffers: dict[str, pa.Table] = {}
 
-    # the seen-set's kind and probe plan, and its filter (None for the
-    # family not in use)
+    # the seen-set's kind and its derived probe plan, and its filter (None
+    # for the family not in use)
     seen_filter = property(lambda self: self.seen.kind)
     seen_probe = property(lambda self: self.seen.probe)
     bloom = property(lambda self: self.seen.bloom)
@@ -816,8 +821,7 @@ class CrawlEngine:
                        .select(F.col("url_canon").alias("url"),
                                F.lit(None).cast("int").alias("partition_id"))
                        .unionByName(ins))
-            fut_seen = pool.submit(seen_round_pass, ins, self.seen.kind,
-                                   self.seen.pass_params,
+            fut_seen = pool.submit(self.seen.round_pass, ins,
                                    min(par, batch_count // 10000 + 1))
 
             if stash is not None:
@@ -991,31 +995,31 @@ class CrawlEngine:
             # for the seen-set mode, not "bloom_n", since cuckoo counts
             # land here too
             "seen_n": self.seen.n,
-            "frontier_dir": fdir, "url_store_dir": sdir, "mode": self.mode,
-            "seen_filter": self.seen_filter,
-            # performance-only, but restored so a resumed sharded-probe
-            # crawl keeps its probe plan without re-passing the kwarg
-            "seen_probe": self.seen_probe,
-            # SEMANTIC engine knob — resume == uninterrupted requires it
-            "host_budgets": self.host_budgets,
+            "frontier_dir": fdir, "url_store_dir": sdir,
+            "seq_orderable": self._seq_orderable,
+            "engine": self.options,
         })
+        self.store.gc(rnd)
 
     # ----------------------------------------------------------------- resume
     @classmethod
     def resume(cls, spark: SparkSession, corpus_dir: str, workdir: str,
-               n_partitions: int = 8, collect_documents: bool = True) -> "CrawlEngine":
+               n_partitions: int | None = None,
+               collect_documents: bool | None = None) -> "CrawlEngine":
+        """The engine of the last committed snapshot under ``workdir``,
+        constructed with the options it was checkpointed with.
+        ``n_partitions`` and ``collect_documents`` default to the
+        snapshot's; a value that contradicts it raises ValueError."""
         m = SnapshotStore(workdir).last_manifest()
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {workdir}")
-        # construct in the snapshot's mode: mode-built state (the dfs
-        # lineage columns) must match, or a resumed news crawl writes dfs
-        # columns into its documents. host_budgets is SEMANTIC — without
-        # it a resumed crawl would silently revert to the uniform B
-        probe = m.get("seen_probe", "broadcast")
-        eng = cls(spark, corpus_dir, workdir, n_partitions, collect_documents,
-                  mode=m.get("mode", "dfs"),
-                  seen_filter=m.get("seen_filter", "bloom"), seen_probe=probe,
-                  host_budgets=m.get("host_budgets"))
+        options = m.get("engine", {})
+        for name, value in (("n_partitions", n_partitions),
+                            ("collect_documents", collect_documents)):
+            if value is not None and options.setdefault(name, value) != value:
+                raise ValueError(f"resume({name}={value!r}) contradicts the "
+                                 f"snapshot's {name}={options[name]!r}")
+        eng = cls(spark, corpus_dir, workdir, **options)
         eng.round = m["round"]
         # a dead run's uncommitted parts would land beside this run's
         # re-run rounds, under another name if the layout differs
@@ -1023,20 +1027,16 @@ class CrawlEngine:
         eng.seq = m["seq"]
         eng.fetch_seq = m["fetch_seq"]
         eng.frontier_count = m["frontier_count"]
-        # the blob decides the filter; the probe plan sticks across
-        # resume (an unsynced shard manifest makes the first sharded
-        # round re-sync every shard file from the restored filter)
+        # the blob decides the filter (an unsynced shard manifest makes
+        # the first sharded round re-sync every shard file from it)
         eng.seen = from_blob(eng.store.load_bloom(m["round"]), eng.params,
-                             workdir, probe)
+                             workdir)
         eng.frontier = spark.read.schema(FRONTIER_SCHEMA) \
             .parquet(m["frontier_dir"]).localCheckpoint(eager=True)
         eng._base_count = eng.frontier_count
-        # re-verify the big-path order-collapse invariant on the restored
-        # frontier (one tiny agg over the checkpointed frame)
-        pr = eng.frontier.agg(F.min("priority").alias("lo"),
-                              F.max("priority").alias("hi")).collect()[0]
-        eng._seq_orderable = (pr["lo"] is None
-                              or (pr["lo"] == 0 and pr["hi"] == 0))
+        # absent from older snapshots: False is the TakeOrdered dequeue,
+        # correct for any frontier
+        eng._seq_orderable = m.get("seq_orderable", False)
         eng.url_store = spark.read.schema(_STORE_SCHEMA_W_HOST) \
             .parquet(m["url_store_dir"]).localCheckpoint(eager=True)
         return eng

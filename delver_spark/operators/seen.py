@@ -2,11 +2,12 @@
 owning its filter, probe plan and snapshot format (a third family is one
 more class). ``BloomSeen`` is the reference's rolling murmur3 bloom,
 ``CuckooSeen`` the deletion-capable sharded cuckoo. Both serve
-``CrawlEngine``'s four operations: ``open_probe`` (a handle whose
+``CrawlEngine``'s five operations: ``open_probe`` (a handle whose
 ``colocate`` puts every proposal of a url into one task and whose
 ``load()`` gives the tasks what ``frontier.admission_keep_mask``
-accepts), ``commit`` of a ``frontier.seen_round_pass`` delta, the
-``to_bytes``/``n``/``stats`` snapshot, and :func:`from_blob` restore."""
+accepts), ``round_pass`` (the round's ``frontier.seen_round_pass``),
+``commit`` of its delta, the ``to_bytes``/``n``/``stats`` snapshot, and
+:func:`from_blob` restore. ``probe`` reports the set's own plan."""
 
 from __future__ import annotations
 
@@ -20,9 +21,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..engine.bloom import BloomFilter
-from ..engine.cuckoo import ShardedCuckoo, ShardFileProbe
+from ..engine.cuckoo import (ShardedCuckoo, ShardFileProbe,
+                             _shard_cache_max_bytes)
 from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import canonicalize, host_of
+from .frontier import seen_round_pass
 
 
 def _colocate(df: DataFrame, n: int, key: str) -> DataFrame:
@@ -90,22 +93,19 @@ class BloomSeen:
     lost-insert quirk at a rotation."""
 
     kind = "bloom"
+    probe = "broadcast"
     cuckoo = None
 
-    def __init__(self, bloom: RollingBloomFilter, probe: str = "broadcast"):
-        if probe != "broadcast":
-            raise ValueError(f"seen_probe={probe!r} requires the cuckoo "
-                             "seen-set; the bloom is always broadcast")
+    def __init__(self, bloom: RollingBloomFilter):
         self.bloom = bloom
-        self.probe = probe
 
     @property
     def n(self) -> int:
         return self.bloom.n
 
-    @property
-    def pass_params(self) -> tuple:
-        return self.bloom.max_n, self.bloom.p
+    def round_pass(self, rows: DataFrame, partitions: int):
+        params = self.bloom.max_n, self.bloom.p
+        return seen_round_pass(rows, self.kind, params, partitions)
 
     def open_probe(self, sc) -> _BroadcastProbe:
         return _BroadcastProbe(sc, self.bloom.to_bytes(),
@@ -164,22 +164,20 @@ class CuckooSeen:
     """The deletion-capable sharded cuckoo, its semantics DEFINED in
     oracle/crawler.py: the round's insert set commits at round END in
     canonical per-shard order, so the filter is bit-identical to the
-    oracle's without any per-op replay. ``probe="sharded"`` swaps the
-    filter broadcast for per-shard files in the workdir: O(filter) total
-    reads instead of O(executors x filter), the plan that still works
-    when a 10^10-URL filter (~20 GB) exceeds any broadcast. It is
-    PERFORMANCE-ONLY (probe results, hence crawls, are identical)."""
+    oracle's without any per-op replay. The broadcast probe holds the
+    whole filter in every Python worker, the shard plan (per-shard files
+    in the workdir) at most the worker's shard-cache budget, so a filter
+    whose bucket bytes exceed that budget takes the shard plan. Probe
+    results, hence crawls, are identical under both."""
 
     kind = "cuckoo"
     bloom = None
+    # bucket bytes above which the shard plan runs; None = the shard-cache
+    # budget. Tests and bench_cuckoo_probe.py set 0 to force the shard plan
+    _sharded_floor: int | None = None
 
-    def __init__(self, cuckoo: ShardedCuckoo, workdir: str,
-                 probe: str = "broadcast"):
-        if probe not in ("broadcast", "sharded"):
-            raise ValueError("seen_probe must be 'broadcast' or 'sharded', "
-                             f"got {probe!r}")
+    def __init__(self, cuckoo: ShardedCuckoo, workdir: str):
         self.cuckoo = cuckoo
-        self.probe = probe
         self._shard_dir = os.path.join(workdir, "seen_shards")
         self._manifest: dict[int, str] | None = None  # None = unsynced
         self._sync_n = 0
@@ -197,8 +195,15 @@ class CuckooSeen:
         return self.cuckoo.n
 
     @property
-    def pass_params(self) -> tuple:
-        return self.cuckoo.shards, self.cuckoo.filters[0].m
+    def probe(self) -> str:
+        floor = _shard_cache_max_bytes() if self._sharded_floor is None \
+            else self._sharded_floor
+        nbytes = sum(f.buckets.nbytes for f in self.cuckoo.filters)
+        return "sharded" if nbytes > floor else "broadcast"
+
+    def round_pass(self, rows: DataFrame, partitions: int):
+        params = self.cuckoo.shards, self.cuckoo.filters[0].m
+        return seen_round_pass(rows, self.kind, params, partitions)
 
     def open_probe(self, sc):
         if self.probe == "sharded":
@@ -311,31 +316,29 @@ class CuckooSeen:
             rows.column("fp").to_numpy(zero_copy_only=False).view(np.uint64))
 
 
-def new_seen(seen_filter: str, params: dict, workdir: str,
-             probe: str = "broadcast"):
+def new_seen(seen_filter: str, params: dict, workdir: str):
     """An empty seen-set sized from the corpus ``params``."""
     if seen_filter == "bloom":
         return BloomSeen(RollingBloomFilter(params.get("bloom_count", 1),
                                             params["bloom_max_n"],
-                                            params["bloom_p"]), probe)
+                                            params["bloom_p"]))
     if seen_filter == "cuckoo":
         return CuckooSeen(ShardedCuckoo.empty(
             params.get("cuckoo_shards", 4),
             params.get("cuckoo_capacity") or params["bloom_max_n"]),
-            workdir, probe)
+            workdir)
     raise ValueError("seen_filter must be 'bloom' or 'cuckoo', got "
                      f"{seen_filter!r}")
 
 
-def from_blob(blob: bytes, params: dict, workdir: str,
-              probe: str = "broadcast"):
+def from_blob(blob: bytes, params: dict, workdir: str):
     """The seen-set of a snapshot blob by its magic: ``SCK1`` (cuckoo),
     ``RBF1`` (all rolling-bloom generations), or neither — a pre-rolling
     single ``BloomFilter``, generation 0 of a bloom sized from ``params``."""
     if blob.startswith(b"SCK1\n"):
-        return CuckooSeen(ShardedCuckoo.from_bytes(blob), workdir, probe)
+        return CuckooSeen(ShardedCuckoo.from_bytes(blob), workdir)
     if blob.startswith(b"RBF1\n"):
-        return BloomSeen(RollingBloomFilter.from_bytes(blob), probe)
+        return BloomSeen(RollingBloomFilter.from_bytes(blob))
     return BloomSeen(RollingBloomFilter(
         params.get("bloom_count", 1), params["bloom_max_n"],
-        params["bloom_p"], blooms=[BloomFilter.from_bytes(blob)]), probe)
+        params["bloom_p"], blooms=[BloomFilter.from_bytes(blob)]))

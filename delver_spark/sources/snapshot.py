@@ -91,13 +91,20 @@ class SnapshotStore:
         with open(os.path.join(self.root, "bloom", f"round_{rnd:06d}.bloom"), "rb") as f:
             return f.read()
 
-    def gc(self, keep_from_round: int):
-        """Drop state dirs older than the last committed round (append-only
-        part dirs are kept — they are the output tables)."""
-        for name in ("frontier", "url_store"):
+    def gc(self, committed_round: int):
+        """Drop the frontier, url_store and seen-set state of all but the
+        two newest rounds, never the committed one: each commit keeps its
+        own and the one before (append-only part dirs are kept — they are
+        the output tables)."""
+        for name in ("frontier", "url_store", "bloom"):
             base = os.path.join(self.root, name)
             if not os.path.isdir(base):
                 continue
             for d in sorted(os.listdir(base))[:-2]:
-                if d.startswith("round_") and int(d[6:]) < keep_from_round:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+                if d.startswith("round_") \
+                        and int(d[6:].removesuffix(".bloom")) < committed_round:
+                    p = os.path.join(base, d)
+                    if os.path.isdir(p):
+                        shutil.rmtree(p, ignore_errors=True)
+                    else:
+                        os.remove(p)

@@ -248,14 +248,10 @@ def test_cuckoo_resource_builds_cuckoo_engine(spark, unit_corpus,
         p = json.load(f)
     doc["resources"].append(
         {"name": "seen_urls", "type": "cuckoo_filter",
-         "parameters": {"shards": 4, "capacity": p["bloom_max_n"],
-                        "probe": "sharded"}})
+         "parameters": {"shards": 4, "capacity": p["bloom_max_n"]}})
     eng = build_engine(spark, doc)
     assert eng.seen_filter == "cuckoo"
     assert eng.cuckoo.shards == 4
-    # probe="sharded" wires the file-backed shard probe (performance-only
-    # knob — the oracle equality below covers it end to end)
-    assert eng.seen_probe == "sharded"
     eng.run()
     oracle = run_oracle(unit_corpus, seen_filter="cuckoo")
     df = eng.crawl_order_df()
@@ -296,10 +292,3 @@ def test_cuckoo_resource_validation():
     # never silently drop the resource
     with pytest.raises(ConfigError, match="conflicts"):
         build_engine(None, doc({"shards": 4}), seen_filter="bloom")
-    with pytest.raises(ConfigError, match="probe"):
-        build_engine(None, doc({"probe": "bogus"}))
-    # explicit kwarg contradicting the resource's probe plan = the same
-    # ambiguity class as seen_filter: raise, never silently drop
-    with pytest.raises(ConfigError, match="probe.*conflicts"):
-        build_engine(None, doc({"probe": "sharded"}),
-                     seen_probe="broadcast")

@@ -297,7 +297,7 @@ def test_readmit_before_first_run_seeds_first(spark, tmp_path_factory):
 
 
 def test_shard_file_probe_equals_in_memory(tmp_path):
-    """ShardFileProbe (the seen_probe="sharded" worker-side loader) must
+    """ShardFileProbe (the shard plan's worker-side loader) must
     answer exactly like the in-memory ShardedCuckoo it was written from —
     present keys all hit, probe results identical on a mixed batch."""
     from delver_spark.engine.cuckoo import (ShardedCuckoo, ShardFileProbe,
@@ -330,7 +330,7 @@ def test_shard_file_probe_equals_in_memory(tmp_path):
 
 def test_sharded_probe_crawl_equals_oracle(spark, unit_corpus,
                                            tmp_path_factory, cuckoo_oracle):
-    """seen_probe="sharded" is performance-only: the file-backed shard
+    """The shard plan is performance-only: the file-backed shard
     probe must reproduce the broadcast-probe crawl bit-for-bit (order,
     lineage, filter bytes), and the per-round sync must be INCREMENTAL —
     only dirty shards get new blob files after round 0."""
@@ -339,8 +339,8 @@ def test_sharded_probe_crawl_equals_oracle(spark, unit_corpus,
     from delver_spark.operators.crawl import CrawlEngine
 
     wd = str(tmp_path_factory.mktemp("crawl_ck_sharded"))
-    eng = CrawlEngine(spark, unit_corpus, wd, seen_filter="cuckoo",
-                      seen_probe="sharded")
+    eng = CrawlEngine(spark, unit_corpus, wd, seen_filter="cuckoo")
+    eng.seen._sharded_floor = 0
     eng.run()
 
     assert _order_tuples_engine(eng) == _order_tuples_oracle(cuckoo_oracle)
@@ -373,9 +373,9 @@ def test_sharded_probe_crawl_equals_oracle(spark, unit_corpus,
 
 
 def test_sharded_probe_survives_resume(spark, tmp_path_factory):
-    """seen_probe travels with the snapshot: a resumed sharded-probe
-    crawl keeps the file-backed probe plan (manifest restores it) and
-    still matches the oracle end to end."""
+    """A resumed shard-plan crawl starts from an unsynced shard
+    manifest, writes every shard file from the restored filter under
+    fresh names, and still matches the oracle end to end."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -384,10 +384,13 @@ def test_sharded_probe_survives_resume(spark, tmp_path_factory):
     oracle = run_oracle(corp, seen_filter="cuckoo")
 
     wd = str(tmp_path_factory.mktemp("crawl_ck_shres"))
-    e1 = CrawlEngine(spark, corp, wd, seen_filter="cuckoo",
-                     seen_probe="sharded")
+    e1 = CrawlEngine(spark, corp, wd, seen_filter="cuckoo")
+    e1.seen._sharded_floor = 0
     e1.run(max_rounds=2)  # commits, then "dies"
     e2 = CrawlEngine.resume(spark, corp, wd)
+    # a few-KB filter is far below the shard-cache budget
+    assert e2.seen_probe == "broadcast"
+    e2.seen._sharded_floor = 0
     assert e2.seen_probe == "sharded"
     assert e2.seen._manifest is None  # fresh engine: first round re-syncs
     e2.run()
@@ -407,8 +410,8 @@ def test_sharded_probe_news_mode_equals_oracle(spark, tmp_path_factory):
                     path_style="news")
     oracle = run_oracle(d, mode="news", seen_filter="cuckoo")
     wd = str(tmp_path_factory.mktemp("crawl_news_ck_sh"))
-    eng = CrawlEngine(spark, d, wd, mode="news", seen_filter="cuckoo",
-                      seen_probe="sharded")
+    eng = CrawlEngine(spark, d, wd, mode="news", seen_filter="cuckoo")
+    eng.seen._sharded_floor = 0
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
@@ -426,30 +429,23 @@ def test_sharded_probe_big_g_equals_oracle(spark, tmp_path_factory):
                     global_budget=20000, per_host_budget=50)
     oracle = run_oracle(d, seen_filter="cuckoo")
     wd = str(tmp_path_factory.mktemp("crawl_bigg_ck_sh"))
-    eng = CrawlEngine(spark, d, wd, seen_filter="cuckoo",
-                      seen_probe="sharded")
+    eng = CrawlEngine(spark, d, wd, seen_filter="cuckoo")
+    eng.seen._sharded_floor = 0
     eng._big_round_floor = 0
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
 
 
-@pytest.mark.parametrize("call", ["readmit", "readmit_df", "forget_df",
-                                  "sharded_bloom"])
+@pytest.mark.parametrize("call", ["readmit", "readmit_df", "forget_df"])
 def test_caller_errors_raise_value_error(spark, unit_corpus, tmp_path,
                                          call):
     """Caller errors are ValueErrors, not asserts (``python -O`` strips
     those): the recrawl/expiry calls need a seen-set that can delete, so
-    a bloom engine refuses them before seeding anything, and the sharded
-    probe needs the cuckoo."""
+    a bloom engine refuses them before seeding anything."""
     from delver_spark.operators.crawl import CrawlEngine
 
-    wd = str(tmp_path)
-    if call == "sharded_bloom":
-        with pytest.raises(ValueError):
-            CrawlEngine(spark, unit_corpus, wd, seen_probe="sharded")
-        return
-    eng = CrawlEngine(spark, unit_corpus, wd)
+    eng = CrawlEngine(spark, unit_corpus, str(tmp_path))
     urls = ["http://d000.test/p/000001"]
     arg = urls if call == "readmit" \
         else spark.createDataFrame([(u,) for u in urls], "url string")

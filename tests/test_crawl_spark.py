@@ -173,22 +173,56 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
 def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
                                      oracle_result):
     """Kill after round k, resume from snapshot → identical final state
-    (SURVEY §5.2-3; BASELINE.json 'resume exactly from checkpoints')."""
+    (SURVEY §5.2-3; BASELINE.json 'resume exactly from checkpoints').
+    Both runs checkpoint every round, and each commit keeps only its own
+    and the previous round's frontier, url_store and seen-set state."""
     from delver_spark.operators.crawl import CrawlEngine
 
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
     eng1 = CrawlEngine(spark, unit_corpus, wd)
-    eng1.run(max_rounds=3)  # commits snapshot at round 3, then "dies"
+    # commits snapshots at rounds 1-3, then "dies"
+    eng1.run(max_rounds=3, checkpoint_every=1)
 
     eng2 = CrawlEngine.resume(spark, unit_corpus, wd)
     assert eng2.round == 3
-    eng2.run()
+    eng2.run(checkpoint_every=1)
+    assert eng2.round >= 5
 
     want = _order_tuples_oracle(oracle_result)
     got = _order_tuples_engine(eng2)
     assert got == want
     assert np.array_equal(oracle_result.bloom.bit_positions(),
                           eng2.bloom.bit_positions())
+    for name in ("frontier", "url_store", "bloom"):
+        assert len(os.listdir(os.path.join(wd, name))) <= 2, name
+
+
+def test_resume_replays_engine_options(spark, unit_corpus,
+                                       tmp_path_factory):
+    """Resume constructs the engine from the snapshot's ``engine`` record:
+    an ``n_partitions=4`` crawl resumed without options equals the
+    uninterrupted ``n_partitions=4`` crawl in order, lineage and seen-set
+    bytes, and a resume option that contradicts the snapshot raises."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    ref = CrawlEngine(spark, unit_corpus,
+                      str(tmp_path_factory.mktemp("crawl_np4")),
+                      n_partitions=4)
+    ref.run(max_rounds=3)
+
+    wd = str(tmp_path_factory.mktemp("crawl_np4_resume"))
+    CrawlEngine(spark, unit_corpus, wd, n_partitions=4).run(max_rounds=1)
+    with pytest.raises(ValueError, match="n_partitions"):
+        CrawlEngine.resume(spark, unit_corpus, wd, n_partitions=8)
+    eng = CrawlEngine.resume(spark, unit_corpus, wd)
+    eng.run(max_rounds=3)
+
+    assert _order_tuples_engine(eng) == _order_tuples_engine(ref)
+    got = _lineage_tuples(eng.lineage_df().to_dict("records"))
+    assert got == _lineage_tuples(ref.lineage_df().to_dict("records"))
+    assert {r[0] for r in got} == {0, 1, 2}
+    assert {r[1] for r in got} <= set(range(4))
+    assert eng.bloom.to_bytes() == ref.bloom.to_bytes()
 
 
 def test_resume_from_single_generation_blob(spark, unit_corpus,

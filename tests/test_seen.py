@@ -1,8 +1,9 @@
 """The seen-set interface (operators/seen.py), once per filter family and
-probe plan: committing a round's ``frontier.seen_round_pass`` delta
-equals the driver-side adds on the same urls, the probe plan reports
-those urls inside a Spark task, and the snapshot blob restores
-byte-identically."""
+probe plan: committing a round's ``round_pass`` delta equals the
+driver-side adds on the same urls, the probe plan reports those urls
+inside a Spark task, and the snapshot blob restores byte-identically.
+A small cuckoo derives the broadcast plan; the sharded case forces the
+shard plan with the private floor."""
 
 import numpy as np
 import pytest
@@ -18,17 +19,19 @@ URLS = [f"http://h{i % 13}.test/p/{i}" for i in range(600)]
 def test_seen_set_contract(spark, tmp_path, kind, probe):
     from delver_spark.engine.cuckoo import ShardedCuckoo
     from delver_spark.engine.rolling_bloom import RollingBloomFilter
-    from delver_spark.operators.frontier import seen_round_pass
     from delver_spark.operators.seen import from_blob, new_seen
 
     wd = str(tmp_path)
-    seen = new_seen(kind, PARAMS, wd, probe)
-    assert (seen.kind, seen.probe) == (kind, probe)
+    seen = new_seen(kind, PARAMS, wd)
+    assert (seen.kind, seen.probe) == (kind, "broadcast")
+    if probe == "sharded":
+        seen._sharded_floor = 0
+    assert seen.probe == probe
 
     # round commit == driver-side adds
     rows = spark.createDataFrame([(u, None) for u in URLS],
                                  "url string, partition_id int")
-    _, delta = seen_round_pass(rows, seen.kind, seen.pass_params, 2)
+    _, delta = seen.round_pass(rows, 2)
     seen.commit(delta, len(URLS),
                 lambda: pytest.fail("no rotation boundary in this round"))
     if kind == "bloom":
@@ -65,8 +68,21 @@ def test_seen_set_contract(spark, tmp_path, kind, probe):
     assert got.num_rows == len(URLS)
     assert all(got.column("hit").to_pylist())
 
-    # snapshot → restore is byte-identical and keeps the probe plan
+    # snapshot → restore is byte-identical and derives the plan anew
     blob = seen.to_bytes()
-    back = from_blob(blob, PARAMS, wd, probe)
-    assert (back.kind, back.probe) == (kind, probe)
+    back = from_blob(blob, PARAMS, wd)
+    assert (back.kind, back.probe) == (kind, "broadcast")
     assert back.to_bytes() == blob
+
+
+def test_probe_plan_follows_shard_cache_budget(tmp_path, monkeypatch):
+    """The cuckoo takes the shard plan exactly when its bucket bytes
+    exceed the per-worker shard-cache budget."""
+    from delver_spark.operators.seen import new_seen
+
+    seen = new_seen("cuckoo", PARAMS, str(tmp_path))
+    nbytes = sum(f.buckets.nbytes for f in seen.cuckoo.filters)
+    monkeypatch.setenv("DELVER_SHARD_CACHE_BYTES", str(nbytes))
+    assert seen.probe == "broadcast"
+    monkeypatch.setenv("DELVER_SHARD_CACHE_BYTES", str(nbytes - 1))
+    assert seen.probe == "sharded"
