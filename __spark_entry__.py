@@ -461,39 +461,13 @@ def dedup_embedding_lsh(spark, sf):
                                       dim=64)
 
 
-def dedup_components(spark, sf):
-    """Duplicate-cluster assignment: connected components (iterative
-    min-label propagation) over the ngram-Jaccard near-dup pairs;
-    component = min doc id = the cluster keeper."""
+def dedup_components_ops(spark, sf):
+    """Duplicate-cluster assignment: connected components
+    (large-star/small-star) over the ngram-Jaccard near-dup pairs;
+    component = min doc id = the cluster keeper. Pinned against the
+    recursive-CTE reachability twin."""
     pairs = _dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
     return _dedup.connected_components(pairs)
-
-
-def dedup_components_star(spark, sf):
-    """Duplicate-cluster assignment via the large-star/small-star CC
-    variant (O(log² n) rounds — the long-chain swap-in) over the same
-    ngram-Jaccard pair list; identical output to dedup_components, so
-    it shares the recursive-CTE DuckDB twin."""
-    pairs = _dedup.ngram_jaccard_pairs(_t(spark, sf, "documents"))
-    return _dedup.connected_components_star(pairs)
-
-
-def dedup_components_ops(spark, sf):
-    """Tagged union of the two connected-components plans (same 50-slot
-    consolidation policy as x14+o6): 'minlabel' = iterative min-label
-    propagation, 'star' = large-star/small-star — the two MUST produce
-    the identical component map, so the union pins both against one
-    recursive-CTE twin in a single gate row."""
-    d = _t(spark, sf, "documents")
-    # materialize the pair set ONCE — both CC variants eagerly
-    # checkpoint their own edge frames, so a lazy shared frame would
-    # still compute the n-gram shuffle twice (r5 review finding)
-    pairs = _dedup.ngram_jaccard_pairs(d).localCheckpoint(eager=True)
-    minl = (_dedup.connected_components(pairs)
-            .withColumn("method", F.lit("minlabel")))
-    star = (_dedup.connected_components_star(pairs)
-            .withColumn("method", F.lit("star")))
-    return minl.unionByName(star).orderBy("method", "doc_id")
 
 
 def dedup_semdedup(spark, sf):
@@ -512,9 +486,9 @@ def dedup_resolve_canonical(spark, sf):
     ngram-Jaccard near-dup pairs → connected components → ONE canonical
     keeper per cluster (max n_chars, ties → min doc_id) → keep/drop
     decision for EVERY document, singletons keeping themselves
-    (operators/dedup.py:resolve_canonical). Shares the recursive-CTE
-    components body with dedup_components so the three stay in
-    lockstep."""
+    (operators/dedup.py:resolve_canonical). Its twin shares the
+    recursive-CTE components body with dedup_components_ops so the two
+    stay in lockstep."""
     d = _t(spark, sf, "documents")
     pairs = _dedup.ngram_jaccard_pairs(d)
     comps = _dedup.connected_components(pairs)
@@ -1165,8 +1139,8 @@ def dedup_embedding_cosine(spark, sf):
 
 
 # shared CTE body: DF-capped candidate generation + exact full-set verify
-# (the dedup_ngram_jaccard twin; dedup_components builds its edge list
-# from the same body so the two stay in lockstep)
+# (the dedup_ngram_jaccard twin; dedup_components_ops builds its edge
+# list from the same body so the two stay in lockstep)
 _NGRAM_CORE_SQL = """
     WITH toks AS (
       SELECT doc_id, list_filter(string_split(lower(text), ' '), x -> x <> '') AS ts
@@ -1214,26 +1188,9 @@ _PLANTED_EX_SQL = """
 
 
 # connected components over the ngram-Jaccard pair list (reachability as
-# a recursive CTE) — shared verbatim by dedup_components (min-label) and
-# dedup_components_star (large-star/small-star), which must agree.
-_COMPONENTS_SQL = f"""
-    WITH RECURSIVE p AS ({_NGRAM_CORE_SQL}),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM p
-      UNION SELECT doc_b, doc_a FROM p),
-    gnodes AS (SELECT DISTINCT a AS n FROM edges),
-    reach AS (
-      SELECT n, n AS m FROM gnodes
-      UNION
-      SELECT r.n, e.b AS m FROM reach r JOIN edges e ON e.a = r.m)
-    SELECT n AS doc_id, min(m) AS component
-    FROM reach GROUP BY n ORDER BY doc_id
-"""
-
-# dedup_components_ops twin: one component map (the CTE above), tagged
-# twice — the Spark side unions the min-label and star plans, which
-# must agree row-for-row, so the twin IS the same map under both tags.
-_COMPONENTS_OPS_SQL = f"""
+# a recursive CTE): the dedup_components_ops twin, and the component map
+# the dedup_resolve_canonical twin resolves
+_COMPONENTS_CTE = f"""
     WITH RECURSIVE p AS ({_NGRAM_CORE_SQL}),
     edges AS (
       SELECT doc_a AS a, doc_b AS b FROM p
@@ -1243,11 +1200,9 @@ _COMPONENTS_OPS_SQL = f"""
       SELECT n, n AS m FROM gnodes
       UNION
       SELECT r.n, e.b AS m FROM reach r JOIN edges e ON e.a = r.m),
-    comp AS (SELECT n AS doc_id, min(m) AS component
-             FROM reach GROUP BY n)
-    SELECT doc_id, component, method
-    FROM comp CROSS JOIN (SELECT unnest(['minlabel', 'star']) AS method)
-    ORDER BY method, doc_id
+    comp AS (SELECT n AS doc_id, min(m) AS component FROM reach GROUP BY n)"""
+_COMPONENTS_SQL = _COMPONENTS_CTE + """
+    SELECT doc_id, component FROM comp ORDER BY doc_id
 """
 
 # semdedup twin: the planted-embeddings explosion WITH the inherited
@@ -1394,17 +1349,7 @@ def _kmeans_cells_sql(k: int, n_iter: int) -> str:
 # dedup resolution twin: the components reachability body + winner
 # selection (max n_chars, ties → min doc_id) + keep flags for every
 # document (left join; singletons are their own component)
-_RESOLVE_SQL = f"""
-    WITH RECURSIVE p AS ({_NGRAM_CORE_SQL}),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM p
-      UNION SELECT doc_b, doc_a FROM p),
-    gnodes AS (SELECT DISTINCT a AS n FROM edges),
-    reach AS (
-      SELECT n, n AS m FROM gnodes
-      UNION
-      SELECT r.n, e.b AS m FROM reach r JOIN edges e ON e.a = r.m),
-    comp AS (SELECT n AS doc_id, min(m) AS component FROM reach GROUP BY n),
+_RESOLVE_SQL = _COMPONENTS_CTE + """,
     labeled AS (
       SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component,
              d.n_chars
@@ -1837,9 +1782,7 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY doc_a, doc_b
         """,
         "dedup_ngram_jaccard": _NGRAM_CORE_SQL + " ORDER BY doc_a, doc_b",
-        # min-label and star must produce the IDENTICAL component map —
-        # the tagged union pins BOTH plans against one CTE in one row
-        "dedup_components_ops": _COMPONENTS_OPS_SQL,
+        "dedup_components_ops": _COMPONENTS_SQL,
         "dedup_semdedup": _SEMDEDUP_SQL,
         "dedup_resolve_canonical": _RESOLVE_SQL,
         "dedup_phash_hamming": """

@@ -275,6 +275,9 @@ class CrawlEngine:
         # stash/refill, maxDepth=1, articles = depth>0 fetched pages)
         if mode not in ("dfs", "news"):
             raise ValueError(f"mode must be 'dfs' or 'news', got {mode!r}")
+        if seen_filter not in ("bloom", "cuckoo"):
+            raise ValueError("seen_filter must be 'bloom' or 'cuckoo', got "
+                             f"{seen_filter!r}")
         self.mode = mode
         # rows-per-host count above which the dequeue pre-cuts a host with
         # the exact salted two-phase ranking (frontier.dequeue docstring).
@@ -323,8 +326,9 @@ class CrawlEngine:
         self._robots_bc = None
 
         # the URL-seen set (operators/seen.py): the rolling bloom, or the
-        # sharded cuckoo whose payoff is readmit(), per-URL recrawl
-        self.seen = new_seen(seen_filter, p, workdir)
+        # sharded cuckoo whose payoff is readmit(), per-URL recrawl.
+        # Built on first use (see `seen`)
+        self._seen = None
         self.extractor = make_extractor_arrow(n_partitions,
                                               emit_text=collect_documents)
         # dfs lineage count columns, built once: each Column is several
@@ -365,6 +369,16 @@ class CrawlEngine:
         # the driver buffer: {artifact table: its uncommitted rows, in
         # the Spark-written parts' schema}, flushed at checkpoints
         self.buffers: dict[str, pa.Table] = {}
+
+    @property
+    def seen(self):
+        # created on first use, so resume() installs its snapshot's set
+        # without first allocating an empty one sized from the params
+        # (the 10^10 regime's cuckoo is ~20 GB)
+        if self._seen is None:
+            self._seen = new_seen(self.options["seen_filter"], self.params,
+                                  self.workdir)
+        return self._seen
 
     # the seen-set's kind and its derived probe plan, and its filter (None
     # for the family not in use)
@@ -1029,8 +1043,8 @@ class CrawlEngine:
         eng.frontier_count = m["frontier_count"]
         # the blob decides the filter (an unsynced shard manifest makes
         # the first sharded round re-sync every shard file from it)
-        eng.seen = from_blob(eng.store.load_bloom(m["round"]), eng.params,
-                             workdir)
+        eng._seen = from_blob(eng.store.load_bloom(m["round"]), eng.params,
+                              workdir)
         eng.frontier = spark.read.schema(FRONTIER_SCHEMA) \
             .parquet(m["frontier_dir"]).localCheckpoint(eager=True)
         eng._base_count = eng.frontier_count

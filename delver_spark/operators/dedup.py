@@ -22,8 +22,8 @@ Scale notes (100 TB corpus):
     buckets + exact int-cosine verify, parameters measured by
     bench_dedup.py) is the scale path; `embedding_cosine_pairs` remains
     the small-N all-pairs oracle twin;
-  - cluster assignment: `connected_components` (iterative min-label
-    propagation, O(diameter) shuffles); `phash_hamming_pairs` for
+  - cluster assignment: `connected_components` (large-star/small-star,
+    O(log² n) rounds); `phash_hamming_pairs` for
     perceptual-hash image dedup (banded join + bit_count verify).
 """
 
@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .similarity import _dot, quantize_milli
 
 
 def tokens(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -207,63 +209,25 @@ def connected_components(pairs: DataFrame, id_a: str = "doc_a",
                          id_b: str = "doc_b",
                          max_iter: int = 50) -> DataFrame:
     """Duplicate-cluster assignment: connected components over a pair
-    list via iterative min-label propagation; output (doc_id, component)
-    with component = min doc id of the cluster — the canonical "keeper"
-    choice of a dedup pipeline.
+    list, output (doc_id, component) with component = min doc id of the
+    cluster — the canonical "keeper" choice of a dedup pipeline.
 
-    Each iteration is one shuffle (neighbor-min groupBy) and converges in
-    O(graph diameter) rounds; near-dup clusters are dense (diameter 2-3
-    in practice), so 3-5 rounds close web-scale dup graphs. The loop is
-    driver-CONTROLLED but not driver-computed: convergence is checked
-    with a count of changed labels, state is localCheckpoint'd per round
-    to truncate lineage (Iceberg table-per-iteration at deployment
-    scale). For adversarially long chains, swap the body for the
-    two-phase large-star/small-star map (same outer loop shape)."""
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                       F.col(id_a).alias("dst")))
-             .distinct().localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels.withColumnRenamed("node", "dst"), "dst")
-                   .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        new_labels = (labels.join(
-            nbr_min.withColumnRenamed("src", "node"), "node", "left")
-            .select("node", F.least("label", "nbr_label").alias("label"))
-            .localCheckpoint(eager=True))
-        changed = (new_labels.withColumnRenamed("label", "new_label")
-                   .join(labels, "node")
-                   .filter(F.col("new_label") != F.col("label")).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    return (labels.select(F.col("node").alias("doc_id"),
-                          F.col("label").alias("component"))
-            .orderBy("doc_id"))
-
-
-def connected_components_star(pairs: DataFrame, id_a: str = "doc_a",
-                              id_b: str = "doc_b",
-                              max_iter: int = 50) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (the two-phase map of Kiveris et al., "Connected Components in
-    MapReduce and Beyond" — a public algorithm): same signature and
-    output as :func:`connected_components`, but converges in
-    O(log² n) rounds instead of O(diameter) — the swap-in for
-    adversarially long chains, where min-label propagation needs one
-    shuffle per hop (a 10⁵-node chain = 10⁵ shuffles; this closes it in
-    ~2·log rounds, see bench_components.py).
-
-    Each round is two grouped aggregations over the edge list:
+    Alternating large-star / small-star (the two-phase map of Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14):
+    O(log² n) rounds on any graph, where label propagation needs one
+    shuffle per hop of the longest shortest path. Each round is two
+    grouped aggregations over the edge list:
       large-star(u): m = min(Γ⁺(u)); emit (v, m) for v ∈ Γ(u), v > u
       small-star(u): over big→small edges, m = min(Γ(u) ∪ {u});
                      emit (v, m) for v ∈ Γ(u) \\ {m}, plus (u, m)
     Edges stay canonically oriented big→small; convergence = the edge
-    set is a fixed point (every node points at its component min).
-    Equality with min-label propagation is property-tested on random
-    graphs, chains, cycles and stars (tests/test_dedup_scale.py)."""
+    set is a fixed point (every node points at its component min). The
+    loop is driver-CONTROLLED but not driver-computed: state is
+    localCheckpoint'd per round to truncate lineage (Iceberg
+    table-per-iteration at deployment scale). Not converging within
+    ``max_iter`` rounds raises RuntimeError. Equality with a union-find
+    reference is property-tested on random graphs, chains, cycles and
+    stars (tests/test_dedup_scale.py)."""
     sym0 = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
             .unionByName(pairs.select(F.col(id_b).alias("u"),
                                       F.col(id_a).alias("v"))))
@@ -303,7 +267,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "doc_a",
         # a non-star edge set would emit multiple rows per node — fail
         # loudly instead of returning a silently-corrupt component map
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             "rounds; raise max_iter (O(log² n) rounds suffice)")
     comp = edges.select(F.col("u").alias("doc_id"),
                         F.col("v").alias("component"))
@@ -318,12 +282,12 @@ def resolve_canonical(docs: DataFrame, components: DataFrame,
                       quality_col: str = "n_chars") -> DataFrame:
     """Dedup resolution — the last step of a training-data dedup pass:
     given the duplicate-cluster assignment ``(doc_id, component)`` from
-    ``connected_components``/``connected_components_star``, pick ONE
-    canonical keeper per cluster (max ``quality_col``, ties → min id —
-    deterministic) and emit the keep/drop decision for every input
-    document as ``(doc_id, component, canonical_id, keep)``. Documents
-    that never appeared in a duplicate pair are singleton clusters and
-    keep themselves.
+    :func:`connected_components` (which raises rather than return a
+    partial map), pick ONE canonical keeper per cluster (max
+    ``quality_col``, ties → min id — deterministic) and emit the
+    keep/drop decision for every input document as ``(doc_id,
+    component, canonical_id, keep)``. Documents that never appeared in
+    a duplicate pair are singleton clusters and keep themselves.
 
     Scale shape: one join docs⋈components on the id (components is the
     clustered subset — usually tiny vs the corpus — so AQE broadcasts
@@ -406,22 +370,13 @@ def embedding_cosine_pairs(emb: DataFrame, id_col: str = "vec_id",
     """Embedding near-dup pairs: exact int-quantized dot products; cosine
     from one sqrt over exact integer norms (identical IEEE ops in any
     engine). At scale restrict pairing to an IVF cell first."""
-    q = emb.select(
-        id_col,
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x.cast("double") * 1000).cast("long")).alias("q"))
+    q = emb.select(id_col, quantize_milli(vec_col).alias("q"))
     a = q.select(F.col(id_col).alias("doc_a"), F.col("q").alias("qa"))
     b = q.select(F.col(id_col).alias("doc_b"), F.col("q").alias("qb"))
-    dot = F.aggregate(F.zip_with("qa", "qb", lambda x, y: x * y),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)
-    norm = F.aggregate(F.transform("qa", lambda x: x * x),
-                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-    normb = F.aggregate(F.transform("qb", lambda x: x * x),
-                        F.lit(0).cast("long"), lambda acc, x: acc + x)
     pairs = (a.join(b, F.col("doc_a") < F.col("doc_b"))
-             .withColumn("dot", dot)
-             .withColumn("na", norm)
-             .withColumn("nb", normb)
+             .withColumn("dot", _dot("qa", "qb"))
+             .withColumn("na", _dot("qa", "qa"))
+             .withColumn("nb", _dot("qb", "qb"))
              .withColumn("cos_milli",
                          F.round(F.col("dot") * 1000.0
                                  / F.sqrt((F.col("na") * F.col("nb")).cast("double")))
@@ -498,10 +453,7 @@ def embedding_lsh_pairs(emb: DataFrame, id_col: str = "vec_id",
     salting (_self_join_pairs)."""
     from pyspark.sql.functions import pandas_udf
 
-    q = emb.select(
-        id_col,
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x.cast("double") * 1000).cast("long")).alias("q"))
+    q = emb.select(id_col, quantize_milli(vec_col).alias("q"))
     # quantization stays a Spark expression (F.round is HALF_UP in both
     # Spark and DuckDB; numpy would banker's-round) — only the
     # threshold-free sign computation runs in numpy. Weights are derived
@@ -725,9 +677,7 @@ def semdedup(emb: DataFrame, id_col: str = "vec_id",
     ``dedup_semdedup``)."""
     q0 = emb.select(
         F.col(id_col).alias("_vid"), F.col(cell_col).alias("_cell"),
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x.cast("double") * 1000)
-                    .cast("long")).alias("q"))
+        quantize_milli(vec_col).alias("q"))
     # NULL-cell (unclustered) vectors share no cluster (the cell groupBy
     # would lump them into one) — route them around the kernel as
     # explicit singletons instead

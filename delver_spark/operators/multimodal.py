@@ -352,9 +352,10 @@ def caption_alignment_filter(df: DataFrame, threshold_milli: int = 280,
     ``array<float>`` embedding columns — pure column expressions, JVM
     whole-stage codegen, no UDF.
 
-    Exactness: embeddings are int-milli quantized (similarity.quantize
-    idiom) and the threshold test is cross-multiplied so the gate is
-    integer-exact and engine-portable rather than float-ULP-dependent:
+    Exactness: embeddings are int-milli quantized
+    (similarity.quantize_milli) and the threshold test is
+    cross-multiplied so the gate is integer-exact and engine-portable
+    rather than float-ULP-dependent:
     cos >= t  ⟺  dot > 0  AND  (dot*1000)² >= t_milli² * |a|²*|b|²
     (for t > 0; squared through DECIMAL(38,0) — (dot*1000)² reaches
     ~10^18 for L2-normalized inputs, a digit from int64 overflow).
@@ -363,14 +364,11 @@ def caption_alignment_filter(df: DataFrame, threshold_milli: int = 280,
     encoders (not in this env); the operator is the gate itself."""
     from pyspark.sql import functions as F
 
-    q = [F.transform(F.col(c), lambda x:
-                     F.round(x.cast("double") * 1000).cast("long"))
-         for c in (img_col, txt_col)]
-    dot = F.aggregate(F.zip_with(q[0], q[1], lambda a, b: a * b),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)
-    n2 = [F.aggregate(F.zip_with(qq, qq, lambda a, b: a * b),
-                      F.lit(0).cast("long"), lambda acc, x: acc + x)
-          for qq in q]
+    from .similarity import _dot, quantize_milli
+
+    q = [quantize_milli(c) for c in (img_col, txt_col)]
+    dot = _dot(q[0], q[1])
+    n2 = [_dot(qq, qq) for qq in q]
     dec = "decimal(38,0)"
     lhs = (dot * 1000).cast(dec) * (dot * 1000).cast(dec)
     rhs = (F.lit(threshold_milli * threshold_milli).cast(dec)

@@ -218,9 +218,17 @@ class CuckooSeen:
         full shard->path manifest. Immutable names keep worker-side caches
         valid and make stage retries re-read exactly the blobs the round
         started with; tmp+rename makes each file appear atomically. On a
-        cluster this is the shared store, written O(changed shards)."""
+        cluster this is the shared store, written O(changed shards).
+
+        The first sync also deletes every file already in the dir, none
+        of which carries this instance's run tag: a resumed engine's
+        predecessor's shards and any crashed write's ``.tmp``. That
+        assumes one engine owns a workdir, and is safe because an engine
+        opens no probe before its first sync."""
         os.makedirs(self._shard_dir, exist_ok=True)
         if self._manifest is None:
+            for name in os.listdir(self._shard_dir):
+                os.unlink(os.path.join(self._shard_dir, name))
             to_write = range(self.cuckoo.shards)
             manifest: dict[int, str] = {}
         else:

@@ -18,16 +18,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def quantize_milli(vec):
+    """An ``array<float>`` column (name or Column) as ``array<long>`` of
+    round(x · 1000). Spark's round is HALF_UP, as DuckDB's is, so every
+    twin that writes ``CAST(round(x * 1000) AS BIGINT)`` gets the same
+    integers."""
+    return F.transform(vec, lambda x: F.round(x.cast("double") * 1000)
+                       .cast("long"))
+
+
 def quantize(emb: DataFrame, id_col: str = "vec_id",
              vec_col: str = "embedding", extra_cols: tuple = ("label",)) -> DataFrame:
-    return emb.select(
-        id_col, *extra_cols,
-        F.transform(F.col(vec_col),
-                    lambda x: F.round(x.cast("double") * 1000).cast("long")).alias("q"))
+    return emb.select(id_col, *extra_cols, quantize_milli(vec_col).alias("q"))
 
 
-def _dot(a: str, b: str):
-    return F.aggregate(F.zip_with(F.col(a), F.col(b), lambda x, y: x * y),
+def _dot(a, b):
+    """Exact integer dot of two ``array<long>`` columns (names or
+    Columns)."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                        F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
@@ -60,7 +68,9 @@ def build_ivf_index(emb: DataFrame, id_col: str = "vec_id",
     centroids keep the ranking engine-exact: the DuckDB twin reproduces
     bit-identical longs, while float-averaged centroids would tie-break
     on summation order."""
-    rows = build_ivf_index_df(emb, id_col, vec_col, cell_col).collect()
+    q = quantize(emb, id_col, vec_col, extra_cols=(cell_col,))
+    rows = (q.select(cell_col, F.posexplode("q").alias("i", "v"))
+            .groupBy(cell_col, "i").agg(F.sum("v").alias("s")).collect())
     by_cell: dict = {}
     for r in rows:
         by_cell.setdefault(r[cell_col], {})[r["i"]] = int(r["s"])
@@ -87,52 +97,9 @@ def merge_ivf_index(base: dict, delta: dict) -> dict:
     return out
 
 
-def build_ivf_index_df(emb: DataFrame, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       cell_col: str = "label") -> DataFrame:
-    """The distributed form of :func:`build_ivf_index`: the same
-    per-cell summed quantized vectors as a ``(cell, i, s)`` DataFrame,
-    NOT collected. For deployments where the cell count itself is large
-    (say 100k cells × 1024 dims = 10⁸ longs — too big for a driver
-    map), persist/bucket this table at ingest and rank probe cells with
-    :func:`rank_probe_cells_df` — a per-probe aggregation over n_cells×dim
-    stats rows, never over the embedding table."""
-    q = quantize(emb, id_col, vec_col, extra_cols=(cell_col,))
-    return (q.select(cell_col, F.posexplode("q").alias("i", "v"))
-            .groupBy(cell_col, "i").agg(F.sum("v").alias("s")))
-
-
-def rank_probe_cells_df(index_df: DataFrame, qvec: list, qcell,
-                        n_probe: int, cell_col: str = "label") -> list:
-    """Rank probe cells from the DataFrame-backed index: score each cell
-    by the exact integer dot product of its summed vector with the query
-    (the query vector enters as a literal array, so the only shuffle is
-    the n_cells-row groupBy over the stats table). Same ties-on-cell-id
-    ordering as the in-memory ranking; equality is pinned by
-    tests/test_plans.py::test_ivf_nprobe_index_df_equal."""
-    qq = F.array(*[F.lit(int(v)) for v in qvec])
-    scored = (index_df.filter(F.col(cell_col) != qcell)
-              .withColumn("_c", F.col("s") * F.element_at(qq, F.col("i") + 1))
-              .groupBy(cell_col).agg(F.sum("_c").alias("score"))
-              .orderBy(F.desc("score"), cell_col)
-              .limit(max(n_probe - 1, 0)))
-    return [qcell] + [r[cell_col] for r in scored.collect()]
-
-
-def rank_probe_cells(index: dict, qvec: list, qcell, n_probe: int) -> list:
-    """The query's own cell plus the next ``n_probe - 1`` cells by exact
-    integer dot product with the cell's summed vector (ties on cell id).
-    Pure driver arithmetic over the precomputed index — no Spark job."""
-    score = {c: sum(s * v for s, v in zip(sums, qvec))
-             for c, sums in index.items() if c != qcell}
-    ranked = sorted(score.items(), key=lambda kv: (-kv[1], kv[0]))
-    return [qcell] + [c for c, _ in ranked][: n_probe - 1]
-
-
 def cosine_topk_ivf(emb: DataFrame, query_id: int, k: int = 5,
                     id_col: str = "vec_id", cell_col: str = "label",
-                    n_probe: int = 1, index: dict | None = None,
-                    index_df: DataFrame | None = None) -> DataFrame:
+                    n_probe: int = 1, index: dict | None = None) -> DataFrame:
     """IVF probe that actually prunes: the query row's cell (and, for
     ``n_probe > 1``, the next-nearest cells by centroid dot product) is
     resolved DRIVER-SIDE (one 1-row lookup job), then applied as a literal
@@ -143,10 +110,13 @@ def cosine_topk_ivf(emb: DataFrame, query_id: int, k: int = 5,
     is partitioned/bucketed by cell id and this literal filter becomes
     partition pruning: only ``n_probe`` cells are read at all.
 
-    Multi-probe cell ranking reads the precomputed ``index``
-    (build_ivf_index) — O(n_cells × dim) driver arithmetic, zero Spark
-    jobs (pinned by tests/test_plans.py::test_ivf_nprobe_no_table_scan).
-    If no index is supplied one is built on the fly (a single full-table
+    Multi-probe: the query's own cell plus the next ``n_probe - 1``
+    cells by exact integer dot product with each cell's summed vector
+    in the precomputed ``index`` (build_ivf_index), ties to the lower
+    cell id — :func:`_rank_probe_cells_matrix` over the index minus the
+    query's cell, O(n_cells × dim) driver arithmetic, zero Spark jobs
+    (pinned by tests/test_plans.py::test_ivf_nprobe_no_table_scan). If
+    no index is supplied one is built on the fly (a single full-table
     aggregation — the legacy per-query cost; at scale, build once at
     ingest and reuse)."""
     q = quantize(emb, id_col, extra_cols=(cell_col,))
@@ -155,33 +125,35 @@ def cosine_topk_ivf(emb: DataFrame, query_id: int, k: int = 5,
     qvec, qcell = list(qrow["q"]), qrow[cell_col]
     cells = [qcell]
     if n_probe > 1:
-        if index_df is not None:
-            cells = rank_probe_cells_df(index_df, qvec, qcell, n_probe,
-                                        cell_col)
-        else:
-            if index is None:
-                index = build_ivf_index(emb, id_col, "embedding", cell_col)
-            cells = rank_probe_cells(index, qvec, qcell, n_probe)
+        import numpy as np
+
+        if index is None:
+            index = build_ivf_index(emb, id_col, "embedding", cell_col)
+        # a NULL label is no cell: isin never matches it, so it takes
+        # no probe slot
+        others = sorted(c for c in index if c != qcell and c is not None)
+        if others:
+            S = np.array([index[c] for c in others], dtype=np.int64)
+            Q = np.array([qvec], dtype=np.int64)
+            cells += [others[i] for i in
+                      _rank_probe_cells_matrix(Q, S, n_probe - 1)[0]]
     qq = F.array(*[F.lit(int(v)) for v in qvec])
     return (q.filter(F.col(cell_col).isin(cells) & (F.col(id_col) != query_id))
-            .select(id_col, cell_col,
-                    F.aggregate(F.zip_with(F.col("q"), qq, lambda x, y: x * y),
-                                F.lit(0).cast("long"),
-                                lambda acc, x: acc + x).alias("dot_milli2"))
+            .select(id_col, cell_col, _dot("q", qq).alias("dot_milli2"))
             .orderBy(F.desc("dot_milli2"), id_col).limit(k))
 
 
 def _rank_probe_cells_matrix(Q, S, n_probe: int):
     """Probe-cell ranking for a query MATRIX, driver-side: chunked
     ``Q @ S.T`` (exact via :func:`_exact_matmul`) + stable argsort, so
-    ties go to the lower index in the sorted cell-id axis — the
-    identical rule :func:`rank_probe_cells` applies per query. Returns
-    an (nq × n_probe) int64 array of cell INDICES. Chunked so the score
-    buffer stays ~128 MB regardless of nq × n_cells (an earlier
-    distributed variant re-evaluated the lazy queries plan a second
-    time — a silent mismap on non-deterministic plans like ``limit`` —
-    to compute a matmul whose operands already sat on the driver;
-    r5-s5 review finding)."""
+    ties go to the lower index in the sorted cell-id axis; both
+    :func:`cosine_topk_ivf` and :func:`cosine_topk_ivf_batch` rank with
+    it. Returns an (nq × n_probe) int64 array of cell INDICES. Chunked
+    so the score buffer stays ~128 MB regardless of nq × n_cells (an
+    earlier distributed variant re-evaluated the lazy queries plan a
+    second time — a silent mismap on non-deterministic plans like
+    ``limit`` — to compute a matmul whose operands already sat on the
+    driver)."""
     import numpy as np
 
     S_T = np.ascontiguousarray(S.T)
@@ -200,8 +172,12 @@ def _exact_matmul(A, B):
     of the product is an exactly-representable float64 integer, so the
     BLAS result (any summation order) equals the int64 product — at
     ~100× the speed of numpy's non-BLAS int64 matmul. Otherwise falls
-    back to the exact int64 path. Bound computed in python bigints (an
-    int64 expression could itself wrap)."""
+    back to the exact int64 path, and past int64 it raises ValueError
+    (there is no bigint path). A milli-quantized unit vector has
+    |x| ≤ 1000, so a query-by-cell-sum score stays inside int64 until a
+    single cell holds ~9·10¹²/dim vectors — orders of magnitude beyond
+    any IVF cell. Bound computed in python bigints (an int64 expression
+    could itself wrap)."""
     import numpy as np
 
     bound = (int(A.shape[-1])
@@ -237,7 +213,7 @@ def cosine_topk_ivf_batch(emb: DataFrame, queries: DataFrame, k: int = 5,
 
     Semantics per query: probe cells = top ``n_probe`` cells by exact
     integer dot of the query with each cell's summed vector
-    (ties → lower cell id — the :func:`rank_probe_cells` ranking,
+    (ties → lower cell id — the :func:`cosine_topk_ivf` ranking,
     WITHOUT the own-cell prepend: queries here are external, so "the
     query's own cell" is simply whichever ranks first); result = top
     ``k`` corpus vectors in those cells by exact integer dot

@@ -376,6 +376,8 @@ def test_sharded_probe_survives_resume(spark, tmp_path_factory):
     """A resumed shard-plan crawl starts from an unsynced shard
     manifest, writes every shard file from the restored filter under
     fresh names, and still matches the oracle end to end."""
+    import os
+
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators.crawl import CrawlEngine
 
@@ -395,6 +397,8 @@ def test_sharded_probe_survives_resume(spark, tmp_path_factory):
     assert e2.seen._manifest is None  # fresh engine: first round re-syncs
     e2.run()
     assert e2.seen._sync_n >= 1  # the sharded path actually ran
+    # the first sync deleted the dead run's shard files
+    assert all(e2.seen._run_tag in n for n in os.listdir(e2.seen._shard_dir))
     assert _order_tuples_engine(e2) == _order_tuples_oracle(oracle)
     assert e2.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
 

@@ -171,11 +171,13 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
 
 
 def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
-                                     oracle_result):
+                                     oracle_result, monkeypatch):
     """Kill after round k, resume from snapshot → identical final state
     (SURVEY §5.2-3; BASELINE.json 'resume exactly from checkpoints').
     Both runs checkpoint every round, and each commit keeps only its own
-    and the previous round's frontier, url_store and seen-set state."""
+    and the previous round's frontier, url_store and seen-set state.
+    Resume builds no empty seen-set: the snapshot's is the only one."""
+    from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
 
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
@@ -183,9 +185,18 @@ def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
     # commits snapshots at rounds 1-3, then "dies"
     eng1.run(max_rounds=3, checkpoint_every=1)
 
+    new_seen_calls = []
+    real_new_seen = crawl.new_seen
+
+    def counting_new_seen(*args):
+        new_seen_calls.append(args)
+        return real_new_seen(*args)
+
+    monkeypatch.setattr(crawl, "new_seen", counting_new_seen)
     eng2 = CrawlEngine.resume(spark, unit_corpus, wd)
     assert eng2.round == 3
     eng2.run(checkpoint_every=1)
+    assert new_seen_calls == []
     assert eng2.round >= 5
 
     want = _order_tuples_oracle(oracle_result)

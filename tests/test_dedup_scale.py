@@ -86,7 +86,7 @@ def test_minhash_verified_filters_false_positives(spark):
 
 def test_connected_components_known_clusters(spark):
     # two clusters {1,2,3,7} (via chain 1-2, 2-3, 3-7) and {10,11}; the
-    # chain pins multi-iteration label propagation, not just direct edges
+    # chain pins multi-round convergence, not just direct edges
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 7), (10, 11)], "doc_a long, doc_b long")
     got = D.connected_components(pairs).toPandas()
@@ -181,6 +181,22 @@ def _cc_dict(df):
     return dict(zip(p["doc_id"], p["component"]))
 
 
+def _union_find_components(edges):
+    """The equality reference: {node: min node of its component}."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 @pytest.mark.parametrize("edges", [
     [(1, 2), (2, 3), (3, 7), (10, 11)],                  # chain + pair
     [(i, i + 1) for i in range(30)],                     # long chain
@@ -191,14 +207,13 @@ def _cc_dict(df):
 ])
 def test_star_cc_equals_min_label_fixed(spark, edges):
     pairs = _cc_pairs(spark, edges)
-    assert _cc_dict(D.connected_components_star(pairs)) == \
-        _cc_dict(D.connected_components(pairs))
+    assert _cc_dict(D.connected_components(pairs)) == \
+        _union_find_components(edges)
 
 
 def test_star_cc_equals_min_label_random(spark):
-    """Property: on random graphs the two CC implementations agree
-    (large-star/small-star is the documented swap-in for adversarial
-    chains — same signature, same output)."""
+    """Property: on random graphs connected_components equals the
+    union-find reference."""
     rng = np.random.default_rng(3)
     for trial in range(6):
         n = int(rng.integers(10, 50))
@@ -206,25 +221,32 @@ def test_star_cc_equals_min_label_random(spark):
         edges = [(int(a), int(b)) for a, b in
                  rng.integers(0, n, size=(m, 2))]
         pairs = _cc_pairs(spark, edges)
-        assert _cc_dict(D.connected_components_star(pairs)) == \
-            _cc_dict(D.connected_components(pairs, max_iter=200)), \
-            f"trial {trial}: {edges}"
+        assert _cc_dict(D.connected_components(pairs)) == \
+            _union_find_components(edges), f"trial {trial}: {edges}"
 
 
 def test_star_cc_raises_on_nonconvergence(spark):
     """Exhausting max_iter before the star fixed point must raise, not
-    return a multi-row-per-node component map (review fix)."""
+    return a multi-row-per-node component map."""
     pairs = _cc_pairs(spark, [(i, i + 1) for i in range(200)])
     with pytest.raises(RuntimeError, match="did not converge"):
-        D.connected_components_star(pairs, max_iter=1).collect()
+        D.connected_components(pairs, max_iter=1).collect()
 
 
 def test_star_cc_converges_fast_on_chain(spark):
-    """The point of the swap-in: a 200-node chain closes in O(log²)
-    star rounds (min-label would need ~200 shuffle rounds)."""
+    """A 200-node chain closes in O(log²) star rounds (label propagation
+    would need ~200 shuffle rounds)."""
     pairs = _cc_pairs(spark, [(i, i + 1) for i in range(200)])
-    got = _cc_dict(D.connected_components_star(pairs, max_iter=12))
+    got = _cc_dict(D.connected_components(pairs, max_iter=12))
     assert got == {i: 0 for i in range(201)}
+
+
+def test_cc_long_chain_one_component_at_default_max_iter(spark):
+    """A chain longer than the default max_iter in hops is still one
+    component: no partial labelling comes back at the default."""
+    edges = [(i, i + 1) for i in range(64)]
+    got = _cc_dict(D.connected_components(_cc_pairs(spark, edges)))
+    assert got == {i: 0 for i in range(65)}
 
 
 def _semdedup_reference(rows, threshold_milli=950):

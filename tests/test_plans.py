@@ -288,22 +288,6 @@ def test_ivf_partitioned_table_prunes_partitions(spark, tmp_path):
         sorted(tuple(r) for r in base.collect())
 
 
-def test_ivf_nprobe_index_df_equal(spark):
-    """The DataFrame-backed index (for cell counts too large for a
-    driver map) must rank cells identically to the in-memory index, and
-    its per-probe work is an aggregation over the stats table only."""
-    from delver_spark.operators.similarity import (build_ivf_index,
-                                                   build_ivf_index_df,
-                                                   cosine_topk_ivf)
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    idx = build_ivf_index(emb)
-    stats = build_ivf_index_df(emb).localCheckpoint(eager=True)
-    a = cosine_topk_ivf(emb, 0, 8, n_probe=3, index=idx).collect()
-    b = cosine_topk_ivf(emb, 0, 8, n_probe=3, index_df=stats).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_ivf_index_incremental_merge(spark):
     """The "maintained incrementally at ingest" claim, pinned: building
     the index on two disjoint halves of the table and merging the
@@ -370,3 +354,40 @@ def test_ivf_nprobe_no_table_scan(spark):
     legacy = cosine_topk_ivf(emb, 0, 8, n_probe=3)
     assert [tuple(r) for r in df.collect()] == \
         [tuple(r) for r in legacy.collect()]
+
+
+def test_ivf_nprobe_null_label_takes_no_slot(spark):
+    """Rows without a cell label are in no cell: they take no probe
+    slot, so probing every labelled cell equals brute force over the
+    labelled rows."""
+    from delver_spark.operators.similarity import (cosine_topk_bruteforce,
+                                                   cosine_topk_ivf)
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").withColumn(
+        "label", F.when(F.col("vec_id") % 7 != 3, F.col("label")))
+    n_cells = emb.filter(F.col("label").isNotNull()) \
+        .select("label").distinct().count()
+    got = cosine_topk_ivf(emb, 0, 8, n_probe=n_cells).collect()
+    want = cosine_topk_bruteforce(emb.filter(F.col("label").isNotNull()),
+                                  0, 8).collect()
+    assert [(r["vec_id"], r["dot_milli2"]) for r in got] == \
+        [(r["vec_id"], r["dot_milli2"]) for r in want]
+
+
+def test_rank_probe_cells_matrix_equals_loop():
+    """The numpy probe ranking both IVF query paths use equals the
+    per-query loop it replaced: exact integer dot with each cell's
+    summed vector, descending, ties to the lower cell position."""
+    import numpy as np
+
+    from delver_spark.operators.similarity import _rank_probe_cells_matrix
+
+    rng = np.random.default_rng(7)
+    # few distinct values, so scores tie often
+    Q = rng.integers(-2, 3, size=(40, 6)).astype(np.int64)
+    S = rng.integers(-2, 3, size=(9, 6)).astype(np.int64)
+    got = _rank_probe_cells_matrix(Q, S, 4)
+    for q, row in zip(Q.tolist(), got.tolist()):
+        scores = [sum(a * b for a, b in zip(q, s)) for s in S.tolist()]
+        want = sorted(range(len(scores)), key=lambda c: (-scores[c], c))
+        assert row == want[:4]

@@ -86,3 +86,32 @@ def test_probe_plan_follows_shard_cache_budget(tmp_path, monkeypatch):
     assert seen.probe == "broadcast"
     monkeypatch.setenv("DELVER_SHARD_CACHE_BYTES", str(nbytes - 1))
     assert seen.probe == "sharded"
+
+
+def test_first_shard_sync_deletes_dead_runs_files(tmp_path):
+    """A second cuckoo seen-set on one workdir (a resumed engine) deletes
+    the first one's shard files and a crashed write's ``.tmp`` at its
+    first sync; keep-last-2 then leaves only its own two generations."""
+    import os
+
+    from delver_spark.operators.seen import new_seen
+
+    def sync_three_times(seen):
+        for i in range(3):
+            # 100 new urls dirty all 4 shards, so every sync supersedes
+            seen.cuckoo.add_many_canonical(
+                np.array(URLS[i * 100:(i + 1) * 100], dtype=object))
+            seen._sync_shard_files()
+
+    first = new_seen("cuckoo", PARAMS, str(tmp_path))
+    sync_three_times(first)
+    shard_dir = first._shard_dir
+    open(os.path.join(shard_dir, "shard00000_v000003_deadbeef.bin.tmp"),
+         "wb").close()
+    second = new_seen("cuckoo", PARAMS, str(tmp_path))
+    sync_three_times(second)
+
+    names = os.listdir(shard_dir)
+    assert all(second._run_tag in n for n in names), names
+    assert {n.split("_")[1] for n in names} == {"v000001", "v000002"}
+    assert len(names) == 2 * second.cuckoo.shards
