@@ -7,10 +7,11 @@ Each round (SURVEY §3.1 "Spark translation"):
   pass with zero-copy binary views (X1-X11) → admission split (F6):
   same-domain candidates seen-set-gated (F7/J3) vs cross-domain stash
   (append-only url_store) → assign enqueue_seq → union frontier delta →
-  ONE seen-set pass (the seen-set delta + admitted counts, one collect)
-  committed on the driver → snapshot commit (T8). The seen-set — the
-  rolling bloom or the sharded cuckoo, and how it is probed — lives
-  behind one interface in operators/seen.py.
+  the round's seen-set delta committed on the driver → snapshot commit
+  (T8). The seen-set — the rolling bloom or the sharded cuckoo, and how
+  a big round probes it — lives behind one interface in
+  operators/seen.py; the admission gates are defined once, as per-page
+  link arrays (``_page_links``) both plans read.
 
 Each round picks its physical plan from its BOUND, the most rows it can
 dequeue: ``min(G, frontier_count)``, where ``frontier_count`` is the
@@ -19,24 +20,29 @@ bound only picks the plan; the dequeue limit stays G, so the crawl is the
 same under either plan. At or below ``BIG_ROUND_FLOOR`` a round takes
 the small-round plan: the dequeue is one ``toArrow`` that comes back as
 a local relation, the fetch pushes an IN-list into the payload scan and
-broadcast-joins the pruned payload, and the order/quarantine/document
-artifacts come back in one ``toArrow`` into the driver buffer, flushed
-at checkpoints. Above it, the big-round plan: the dequeue ranks
-distributed (``frontier.dequeue`` ``seq_hint``), the extract tasks read
-their payload row-group splits directly (``sources/payload_scan.py``,
-payload bytes never shuffle) and Spark writes the artifacts every
-round. Each artifact is defined once (``_artifacts``), so both layouts
-write one schema.
+broadcast-joins the pruned payload, and the extract comes back in ONE
+more ``toArrow`` — the artifacts, the gated candidates and the pages'
+urls — after which the round finishes on the driver with the same
+Arrow/numpy kernels the big plan runs in its tasks (admission mask,
+winner rank, seen-set delta), and its admitted and stash rows re-enter
+Spark as local relations. Above it, the big-round plan: the dequeue
+ranks distributed (``frontier.dequeue`` ``seq_hint``), the extract tasks
+read their payload row-group splits directly
+(``sources/payload_scan.py``, payload bytes never shuffle), the
+admission is a distributed Arrow pass through the seen-set's probe plan
+and Spark writes the artifacts every round. Each artifact is defined
+once (``_artifacts``), so both layouts write one schema.
 
-A steady small round launches at most 10 Spark jobs: the dequeue
-collect (3: the tombstone broadcast, the host window's shuffle, the
-ordered take), the payload broadcasts and the extract checkpoint (2-3),
-the order job, which also carries each page's lineage candidate counts
-as higher-order columns (1), the admission checkpoint (2: origin
-broadcast, admit pass) and the seen-set pass (1). On a 4-core box each
-small job costs 0.1-0.64 s of process-tree CPU, so the count, not the
-data, sets a small round's cost — which is why a G=20000 crawl whose
-frontier holds a few hundred urls takes the small plan.
+A steady small round launches at most 5 Spark jobs: the dequeue collect
+(2: the host window's shuffle, the ordered take — the tombstones ride it
+as one parsed ``NOT IN`` literal while the driver knows all of them and
+they number at most ``BIG_ROUND_FLOOR``), the payload broadcast(s) (1-2)
+and the extract collect (1). No checkpoint, order, admission or
+seen-set job and no filter broadcast is left. On a 4-core box each small
+job costs 0.1-0.64 s of process-tree CPU, much of it the JVM compiling
+each distinct code path the round runs, so the count, not the data,
+sets a small round's cost — which is why a G=20000 crawl whose frontier
+holds a few hundred urls takes the small plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -54,8 +60,9 @@ repartitioning on hash(host)"), by stage:
     for order-insensitive host-keyed stages.
 
 State is distributed (frontier / url_store DataFrames, localCheckpoint'd
-per round to truncate lineage); only round-bounded artifacts (the <= G
-fetched rows, counters) touch the driver. The url_store is APPEND-ONLY —
+to truncate lineage); only round-bounded artifacts (the <= G fetched
+rows with their candidate links, a small round's admitted and stash
+rows, counters) touch the driver. The url_store is APPEND-ONLY —
 last-wins dedupe happens once per refill on the single published domain,
 not per round, so no full-store shuffle ever runs (SURVEY J4/O5 + Badger
 Set overwrite semantics, resource/maps/persistent.go:23-41).
@@ -153,48 +160,65 @@ def _in_list(col: str, values: list[str]):
     return F.expr(f"`{col}` IN ({','.join(quoted)})")
 
 
-def _explode_outlinks(extracted: DataFrame,
-                      with_page_host: bool = False) -> DataFrame:
-    """Candidate rows: one per (page, outlink), with the outlink's
-    registrable domain derived JVM-side post-explode. ``with_page_host``
-    additionally carries the proposing page's exact host (the news-mode
-    gate compares HOSTS, not registrable domains — news.go:229-231)."""
-    extra = [F.col("host").alias("page_host")] if with_page_host else []
-    return (extracted.filter("success")
-            .select(F.col("pos").alias("page_pos"),
-                    F.col("url_canon").alias("page_url"),
-                    F.col("depth").alias("page_depth"),
-                    F.col("domain").alias("page_domain"),
-                    F.col("partition_id"), *extra,
-                    F.explode("outlinks").alias("l"))
-            .select("page_pos", "page_url", "page_depth", "page_domain",
-                    "partition_id",
-                    *(["page_host"] if with_page_host else []),
-                    "l.link_pos", "l.url", "l.host",
-                    _outlink_domain(F.col("l.host")).alias("domain")))
+def _page_links(news: bool, max_depth: int) -> dict:
+    """Each fetched page's admission candidates, gated per page as JVM
+    higher-order filters over ``outlinks`` — the one definition of the
+    admission gates, which both round plans read. ``same_links``: the
+    links the seen-set admission considers (dfs: same registrable domain
+    under the depth gate; news: news.go urlAllowed's column gates, with
+    robots applied by the caller). ``stash_links`` (dfs): the
+    cross-domain links, each with its ``domain``. Failed pages and NULL
+    outlinks give NULL; a NULL domain on either side fails both gates."""
+    ok = F.col("success")
+    if news:
+        # news.go urlAllowed: exact host + extension/path blacklists +
+        # ':'+'=' (functions/news.py); maxDepth=1
+        from ..functions.news import NEWS_MAX_DEPTH, news_url_allowed
+
+        def allowed(link):
+            path = F.coalesce(F.parse_url(link["url"], F.lit("PATH")),
+                              F.lit(""))
+            return news_url_allowed(path, link["host"], F.col("host"))
+
+        return {"same_links": F.when(
+            ok & (F.col("depth") < NEWS_MAX_DEPTH),
+            F.filter("outlinks", allowed))}
+    linked = F.transform("outlinks", lambda link: link.withField(
+        "domain", _outlink_domain(link["host"])))
+    return {
+        "same_links": F.when(
+            ok & (F.col("depth") < max_depth),
+            F.filter("outlinks", lambda link:
+                     _outlink_domain(link["host"]) == F.col("domain"))),
+        "stash_links": F.when(ok, F.filter(
+            linked, lambda link: link["domain"] != F.col("domain")))}
 
 
-def _page_cand_counts(max_depth: int) -> list:
-    """Each fetched page's ``same_n`` (same-domain candidates under the
-    depth gate — the dfs admission set) and ``stash_n`` (cross-domain
-    candidates) as JVM higher-order columns over ``outlinks``: the gates
-    of the exploded candidate split in ``_finish_round``, applied per page
-    with no explode, shuffle or extra job. Failed pages count 0, as the
-    explode drops them (``size(NULL)`` would read -1); a NULL domain on
-    either side fails both gates, as it does after the explode."""
-    def n_links(gate, pred):
-        return F.when(gate & F.col("success") & F.col("outlinks").isNotNull(),
-                      F.size(F.filter("outlinks", pred))).otherwise(0)
+def _page_cand_counts(links: dict) -> list:
+    """Each fetched page's ``same_n`` and ``stash_n``, the sizes of its
+    dfs :func:`_page_links` ``links`` (0 for NULL), for the big round's
+    lineage counters: no explode, shuffle or extra job."""
+    return [F.when(c.isNull(), 0).otherwise(F.size(c)).alias(
+                name.replace("_links", "_n")) for name, c in links.items()]
 
-    def link_domain(link):
-        return _outlink_domain(link["host"])
 
-    return [n_links(F.col("depth") < max_depth,
-                    lambda link: link_domain(link) == F.col("domain"))
-            .alias("same_n"),
-            n_links(F.lit(True),
-                    lambda link: link_domain(link) != F.col("domain"))
-            .alias("stash_n")]
+def _seen_ops(news: bool, pages: list, admitted: list) -> list:
+    """The round's seen-set inserts as the oracle's write transactions.
+    ``pages``: (pos, url) of the fetched, unquarantined pages;
+    ``admitted``: (page_pos, enqueue_seq, url). dfs: per page in pos
+    order, its url, then its admitted urls (dfs_basic.go:48,121-123);
+    news: one admitted url at a time in enqueue order (SetBytes in
+    urlAllowed)."""
+    admitted = sorted(admitted)  # page_pos-major is enqueue order
+    if news:
+        return [[url] for _, _, url in admitted]
+    by_page: dict[int, list[str]] = {}
+    for pos, _, url in admitted:
+        by_page.setdefault(pos, []).append(url)
+    ops = []
+    for pos, url in sorted(pages):
+        ops += [[url], by_page[pos]] if pos in by_page else [[url]]
+    return ops
 
 
 def _admit_pass(probe, news: bool, out_cols: list[str]):
@@ -331,10 +355,12 @@ class CrawlEngine:
         self._seen = None
         self.extractor = make_extractor_arrow(n_partitions,
                                               emit_text=collect_documents)
-        # dfs lineage count columns, built once: each Column is several
-        # JVM calls (~0.4 ms of CPU each), ~0.1 s a round if rebuilt
-        self._cand_cols = [] if mode == "news" \
-            else _page_cand_counts(self.max_depth)
+        # the admission gates and the big round's dfs lineage count
+        # columns, built once: each Column is several JVM calls (~0.4 ms
+        # of CPU each), ~0.1 s a round if rebuilt
+        links = _page_links(mode == "news", self.max_depth)
+        self._link_cols = [c.alias(name) for name, c in links.items()]
+        self._cand_cols = [] if mode == "news" else _page_cand_counts(links)
 
         # mutable state. The frontier is held MOR-style (Iceberg
         # merge-on-read semantics over localCheckpoints): `frontier` is
@@ -356,6 +382,10 @@ class CrawlEngine:
         self.frontier: DataFrame | None = None
         self._frontier_delta: DataFrame | None = None
         self._tombstones: DataFrame | None = None
+        # every tombstone seq, while the driver knows them all (small
+        # rounds' dequeues) and they number at most BIG_ROUND_FLOOR; else
+        # None until the next compaction
+        self._tomb_seqs: list[int] | None = []
         self._tomb_count = 0
         self._base_count = 0
         self._compact_floor = 4096  # tests lower this to force compaction
@@ -413,13 +443,19 @@ class CrawlEngine:
         v = self.frontier
         if self._frontier_delta is not None:
             v = v.unionByName(self._frontier_delta)
-        if self._tombstones is not None:
+        if self._tomb_seqs:
+            # one parsed literal: broadcasting even a local relation
+            # costs a job
+            v = v.filter(F.expr("enqueue_seq NOT IN ("
+                                + ",".join(map(str, self._tomb_seqs)) + ")"))
+        elif self._tombstones is not None:
             v = v.join(F.broadcast(self._tombstones), "enqueue_seq",
                        "left_anti")
         return v
 
     def _append_delta(self, rows: DataFrame, n: int):
-        """rows must already be materialized (checkpointed)."""
+        """rows must already be materialized (checkpointed or a local
+        relation)."""
         self._frontier_delta = rows if self._frontier_delta is None \
             else self._frontier_delta.unionByName(rows)
         self.frontier_count += n
@@ -436,6 +472,7 @@ class CrawlEngine:
             self.frontier = self._frontier_view().localCheckpoint(eager=True)
             self._frontier_delta = None
             self._tombstones = None
+            self._tomb_seqs = []
             self._tomb_count = 0
             self._base_count = self.frontier_count
 
@@ -524,6 +561,11 @@ class CrawlEngine:
         seqs = batch.select("enqueue_seq")
         self._tombstones = seqs if self._tombstones is None \
             else self._tombstones.unionByName(seqs)
+        if big or self._tomb_seqs is None \
+                or len(self._tomb_seqs) + batch_count > BIG_ROUND_FLOOR:
+            self._tomb_seqs = None
+        else:
+            self._tomb_seqs += batch_tbl.column("enqueue_seq").to_pylist()
         self._tomb_count += batch_count
         self.frontier_count -= batch_count
 
@@ -533,27 +575,29 @@ class CrawlEngine:
         # splits directly. Payload rows are ~10 KB of binary each: the
         # 256-row Arrow batch rule (measured rationale in
         # session.scoped_arrow_batch — the one shared copy of this logic),
-        # scoped to the fetch/extract job only.
+        # scoped to the fetch/extract job only. A small round's extract
+        # comes back to the driver in that same job and the round
+        # finishes there; a big round runs the post-extract job DAG
         from ..session import scoped_arrow_batch
         with scoped_arrow_batch(self.spark, 256):
             extracted = self._fetch_extract(batch, batch_count, batch_urls)
-
-        # post-extract work is a DAG of independent Spark jobs — run them
-        # concurrently so driver-side job-launch latency (the dominant
-        # serial per-round cost) overlaps; one admission code path for
-        # every round size. The artifacts go to the driver buffer on a
-        # small round, to per-round Spark writes on a big one
-        self._finish_round(extracted, batch_count, rnd, buffered=not big)
+            if not big:
+                pages, tables = self._collect_pages(extracted, rnd)
+        if big:
+            self._finish_round(extracted, batch_count, rnd)
+        else:
+            self._finish_on_driver(pages, tables, batch_count, rnd)
         self.round += 1
         return True
 
     # ------------------------------------------------------------ fetch path
     def _fetch_extract(self, batch: DataFrame, batch_count: int,
                        batch_urls: list | None) -> DataFrame:
-        """Fetch + extract for one round; returns the checkpointed
-        ``extracted`` frame. ``batch_urls`` non-None selects the small-round
-        IN-pushdown plan (the list is the already-collected batch keys);
-        None, the big-round plan."""
+        """Fetch + extract for one round; returns the ``extracted``
+        frame. ``batch_urls`` non-None selects the small-round
+        IN-pushdown plan (the list is the already-collected batch keys),
+        whose frame stays lazy for the round's one collect; None, the
+        big-round plan, whose frame is checkpointed."""
         payload_cols = ["bytes", "fmt", "caption", "phash", "pix_md5"]
         if batch_urls is not None:
             payload = self.pages.filter(_in_list("url_canon", batch_urls))
@@ -566,8 +610,7 @@ class CrawlEngine:
                                  batch.url == payload.url_canon, "left") \
                 .select(batch.pos, batch.url.alias("url_canon"), batch.depth,
                         batch.host, *payload_cols)
-            extracted = fetched.mapInArrow(self.extractor, EXTRACT_SCHEMA) \
-                .localCheckpoint(eager=True)
+            extracted = fetched.mapInArrow(self.extractor, EXTRACT_SCHEMA)
         elif self.golden is not None:
             # big batch WITH golden pixels (tests only): broadcast the key
             # set, broadcast-hash-join it INTO the payload scan (narrow on
@@ -627,49 +670,190 @@ class CrawlEngine:
         return extracted
 
     # ---------------------------------------------------- round finish
-    def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int,
-                   buffered: bool):
-        """The round's artifacts (:func:`_artifacts`) + {partition_id:
-        lineage counters} + the quarantined count, in one job. dfs lineage
-        candidate counts ride it as per-page columns. ``buffered``: one
-        ``toArrow`` carries every artifact as a struct column plus its
-        predicate as a mask column, and the split tables return for the
-        driver buffer. (A NULL struct for a filtered-out row would fail
-        the ``toArrow``: ``round`` is a non-NULL child.) Else Spark
-        writes them into the part dirs of the snapshot round that will
-        commit them (``rnd + 1``: an uncommitted round's parts stay
-        invisible, see ``SnapshotStore``) and no tables return."""
+    def _collect_pages(self, extracted: DataFrame, rnd: int):
+        """A small round's ONE collect: the extract frame's
+        round-bounded columns in one ``toArrow``, straight off the
+        ``mapInArrow`` (no checkpoint). Each artifact (:func:`_artifacts`)
+        rides as a struct column plus its predicate as a mask, and the
+        admission candidates as the gated :func:`_page_links` arrays.
+        (A NULL struct for a filtered-out row would fail the
+        ``toArrow``: ``round`` is a non-NULL child.) Returns the page
+        table, sorted by ``pos``, and the split artifact tables."""
+        arts = _artifacts(rnd, self.fetch_seq, self.mode == "news",
+                          self.collect_documents)
+        t = extracted.select(
+            "pos", "partition_id", "url_canon", "depth",
+            F.expr("quarantined IS NOT NULL AS quarantined"),
+            *self._link_cols,
+            *[F.expr(f"struct({', '.join(cols)}) AS {name}")
+              for name, (_, cols) in arts.items()],
+            *[F.expr(f"{pred} AS in_{name}")
+              for name, (pred, _) in arts.items()]
+        ).toArrow().sort_by("pos")
+        tables = {name: pa.Table.from_struct_array(t.column(name))
+                  .filter(t.column("in_" + name)) for name in arts}
+        return t, tables
+
+    def _finish_on_driver(self, pages: pa.Table, tables: dict,
+                          batch_count: int, rnd: int):
+        """The small round after its one collect, on the driver with the
+        Arrow/numpy kernels the big round runs in its tasks: the
+        candidates flatten out of the gated link arrays (plus, dfs, one
+        marker row per unquarantined fetched page), hash once, and
+        ``frontier.admission_keep_mask[_news]`` probes the live seen-set
+        filter; winners rank by ``(page_pos, link_pos)``; the seen-set
+        delta comes from the same hashes (``frontier.seen_delta``). The
+        admitted and stash rows join the frontier and the url_store as
+        local relations, which launch no job."""
+        import pyarrow.compute as pc
+
+        from ..engine.murmur import hash128_batch_buf, string_buf_views
+        from .frontier import admission_keep_mask, admission_keep_mask_news
+
+        news = self.mode == "news"
+        pos = pages.column("pos").to_numpy()
+        depth = pages.column("depth").to_numpy()
+        urls = pages.column("url_canon").combine_chunks()
+        parts, part_of = np.unique(pages.column("partition_id").to_numpy(),
+                                   return_inverse=True)
+
+        def per_part(rows):  # rows (page indices) counted per partition
+            return np.bincount(part_of[rows], minlength=len(parts))
+
+        def flat(name):  # (page index, link struct) of each array entry
+            lists = pages.column(name).combine_chunks()
+            return (pc.list_parent_indices(lists).to_numpy(),
+                    pc.list_flatten(lists))
+
+        page, links = flat("same_links")
+        if news:
+            # news.go:239-247: robots gate at admission, the rules the
+            # big round's robots UDF broadcasts
+            from ..engine.robots import allowed_batch
+            from ..engine.urlnorm import path_of
+            self._refresh_robots(rnd)
+            ok = allowed_batch(
+                self.robots_rules, pc.struct_field(links, "host").to_pylist(),
+                [path_of(u) for u in
+                 pc.struct_field(links, "url").to_pylist()])
+            page, links = page[ok], links.filter(pa.array(ok))
+        cand_urls = pc.struct_field(links, "url")
+        link_pos = pc.struct_field(links, "link_pos").to_numpy(
+            zero_copy_only=False)
+        n_c = len(cand_urls)
+        # dfs markers: the unquarantined fetched pages (news.go never
+        # marks the fetched page: none there)
+        marked = np.zeros(len(pos), dtype=bool) if news \
+            else ~pages.column("quarantined").to_numpy(zero_copy_only=False)
+        marked_urls = urls.filter(pa.array(marked))
+        all_urls = pa.concat_arrays([cand_urls, marked_urls])
+        if len(all_urls):
+            h1, h2 = hash128_batch_buf(*string_buf_views(all_urls))
+        else:
+            h1 = h2 = np.zeros(0, dtype=np.uint64)
+        page_pos = pos[page]
+        if n_c == 0:
+            keep = np.zeros(0, dtype=bool)
+        elif news:
+            keep = admission_keep_mask_news(h1, h2, page_pos, link_pos,
+                                            self.seen.filter)
+        else:  # the markers follow the candidates, page_pos -1
+            n_m = len(h1) - n_c
+            keep = admission_keep_mask(
+                h1, h2, np.r_[page_pos, np.full(n_m, -1)],
+                np.r_[np.full(n_c, -1), pos[marked]],
+                np.arange(len(h1)) >= n_c, self.seen.filter)[:n_c]
+        win = np.flatnonzero(keep)
+        win = win[np.lexsort((link_pos[win], page_pos[win]))]
+        n_adm = len(win)
+        admitted = pa.table({
+            "priority": np.zeros(n_adm, dtype=np.int32),
+            "enqueue_round": np.full(n_adm, rnd, dtype=np.int32),
+            "enqueue_seq": self.seq + np.arange(n_adm, dtype=np.int64),
+            "url": cand_urls.take(win),
+            "host": pc.struct_field(links, "host").take(win),
+            "depth": (depth[page[win]] + 1).astype(np.int32),
+            "origin": urls.take(page[win])})
+        inserted = np.r_[win, np.arange(n_c, len(h1))]
+        delta = self.seen.delta(h1[inserted], h2[inserted])
+        seq0 = self.seq
+        self.seq += n_adm
+        if n_adm:
+            self._append_delta(
+                self.spark.createDataFrame(admitted, FRONTIER_SCHEMA), n_adm)
+        self._maybe_compact()
+
+        if not news:
+            spage, stash = flat("stash_links")
+            if len(stash):
+                key = (rnd << 40) + (pos[spage] << 20) + pc.struct_field(
+                    stash, "link_pos").to_numpy(zero_copy_only=False)
+                self._union_store(self.spark.createDataFrame(pa.table({
+                    "domain": pc.struct_field(stash, "domain"),
+                    "url": pc.struct_field(stash, "url"),
+                    "origin": urls.take(spage),
+                    "stash_key": key.astype(np.int64),
+                    "host": pc.struct_field(stash, "host")}),
+                    _STORE_SCHEMA_W_HOST))
+        n_enq = per_part(page[win])
+        n_stash = np.zeros_like(n_enq) if news else per_part(spage)
+        agg = {int(p): {"fetched": int(f), "deduped": int(d - e),
+                        "enqueued": int(e), "stashed": int(s)}
+               for p, f, d, e, s in zip(parts, np.bincount(part_of),
+                                        per_part(page), n_enq, n_stash)}
+
+        def replay_ops():
+            return _seen_ops(
+                news, list(zip(pos[marked].tolist(), marked_urls.to_pylist())),
+                list(zip(page_pos[win].tolist(), range(seq0, seq0 + n_adm),
+                         cand_urls.take(win).to_pylist())))
+
+        self._close_round(rnd, batch_count, agg, tables, delta,
+                          n_adm + len(marked_urls), replay_ops)
+
+    def _union_store(self, rows: DataFrame):
+        """Append stash rows to the url_store, bounding its union chain."""
+        self.url_store = self.url_store.unionByName(rows)
+        self._store_unions += 1
+        if self._store_unions >= 4:
+            self.url_store = self.url_store.localCheckpoint(eager=True)
+            self._store_unions = 0
+
+    def _close_round(self, rnd: int, batch_count: int, agg: dict,
+                     tables: dict, delta, total_added: int, replay_ops):
+        """Both plans' driver-side end of a round: the lineage table
+        from the per-partition counters, the buffered artifacts, and the
+        seen-set commit of the round's delta."""
+        self.fetch_seq += batch_count
+        tables["lineage"] = pa.Table.from_pylist(
+            [{"round": rnd, "partition": part, **agg[part]}
+             for part in sorted(agg)])
+        for name, t in tables.items():
+            if t.num_rows:
+                self.buffers[name] = pa.concat_tables(
+                    [self.buffers[name], t]) if name in self.buffers else t
+        self.seen.commit(delta, total_added, replay_ops)
+
+    def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int):
+        """A big round's artifacts (:func:`_artifacts`), {partition_id:
+        lineage counters} and the quarantined count, in one job; dfs
+        lineage candidate counts ride it as per-page columns. Spark
+        writes the artifacts into the part dirs of the snapshot round
+        that will commit them (``rnd + 1``: an uncommitted round's parts
+        stay invisible, see ``SnapshotStore``)."""
         news = self.mode == "news"
         cand_names = [] if news else ["same_n", "stash_n"]
         arts = _artifacts(rnd, fetch_seq0, news, self.collect_documents)
-
-        def counters(n, same_n=0, stash_n=0):
-            return {"fetched": int(n), "deduped": int(same_n),
-                    "enqueued": 0, "stashed": int(stash_n)}
-
-        if buffered:
-            t = extracted.select(
-                "pos", "partition_id", *self._cand_cols,
-                *[F.expr(f"struct({', '.join(cols)}) AS {name}")
-                  for name, (_, cols) in arts.items()],
-                *[F.expr(f"{pred} AS in_{name}")
-                  for name, (pred, _) in arts.items()]
-            ).toArrow().sort_by("pos")
-            tables = {name: pa.Table.from_struct_array(t.column(name))
-                      .filter(t.column("in_" + name)) for name in arts}
-            sums = t.group_by("partition_id").aggregate(
-                [([], "count_all")] + [(c, "sum") for c in cand_names])
-            agg = {int(r["partition_id"]): counters(
-                       r["count_all"], *(r[c + "_sum"] for c in cand_names))
-                   for r in sums.to_pylist()}
-            return agg, tables, tables["quarantine"].num_rows
         parts = extracted.select("*", *self._cand_cols) \
             .groupBy("partition_id").agg(
                 F.count("*").alias("count"),
                 F.expr(f"count_if({arts['quarantine'][0]})").alias("q_n"),
                 *[F.sum(c).alias(c) for c in cand_names]).collect()
-        agg = {int(r["partition_id"]): counters(
-                   r["count"], *(r[c] for c in cand_names))
+        agg = {int(r["partition_id"]): {
+                   "fetched": int(r["count"]),
+                   "deduped": int(r["same_n"]) if cand_names else 0,
+                   "enqueued": 0,
+                   "stashed": int(r["stash_n"]) if cand_names else 0}
                for r in parts}
         q_total = sum(int(r["q_n"]) for r in parts)
         for name, (pred, cols) in arts.items():
@@ -677,7 +861,7 @@ class CrawlEngine:
                 extracted.filter(pred).selectExpr(*cols).write \
                     .mode("overwrite").parquet(
                         self.store.state_dir(name, rnd + 1))
-        return agg, {}, q_total
+        return agg, q_total
 
     def _admit(self, extracted: DataFrame, same: DataFrame, probe,
                batch_count: int, rnd: int, n_parts: int,
@@ -730,84 +914,55 @@ class CrawlEngine:
                     F.col("partition_id"), F.col("page_pos"))
                 .localCheckpoint(eager=True))
 
-    def _seen_ops(self, extracted: DataFrame, admitted: DataFrame):
-        """The round's seen-set inserts as the oracle's write transactions
-        (G-bounded collects). dfs: per fetched page in pos order, its url,
-        then its admitted urls (dfs_basic.go:48,121-123); news: one
-        admitted url at a time in enqueue order (SetBytes in urlAllowed)."""
-        if self.mode == "news":
-            return [[r["url"]] for r in sorted(
-                admitted.select("enqueue_seq", "url").collect())]
-        by_page: dict[int, list[str]] = {}
-        for r in sorted(admitted.select("page_pos", "enqueue_seq",
-                                        "url").collect()):
-            by_page.setdefault(r["page_pos"], []).append(r["url"])
-        ops = []
-        for pos, url in sorted(extracted.filter(F.col("quarantined").isNull())
-                               .select("pos", "url_canon").collect()):
-            ops += [[url], by_page[pos]] if pos in by_page else [[url]]
-        return ops
-
     def _finish_round(self, extracted: DataFrame, batch_count: int,
-                      rnd: int, buffered: bool):
-        """Post-extract work for every round, as a concurrent job DAG.
+                      rnd: int):
+        """Post-extract work of a BIG round, as a concurrent job DAG (a
+        small round finishes on the driver, :meth:`_finish_on_driver`).
 
-        Jobs, for every round plan and every seen-set:
-
-        - the order job (:meth:`_order_job`, thread pool): the artifact
-          tables (``buffered``: one ``toArrow`` into the driver buffer,
-          else per-round Spark writes), per-partition fetched/quarantined
-          counts and — dfs — the pages' candidate counts
-          (``_page_cand_counts``). News runs one more
-          count job: its gate calls the robots pandas UDF, which cannot
-          run inside a higher-order function;
-        - the critical path: fused Arrow admission (:meth:`_admit`);
+        - the order job (:meth:`_order_job`, thread pool): per-round
+          Spark writes of the artifact tables, per-partition
+          fetched/quarantined counts and — dfs — the pages' candidate
+          counts (``_page_cand_counts``). News runs one more count job:
+          its gate calls the robots pandas UDF, which cannot run inside a
+          higher-order function;
+        - the critical path: fused Arrow admission (:meth:`_admit`) over
+          the exploded ``same_links`` (:func:`_page_links`) through the
+          seen-set's probe plan, broadcast or shard files;
         - ONE seen-set pass over the round's inserts (non-quarantined
           fetched urls ∪ admitted ``(url, partition_id)``;
           ``frontier.seen_round_pass``): per-partition admitted counts
           plus the seen-set delta, one ``toArrow``, overlapping the
           stash union.
 
-        Driver-side job launches are the dominant serial cost of a round
-        at this scale (0.1-0.64 s of CPU each on a 4-core box). All
-        merges (lineage dict, seen-set commit) happen on the driver after
-        the gather, so the result is bit-identical to the serial order
-        (tests/test_crawl_spark.py test_big_g_path_matches_oracle pins
-        this). The seen-set owns its probe plan and commit (seen.py)."""
+        All merges (lineage dict, seen-set commit) happen on the driver
+        after the gather, so the result is bit-identical to the serial
+        order (tests/test_crawl_spark.py test_big_g_path_matches_oracle
+        pins this)."""
         from concurrent.futures import ThreadPoolExecutor
 
         news = self.mode == "news"
-        cands = _explode_outlinks(extracted, with_page_host=news)
+        links = extracted.select("pos", "url_canon", "depth", "partition_id",
+                                 *self._link_cols)
+
+        def explode(name):
+            return links.select(F.col("pos").alias("page_pos"),
+                                F.col("url_canon").alias("page_url"),
+                                F.col("depth").alias("page_depth"),
+                                "partition_id", F.explode(name).alias("l"))
+
+        # the proposing page's url (the eventual `origin`) is re-attached
+        # AFTER admission by a broadcast join on page_pos, so it never
+        # rides the admission shuffle
+        same = explode("same_links").select(
+            "page_pos", "page_depth", "partition_id",
+            "l.link_pos", "l.url", "l.host")
         if news:
-            # news.go urlAllowed as the candidate gate: exact host +
-            # extension/path blacklists + ':'+'=' (functions/news.py) AND
-            # the per-outlink robots check (news.go:239-247 — unlike dfs,
-            # robots gate at ADMISSION, not refill)
-            from ..functions.news import NEWS_MAX_DEPTH, news_url_allowed
+            # news.go:239-247 — unlike dfs, robots gate at ADMISSION
             self._refresh_robots(rnd)
-            path = F.coalesce(F.parse_url(F.col("url"), F.lit("PATH")),
-                              F.lit(""))
-            same = (cands.filter(
-                (F.col("page_depth") < NEWS_MAX_DEPTH)
-                & news_url_allowed(path, F.col("host"), F.col("page_host"))
-                & self.robots_ok(F.col("host"), F.col("url")))
-                .drop("page_domain", "domain", "page_url", "page_host"))
-            stash = None  # news drops cross-host links (no stash, no refill)
-        else:
-            same = (cands.filter((F.col("domain") == F.col("page_domain"))
-                                 & (F.col("page_depth") < self.max_depth))
-                    # page_domain/domain are spent after the gate, and the
-                    # proposing page's url (the eventual `origin`) is
-                    # re-attached AFTER admission by a broadcast join on
-                    # page_pos — none of them ride the admission shuffle
-                    # (page_url alone is ~45 B x fan-out x batch of the
-                    # shuffle and of the per-batch Arrow->pandas string
-                    # allocation, which anti-scales with worker count)
-                    .drop("page_domain", "domain", "page_url"))
-            stash = cands.filter(F.col("domain") != F.col("page_domain"))
-        # partitioning scaled to the round: toy rounds (bench.py's 2k-G
-        # corpus, unit tests) run the SAME plan at 1 partition — no
-        # 32-task shuffles over 2k rows; big rounds get full width
+            same = same.filter(self.robots_ok(F.col("host"), F.col("url")))
+        # partitioning scaled to the round: toy rounds (unit tests forcing
+        # this plan) run the SAME plan at 1 partition; big rounds get
+        # full width
         par = max(self.spark.sparkContext.defaultParallelism, 4)
         n_parts = max(1, min(par, batch_count // 2000))
 
@@ -815,7 +970,7 @@ class CrawlEngine:
         probe = None
         try:
             fut_order = pool.submit(self._order_job, extracted, rnd,
-                                    self.fetch_seq, buffered)
+                                    self.fetch_seq)
             fut_cand = pool.submit(
                 lambda: same.groupBy("partition_id")
                 .agg(F.count("*").alias("same_n")).collect()) \
@@ -830,27 +985,22 @@ class CrawlEngine:
             # fetched page; quarantined rows never markVisited). It
             # overlaps the stash union below.
             ins = admitted.select("url", "partition_id")
+            visited = extracted.filter(F.col("quarantined").isNull())
             if not news:
-                ins = (extracted.filter(F.col("quarantined").isNull())
-                       .select(F.col("url_canon").alias("url"),
-                               F.lit(None).cast("int").alias("partition_id"))
+                ins = (visited.select(F.col("url_canon").alias("url"),
+                                    F.lit(None).cast("int")
+                                    .alias("partition_id"))
                        .unionByName(ins))
             fut_seen = pool.submit(self.seen.round_pass, ins,
                                    min(par, batch_count // 10000 + 1))
 
-            if stash is not None:
-                stash_rows = stash.select(
-                    "domain", "url",
-                    F.col("page_url").alias("origin"),
+            if not news:
+                self._union_store(explode("stash_links").select(
+                    "l.domain", "l.url", F.col("page_url").alias("origin"),
                     (F.lit(rnd) * F.lit(1 << 40)
                      + F.col("page_pos") * F.lit(1 << 20)
-                     + F.col("link_pos")).alias("stash_key"),
-                    "host")
-                self.url_store = self.url_store.unionByName(stash_rows)
-                self._store_unions += 1
-                if self._store_unions >= 4:  # bound the lazy union chain
-                    self.url_store = self.url_store.localCheckpoint(eager=True)
-                    self._store_unions = 0
+                     + F.col("l.link_pos")).alias("stash_key"),
+                    "l.host"))
 
             adm_counts, seen_delta = fut_seen.result()
             admitted_count = sum(adm_counts.values())
@@ -861,30 +1011,25 @@ class CrawlEngine:
             self._maybe_compact()
 
             # ---- gather + driver-side merges -------------------------------
-            agg, tables, q_n = fut_order.result()
-            self.fetch_seq += batch_count
-
+            agg, q_n = fut_order.result()
             if fut_cand is not None:
                 for r in fut_cand.result():
                     agg[int(r["partition_id"])]["deduped"] += int(r["same_n"])
             for part, n in adm_counts.items():
                 agg[part]["enqueued"] += n
                 agg[part]["deduped"] -= n
-            tables["lineage"] = pa.Table.from_pylist(
-                [{"round": rnd, "partition": part, **agg[part]}
-                 for part in sorted(agg)])
-            for name, t in tables.items():
-                if t.num_rows:
-                    self.buffers[name] = pa.concat_tables(
-                        [self.buffers[name], t]) if name in self.buffers \
-                        else t
-
             # quarantined rows never markVisited → not counted as inserts;
             # news mode marks ONLY admitted outlinks (no page inserts)
-            total_added = admitted_count if news \
-                else batch_count - q_n + admitted_count
-            self.seen.commit(seen_delta, total_added,
-                             lambda: self._seen_ops(extracted, admitted))
+            self._close_round(
+                rnd, batch_count, agg, {}, seen_delta,
+                admitted_count if news
+                else batch_count - q_n + admitted_count,
+                lambda: _seen_ops(
+                    news,
+                    [] if news else [tuple(r) for r in visited.select(
+                        "pos", "url_canon").collect()],
+                    [tuple(r) for r in admitted.select(
+                        "page_pos", "enqueue_seq", "url").collect()]))
         finally:
             if probe is not None:
                 probe.release()

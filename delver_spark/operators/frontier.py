@@ -5,13 +5,15 @@ Scale notes (10^10-row frontier, SURVEY §4.2):
     partitioning) followed by a global top-G, which Spark executes as
     TakeOrdered (per-partition top-G, then merge of G-row heaps) — no
     single-partition global sort ever touches the full frontier;
-  - a crawl round's seen-set delta is built per task in numpy by
+  - a big crawl round's seen-set delta is built per task in numpy by
     :func:`seen_round_pass` — in the same pass that counts the admitted
     rows — and OR-merged on the driver after one collect of at most
-    one bitset per task; :func:`bloom_bits_for_urls` keeps the
-    ``treeAggregate(depth=2)`` merge (BASELINE.json names this topology)
-    for inputs with no round bound. The merged bitmap is broadcast for
-    the next round's membership probes;
+    one bitset per task; a small round runs the same kernel,
+    :func:`seen_delta`, on the driver over the hashes it already holds;
+    :func:`bloom_bits_for_urls` keeps the ``treeAggregate(depth=2)``
+    merge (BASELINE.json names this topology) for inputs with no round
+    bound. A big round broadcasts the merged filter for its membership
+    probes;
   - the politeness budget is applied BEFORE any salting (it is a semantic
     limit, not an optimization — SURVEY §4.2.2).
 """
@@ -267,6 +269,26 @@ def cuckoo_pairs_for_urls(urls_df: DataFrame, shards: int, m: int,
     return seen_round_pass(rows, "cuckoo", (shards, m), partitions)[1]
 
 
+def seen_delta(seen_filter: str, params: tuple, h1: np.ndarray,
+               h2: np.ndarray) -> np.ndarray:
+    """The seen-set delta of the urls whose murmur halves are ``(h1,
+    h2)``: the bitset words of a ``BloomFilter(max_n, p)``
+    (``seen_filter="bloom"``, ``params=(max_n, p)``), or the derived
+    cuckoo ``(shard, i1, fp)`` rows as an (n, 3) int64 array
+    (``"cuckoo"``, ``params=(shards, m)``); i1 < m and fp <= 0xFFFF make
+    the int64 view lossless. The one kernel of both round plans: the
+    tasks of :func:`seen_round_pass` and a small round's driver."""
+    if seen_filter == "bloom":
+        local = BloomFilter(*params)
+        local._set_positions(local._probes_from_hash(h1, h2))
+        return local.words
+    from ..engine.cuckoo import _derive, shard_of
+    shards, m = params
+    i1, fp = _derive(h1, h2, m)
+    return np.stack([shard_of(h2, shards).view(np.int64), i1.view(np.int64),
+                     fp.view(np.int64)], axis=1)
+
+
 def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
                     partitions: int | None = None):
     """A crawl round's seen-set inserts and admitted counts in ONE Arrow
@@ -277,13 +299,10 @@ def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
     rows that only insert (the round's fetched pages). Each task hashes
     its urls zero-copy from the Arrow string buffers and emits one row
     per partition_id it saw (the admitted count) plus one ``blob`` row
-    with its seen-set delta: the bitset words of a ``BloomFilter(max_n,
-    p)`` (``seen_filter="bloom"``, ``params=(max_n, p)``), or the derived
-    cuckoo ``(shard, i1, fp)`` rows as row-major int64 triples
-    (``"cuckoo"``, ``params=(shards, m)``). The driver merges: bitsets
-    OR, cuckoo rows concatenate (the caller's per-shard canonical commit
-    sorts them) and counts add, so the result does not depend on the
-    partitioning.
+    with its :func:`seen_delta` (``seen_filter`` and ``params`` are
+    that function's). The driver merges: bitsets OR, cuckoo rows
+    concatenate (the caller's per-shard canonical commit sorts them) and
+    counts add, so the result does not depend on the partitioning.
 
     Returns ``(counts, delta)``: ``{partition_id: admitted rows}`` and
     the OR-merged uint64 words (bloom) or an (n, 3) int64 array
@@ -301,33 +320,21 @@ def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
         import pyarrow as pa
 
         from ..engine.murmur import hash128_batch_buf, string_buf_views
-        if seen_filter == "bloom":
-            local = BloomFilter(*params)
-        else:
-            from ..engine.cuckoo import _derive, shard_of
-            shards, m = params
-            derived = []
         counts: dict[int, int] = {}
-        any_rows = False
+        h1s, h2s = [], []
         for rb in it:
             if rb.num_rows == 0:
                 continue
-            any_rows = True
             pids = rb.column(1).drop_null().to_numpy()
             for pid, n in zip(*np.unique(pids, return_counts=True)):
                 counts[int(pid)] = counts.get(int(pid), 0) + int(n)
             h1, h2 = hash128_batch_buf(*string_buf_views(rb.column(0)))
-            if seen_filter == "bloom":
-                local._set_positions(local._probes_from_hash(h1, h2))
-            else:
-                i1, fp = _derive(h1, h2, m)
-                derived.append(np.stack([shard_of(h2, shards).view(np.int64),
-                                         i1.view(np.int64),
-                                         fp.view(np.int64)], axis=1))
-        if not any_rows:
+            h1s.append(h1)
+            h2s.append(h2)
+        if not h1s:
             return
-        blob = local.words.tobytes() if seen_filter == "bloom" \
-            else np.concatenate(derived).tobytes()
+        blob = seen_delta(seen_filter, params, np.concatenate(h1s),
+                          np.concatenate(h2s)).tobytes()
         pids = list(counts)
         yield pa.RecordBatch.from_arrays(
             [pa.array(pids + [None], pa.int64()),

@@ -2,12 +2,15 @@
 owning its filter, probe plan and snapshot format (a third family is one
 more class). ``BloomSeen`` is the reference's rolling murmur3 bloom,
 ``CuckooSeen`` the deletion-capable sharded cuckoo. Both serve
-``CrawlEngine``'s five operations: ``open_probe`` (a handle whose
-``colocate`` puts every proposal of a url into one task and whose
-``load()`` gives the tasks what ``frontier.admission_keep_mask``
-accepts), ``round_pass`` (the round's ``frontier.seen_round_pass``),
-``commit`` of its delta, the ``to_bytes``/``n``/``stats`` snapshot, and
-:func:`from_blob` restore. ``probe`` reports the set's own plan."""
+``CrawlEngine``'s operations. A small round probes ``filter``, the
+driver-resident filter ``frontier.admission_keep_mask`` accepts, and
+takes its delta from ``delta`` (``frontier.seen_delta`` over the hashes
+it holds). A big round opens ``open_probe`` (a handle whose ``colocate``
+puts every proposal of a url into one task and whose ``load()`` gives
+the tasks that filter) and takes its delta from ``round_pass`` (the
+round's ``frontier.seen_round_pass``). Both ``commit`` the delta; the
+``to_bytes``/``n``/``stats`` snapshot and :func:`from_blob` restore
+complete the interface. ``probe`` reports the set's own big-round plan."""
 
 from __future__ import annotations
 
@@ -25,7 +28,7 @@ from ..engine.cuckoo import (ShardedCuckoo, ShardFileProbe,
                              _shard_cache_max_bytes)
 from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import canonicalize, host_of
-from .frontier import seen_round_pass
+from .frontier import seen_delta, seen_round_pass
 
 
 def _colocate(df: DataFrame, n: int, key: str) -> DataFrame:
@@ -88,7 +91,18 @@ class _ShardFilesProbe(ShardFileProbe):
         pass  # the shard files outlive the round; the next sync GCs them
 
 
-class BloomSeen:
+class _SeenSet:
+    """The delta of a round's inserts, by either plan; subclasses give
+    ``kind`` and ``_params`` (``frontier.seen_delta``'s)."""
+
+    def delta(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        return seen_delta(self.kind, self._params, h1, h2)
+
+    def round_pass(self, rows: DataFrame, partitions: int):
+        return seen_round_pass(rows, self.kind, self._params, partitions)
+
+
+class BloomSeen(_SeenSet):
     """The reference's rolling bloom (rolling_bloom.go), including the
     lost-insert quirk at a rotation."""
 
@@ -103,9 +117,8 @@ class BloomSeen:
     def n(self) -> int:
         return self.bloom.n
 
-    def round_pass(self, rows: DataFrame, partitions: int):
-        params = self.bloom.max_n, self.bloom.p
-        return seen_round_pass(rows, self.kind, params, partitions)
+    filter = property(lambda self: self.bloom)
+    _params = property(lambda self: (self.bloom.max_n, self.bloom.p))
 
     def open_probe(self, sc) -> _BroadcastProbe:
         return _BroadcastProbe(sc, self.bloom.to_bytes(),
@@ -160,15 +173,17 @@ class BloomSeen:
     delete_urls = derive_df = delete_rows = _cannot_delete
 
 
-class CuckooSeen:
+class CuckooSeen(_SeenSet):
     """The deletion-capable sharded cuckoo, its semantics DEFINED in
     oracle/crawler.py: the round's insert set commits at round END in
     canonical per-shard order, so the filter is bit-identical to the
-    oracle's without any per-op replay. The broadcast probe holds the
-    whole filter in every Python worker, the shard plan (per-shard files
-    in the workdir) at most the worker's shard-cache budget, so a filter
-    whose bucket bytes exceed that budget takes the shard plan. Probe
-    results, hence crawls, are identical under both."""
+    oracle's without any per-op replay. A big round's broadcast probe
+    holds the whole filter in every Python worker, the shard plan
+    (per-shard files in the workdir) at most the worker's shard-cache
+    budget, so a filter whose bucket bytes exceed that budget takes the
+    shard plan; a small round probes ``filter`` on the driver and opens
+    neither. Probe results, hence crawls, are identical under all
+    three."""
 
     kind = "cuckoo"
     bloom = None
@@ -201,9 +216,9 @@ class CuckooSeen:
         nbytes = sum(f.buckets.nbytes for f in self.cuckoo.filters)
         return "sharded" if nbytes > floor else "broadcast"
 
-    def round_pass(self, rows: DataFrame, partitions: int):
-        params = self.cuckoo.shards, self.cuckoo.filters[0].m
-        return seen_round_pass(rows, self.kind, params, partitions)
+    filter = property(lambda self: self.cuckoo)
+    _params = property(lambda self: (self.cuckoo.shards,
+                                     self.cuckoo.filters[0].m))
 
     def open_probe(self, sc):
         if self.probe == "sharded":

@@ -255,13 +255,16 @@ def cosine_topk_ivf_batch(emb: DataFrame, queries: DataFrame, k: int = 5,
 
     if index is None:
         index = build_ivf_index(emb, id_col, vec_col, cell_col)
-    if not index:
+    # a NULL label is no cell: the isin below never matches it, so it
+    # takes no probe slot (as in cosine_topk_ivf)
+    cell_ids = sorted(c for c in index if c is not None)
+    if not cell_ids:
         raise ValueError("cosine_topk_ivf_batch: empty IVF index")
     spark = emb.sparkSession
     out_schema = (f"{qid_col} {col_simple_type(queries, qid_col)}, "
                   f"{id_col} {col_simple_type(emb, id_col)}, "
                   "dot_milli2 long")
-    dim = len(next(iter(index.values())))
+    dim = len(index[cell_ids[0]])
     # Arrow-native query load: a row collect + python int loops here
     # is O(n_q × dim) interpreter work — measured dominating the whole
     # operator at 10⁵ queries
@@ -273,7 +276,6 @@ def cosine_topk_ivf_batch(emb: DataFrame, queries: DataFrame, k: int = 5,
     Q = np.ascontiguousarray(_list_matrix(
         qt.column(1), nq, dim, op="cosine_topk_ivf_batch"))     # nq×dim
 
-    cell_ids = sorted(index)
     S = np.array([index[c] for c in cell_ids], dtype=np.int64)  # nc×dim
     int_cells = all(isinstance(c, (int, np.integer)) for c in cell_ids)
     n_probe = min(n_probe, len(cell_ids))

@@ -341,6 +341,7 @@ def test_sharded_probe_crawl_equals_oracle(spark, unit_corpus,
     wd = str(tmp_path_factory.mktemp("crawl_ck_sharded"))
     eng = CrawlEngine(spark, unit_corpus, wd, seen_filter="cuckoo")
     eng.seen._sharded_floor = 0
+    eng._big_round_floor = 0  # the shard probe is a big-round plan
     eng.run()
 
     assert _order_tuples_engine(eng) == _order_tuples_oracle(cuckoo_oracle)
@@ -388,11 +389,13 @@ def test_sharded_probe_survives_resume(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl_ck_shres"))
     e1 = CrawlEngine(spark, corp, wd, seen_filter="cuckoo")
     e1.seen._sharded_floor = 0
+    e1._big_round_floor = 0  # the shard probe is a big-round plan
     e1.run(max_rounds=2)  # commits, then "dies"
     e2 = CrawlEngine.resume(spark, corp, wd)
     # a few-KB filter is far below the shard-cache budget
     assert e2.seen_probe == "broadcast"
     e2.seen._sharded_floor = 0
+    e2._big_round_floor = 0
     assert e2.seen_probe == "sharded"
     assert e2.seen._manifest is None  # fresh engine: first round re-syncs
     e2.run()
@@ -416,10 +419,42 @@ def test_sharded_probe_news_mode_equals_oracle(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("crawl_news_ck_sh"))
     eng = CrawlEngine(spark, d, wd, mode="news", seen_filter="cuckoo")
     eng.seen._sharded_floor = 0
+    eng._big_round_floor = 0  # the shard probe is a big-round plan
     eng.run()
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)
     assert eng.cuckoo.to_bytes() == oracle.cuckoo.to_bytes()
     assert eng.cuckoo.n == oracle.cuckoo.n > 0
+
+
+@pytest.mark.parametrize("plan", ["broadcast", "sharded"])
+def test_small_round_opens_no_probe(spark, unit_corpus, tmp_path,
+                                    monkeypatch, plan):
+    """A small round probes the driver's filter: it broadcasts no filter
+    and, under the shard plan, writes no shard files."""
+    from pyspark import SparkContext
+
+    from delver_spark.operators.crawl import CrawlEngine
+
+    eng = CrawlEngine(spark, unit_corpus, str(tmp_path),
+                      seen_filter="cuckoo")
+    if plan == "sharded":
+        eng.seen._sharded_floor = 0
+    assert eng.seen_probe == plan
+    eng.seed()
+    assert eng.run_round()
+    blobs = []
+    real = SparkContext.broadcast
+
+    def spy(self, value):
+        if isinstance(value, bytes):
+            blobs.append(value[:5])
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    sync_n = eng.seen._sync_n
+    assert eng.run_round()
+    assert blobs == []
+    assert eng.seen._sync_n == sync_n == 0
 
 
 def test_sharded_probe_big_g_equals_oracle(spark, tmp_path_factory):

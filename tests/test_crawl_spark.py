@@ -170,6 +170,32 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
                           eng.bloom.bit_positions())
 
 
+def test_tombstone_literal_cap_falls_back_to_anti_join(
+        spark, unit_corpus, oracle_result, tmp_path, monkeypatch):
+    """A small round filters the tombstones as one NOT IN literal while
+    they number at most BIG_ROUND_FLOOR; past it the frontier view
+    falls back to the broadcast anti-join. Lowered to 30 rows here,
+    with every round still small: both forms run, ``frontier_count``
+    equals the view's row count after each round, and the crawl equals
+    the oracle."""
+    from delver_spark.operators import crawl
+    from delver_spark.operators.crawl import CrawlEngine
+
+    monkeypatch.setattr(crawl, "BIG_ROUND_FLOOR", 30)
+    eng = CrawlEngine(spark, unit_corpus, str(tmp_path))
+    eng._big_round_floor = 10 ** 9
+    eng.seed()
+    literal = []
+    while eng.round < eng.max_rounds and eng.run_round():
+        literal.append(bool(eng._tomb_seqs))
+        assert eng.frontier_count == eng._frontier_view().count()
+    eng.checkpoint()
+    assert True in literal and False in literal, literal
+    assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle_result)
+    assert np.array_equal(oracle_result.bloom.bit_positions(),
+                          eng.bloom.bit_positions())
+
+
 def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
                                      oracle_result, monkeypatch):
     """Kill after round k, resume from snapshot → identical final state
@@ -313,12 +339,12 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
 
 
 def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
-    """One steady small-G dfs round launches at most 10 Spark jobs: the
-    lineage candidate counts ride the order job, the seen-set delta and
-    admitted counts come from ONE pass, and the dequeue is one collect.
-    Jobs are counted across run_round from the status tracker, ungrouped
-    — the round's pool threads do not inherit a job group, so a group
-    tag would miss their jobs."""
+    """One steady small-G dfs round launches at most 5 Spark jobs: the
+    dequeue is one collect, the extract comes back in one more (plus the
+    payload broadcasts), and the round finishes on the driver. Jobs are
+    counted across run_round from the status tracker, ungrouped — a
+    thread pool's threads do not inherit a job group, so a group tag
+    would miss their jobs."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
@@ -331,14 +357,14 @@ def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
     before = set(st.getJobIdsForGroup(None))
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
-    assert 0 < len(jobs) <= 10, sorted(jobs)
+    assert 0 < len(jobs) <= 5, sorted(jobs)
 
 
 def test_big_g_small_round_job_budget(spark, tmp_path_factory,
                                       monkeypatch):
     """A G=20000 engine whose frontier holds a few dozen urls plans each
     round by that bound, not by G: a steady round takes the small-round
-    plan and launches at most 10 Spark jobs, the budget of
+    plan and launches at most 5 Spark jobs, the budget of
     test_small_g_round_job_budget (the big-round plan launches ~16)."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators import crawl
@@ -358,7 +384,7 @@ def test_big_g_small_round_job_budget(spark, tmp_path_factory,
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
     assert hints == [False, False]
-    assert 0 < len(jobs) <= 10, sorted(jobs)
+    assert 0 < len(jobs) <= 5, sorted(jobs)
 
 
 @pytest.fixture(scope="module")
@@ -461,14 +487,16 @@ def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
 
 def test_page_candidate_counts_equal_explode_groupby(spark):
     """The per-page ``same_n``/``stash_n`` columns summed per partition
-    equal the explode + groupBy counts they replace, on pages that hit
-    every branch: failed fetches (NULL and empty outlinks, and a failed
-    page that still carries outlinks), quarantined rows, single-token
-    hosts (the no-dot domain branch), NULL link hosts and pages at
-    max_depth."""
+    equal the explode + groupBy counts they replace, and the gated link
+    arrays both round plans admit from (``_page_links``) hold exactly
+    the exploded candidates, on pages that hit every branch: failed
+    fetches (NULL and empty outlinks, and a failed page that still
+    carries outlinks), quarantined rows, single-token hosts (the no-dot
+    domain branch), NULL link hosts and pages at max_depth."""
     from pyspark.sql import functions as F
 
-    from delver_spark.operators.crawl import (_explode_outlinks,
+    from delver_spark.engine.urlnorm import sld_tld
+    from delver_spark.operators.crawl import (_outlink_domain, _page_links,
                                               _page_cand_counts)
     from delver_spark.operators.extract import EXTRACT_SCHEMA
 
@@ -502,16 +530,38 @@ def test_page_candidate_counts_equal_explode_groupby(spark):
                  host=p[2]) for p in pages]
     extracted = spark.createDataFrame(rows, EXTRACT_SCHEMA)
 
-    cands = _explode_outlinks(extracted)
+    # the reference: one row per successful page's outlink, gated after
+    # the explode
+    cands = (extracted.filter("success")
+             .select("pos", "partition_id",
+                     F.col("depth").alias("page_depth"),
+                     F.col("domain").alias("page_domain"),
+                     F.explode("outlinks").alias("l"))
+             .withColumn("domain", _outlink_domain(F.col("l.host"))))
+    is_same = (F.col("domain") == F.col("page_domain")) \
+        & (F.col("page_depth") < max_depth)
+    is_stash = F.col("domain") != F.col("page_domain")
     want = {r["partition_id"]: (r["same_n"], r["stash_n"]) for r in
             cands.groupBy("partition_id").agg(
-                F.sum(F.when((F.col("domain") == F.col("page_domain"))
-                             & (F.col("page_depth") < max_depth), 1)
-                      .otherwise(0)).alias("same_n"),
-                F.sum(F.when(F.col("domain") != F.col("page_domain"), 1)
-                      .otherwise(0)).alias("stash_n")).collect()}
+                F.sum(F.when(is_same, 1).otherwise(0)).alias("same_n"),
+                F.sum(F.when(is_stash, 1).otherwise(0)).alias("stash_n"))
+            .collect()}
+    for name, gate in (("same_links", is_same), ("stash_links", is_stash)):
+        ref = sorted((r["pos"], r["link_pos"], r["url"], r["host"])
+                     for r in cands.filter(gate)
+                     .select("pos", "l.link_pos", "l.url", "l.host")
+                     .collect())
+        arrays = extracted.select(
+            "pos", F.explode(_page_links(False, max_depth)[name]).alias("l"))
+        assert sorted((r["pos"], r["link_pos"], r["url"], r["host"])
+                      for r in arrays.select("pos", "l.*").collect()) == ref
+    stash = extracted.select(F.explode(_page_links(False, max_depth)
+                                       ["stash_links"]).alias("l"))
+    assert all(r["domain"] == sld_tld(r["host"])
+               for r in stash.select("l.*").collect())
     got = {r["partition_id"]: (r["same_n"], r["stash_n"]) for r in
-           extracted.select("partition_id", *_page_cand_counts(max_depth))
+           extracted.select("partition_id", *_page_cand_counts(
+               _page_links(False, max_depth)))
            .groupBy("partition_id")
            .agg(F.sum("same_n").alias("same_n"),
                 F.sum("stash_n").alias("stash_n")).collect()}

@@ -75,6 +75,25 @@ def test_news_articles_match_oracle(news_oracle, news_engine):
     assert (docs["depth"] > 0).all()
 
 
+def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
+    """The news twin of test_crawl_spark::test_small_g_round_job_budget:
+    a steady small news round launches at most 5 Spark jobs. Its robots
+    gate runs on the driver over the collected candidates, so no
+    separate count job rides along."""
+    from delver_spark.operators.crawl import CrawlEngine
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    eng = CrawlEngine(spark, news_corpus, str(tmp_path), mode="news")
+    eng.seed()
+    assert eng.run_round()  # round 0 has no tombstones yet
+    before = set(st.getJobIdsForGroup(None))
+    assert eng.run_round()
+    jobs = set(st.getJobIdsForGroup(None)) - before
+    assert 0 < len(jobs) <= 5, sorted(jobs)
+
+
 def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):
     """S2 -> news integration: the RSS publisher's FetcherRequests
     (depth 1) seed the news engine's frontier; one round fetches them

@@ -374,6 +374,33 @@ def test_ivf_nprobe_null_label_takes_no_slot(spark):
         [(r["vec_id"], r["dot_milli2"]) for r in want]
 
 
+def test_ivf_batch_null_label_takes_no_slot(spark):
+    """The batch IVF path leaves a NULL-label key out of the probe
+    ranking too: with every 5th label NULL and every labelled cell
+    probed, the top-k of each query equals brute force over the
+    labelled rows."""
+    import numpy as np
+
+    from delver_spark.operators.similarity import cosine_topk_ivf_batch
+
+    rng = np.random.default_rng(5)
+    milli = rng.integers(-1000, 1001, size=(30, 4))
+    rows = [(i, [int(v) / 1000 for v in milli[i]], None if i % 5 == 0
+             else i % 4) for i in range(30)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int")
+    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+    got = {}
+    for r in cosine_topk_ivf_batch(emb, queries, k=3, n_probe=4).collect():
+        got.setdefault(r["query_id"], []).append(
+            (-r["dot_milli2"], r["vec_id"]))
+    labelled = [i for i, _, label in rows if label is not None]
+    for q in range(30):
+        want = sorted((-int(milli[q] @ milli[i]), i)
+                      for i in labelled if i != q)[:3]
+        assert sorted(got[q]) == want, q
+
+
 def test_rank_probe_cells_matrix_equals_loop():
     """The numpy probe ranking both IVF query paths use equals the
     per-query loop it replaced: exact integer dot with each cell's
