@@ -11,7 +11,8 @@ Each round (SURVEY §3.1 "Spark translation"):
   (T8). The seen-set — the rolling bloom or the sharded cuckoo, and how
   a big round probes it — lives behind one interface in
   operators/seen.py; the admission gates are defined once, as per-page
-  link arrays (``_page_links``) both plans read.
+  link arrays (``_page_links``) both plans read, and so is the winner
+  rule (``_admission_keep``) both plans run.
 
 Each round picks its physical plan from its BOUND, the most rows it can
 dequeue: ``min(G, frontier_count)``, where ``frontier_count`` is the
@@ -33,16 +34,19 @@ admission is a distributed Arrow pass through the seen-set's probe plan
 and Spark writes the artifacts every round. Each artifact is defined
 once (``_artifacts``), so both layouts write one schema.
 
-A steady small round launches at most 5 Spark jobs: the dequeue collect
-(2: the host window's shuffle, the ordered take — the tombstones ride it
-as one parsed ``NOT IN`` literal while the driver knows all of them and
-they number at most ``BIG_ROUND_FLOOR``), the payload broadcast(s) (1-2)
-and the extract collect (1). No checkpoint, order, admission or
-seen-set job and no filter broadcast is left. On a 4-core box each small
-job costs 0.1-0.64 s of process-tree CPU, much of it the JVM compiling
-each distinct code path the round runs, so the count, not the data,
-sets a small round's cost — which is why a G=20000 crawl whose frontier
-holds a few hundred urls takes the small plan.
+A steady small round launches 4 Spark jobs: the dequeue collect (2: the
+host window's shuffle, the ordered take — the tombstones ride it as one
+parsed ``NOT IN`` literal while the driver knows all of them and they
+number at most ``BIG_ROUND_FLOOR``), the payload broadcast (1) and the
+extract collect (1); one round in four adds the url_store checkpoint.
+No order, admission or seen-set job and no filter broadcast is left.
+Golden pixels, in a corpus that has them, are attached to the dequeued
+keys on the driver in either plan (``_with_golden``), not joined in
+Spark. On a 4-core box each small job costs 0.1-0.64 s of process-tree
+CPU, much of it the JVM compiling each distinct code path the round
+runs, so the count, not the data, sets a small round's cost — which is
+why a G=20000 crawl whose frontier holds a few hundred urls takes the
+small plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -221,51 +225,59 @@ def _seen_ops(news: bool, pages: list, admitted: list) -> list:
     return ops
 
 
+def _admission_keep(urls: pa.ChunkedArray, page_pos: np.ndarray,
+                    link_pos: np.ndarray, f_pos: np.ndarray, news: bool,
+                    seen):
+    """The admission winner mask both round plans run: the rows' urls
+    hashed once, then ``frontier.admission_keep_mask`` with the mode's
+    tie key — dfs ``page_pos``, news ``page_pos * 2**21 + link_pos``
+    (``link_pos`` is the within-caption index, far below 2**21). Rows
+    with ``f_pos >= 0`` are the fetched pages' marker rows;
+    ``page_pos``, ``link_pos`` and ``f_pos`` are -1 where a row has
+    none. Returns ``(keep, h1, h2)``, the hashes for the seen-set delta.
+    Urls hash zero-copy from the string buffers, one chunk at a time: a
+    >2 GB url column cannot collapse into one int32-offset chunk
+    (ArrowInvalid), so an oversized shuffle partition stays correct,
+    just slower."""
+    from ..engine.murmur import hash128_batch_buf, string_buf_views
+    from .frontier import admission_keep_mask
+
+    hashes = [hash128_batch_buf(*string_buf_views(c))
+              for c in urls.chunks if len(c)]
+    if not hashes:
+        empty = np.zeros(0, dtype=np.uint64)
+        return np.zeros(0, dtype=bool), empty, empty
+    h1, h2 = (np.concatenate(h) for h in zip(*hashes))
+    key = page_pos * (1 << 21) + link_pos if news else page_pos
+    return admission_keep_mask(h1, h2, key, f_pos, f_pos >= 0, seen), h1, h2
+
+
+def _stash_key(rnd, page_pos, link_pos):
+    """A stash row's ``stash_key``, the refill's last-wins order:
+    ``rnd * 2**40 + page_pos * 2**20 + link_pos`` over numpy arrays
+    (int64) or Columns (long) alike."""
+    return rnd * (1 << 40) + page_pos * (1 << 20) + link_pos
+
+
 def _admit_pass(probe, news: bool, out_cols: list[str]):
     """The fused admission's mapInArrow body: per colocated partition,
     the seen-set probe, the fetched-pos gate and winner selection
-    (frontier.admission_keep_mask[_news] has the semantics). It MUST see
-    the partition as one frame: a per-batch min-page would admit a url
-    from two pages (tests pin this with a tiny Arrow batch size). Urls
-    hash zero-copy from the string buffers and winners leave by
-    Table.filter — no python string ever materializes."""
+    (:func:`_admission_keep`). It MUST see the partition as one frame: a
+    per-batch min-page would admit a url from two pages (tests pin this
+    with a tiny Arrow batch size). Winners leave by Table.filter — no
+    python string ever materializes."""
     def admit(it):
         import pyarrow.compute as pc
 
-        from ..engine.murmur import hash128_batch_buf, string_buf_views
-        from .frontier import admission_keep_mask, admission_keep_mask_news
         seen = probe.load()
-        tbls = [pa.Table.from_batches([rb]) for rb in it]
-        if not tbls:
+        batches = list(it)
+        if not batches:
             return
-        # NOT combine_chunks'd: a >2 GB url column in one shuffle
-        # partition cannot collapse to a single int32-offset chunk
-        # (ArrowInvalid) — hash per chunk and concatenate instead,
-        # so oversized partitions stay correct, just slower
-        t = pa.concat_tables(tbls)
-        if t.num_rows == 0:
-            return
-        datas, lens = [], []
-        for arr in t.column("url").chunks:
-            if len(arr) == 0:
-                continue
-            d, ln = string_buf_views(arr)
-            datas.append(d)
-            lens.append(ln)
-        h1, h2 = hash128_batch_buf(
-            datas[0] if len(datas) == 1 else np.concatenate(datas),
-            lens[0] if len(lens) == 1 else np.concatenate(lens))
-        page_pos = pc.fill_null(t.column("page_pos"), -1).to_numpy()
-        if news:
-            # news winner rule: single FIRST proposal per url by
-            # (page_pos, link_pos) — SetBytes inside urlAllowed
-            # dedupes within-page too; no marker rows exist
-            link_pos = t.column("link_pos").to_numpy(zero_copy_only=False)
-            keep = admission_keep_mask_news(h1, h2, page_pos, link_pos, seen)
-        else:
-            f_pos = pc.fill_null(t.column("f_pos"), -1).to_numpy()
-            keep = admission_keep_mask(h1, h2, page_pos, f_pos, f_pos >= 0,
-                                       seen)
+        t = pa.Table.from_batches(batches)
+        keep, _, _ = _admission_keep(
+            t.column("url"),
+            *(pc.fill_null(t.column(c), -1).to_numpy()
+              for c in ("page_pos", "link_pos", "f_pos")), news, seen)
         if keep.any():
             # drops f_pos and any routing column the colocation added
             yield from t.filter(pa.array(keep)).select(out_cols).to_batches()
@@ -334,8 +346,10 @@ class CrawlEngine:
         # pushes down to parquet row-group stats (no full scan per round).
         self.pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet")) \
             .select("url_canon", "bytes", "fmt", "caption", "phash", "pix_md5")
+        # the original pixels of lossy payloads, for the extract's PSNR
+        # check; attached to the dequeued keys on the driver (_with_golden)
         golden = os.path.join(corpus_dir, "golden_pixels.parquet")
-        self.golden = spark.read.parquet(golden) if os.path.exists(golden) else None
+        self._golden_path = golden if os.path.exists(golden) else None
 
         # robots: versioned rows + round-age TTL (robotstxt.go mapping; see
         # engine.robots.RobotsCache). The rules dict is broadcast once and
@@ -544,8 +558,8 @@ class CrawlEngine:
             # urls are the fetch's IN-list), so they come back as an
             # Arrow-backed local frame instead of a localCheckpoint job
             # followed by a second collect of the checkpoint
-            batch_tbl = batch.toArrow()
-            batch = self.spark.createDataFrame(batch_tbl, batch.schema)
+            batch_tbl = self._with_golden(batch.toArrow())
+            batch = self.spark.createDataFrame(batch_tbl)
             batch_urls = batch_tbl.column("url").to_pylist()
             batch_count = len(batch_urls)
         else:
@@ -591,83 +605,73 @@ class CrawlEngine:
         return True
 
     # ------------------------------------------------------------ fetch path
+    def _with_golden(self, keys: pa.Table) -> pa.Table:
+        """``keys`` plus each ``url``'s original pixels as
+        ``golden_pixels`` (NULL where it has none) when the corpus has
+        them: one filtered pyarrow read on the driver. The extract finds
+        the column by name; without golden pixels ``keys`` is returned
+        as it is."""
+        if self._golden_path is None:
+            return keys
+        import pyarrow.compute as pc
+
+        urls = keys.column("url").combine_chunks()
+        golden = pq.read_table(self._golden_path,
+                               filters=pc.field("url_canon").isin(urls))
+        at = pc.index_in(urls, value_set=golden.column("url_canon")
+                         .combine_chunks())
+        return keys.append_column("golden_pixels",
+                                  golden.column("pixels").take(at))
+
     def _fetch_extract(self, batch: DataFrame, batch_count: int,
                        batch_urls: list | None) -> DataFrame:
         """Fetch + extract for one round; returns the ``extracted``
-        frame. ``batch_urls`` non-None selects the small-round
-        IN-pushdown plan (the list is the already-collected batch keys),
-        whose frame stays lazy for the round's one collect; None, the
-        big-round plan, whose frame is checkpointed."""
+        frame. Golden pixels ride the dequeued keys in both plans
+        (:meth:`_with_golden`). ``batch_urls`` non-None selects the
+        small-round plan: the list (the already-collected batch keys)
+        is pushed into the payload scan as an IN-list and the pruned
+        payload broadcast-joins the local batch; the frame stays lazy
+        for the round's one collect. None selects the big-round plan,
+        the direct payload scan, whose frame is checkpointed."""
         payload_cols = ["bytes", "fmt", "caption", "phash", "pix_md5"]
         if batch_urls is not None:
             payload = self.pages.filter(_in_list("url_canon", batch_urls))
-            if self.golden is not None:
-                payload = payload.join(
-                    self.golden.withColumnRenamed("pixels", "golden_pixels"),
-                    "url_canon", "left")
-                payload_cols = payload_cols + ["golden_pixels"]
+            golden = [batch.golden_pixels] if self._golden_path else []
             fetched = batch.join(F.broadcast(payload),
                                  batch.url == payload.url_canon, "left") \
                 .select(batch.pos, batch.url.alias("url_canon"), batch.depth,
-                        batch.host, *payload_cols)
-            extracted = fetched.mapInArrow(self.extractor, EXTRACT_SCHEMA)
-        elif self.golden is not None:
-            # big batch WITH golden pixels (tests only): broadcast the key
-            # set, broadcast-hash-join it INTO the payload scan (narrow on
-            # pages) — payload bytes still never shuffle; fetch misses take
-            # the same extractor with null payload columns.
-            keys = batch.select("pos", "url", "depth", "host")
-            payload = self.pages.join(
-                self.golden.withColumnRenamed("pixels", "golden_pixels"),
-                "url_canon", "left")
-            payload_cols = payload_cols + ["golden_pixels"]
-            hits = (payload.join(F.broadcast(keys),
-                                 payload.url_canon == keys.url, "inner")
-                    .select("pos", F.col("url").alias("url_canon"),
-                            "depth", "host", *payload_cols))
-            misses = (batch.join(self.pages.select(F.col("url_canon").alias("u")),
-                                 batch.url == F.col("u"), "left_anti")
-                      .select("pos", F.col("url").alias("url_canon"),
-                              "depth", "host",
-                              *[F.lit(None).alias(c) for c in payload_cols]))
-            extracted = (hits.mapInArrow(self.extractor, EXTRACT_SCHEMA)
-                         .unionByName(misses.mapInArrow(self.extractor, EXTRACT_SCHEMA))
-                         .localCheckpoint(eager=True))
-        else:
-            # big batch: payload bytes never cross ANY process boundary —
-            # the extract tasks read their parquet row-group splits directly
-            # and probe the G-bounded broadcast key map in place
-            # (sources/payload_scan.py has the measurements and the 100 TB
-            # story). Misses = anti-join on the url column only (JVM
-            # columnar scan, no payload IO).
-            from ..sources.payload_scan import fetch_extract_direct
-            keys_tbl = batch.select("url", "pos", "depth", "host").toArrow()
-            hits_df, fetch_key_bc = fetch_extract_direct(
-                self.spark, os.path.join(self.corpus_dir, "pages.parquet"),
-                keys_tbl, self.n_partitions,
-                emit_text=self.collect_documents)
-            try:
-                hits_df = hits_df.localCheckpoint(eager=True)
-                n_hits = hits_df.count()
-            finally:
-                fetch_key_bc.destroy()
-            if n_hits == batch_count:
-                # common case: every dequeued url has a payload row — skip
-                # the miss anti-join (a full scan of the url column) and the
-                # extra union materialization entirely
-                extracted = hits_df
-            else:
-                misses = (batch.join(
-                              self.pages.select(F.col("url_canon").alias("u")),
-                              batch.url == F.col("u"), "left_anti")
-                          .select("pos", F.col("url").alias("url_canon"),
-                                  "depth", "host",
-                                  *[F.lit(None).alias(c) for c in payload_cols]))
-                extracted = (hits_df
-                             .unionByName(misses.mapInArrow(self.extractor,
-                                                            EXTRACT_SCHEMA))
-                             .localCheckpoint(eager=True))
-        return extracted
+                        batch.host, *payload_cols, *golden)
+            return fetched.mapInArrow(self.extractor, EXTRACT_SCHEMA)
+        # big batch: payload bytes never cross ANY process boundary — the
+        # extract tasks read their parquet row-group splits directly and
+        # probe the G-bounded broadcast key map in place
+        # (sources/payload_scan.py has the measurements and the 100 TB
+        # story). Misses = anti-join on the url column only (JVM columnar
+        # scan, no payload IO).
+        from ..sources.payload_scan import fetch_extract_direct
+        keys_tbl = self._with_golden(
+            batch.select("url", "pos", "depth", "host").toArrow())
+        hits_df, fetch_key_bc = fetch_extract_direct(
+            self.spark, os.path.join(self.corpus_dir, "pages.parquet"),
+            keys_tbl, self.n_partitions, emit_text=self.collect_documents)
+        try:
+            hits_df = hits_df.localCheckpoint(eager=True)
+            n_hits = hits_df.count()
+        finally:
+            fetch_key_bc.destroy()
+        if n_hits == batch_count:
+            # common case: every dequeued url has a payload row — skip the
+            # miss anti-join (a full scan of the url column) and the extra
+            # union materialization entirely
+            return hits_df
+        misses = (batch.join(self.pages.select(F.col("url_canon").alias("u")),
+                             batch.url == F.col("u"), "left_anti")
+                  .select("pos", F.col("url").alias("url_canon"), "depth",
+                          "host",
+                          *[F.lit(None).alias(c) for c in payload_cols]))
+        return (hits_df
+                .unionByName(misses.mapInArrow(self.extractor, EXTRACT_SCHEMA))
+                .localCheckpoint(eager=True))
 
     # ---------------------------------------------------- round finish
     def _collect_pages(self, extracted: DataFrame, rnd: int):
@@ -699,16 +703,13 @@ class CrawlEngine:
         """The small round after its one collect, on the driver with the
         Arrow/numpy kernels the big round runs in its tasks: the
         candidates flatten out of the gated link arrays (plus, dfs, one
-        marker row per unquarantined fetched page), hash once, and
-        ``frontier.admission_keep_mask[_news]`` probes the live seen-set
-        filter; winners rank by ``(page_pos, link_pos)``; the seen-set
-        delta comes from the same hashes (``frontier.seen_delta``). The
+        marker row per unquarantined fetched page) and
+        :func:`_admission_keep` probes the live seen-set filter; winners
+        rank by ``(page_pos, link_pos)``; the seen-set delta comes from
+        the same hashes (``frontier.seen_delta``). The
         admitted and stash rows join the frontier and the url_store as
         local relations, which launch no job."""
         import pyarrow.compute as pc
-
-        from ..engine.murmur import hash128_batch_buf, string_buf_views
-        from .frontier import admission_keep_mask, admission_keep_mask_news
 
         news = self.mode == "news"
         pos = pages.column("pos").to_numpy()
@@ -742,28 +743,17 @@ class CrawlEngine:
             zero_copy_only=False)
         n_c = len(cand_urls)
         # dfs markers: the unquarantined fetched pages (news.go never
-        # marks the fetched page: none there)
+        # marks the fetched page: none there), after the candidates
         marked = np.zeros(len(pos), dtype=bool) if news \
             else ~pages.column("quarantined").to_numpy(zero_copy_only=False)
         marked_urls = urls.filter(pa.array(marked))
-        all_urls = pa.concat_arrays([cand_urls, marked_urls])
-        if len(all_urls):
-            h1, h2 = hash128_batch_buf(*string_buf_views(all_urls))
-        else:
-            h1 = h2 = np.zeros(0, dtype=np.uint64)
         page_pos = pos[page]
-        if n_c == 0:
-            keep = np.zeros(0, dtype=bool)
-        elif news:
-            keep = admission_keep_mask_news(h1, h2, page_pos, link_pos,
-                                            self.seen.filter)
-        else:  # the markers follow the candidates, page_pos -1
-            n_m = len(h1) - n_c
-            keep = admission_keep_mask(
-                h1, h2, np.r_[page_pos, np.full(n_m, -1)],
-                np.r_[np.full(n_c, -1), pos[marked]],
-                np.arange(len(h1)) >= n_c, self.seen.filter)[:n_c]
-        win = np.flatnonzero(keep)
+        none_c, none_m = np.full(n_c, -1), np.full(len(marked_urls), -1)
+        keep, h1, h2 = _admission_keep(
+            pa.chunked_array([cand_urls, marked_urls]),
+            np.r_[page_pos, none_m], np.r_[link_pos, none_m],
+            np.r_[none_c, pos[marked]], news, self.seen.filter)
+        win = np.flatnonzero(keep[:n_c])
         win = win[np.lexsort((link_pos[win], page_pos[win]))]
         n_adm = len(win)
         admitted = pa.table({
@@ -786,13 +776,13 @@ class CrawlEngine:
         if not news:
             spage, stash = flat("stash_links")
             if len(stash):
-                key = (rnd << 40) + (pos[spage] << 20) + pc.struct_field(
-                    stash, "link_pos").to_numpy(zero_copy_only=False)
+                key = _stash_key(rnd, pos[spage], pc.struct_field(
+                    stash, "link_pos").to_numpy(zero_copy_only=False))
                 self._union_store(self.spark.createDataFrame(pa.table({
                     "domain": pc.struct_field(stash, "domain"),
                     "url": pc.struct_field(stash, "url"),
                     "origin": urls.take(spage),
-                    "stash_key": key.astype(np.int64),
+                    "stash_key": key,
                     "host": pc.struct_field(stash, "host")}),
                     _STORE_SCHEMA_W_HOST))
         n_enq = per_part(page[win])
@@ -997,9 +987,8 @@ class CrawlEngine:
             if not news:
                 self._union_store(explode("stash_links").select(
                     "l.domain", "l.url", F.col("page_url").alias("origin"),
-                    (F.lit(rnd) * F.lit(1 << 40)
-                     + F.col("page_pos") * F.lit(1 << 20)
-                     + F.col("l.link_pos")).alias("stash_key"),
+                    _stash_key(rnd, F.col("page_pos"), F.col("l.link_pos"))
+                    .alias("stash_key"),
                     "l.host"))
 
             adm_counts, seen_delta = fut_seen.result()

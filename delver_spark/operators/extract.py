@@ -34,10 +34,10 @@ from ..fixtures.codecs import decode, phash64, psnr
 from ..oracle.crawler import partition_of
 
 # the outlink's registrable domain is NOT stored: it is derived JVM-side
-# after explode (exact GetSLDAndTLD split semantics, util/util.go:92-101)
-# — see crawl.py OUTLINK_DOMAIN. Dropping it saves ~30 B x fan-out per
-# page in the extracted checkpoint and the admission shuffle, plus one
-# python sld_tld call per outlink.
+# inside the admission gates (exact GetSLDAndTLD split semantics,
+# util/util.go:92-101) — see crawl.py _outlink_domain and _page_links.
+# Dropping it saves ~30 B x fan-out per page in the extracted checkpoint
+# and the admission shuffle, plus one python sld_tld call per outlink.
 OUTLINK_TYPE = T.ArrayType(T.StructType([
     T.StructField("link_pos", T.IntegerType()),
     T.StructField("url", T.StringType()),

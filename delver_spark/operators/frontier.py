@@ -392,16 +392,26 @@ def admission_keep_mask(h1: np.ndarray, h2: np.ndarray,
                         page_pos: np.ndarray, f_pos: np.ndarray,
                         is_marker: np.ndarray,
                         bloom) -> np.ndarray:
-    """Vectorized winner selection for the fused admission pass
-    (crawl.py): rows are candidate proposals and fetched-url marker rows
-    colocated by url. Returns the boolean keep mask (True = admitted
-    candidate row).
+    """Vectorized winner selection of the admission (crawl.py
+    ``_admission_keep``, which both round plans call): rows are candidate
+    proposals and fetched-url marker rows grouped by url. Returns the
+    boolean keep mask (True = admitted candidate row).
 
-    Gates (sequential-oracle equivalence, dfs_basic.go:61-123): admit a
-    candidate iff (a) its url is not in the previous round's bloom,
-    (b) no marker for the url has position <= the proposing page's, and
-    (c) the proposal comes from the FIRST page proposing the url (all
-    same-page duplicates of that page win — reference quirk).
+    Gates (sequential-oracle equivalence): admit a candidate iff (a) its
+    url is not in the previous round's seen-set, (b) no marker for the
+    url has position <= the proposing row's ``page_pos``, and (c) its
+    ``page_pos`` is the least among the url's eligible proposals; every
+    proposal at that least value wins. ``page_pos`` is the tie key, so
+    the caller picks the winner rule by what it passes:
+
+    - dfs (dfs_basic.go:61-123): the proposing page's position, so all
+      same-page duplicates of the first eligible page win (reference
+      quirk), with one marker row per fetched page;
+    - news (news.go:248-262): ``page_pos * 2**21 + link_pos``, unique
+      per proposal, so only the single first proposal wins
+      (``seenUrls.SetBytes`` inside urlAllowed blocks the url's later
+      proposals, the same page's too), and no marker rows (the fetched
+      page is never marked).
 
     Grouping key is the url's murmur3 x64_128 (h1, h2) — NOT the string.
     The bloom's probe positions derive solely from (h1, h2)
@@ -436,38 +446,6 @@ def admission_keep_mask(h1: np.ndarray, h2: np.ndarray,
     pp = np.where(elig, page_pos, _SENTINEL)
     run_pp_min = np.minimum.reduceat(pp[idx], run_starts)
     return elig & (page_pos == run_pp_min[run_id])
-
-
-def admission_keep_mask_news(h1: np.ndarray, h2: np.ndarray,
-                             page_pos: np.ndarray, link_pos: np.ndarray,
-                             bloom) -> np.ndarray:
-    """News-mode winner selection: keep the single FIRST proposal of each
-    url by (page_pos, link_pos) order among candidates not in the bloom.
-
-    Differences from the dfs mask (news.go:248-262 vs dfs_basic.go):
-    ``seenUrls.SetBytes`` runs INSIDE urlAllowed per url, so a url's
-    second proposal is blocked even within the same page (no same-page
-    duplicate quirk), and the fetched page itself is never marked (no
-    marker rows). Same hash-grouping collision argument as
-    admission_keep_mask."""
-    n = len(h1)
-    idx = np.lexsort((h2, h1))
-    h1s, h2s = h1[idx], h2[idx]
-    new_run = np.r_[True, (h1s[1:] != h1s[:-1]) | (h2s[1:] != h2s[:-1])]
-    run_starts = np.flatnonzero(new_run)
-    run_id_sorted = np.cumsum(new_run) - 1
-    run_id = np.empty(n, dtype=np.int64)
-    run_id[idx] = run_id_sorted
-
-    in_bloom = _seen_mask(bloom, h1, h2)
-
-    # (page_pos, link_pos) packed into one sortable key; link_pos is the
-    # within-caption index, far below 2^21
-    key = page_pos.astype(np.int64) * (np.int64(1) << np.int64(21)) \
-        + link_pos.astype(np.int64)
-    km = np.where(~in_bloom, key, _SENTINEL)
-    run_min = np.minimum.reduceat(km[idx], run_starts)
-    return (~in_bloom) & (key == run_min[run_id])
 
 
 def assign_global_rank(df: DataFrame, order_cols: list[str], pid_expr,

@@ -62,6 +62,8 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
     ``keys_tbl``: pyarrow Table (url, pos, depth, host) for the dequeued
     batch — the broadcast build side of the fetch join, shipped as Arrow
     (pickles via IPC bytes; no per-key python objects on the driver).
+    Any further key column (the crawl's optional ``golden_pixels``)
+    reaches ``_extract`` as an input column of the same name.
     Returns ``(df, key_bc)``: a DataFrame with EXTRACT_SCHEMA covering
     the HIT rows only (payload found; misses are the caller's cheap
     anti-join on the url column) and the key broadcast, which the caller
@@ -101,13 +103,12 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
         if cached is None:
             kt, ext = key_bc.value
             cached = (pd.Index(kt.column("url").to_pandas()),
-                      kt.column("pos").to_numpy(),
-                      kt.column("depth").to_numpy(),
-                      kt.column("host").to_pandas().to_numpy(),
+                      {c: kt.column(c).to_numpy(zero_copy_only=False)
+                       for c in kt.column_names if c != "url"},
                       ext.to_pandas())
             _PROBE_CACHE.clear()
             _PROBE_CACHE[probe_token] = cached
-        key_index, pos_k, depth_k, host_k, extras = cached
+        key_index, key_cols, extras = cached
         for rb in it:
             names = rb.schema.names
             paths = rb.column(names.index("path")).to_pylist()
@@ -118,10 +119,7 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
                 urls = tbl.column("url_canon").to_pandas()
                 loc = key_index.get_indexer(urls)
                 hit_idx = np.nonzero(loc >= 0)[0]
-                ks = loc[hit_idx]
-                pos_a = pos_k[ks]
-                depth_a = depth_k[ks]
-                host_a = host_k[ks]
+                cols = {c: a[loc[hit_idx]] for c, a in key_cols.items()}
                 if len(extras):
                     # rare duplicate dequeues of the same url: one extra
                     # fetch row per duplicate occurrence in this row group
@@ -129,20 +127,19 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
                     em = eloc >= 0
                     if em.any():
                         hit_idx = np.concatenate([hit_idx, eloc[em]])
-                        pos_a = np.concatenate(
-                            [pos_a, extras.loc[em, "pos"].to_numpy()])
-                        depth_a = np.concatenate(
-                            [depth_a, extras.loc[em, "depth"].to_numpy()])
-                        host_a = np.concatenate(
-                            [host_a, extras.loc[em, "host"].to_numpy()])
+                        cols = {c: np.concatenate(
+                                    [a, extras.loc[em, c].to_numpy()])
+                                for c, a in cols.items()}
                 if not len(hit_idx):
                     continue
                 sub = tbl.take(hit_idx)
+                # the key columns past (pos, depth, host) — golden_pixels
+                # when the caller attached them — pass through to _extract
                 inp = pd.DataFrame({
-                    "pos": pd.Series(pos_a, dtype="int64"),
+                    "pos": pd.Series(cols.pop("pos"), dtype="int64"),
                     "url_canon": urls.iloc[hit_idx].to_numpy(),
-                    "depth": pd.Series(depth_a, dtype="int32"),
-                    "host": host_a,
+                    "depth": pd.Series(cols.pop("depth"), dtype="int32"),
+                    "host": cols.pop("host"),
                     "bytes": pd.Series(
                         _binary_views(sub.column("bytes").combine_chunks()),
                         dtype=object),
@@ -150,6 +147,7 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
                     "caption": sub.column("caption").to_pylist(),
                     "phash": sub.column("phash").to_pandas(),
                     "pix_md5": sub.column("pix_md5").to_pylist(),
+                    **cols,
                 })
                 for out in _extract(iter([inp]), n_partitions):
                     if not emit_text:

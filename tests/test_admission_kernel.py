@@ -1,14 +1,17 @@
 """Property test: the vectorized admission kernel (numpy runs/reduceat
 over 128-bit hash groups) equals a naive per-url reference on random
 inputs — markers, duplicate proposals, same-page duplicates, bloom
-members and all."""
+members and all — in dfs mode, and in news mode through the crawl's
+one admission helper, which picks the mode's tie key."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from delver_spark.engine.bloom import BloomFilter
 from delver_spark.engine.murmur import hash128_batch
+from delver_spark.operators.crawl import _admission_keep
 from delver_spark.operators.frontier import admission_keep_mask
 
 
@@ -36,6 +39,21 @@ def _naive(urls, page_pos, f_pos, is_marker, bloom):
     return keep
 
 
+def _naive_news(urls, page_pos, link_pos, bloom):
+    """news.go:248-262 over exact url strings: proposals in (page_pos,
+    link_pos) order; SetBytes inside urlAllowed admits a url's first
+    unseen proposal and blocks every later one, the same page's too."""
+    member = bloom.contains_batch(list(urls))
+    keep = [False] * len(urls)
+    admitted = set()
+    for i in sorted(range(len(urls)),
+                    key=lambda i: (page_pos[i], link_pos[i])):
+        if not member[i] and urls[i] not in admitted:
+            admitted.add(urls[i])
+            keep[i] = True
+    return keep
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.data())
 def test_admission_kernel_matches_naive(data):
@@ -47,6 +65,19 @@ def test_admission_kernel_matches_naive(data):
         bloom.add_many(seeded)
 
     n_rows = data.draw(st.integers(1, 40))
+    if data.draw(st.booleans()):  # news: no markers, a link_pos per row
+        urls = data.draw(st.lists(st.sampled_from(url_pool),
+                                  min_size=n_rows, max_size=n_rows))
+        page_pos = data.draw(st.lists(st.integers(0, 8), min_size=n_rows,
+                                      max_size=n_rows))
+        link_pos = data.draw(st.permutations(range(n_rows)))
+        got, _, _ = _admission_keep(
+            pa.chunked_array([pa.array(urls)]),
+            np.array(page_pos, dtype=np.int64),
+            np.array(link_pos, dtype=np.int32),
+            np.full(n_rows, -1, dtype=np.int64), True, bloom)
+        assert list(got) == _naive_news(urls, page_pos, link_pos, bloom)
+        return
     urls, page_pos, f_pos, is_marker = [], [], [], []
     for _ in range(n_rows):
         urls.append(data.draw(st.sampled_from(url_pool)))

@@ -339,12 +339,13 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
 
 
 def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
-    """One steady small-G dfs round launches at most 5 Spark jobs: the
-    dequeue is one collect, the extract comes back in one more (plus the
-    payload broadcasts), and the round finishes on the driver. Jobs are
-    counted across run_round from the status tracker, ungrouped — a
-    thread pool's threads do not inherit a job group, so a group tag
-    would miss their jobs."""
+    """One steady small-G dfs round launches at most 4 Spark jobs: the
+    dequeue is one collect (2 jobs), the extract comes back in one more
+    (plus the payload broadcast), and the round finishes on the driver.
+    The corpus has golden pixels: they ride the dequeued keys, so they
+    add no job. Jobs are counted across run_round from the status
+    tracker, ungrouped — a thread pool's threads do not inherit a job
+    group, so a group tag would miss their jobs."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
@@ -357,14 +358,14 @@ def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
     before = set(st.getJobIdsForGroup(None))
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
-    assert 0 < len(jobs) <= 5, sorted(jobs)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
 
 
 def test_big_g_small_round_job_budget(spark, tmp_path_factory,
                                       monkeypatch):
     """A G=20000 engine whose frontier holds a few dozen urls plans each
     round by that bound, not by G: a steady round takes the small-round
-    plan and launches at most 5 Spark jobs, the budget of
+    plan and launches at most 4 Spark jobs, the budget of
     test_small_g_round_job_budget (the big-round plan launches ~16)."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators import crawl
@@ -384,7 +385,7 @@ def test_big_g_small_round_job_budget(spark, tmp_path_factory,
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
     assert hints == [False, False]
-    assert 0 < len(jobs) <= 5, sorted(jobs)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
 
 
 @pytest.fixture(scope="module")

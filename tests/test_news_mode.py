@@ -77,7 +77,7 @@ def test_news_articles_match_oracle(news_oracle, news_engine):
 
 def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     """The news twin of test_crawl_spark::test_small_g_round_job_budget:
-    a steady small news round launches at most 5 Spark jobs. Its robots
+    a steady small news round launches at most 4 Spark jobs. Its robots
     gate runs on the driver over the collected candidates, so no
     separate count job rides along."""
     from delver_spark.operators.crawl import CrawlEngine
@@ -91,7 +91,7 @@ def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     before = set(st.getJobIdsForGroup(None))
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
-    assert 0 < len(jobs) <= 5, sorted(jobs)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
 
 
 def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):

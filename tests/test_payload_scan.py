@@ -37,3 +37,35 @@ def test_direct_scan_duplicate_keys(spark, unit_corpus):
     bc.destroy()
     assert got == [(0, urls[0], 0), (1, urls[1], 0),
                    (2, urls[0], 1), (3, urls[2], 0)]
+
+
+def test_direct_scan_passes_golden_pixels_to_duplicates(spark, unit_corpus,
+                                                        tmp_path):
+    """Golden pixels ride the keys table: the engine attaches them on the
+    driver (``CrawlEngine._with_golden``), every occurrence of a url
+    dequeued twice gets them, and the direct scan hands them to the
+    extract, whose lossy-payload check then scores each row's PSNR."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from delver_spark.engine.urlnorm import host_of
+    from delver_spark.operators.crawl import CrawlEngine
+    from delver_spark.sources.payload_scan import fetch_extract_direct
+
+    pages = pq.read_table(os.path.join(unit_corpus, "pages.parquet"),
+                          columns=["url_canon", "fmt"])
+    lossy = pages.filter(pc.equal(pages.column("fmt"), "qjpg"))
+    urls = sorted(lossy.column("url_canon").to_pylist())[:2]
+    rows = [(urls[0], 0, 0, host_of(urls[0])),
+            (urls[1], 1, 0, host_of(urls[1])),
+            (urls[0], 2, 1, host_of(urls[0]))]
+    keys = CrawlEngine(spark, unit_corpus, str(tmp_path))._with_golden(
+        _keys(rows))
+    assert keys.column("golden_pixels").null_count == 0
+    df, bc = fetch_extract_direct(
+        spark, os.path.join(unit_corpus, "pages.parquet"), keys, 8)
+    got = sorted(df.select("pos", "psnr", "payload_ok").collect())
+    bc.destroy()
+    assert [r["pos"] for r in got] == [0, 1, 2]
+    assert all(r["psnr"] >= 40.0 and r["payload_ok"] for r in got)
+    assert got[0]["psnr"] == got[2]["psnr"]
