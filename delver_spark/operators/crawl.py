@@ -38,15 +38,14 @@ A steady small round launches 4 Spark jobs: the dequeue collect (2: the
 host window's shuffle, the ordered take — the tombstones ride it as one
 parsed ``NOT IN`` literal while the driver knows all of them and they
 number at most ``BIG_ROUND_FLOOR``), the payload broadcast (1) and the
-extract collect (1); one round in four adds the url_store checkpoint.
-No order, admission or seen-set job and no filter broadcast is left.
-Golden pixels, in a corpus that has them, are attached to the dequeued
-keys on the driver in either plan (``_with_golden``), not joined in
-Spark. On a 4-core box each small job costs 0.1-0.64 s of process-tree
-CPU, much of it the JVM compiling each distinct code path the round
-runs, so the count, not the data, sets a small round's cost — which is
-why a G=20000 crawl whose frontier holds a few hundred urls takes the
-small plan.
+extract collect (1). No order, admission or seen-set job and no filter
+broadcast is left. Golden pixels, in a corpus that has them, are
+attached to the dequeued keys on the driver in either plan
+(``_with_golden``), not joined in Spark. On a 4-core box each small job
+costs 0.1-0.64 s of process-tree CPU, much of it the JVM compiling each
+distinct code path the round runs, so the count, not the data, sets a
+small round's cost — which is why a G=20000 crawl whose frontier holds a
+few hundred urls takes the small plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -63,10 +62,13 @@ repartitioning on hash(host)"), by stage:
     `frontier.salted_repartition` remains the generic salting primitive
     for order-insensitive host-keyed stages.
 
-State is distributed (frontier / url_store DataFrames, localCheckpoint'd
-to truncate lineage); only round-bounded artifacts (the <= G fetched
-rows with their candidate links, a small round's admitted and stash
-rows, counters) touch the driver. The url_store is APPEND-ONLY —
+State is distributed (frontier / url_store DataFrames, installed only
+by ``CrawlEngine._rebase``); only round-bounded artifacts (the <= G
+fetched rows with their candidate links, a small round's admitted and
+stash rows, counters) touch the driver. A checkpoint re-bases the engine
+on lazy reads of the state it committed, the reads resume makes: lineage
+and partition count restart, and an uninterrupted crawl runs on exactly
+the state a resume would load. The url_store is APPEND-ONLY —
 last-wins dedupe happens once per refill on the single published domain,
 not per round, so no full-store shuffle ever runs (SURVEY J4/O5 + Badger
 Set overwrite semantics, resource/maps/persistent.go:23-41).
@@ -109,6 +111,8 @@ BIG_ROUND_FLOOR = 10_000
 
 # the append-only artifact tables (SnapshotStore part dirs)
 _PART_TABLES = ("crawl_order", "lineage", "quarantine", "documents")
+# the counters a manifest records and resume restores
+_COUNTERS = ("round", "seq", "fetch_seq", "frontier_count")
 
 
 # the documents artifact: every extract column but the outlinks and the
@@ -377,39 +381,29 @@ class CrawlEngine:
         self._cand_cols = [] if mode == "news" else _page_cand_counts(links)
 
         # mutable state. The frontier is held MOR-style (Iceberg
-        # merge-on-read semantics over localCheckpoints): `frontier` is
-        # the compacted BASE; dequeued seqs accumulate as TOMBSTONES
-        # (broadcast anti-joined at read time — a map-side filter, no
-        # shuffle while they fit a broadcast); admitted rows accumulate
-        # as DELTAS. The round's state transition is therefore O(G),
-        # not an O(frontier) rewrite; compaction folds the view into a
-        # new base when tombstones exceed ~30% of it. On the 10^10
+        # merge-on-read semantics): `frontier` is the BASE that _rebase
+        # installs, with admitted rows unioned on as DELTAS; dequeued seqs
+        # accumulate as TOMBSTONES (filtered at read time — a map-side
+        # filter, no shuffle). The round's state transition is therefore
+        # O(G), not an O(frontier) rewrite; compaction folds the view
+        # into a new base when tombstones exceed ~30% of it, and a
+        # checkpoint re-bases on the state it committed. On the 10^10
         # deployment this maps 1:1 to Iceberg MOR delete files + appends
         # + background compaction.
-        # True ⇒ frontier order provably collapses to enqueue_seq (all
-        # priorities 0; round/seq share one counter) and the dequeue may
-        # take the distributed big-round path. seed() verifies it against
-        # the seed priorities and the snapshot carries it; callers that
-        # install a frontier directly (bench/profile prefills) inherit
-        # True and must use priority-0 rows (all in-repo prefills do).
+        # True ⇒ frontier order provably collapses to enqueue_seq, so the
+        # dequeue may take the distributed big-round path (frontier.dequeue
+        # seq_hint): every non-seed enqueue is priority 0 with round and
+        # seq from one counter, and seed() checks the seeds' priorities.
+        # Prefills that set `frontier` directly inherit True and must use
+        # priority-0 rows (all in-repo ones do).
         self._seq_orderable = True
-        self.frontier: DataFrame | None = None
-        self._frontier_delta: DataFrame | None = None
-        self._tombstones: DataFrame | None = None
-        # every tombstone seq, while the driver knows them all (small
-        # rounds' dequeues) and they number at most BIG_ROUND_FLOOR; else
-        # None until the next compaction
-        self._tomb_seqs: list[int] | None = []
-        self._tomb_count = 0
-        self._base_count = 0
         self._compact_floor = 4096  # tests lower this to force compaction
         self._tomb_abs_cap = 2_000_000  # broadcast-size bound (see _maybe_compact)
-        self.url_store: DataFrame = spark.createDataFrame([], _STORE_SCHEMA_W_HOST)
         self.frontier_count = 0
+        self._rebase(None, spark.createDataFrame([], _STORE_SCHEMA_W_HOST))
         self.seq = 0
         self.fetch_seq = 0
         self.round = 0
-        self._store_unions = 0
         # the driver buffer: {artifact table: its uncommitted rows, in
         # the Spark-written parts' schema}, flushed at checkpoints
         self.buffers: dict[str, pa.Table] = {}
@@ -441,22 +435,30 @@ class CrawlEngine:
                 continue
             rows.append((int(s["priority"]), 0, self.seq, c, host_of(c), 0, None))
             self.seq += 1
-        self.frontier = self.spark.createDataFrame(rows, FRONTIER_SCHEMA) \
-            .localCheckpoint(eager=True)
         self.frontier_count = len(rows)
-        self._base_count = len(rows)
-        # order-collapse invariant for the big-round dequeue fast path
-        # (frontier.dequeue seq_hint): every non-seed enqueue (refill,
-        # admission) is priority 0 and enqueue_round/enqueue_seq are both
-        # assigned from the one global counter, so if the seeds are all
-        # priority 0 too, frontier order == enqueue_seq order forever
+        self._rebase(self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+                     .localCheckpoint(eager=True))
         self._seq_orderable = all(r[0] == 0 for r in rows)
 
     # ----------------------------------------------------------------- view
+    def _rebase(self, frontier: DataFrame | None,
+                url_store: DataFrame | None = None):
+        """The one place the crawl state is installed: ``frontier``
+        (materialized, or None before the seed) as the merge-on-read base
+        of all ``frontier_count`` rows, no tombstones; ``url_store`` too."""
+        self.frontier = frontier
+        if url_store is not None:
+            self.url_store = url_store
+        self._tombstones: DataFrame | None = None
+        # every tombstone seq, while the driver knows them all (small
+        # rounds' dequeues) and they number at most BIG_ROUND_FLOOR; else
+        # None until the next re-base
+        self._tomb_seqs: list[int] | None = []
+        self._tomb_count = 0
+        self._base_count = self.frontier_count
+
     def _frontier_view(self) -> DataFrame:
         v = self.frontier
-        if self._frontier_delta is not None:
-            v = v.unionByName(self._frontier_delta)
         if self._tomb_seqs:
             # one parsed literal: broadcasting even a local relation
             # costs a job
@@ -468,10 +470,9 @@ class CrawlEngine:
         return v
 
     def _append_delta(self, rows: DataFrame, n: int):
-        """rows must already be materialized (checkpointed or a local
-        relation)."""
-        self._frontier_delta = rows if self._frontier_delta is None \
-            else self._frontier_delta.unionByName(rows)
+        """Union ``rows``, already materialized (checkpointed or a local
+        relation), onto the frontier: a merge-on-read delta."""
+        self.frontier = self.frontier.unionByName(rows)
         self.frontier_count += n
 
     def _maybe_compact(self):
@@ -483,12 +484,7 @@ class CrawlEngine:
         if self._tomb_count > max(self._compact_floor,
                                   min(int(0.3 * self._base_count),
                                       self._tomb_abs_cap)):
-            self.frontier = self._frontier_view().localCheckpoint(eager=True)
-            self._frontier_delta = None
-            self._tombstones = None
-            self._tomb_seqs = []
-            self._tomb_count = 0
-            self._base_count = self.frontier_count
+            self._rebase(self._frontier_view().localCheckpoint(eager=True))
 
     # ---------------------------------------------------------------- refill
     def _refresh_robots(self, rnd: int):
@@ -778,13 +774,14 @@ class CrawlEngine:
             if len(stash):
                 key = _stash_key(rnd, pos[spage], pc.struct_field(
                     stash, "link_pos").to_numpy(zero_copy_only=False))
-                self._union_store(self.spark.createDataFrame(pa.table({
-                    "domain": pc.struct_field(stash, "domain"),
-                    "url": pc.struct_field(stash, "url"),
-                    "origin": urls.take(spage),
-                    "stash_key": key,
-                    "host": pc.struct_field(stash, "host")}),
-                    _STORE_SCHEMA_W_HOST))
+                self.url_store = self.url_store.unionByName(
+                    self.spark.createDataFrame(pa.table({
+                        "domain": pc.struct_field(stash, "domain"),
+                        "url": pc.struct_field(stash, "url"),
+                        "origin": urls.take(spage),
+                        "stash_key": key,
+                        "host": pc.struct_field(stash, "host")}),
+                        _STORE_SCHEMA_W_HOST))
         n_enq = per_part(page[win])
         n_stash = np.zeros_like(n_enq) if news else per_part(spage)
         agg = {int(p): {"fetched": int(f), "deduped": int(d - e),
@@ -800,14 +797,6 @@ class CrawlEngine:
 
         self._close_round(rnd, batch_count, agg, tables, delta,
                           n_adm + len(marked_urls), replay_ops)
-
-    def _union_store(self, rows: DataFrame):
-        """Append stash rows to the url_store, bounding its union chain."""
-        self.url_store = self.url_store.unionByName(rows)
-        self._store_unions += 1
-        if self._store_unions >= 4:
-            self.url_store = self.url_store.localCheckpoint(eager=True)
-            self._store_unions = 0
 
     def _close_round(self, rnd: int, batch_count: int, agg: dict,
                      tables: dict, delta, total_added: int, replay_ops):
@@ -985,11 +974,12 @@ class CrawlEngine:
                                    min(par, batch_count // 10000 + 1))
 
             if not news:
-                self._union_store(explode("stash_links").select(
-                    "l.domain", "l.url", F.col("page_url").alias("origin"),
-                    _stash_key(rnd, F.col("page_pos"), F.col("l.link_pos"))
-                    .alias("stash_key"),
-                    "l.host"))
+                self.url_store = self.url_store.unionByName(
+                    explode("stash_links").select(
+                        "l.domain", "l.url", F.col("page_url").alias("origin"),
+                        _stash_key(rnd, F.col("page_pos"),
+                                   F.col("l.link_pos")).alias("stash_key"),
+                        "l.host"))
 
             adm_counts, seen_delta = fut_seen.result()
             admitted_count = sum(adm_counts.values())
@@ -1029,12 +1019,13 @@ class CrawlEngine:
         if self.frontier is None:
             self.seed()
         limit = self.max_rounds if max_rounds is None else max_rounds
-        while self.round < limit:
-            if not self.run_round():
-                break
+        committed = None  # the round this run last committed
+        while self.round < limit and self.run_round():
             if checkpoint_every and self.round % checkpoint_every == 0:
                 self.checkpoint()
-        self.checkpoint()
+                committed = self.round
+        if committed != self.round:
+            self.checkpoint()
         return {"rounds": self.round, "fetched": self.fetch_seq,
                 "frontier_ops": self.seq, **self.seen.stats()}
 
@@ -1123,31 +1114,41 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- checkpoint
     def checkpoint(self):
-        rnd = self.round
-        fdir = self.store.state_dir("frontier", rnd)
-        sdir = self.store.state_dir("url_store", rnd)
+        """Commit the state as of ``self.round`` (the frontier view,
+        url_store and seen-set blob to the new commit's own paths), then
+        re-base the engine on it."""
+        commit = self.store.next_commit()
+        fdir = self.store.commit_dir("frontier", commit)
+        sdir = self.store.commit_dir("url_store", commit)
+        # overwrite: a checkpoint that died may have left these uncommitted
         self._frontier_view().write.mode("overwrite").parquet(fdir)
         self.url_store.write.mode("overwrite").parquet(sdir)
-        self.store.save_bloom(rnd, self.seen.to_bytes())
+        self.store.save_bloom(commit, self.seen.to_bytes())
         # the buffers flush into the part dirs of the round this manifest
         # commits (lineage is only ever buffered)
         for name, t in self.buffers.items():
-            d = self.store.state_dir(name, rnd)
+            d = self.store.state_dir(name, self.round)
             os.makedirs(d, exist_ok=True)
             pq.write_table(t, os.path.join(d, "part.parquet"))
         self.buffers = {}
-        self.store.commit({
-            "round": rnd, "seq": self.seq, "fetch_seq": self.fetch_seq,
-            "frontier_count": self.frontier_count,
-            # informational only (restore reads the blob itself); named
-            # for the seen-set mode, not "bloom_n", since cuckoo counts
-            # land here too
-            "seen_n": self.seen.n,
+        manifest = {
+            **{name: getattr(self, name) for name in _COUNTERS},
+            "commit": commit,
+            "seen_n": self.seen.n,  # informational: resume reads the blob
             "frontier_dir": fdir, "url_store_dir": sdir,
             "seq_orderable": self._seq_orderable,
             "engine": self.options,
-        })
-        self.store.gc(rnd)
+        }
+        self.store.commit(manifest)
+        self.store.gc(commit)
+        self._rebase(*self._committed_state(manifest))
+
+    def _committed_state(self, m: dict) -> tuple[DataFrame, DataFrame]:
+        """Manifest ``m``'s frontier and url_store: lazy, schema-given
+        parquet reads, which launch no job."""
+        read = self.spark.read
+        return (read.schema(FRONTIER_SCHEMA).parquet(m["frontier_dir"]),
+                read.schema(_STORE_SCHEMA_W_HOST).parquet(m["url_store_dir"]))
 
     # ----------------------------------------------------------------- resume
     @classmethod
@@ -1161,32 +1162,24 @@ class CrawlEngine:
         m = SnapshotStore(workdir).last_manifest()
         if m is None:
             raise FileNotFoundError(f"no committed snapshot under {workdir}")
-        options = m.get("engine", {})
+        options = m["engine"]
         for name, value in (("n_partitions", n_partitions),
                             ("collect_documents", collect_documents)):
             if value is not None and options.setdefault(name, value) != value:
                 raise ValueError(f"resume({name}={value!r}) contradicts the "
                                  f"snapshot's {name}={options[name]!r}")
         eng = cls(spark, corpus_dir, workdir, **options)
-        eng.round = m["round"]
+        for name in _COUNTERS:
+            setattr(eng, name, m[name])
+        eng._seq_orderable = m["seq_orderable"]
         # a dead run's uncommitted parts would land beside this run's
         # re-run rounds, under another name if the layout differs
         eng.store.drop_after(_PART_TABLES, eng.round)
-        eng.seq = m["seq"]
-        eng.fetch_seq = m["fetch_seq"]
-        eng.frontier_count = m["frontier_count"]
         # the blob decides the filter (an unsynced shard manifest makes
         # the first sharded round re-sync every shard file from it)
-        eng._seen = from_blob(eng.store.load_bloom(m["round"]), eng.params,
+        eng._seen = from_blob(eng.store.load_bloom(m["commit"]), eng.params,
                               workdir)
-        eng.frontier = spark.read.schema(FRONTIER_SCHEMA) \
-            .parquet(m["frontier_dir"]).localCheckpoint(eager=True)
-        eng._base_count = eng.frontier_count
-        # absent from older snapshots: False is the TakeOrdered dequeue,
-        # correct for any frontier
-        eng._seq_orderable = m.get("seq_orderable", False)
-        eng.url_store = spark.read.schema(_STORE_SCHEMA_W_HOST) \
-            .parquet(m["url_store_dir"]).localCheckpoint(eager=True)
+        eng._rebase(*eng._committed_state(m))
         return eng
 
     # -------------------------------------------------------------- accessors

@@ -28,6 +28,7 @@ from ..engine.cuckoo import (ShardedCuckoo, ShardFileProbe,
                              _shard_cache_max_bytes)
 from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import canonicalize, host_of
+from ..sources.snapshot import write_atomic
 from .frontier import seen_delta, seen_round_pass
 
 
@@ -254,10 +255,7 @@ class CuckooSeen(_SeenSet):
             path = os.path.join(
                 self._shard_dir,
                 f"shard{s:05d}_v{self._sync_n:06d}_{self._run_tag}.bin")
-            tmp = path + ".tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(self.cuckoo.filters[s].to_bytes())
-            os.replace(tmp, path)
+            write_atomic(path, self.cuckoo.filters[s].to_bytes())
             if s in manifest:
                 superseded.append(manifest[s])
             manifest[s] = path

@@ -200,16 +200,27 @@ def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
                                      oracle_result, monkeypatch):
     """Kill after round k, resume from snapshot → identical final state
     (SURVEY §5.2-3; BASELINE.json 'resume exactly from checkpoints').
-    Both runs checkpoint every round, and each commit keeps only its own
-    and the previous round's frontier, url_store and seen-set state.
-    Resume builds no empty seen-set: the snapshot's is the only one."""
+    Both runs checkpoint every round — ``run`` commits each round once —
+    and each commit keeps only its own and the previous commit's
+    frontier, url_store and seen-set state. Resume builds no empty
+    seen-set: the snapshot's is the only one."""
     from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
+    from delver_spark.sources.snapshot import SnapshotStore
 
     wd = str(tmp_path_factory.mktemp("crawl_resume"))
     eng1 = CrawlEngine(spark, unit_corpus, wd)
+    commits = []
+    real_commit = SnapshotStore.commit
+
+    def commit(self, manifest):
+        commits.append(manifest["round"])
+        real_commit(self, manifest)
+
+    monkeypatch.setattr(SnapshotStore, "commit", commit)
     # commits snapshots at rounds 1-3, then "dies"
     eng1.run(max_rounds=3, checkpoint_every=1)
+    assert commits == [1, 2, 3]
 
     new_seen_calls = []
     real_new_seen = crawl.new_seen
@@ -232,6 +243,187 @@ def test_resume_equals_uninterrupted(spark, unit_corpus, tmp_path_factory,
                           eng2.bloom.bit_positions())
     for name in ("frontier", "url_store", "bloom"):
         assert len(os.listdir(os.path.join(wd, name))) <= 2, name
+
+
+class _Killed(Exception):
+    """A checkpoint killed before its manifest rename."""
+
+
+def _halve(path):
+    """Truncate the file at ``path``, or every file under it, to half its
+    bytes: a write that stopped halfway."""
+    files = [os.path.join(r, f) for r, _, fs in os.walk(path) for f in fs] \
+        if os.path.isdir(path) else [path]
+    for f in files:
+        os.truncate(f, os.path.getsize(f) // 2)
+
+
+def _inject_kill(monkeypatch, wd, target):
+    """Make the checkpoint's write of ``target`` under workdir ``wd``
+    stop halfway and raise: the frontier or url_store dir (Spark's
+    write, then every file halved), the seen-set blob (half its bytes
+    written) or a part flush (the driver buffer's file, halved). Returns
+    the list the fault appends its path to when it fires."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from delver_spark.sources import snapshot
+
+    fired = []
+    under = os.path.join(wd, "bloom" if target == "seen_blob" else target) \
+        + os.sep
+
+    def kill(path):
+        _halve(path)
+        fired.append(path)
+        raise _Killed(path)
+
+    if target in ("frontier", "url_store"):
+        real = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            real(self, path, *args, **kwargs)
+            if path.startswith(under):
+                kill(path)
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    elif target == "part":
+        real_write = pq.write_table
+
+        def write_table(table, where, *args, **kwargs):
+            real_write(table, where, *args, **kwargs)
+            kill(where)
+
+        monkeypatch.setattr(pq, "write_table", write_table)
+    else:
+        assert target == "seen_blob"
+
+        class HalfWriter:
+            def __init__(self, f, path):
+                self.f, self.path = f, path
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self.f.close()
+
+            def write(self, data):
+                self.f.write(data[:len(data) // 2])
+                self.f.close()
+                fired.append(self.path)
+                raise _Killed(self.path)
+
+        def half_open(path, mode="r", *args, **kwargs):
+            f = open(path, mode, *args, **kwargs)
+            if "w" in mode and path.startswith(under):
+                return HalfWriter(f, path)
+            return f
+
+        monkeypatch.setattr(snapshot, "open", half_open, raising=False)
+    return fired
+
+
+@pytest.fixture(scope="module")
+def committed_crawl(spark, unit_corpus, tmp_path_factory):
+    """A crawl of 6 rounds, each committed by ``run(checkpoint_every=1)``,
+    then committed once more (a second commit of round 6). Returns the
+    workdir, each commit's manifest, the number ``run`` made, and the
+    state paths each commit wrote."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from delver_spark.operators.crawl import CrawlEngine
+    from delver_spark.sources import snapshot
+
+    wd = str(tmp_path_factory.mktemp("crawl_committed"))
+    manifests, written = [], [[]]
+    mp = pytest.MonkeyPatch()
+    real_parquet, real_write = DataFrameWriter.parquet, snapshot.write_atomic
+    real_commit = snapshot.SnapshotStore.commit
+
+    def parquet(self, path, *args, **kwargs):
+        written[-1].append(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    def write_atomic(path, data):
+        written[-1].append(path)
+        return real_write(path, data)
+
+    def commit(self, manifest):
+        manifests.append(manifest)
+        written.append([])
+        return real_commit(self, manifest)
+
+    mp.setattr(DataFrameWriter, "parquet", parquet)
+    mp.setattr(snapshot, "write_atomic", write_atomic)
+    mp.setattr(snapshot.SnapshotStore, "commit", commit)
+    try:
+        eng = CrawlEngine(spark, unit_corpus, wd)
+        eng.run(max_rounds=6, checkpoint_every=1)
+        n_run = len(manifests)
+        eng.checkpoint()
+    finally:
+        mp.undo()
+    return wd, manifests, n_run, written[:-1]
+
+
+def test_commits_write_fresh_state_paths(committed_crawl):
+    """``run`` commits each round once, and no commit writes a path an
+    earlier manifest references — a second commit of round 6 included:
+    each commit's frontier, url_store and seen-set blob go to paths
+    named by its own commit number."""
+    wd, manifests, n_run, written = committed_crawl
+    assert n_run == 6
+    assert [m["round"] for m in manifests] == [1, 2, 3, 4, 5, 6, 6]
+    assert [m["commit"] for m in manifests] == list(range(7))
+    for i, m in enumerate(manifests):
+        refs = {p for e in manifests[:i]
+                for p in (e["frontier_dir"], e["url_store_dir"])}
+        assert {m["frontier_dir"], m["url_store_dir"]} <= set(written[i])
+        assert not refs & set(written[i]), i
+    blobs = [p for w in written for p in w
+             if p.startswith(os.path.join(wd, "bloom", ""))]
+    assert len(blobs) == len(set(blobs)) == 7
+
+
+@pytest.mark.parametrize("when,target", [
+    ("fresh", "frontier"), ("fresh", "url_store"), ("fresh", "seen_blob"),
+    ("fresh", "part"), ("recommit", "frontier"), ("recommit", "url_store"),
+    ("recommit", "seen_blob")])
+def test_checkpoint_killed_at_each_write_resumes_exactly(
+        spark, unit_corpus, oracle_result, engine_result, committed_crawl,
+        tmp_path, monkeypatch, when, target):
+    """A checkpoint that dies at any of its writes before the manifest
+    rename — the frontier dir, the url_store dir, the seen-set blob, a
+    part flush — leaves the last commit intact: resume continues from
+    it and the crawl ends equal to the uninterrupted one and the oracle.
+    ``fresh`` kills the commit of round 7; ``recommit`` kills a second
+    commit of the committed round 6 (it flushes no part)."""
+    import shutil
+
+    from delver_spark.operators.crawl import CrawlEngine
+
+    wd = str(tmp_path / "wd")
+    shutil.copytree(committed_crawl[0], wd)
+    eng = CrawlEngine.resume(spark, unit_corpus, wd)
+    if when == "fresh":
+        assert eng.run_round()
+    fired = _inject_kill(monkeypatch, wd, target)
+    with pytest.raises(_Killed):
+        eng.checkpoint()
+    assert fired
+    monkeypatch.undo()
+
+    eng2 = CrawlEngine.resume(spark, unit_corpus, wd)
+    assert eng2.round == 6
+    eng2.run()
+    assert _order_tuples_engine(eng2) == _order_tuples_oracle(oracle_result)
+    assert _order_tuples_engine(eng2) == _order_tuples_engine(engine_result)
+    assert eng2.bloom.to_bytes() == engine_result.bloom.to_bytes()
+    assert np.array_equal(oracle_result.bloom.bit_positions(),
+                          eng2.bloom.bit_positions())
+    got = _lineage_tuples(eng2.lineage_df().to_dict("records"))
+    assert got == _lineage_tuples(oracle_result.lineage)
 
 
 def test_resume_replays_engine_options(spark, unit_corpus,
@@ -274,7 +466,7 @@ def test_resume_from_single_generation_blob(spark, unit_corpus,
     eng1.run(max_rounds=3)
     assert len(eng1.bloom.blooms) == 1  # so the legacy blob is lossless
     gen0 = eng1.bloom.gen0.to_bytes()
-    eng1.store.save_bloom(eng1.round, gen0)
+    eng1.store.save_bloom(eng1.store.last_manifest()["commit"], gen0)
 
     eng2 = CrawlEngine.resume(spark, unit_corpus, wd)
     assert eng2.seen_filter == "bloom"
@@ -339,26 +531,41 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
 
 
 def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
-    """One steady small-G dfs round launches at most 4 Spark jobs: the
-    dequeue is one collect (2 jobs), the extract comes back in one more
-    (plus the payload broadcast), and the round finishes on the driver.
-    The corpus has golden pixels: they ride the dequeued keys, so they
-    add no job. Jobs are counted across run_round from the status
-    tracker, ungrouped — a thread pool's threads do not inherit a job
-    group, so a group tag would miss their jobs."""
+    """Each steady small-G dfs round, rounds 1-4, launches at most 4
+    Spark jobs: the dequeue is one collect (2 jobs), the extract comes
+    back in one more (plus the payload broadcast), and the round
+    finishes on the driver; the url_store's stash unions add none. The
+    corpus has golden pixels: they ride the dequeued keys, so they add
+    no job. A resume launches one, the engine construction's schema
+    inference of the payload table: it reads the committed state lazily.
+    Jobs are counted from the status tracker, ungrouped — a thread
+    pool's threads do not inherit a job group, so a group tag would miss
+    their jobs."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", None)
     st = sc.statusTracker()
+
+    def jobs_of(call):
+        before = set(st.getJobIdsForGroup(None))
+        out = call()
+        return out, len(set(st.getJobIdsForGroup(None)) - before)
+
     wd = str(tmp_path_factory.mktemp("crawl_jobs"))
     eng = CrawlEngine(spark, unit_corpus, wd)
     eng.seed()
     assert eng.run_round()  # round 0 has no tombstones yet
-    before = set(st.getJobIdsForGroup(None))
-    assert eng.run_round()
-    jobs = set(st.getJobIdsForGroup(None)) - before
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    jobs = []
+    for _ in range(4):
+        ok, n = jobs_of(eng.run_round)
+        assert ok
+        jobs.append(n)
+    assert all(0 < n <= 4 for n in jobs), jobs
+    eng.checkpoint()
+    resumed, n = jobs_of(lambda: CrawlEngine.resume(spark, unit_corpus, wd))
+    assert resumed.round == 5
+    assert n <= 1
 
 
 def test_big_g_small_round_job_budget(spark, tmp_path_factory,
