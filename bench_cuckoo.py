@@ -1,17 +1,17 @@
 #!/usr/bin/env python
-"""Cuckoo URL-seen filter bench (engine/cuckoo.py): distributed sharded
-build + driver-side batch probe throughput, at the SPARK_GRAFT_CPUS
-core count — run at two levels (e.g. 2 and 8) for the N→4N scaling
-read. The build is one zero-copy Arrow hash pass over the URL column,
-one shard shuffle, and a per-shard canonical insert inside
-applyInPandas; the sequential insert loop is the per-shard compute
-floor, so parallelism = #shards (sized 4× cores here).
+"""Cuckoo URL-seen filter bench (engine/cuckoo.py): distributed build +
+driver-side batch probe throughput, at the SPARK_GRAFT_CPUS core count
+— run at two levels (e.g. 2 and 8) for the N→4N scaling read. The
+build is the crawl engine's: one zero-copy Arrow hash pass over the URL
+column derives the (shard, i1, fp) rows on the executors
+(frontier.cuckoo_pairs_for_urls), and the driver applies them with the
+one canonical insert (ShardedCuckoo.add_pairs_canonical), whose
+sequential per-shard loop is the compute floor.
 
-Extrapolated shape to 10^10 URLs: the hash pass and shard shuffle are
-linear in rows with no driver state; per-shard filters build where
-their keys land and only the m·8-byte blobs cross the driver — the
-same G-bounded contract as the bloom bitmap. Deletion (the operation
-the bloom can't do) is a driver-side O(1) bucket edit per key.
+Extrapolated shape to 10^10 URLs: the hash pass is linear in rows with
+no driver state and only 24-byte rows cross to the driver-resident
+filter. Deletion (the operation the bloom can't do) is a driver-side
+O(1) bucket edit per key.
 
 Prints one JSON line; appends a row to BENCH/BASELINE.md.
 
@@ -31,10 +31,10 @@ N_URLS = int(os.environ.get("SPARK_GRAFT_CUCKOO_URLS", 5_000_000))
 
 
 def main():
-    import numpy as np
     from pyspark.sql import functions as F
 
     from delver_spark.engine.cuckoo import ShardedCuckoo
+    from delver_spark.operators.frontier import cuckoo_pairs_for_urls
     from delver_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -51,7 +51,9 @@ def main():
 
     shards = cpus * 4
     t0 = time.perf_counter()
-    sc = ShardedCuckoo.from_urls_df(urls, shards, capacity=N_URLS)
+    sc = ShardedCuckoo.empty(shards, N_URLS)
+    pairs = cuckoo_pairs_for_urls(urls, shards, sc.filters[0].m)
+    sc.add_pairs_canonical(pairs[:, 0], pairs[:, 1], pairs[:, 2])
     build_s = time.perf_counter() - t0
 
     # driver-side probe throughput: half present, half absent

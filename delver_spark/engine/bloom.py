@@ -19,12 +19,16 @@ content (set of set-bit positions); equality is compared on positions.
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 
 from .murmur import hash128, hash128_batch
 
 _U = np.uint64
+# set bits per byte value: a bitset's popcount without a python loop
+_POPCOUNT8 = np.array([bin(b).count("1") for b in range(256)],
+                      dtype=np.int64)
 
 
 class BloomOverflow(Exception):
@@ -62,13 +66,6 @@ class BloomFilter:
     def probes_batch(self, items) -> np.ndarray:
         """(n, k) uint64 probe positions for a batch — vectorized."""
         upper, lower = hash128_batch(items)
-        return self._probes_from_hash(upper, lower)
-
-    def probes_batch_buf(self, buf: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """Zero-copy variant over a concatenated utf-8 buffer + lengths
-        (e.g. straight out of an Arrow string array's buffers)."""
-        from .murmur import hash128_batch_buf
-        upper, lower = hash128_batch_buf(buf, lens)
         return self._probes_from_hash(upper, lower)
 
     def _probes_from_hash(self, upper: np.ndarray, lower: np.ndarray) -> np.ndarray:
@@ -114,7 +111,16 @@ class BloomFilter:
         """Vectorized membership for a batch → bool ndarray."""
         if len(items) == 0:
             return np.zeros(0, dtype=bool)
-        pos = self.probes_batch(list(items))  # (n, k)
+        return self.contains_batch_hashed(*hash128_batch(list(items)))
+
+    def contains_batch_hashed(self, upper: np.ndarray,
+                              lower: np.ndarray) -> np.ndarray:
+        """Membership from murmur halves — the probe the crawl admission
+        runs, with no url string materialized."""
+        return self._has_positions(self._probes_from_hash(upper, lower))
+
+    def _has_positions(self, pos: np.ndarray) -> np.ndarray:
+        """Rows of ``pos`` (n, k) whose k bits are all set."""
         bits = (self.words[(pos >> _U(6)).astype(np.int64)] >> (pos & _U(63))) & _U(1)
         return bits.all(axis=1)
 
@@ -125,6 +131,10 @@ class BloomFilter:
 
     def copy(self) -> "BloomFilter":
         return BloomFilter(self.max_n, self.p, words=self.words, n=self.n)
+
+    def bit_count(self) -> int:
+        """Number of set bits (``len(bit_positions())``, vectorized)."""
+        return int(_POPCOUNT8[self.words.view(np.uint8)].sum())
 
     def bit_positions(self) -> np.ndarray:
         """Sorted positions of set bits — the logical bitmap content."""
@@ -153,3 +163,32 @@ class BloomFilter:
         n = int(blob[i2 + 1 : i3])
         words = np.frombuffer(blob[i3 + 1 :], dtype=np.uint64)
         return cls(max_n, p, words=words, n=n)
+
+
+class BloomDelta(NamedTuple):
+    """The bloom family's round kernel. It holds only the filter's
+    parameters, so a Spark task closure that captures it ships two
+    numbers, never a live filter. A delta is the bitset words of a fresh
+    ``BloomFilter(max_n, p)`` holding a batch of urls; deltas merge by
+    OR and commit through ``merge_words``, which equals the per-op adds
+    while no bounds check can trip."""
+
+    max_n: int
+    p: float
+
+    def __call__(self, upper: np.ndarray, lower: np.ndarray) -> np.ndarray:
+        """The delta of the urls whose murmur halves are (upper, lower),
+        set a chunk at a time: the (n, k) probe positions of a whole
+        task would take ~0.5 KB a url at k=20."""
+        local, step = BloomFilter(self.max_n, self.p), 1 << 16
+        for i in range(0, len(upper), step):
+            local._set_positions(local._probes_from_hash(
+                upper[i:i + step], lower[i:i + step]))
+        return local.words
+
+    def merge(self, blobs) -> np.ndarray:
+        """OR of the deltas' ``tobytes()`` blobs (no blob: all zero)."""
+        words = BloomFilter(self.max_n, self.p).words
+        for b in blobs:
+            words |= np.frombuffer(b, dtype=np.uint64)
+        return words

@@ -15,8 +15,8 @@ Slot value 0 means empty; real fingerprints are forced into
 [1, 0xFFFF]. Keys hash with the SAME murmur3-128 the blooms use
 (engine/murmur.py): ``i1 = h1 & (m-1)``, ``fp = (h2 >> 16) & 0xFFFF``,
 and the partner bucket is ``i2 = i1 ^ scramble(fp)`` — recoverable
-from EITHER bucket without the key, which is what makes delete and
-filter-merge possible. Expected false-positive rate ≈ 2·4/2¹⁶ ≈ 1.2e-4
+from EITHER bucket without the key, which is what makes delete
+possible. Expected false-positive rate ≈ 2·4/2¹⁶ ≈ 1.2e-4
 per probe at full load; no false negatives for inserted keys.
 
 Deletion contract (standard cuckoo caveat, Fan §3.3): only delete keys
@@ -25,18 +25,21 @@ fingerprint-collides with a present one would strip the present key's
 slot and create a false negative.
 
 Determinism: inserts are order-dependent (eviction paths), so the
-distributed builder (:meth:`ShardedCuckoo.from_urls_df`) canonicalizes
-per-shard insert order by sorting the (i1, fp) pairs — the same shard
-contents produce bit-identical bytes regardless of partitioning.
+one canonical insert (:meth:`ShardedCuckoo.add_pairs_canonical`)
+applies each shard's sorted-unique (i1, fp) pairs — the same key set
+produces bit-identical bytes whatever its order or partitioning.
 
-Scale shape (the 10^10-frontier story): one hash pass over the URL
-column (zero-copy Arrow buffers, no per-row Python), one hash shuffle
-on the shard key, each shard filter built where its keys land; only
-the per-shard byte blobs (m·8 bytes each) cross the driver, exactly
-the G-bounded contract the bloom bitmap broadcast uses.
+Scale shape (the 10^10-frontier story): the executors hash the URL
+column zero-copy and derive the (shard, i1, fp) rows with
+:class:`CuckooDelta` (operators/frontier.py ``seen_round_pass``); only
+those 24-byte rows reach the driver-resident filter, and a filter too
+big to broadcast is probed shard by shard from files
+(:class:`ShardFileProbe`).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -118,8 +121,7 @@ class CuckooFilter:
     def _insert_pair(self, i1: int, fp: int) -> bool:
         """Seen-set add of a derived (bucket, fingerprint) pair —
         idempotent (present pair is not inserted twice). ``i1`` may be
-        EITHER candidate bucket (the pair is unordered), which is what
-        lets :meth:`merge` reinsert from stored slots. Returns True if
+        EITHER candidate bucket (the pair is unordered). Returns True if
         the pair was newly added."""
         if self._pair_present(i1, fp):
             return False
@@ -172,19 +174,11 @@ class CuckooFilter:
         h1, h2 = hash128_batch(items)
         return self.add_many_hashed(h1, h2)
 
-    def add_many_hashed(self, h1: np.ndarray, h2: np.ndarray,
-                        canonical: bool = False) -> int:
+    def add_many_hashed(self, h1: np.ndarray, h2: np.ndarray) -> int:
         i1, fp = _derive(h1, h2, self.m)
-        pairs = np.stack([i1, fp], axis=1)
-        if canonical:
-            # canonical insert order: unique rows, sorted — the
-            # distributed builder's determinism contract — through the
-            # fast bulk loop (same placement rules, pinned byte-equal
-            # to the _insert_pair loop in t:test_cuckoo)
-            return self._bulk_insert(np.unique(pairs, axis=0))
         added = 0
-        for a, b in pairs:
-            added += self._insert_pair(int(a), int(b))
+        for a, b in zip(i1.tolist(), fp.tolist()):
+            added += self._insert_pair(a, b)
         return added
 
     def _bulk_insert(self, pairs: np.ndarray) -> int:
@@ -273,18 +267,7 @@ class CuckooFilter:
         return CuckooFilter(self.capacity, buckets=self.buckets.copy(),
                             n=self.n)
 
-    # -- merge / io ---------------------------------------------------------
-    def merge(self, other: "CuckooFilter") -> "CuckooFilter":
-        """Idempotent union with a filter of the SAME geometry: every
-        occupied slot of ``other`` reinserts via its stored bucket (a
-        valid candidate — the pair is unordered). Raises CuckooFull if
-        the union exceeds the load limit."""
-        assert self.m == other.m, "cuckoo merge requires equal m"
-        occ_i, occ_s = np.nonzero(other.buckets)
-        for i, s in zip(occ_i.tolist(), occ_s.tolist()):
-            self._insert_pair(int(i), int(other.buckets[i, s]))
-        return self
-
+    # -- io ---------------------------------------------------------------
     def to_bytes(self) -> bytes:
         head = (b"CKF1\n"
                 + self.capacity.to_bytes(8, "little")
@@ -313,12 +296,52 @@ def shard_of(h2: np.ndarray | int, shards: int):
                               else shards)
 
 
+class CuckooDelta(NamedTuple):
+    """The cuckoo family's round kernel. It holds only the sharded
+    filter's geometry, so a Spark task closure that captures it ships
+    two numbers, never the filter (~20 GB at 10^10 urls). A delta is the
+    derived ``(shard, i1, fp)`` rows of a batch of urls as an (n, 3)
+    int64 array (i1 < m and fp <= 0xFFFF make the view lossless);
+    deltas merge by concatenation and commit through
+    :meth:`ShardedCuckoo.add_pairs_canonical`, whose per-shard sort
+    makes their order irrelevant."""
+
+    shards: int
+    m: int
+
+    def __call__(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """The delta of the urls whose murmur halves are (h1, h2)."""
+        i1, fp = _derive(h1, h2, self.m)
+        return np.stack([shard_of(h2, self.shards).view(np.int64),
+                         i1.view(np.int64), fp.view(np.int64)], axis=1)
+
+    def merge(self, blobs) -> np.ndarray:
+        """Concatenation of the deltas' ``tobytes()`` blobs."""
+        return np.concatenate(
+            [np.zeros((0, 3), dtype=np.int64)]
+            + [np.frombuffer(b, dtype=np.int64).reshape(-1, 3)
+               for b in blobs])
+
+
+def _routed_contains(shards: int, shard_filter, h1: np.ndarray,
+                     h2: np.ndarray) -> np.ndarray:
+    """Shard-routed membership from murmur halves: each shard's rows
+    probe the :class:`CuckooFilter` that ``shard_filter(s)`` returns."""
+    sh = shard_of(h2, shards).astype(np.int64)
+    out = np.zeros(len(h1), dtype=bool)
+    for s in np.unique(sh):
+        ix = np.nonzero(sh == s)[0]
+        out[ix] = shard_filter(int(s)).contains_batch_hashed(h1[ix], h2[ix])
+    return out
+
+
 class ShardedCuckoo:
     """A list of cuckoo shards routed on ``shard_of(h2)`` — the
-    sharded URL-seen form from the north star. Build distributedly
-    with :meth:`from_urls_df`; probe/delete/add driver-side (the shard
-    blobs together are the same size class as the bloom bitmap and
-    ship to workers as one broadcast when probed inside a plan)."""
+    sharded URL-seen form from the north star. The executors derive a
+    round's rows (:class:`CuckooDelta`); the filter itself stays on the
+    driver, where rows commit, delete and probe (a plan probes it as one
+    broadcast blob, or by shard files when it outgrows the shard-cache
+    budget)."""
 
     def __init__(self, filters: list[CuckooFilter]):
         self.filters = filters
@@ -328,80 +351,25 @@ class ShardedCuckoo:
         # shard probe plan (only changed blobs rewrite)
         self.dirty: set[int] = set()
 
-    @staticmethod
-    def _cap_shard(capacity: int, shards: int) -> int:
-        """Per-shard capacity: the expected uniform share + 25% headroom
-        (routing is hash-uniform; the slack absorbs binomial skew)."""
-        return max(1024, int(np.ceil(capacity / shards * 1.25)))
-
     @classmethod
     def empty(cls, shards: int, capacity: int) -> "ShardedCuckoo":
         """Fresh filter sized for ``capacity`` TOTAL keys across
-        ``shards`` shards — the crawl engine's seen-set constructor."""
-        return cls([CuckooFilter(cls._cap_shard(capacity, shards))
-                    for _ in range(shards)])
+        ``shards`` shards — the crawl engine's seen-set constructor.
+        Each shard holds its expected uniform share + 25% headroom
+        (routing is hash-uniform; the slack absorbs binomial skew)."""
+        cap_shard = max(1024, int(np.ceil(capacity / shards * 1.25)))
+        return cls([CuckooFilter(cap_shard) for _ in range(shards)])
 
     @property
     def n(self) -> int:
         return sum(f.n for f in self.filters)
 
+    @property
+    def delta_kernel(self) -> CuckooDelta:
+        return CuckooDelta(self.shards, self.filters[0].m)
+
     def copy(self) -> "ShardedCuckoo":
         return ShardedCuckoo([f.copy() for f in self.filters])
-
-    # -- distributed build ---------------------------------------------------
-    @classmethod
-    def from_urls_df(cls, urls_df, shards: int,
-                     capacity: int | None = None) -> "ShardedCuckoo":
-        """Build from a single-string-column DataFrame in one hash pass
-        + one shard shuffle. Each shard filter is built where its keys
-        land (applyInPandas over the shard key); insert order is
-        canonicalized (sorted unique (i1, fp)) so the result is
-        bit-identical regardless of partitioning. ``capacity`` is the
-        TOTAL expected key count (default: one exact count job); each
-        shard gets 1.25× its expected share of headroom."""
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark.sql import functions as F  # noqa: F401
-
-        from .murmur import hash128_batch_buf
-
-        if capacity is None:
-            capacity = urls_df.count()
-        cap_shard = cls._cap_shard(capacity, shards)
-
-        def hash_pass(batches):
-            from .murmur import string_buf_views
-            for rb in batches:
-                arr = rb.column(0)
-                if len(arr) == 0:
-                    continue
-                if isinstance(arr, pa.ChunkedArray):
-                    arr = arr.combine_chunks()
-                h1, h2 = hash128_batch_buf(*string_buf_views(arr))
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(shard_of(h2, shards).astype(np.int32)),
-                     pa.array(h1.view(np.int64)),
-                     pa.array(h2.view(np.int64))],
-                    names=["shard", "h1", "h2"])
-
-        hashed = urls_df.mapInArrow(hash_pass,
-                                    "shard int, h1 long, h2 long")
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            f = CuckooFilter(cap_shard)
-            f.add_many_hashed(pdf["h1"].to_numpy().view(np.uint64),
-                              pdf["h2"].to_numpy().view(np.uint64),
-                              canonical=True)
-            return pd.DataFrame({"shard": [int(pdf["shard"].iloc[0])],
-                                 "blob": [f.to_bytes()]})
-
-        rows = (hashed.groupBy("shard")
-                .applyInPandas(build, "shard int, blob binary")
-                .collect())
-        blobs = {r["shard"]: r["blob"] for r in rows}
-        empty = CuckooFilter(cap_shard).to_bytes()
-        return cls([CuckooFilter.from_bytes(blobs.get(s, empty))
-                    for s in range(shards)])
 
     # -- driver-side ops -------------------------------------------------
     def contains_batch_hashed(self, h1: np.ndarray,
@@ -409,13 +377,8 @@ class ShardedCuckoo:
         """Vectorized membership from murmur halves, shard-routed — the
         probe shape the crawl admission mask uses (same signature as
         :meth:`CuckooFilter.contains_batch_hashed`)."""
-        sh = shard_of(h2, self.shards).astype(np.int64)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sh):
-            ix = np.nonzero(sh == s)[0]
-            out[ix] = self.filters[int(s)].contains_batch_hashed(
-                h1[ix], h2[ix])
-        return out
+        return _routed_contains(self.shards, self.filters.__getitem__,
+                                h1, h2)
 
     def contains_batch(self, items) -> np.ndarray:
         h1, h2 = hash128_batch(items)
@@ -429,26 +392,16 @@ class ShardedCuckoo:
         the caller's item order, so the sequential oracle and the
         distributed engine produce bit-identical filters from the same
         per-round insert SET."""
-        if len(items) == 0:
-            return 0
-        h1, h2 = hash128_batch(items)
-        sh = shard_of(h2, self.shards).astype(np.int64)
-        added = 0
-        for s in np.unique(sh):
-            ix = np.nonzero(sh == s)[0]
-            added += self.filters[int(s)].add_many_hashed(
-                h1[ix], h2[ix], canonical=True)
-            self.dirty.add(int(s))
-        return added
+        rows = self.delta_kernel(*hash128_batch(items))
+        return self.add_pairs_canonical(rows[:, 0], rows[:, 1], rows[:, 2])
 
     def add_pairs_canonical(self, shard: np.ndarray, i1: np.ndarray,
                             fp: np.ndarray) -> int:
-        """Round-commit add from PRE-DERIVED (shard, i1, fp) rows — the
-        engine's distributed form (frontier.seen_round_pass hashes
-        and derives on the executors; only the 24-byte rows reach the
-        driver). Bit-identical to :meth:`add_many_canonical` on the same
-        url set: _derive is deterministic and both insert each shard's
-        sorted-unique pairs."""
+        """The one canonical insert: PRE-DERIVED (shard, i1, fp) rows (a
+        :class:`CuckooDelta`), each shard's sorted-unique pairs through
+        the fast bulk loop (same placement rules as :meth:`_insert_pair`,
+        pinned byte-equal in t:test_cuckoo). The crawl engine's tasks
+        derive the rows, so only 24-byte rows reach the driver."""
         if len(shard) == 0:
             return 0
         i1 = np.asarray(i1, dtype=np.uint64)
@@ -493,13 +446,6 @@ class ShardedCuckoo:
             deleted += self.filters[int(s)].delete_pair(int(a), int(b))
             self.dirty.add(int(s))
         return deleted
-
-    def to_bytes_list(self) -> list[bytes]:
-        return [f.to_bytes() for f in self.filters]
-
-    @classmethod
-    def from_bytes_list(cls, blobs: list[bytes]) -> "ShardedCuckoo":
-        return cls([CuckooFilter.from_bytes(b) for b in blobs])
 
     def to_bytes(self) -> bytes:
         """Single-blob form for broadcast/snapshot (magic-prefixed so the
@@ -593,14 +539,6 @@ class ShardFileProbe:
 
     def contains_batch_hashed(self, h1: np.ndarray,
                               h2: np.ndarray) -> np.ndarray:
-        sh = shard_of(h2, self.shards).astype(np.int64)
-        out = np.zeros(len(h1), dtype=bool)
-        for s in np.unique(sh):
-            f = _load_shard_file(self.manifest[int(s)])
-            ix = np.nonzero(sh == s)[0]
-            out[ix] = f.contains_batch_hashed(h1[ix], h2[ix])
-        return out
-
-    def contains_batch(self, items) -> np.ndarray:
-        h1, h2 = hash128_batch(items)
-        return self.contains_batch_hashed(h1, h2)
+        return _routed_contains(
+            self.shards, lambda s: _load_shard_file(self.manifest[s]),
+            h1, h2)

@@ -168,22 +168,6 @@ def extract_outlinks(base_url: str, data: bytes) -> list[str]:
     return resolve_urls(base_url, dedupe_first(extract_urls_fsm(data)))
 
 
-_BARE_RE = re.compile(
-    r"(https?)://([A-Za-z0-9\-._~:/?#\[\]@!$%&()*+,;=]+)"
-)
-_HREF_RE = re.compile(r"""<a\b[^>]*?href=["']([^>"']*)[>"']""", re.S)
-
-
-def extract_urls_fast(data: str) -> list[str]:
-    """Vectorizable regex approximation of the FSM, exact on corpus-shaped
-    captions (well-formed ``<a href="...">`` + bare links). Equality with
-    ``extract_urls_fsm`` on generated corpora is asserted in tests."""
-    out = []
-    for m in re.finditer(r"""<a\b[^>]*?href=["']([^>"']*)["'>]|(https?://[A-Za-z0-9\-._~:/?#\[\]@!$%&()*+,;=]+)""", data, re.S):
-        out.append(m.group(1) if m.group(1) is not None else m.group(2))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Text extraction — /root/reference/extractors/text.go:26-51
 # ---------------------------------------------------------------------------

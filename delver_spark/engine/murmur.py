@@ -129,9 +129,10 @@ def string_buf_views(arr):
     """Zero-copy ``(data, lens)`` views of a pyarrow String ``Array``'s
     backing buffers — the input shape :func:`hash128_batch_buf` takes.
     Handles sliced arrays (non-zero ``arr.offset``). One shared helper so
-    the hashing sites (crawl admission, the sharded-probe shard key,
-    frontier.seen_round_pass and frontier.bloom_bits_for_urls) can never
-    drift on the offsets/arr.offset arithmetic. int32-offset ``string`` arrays only —
+    the hashing sites (crawl admission, the sharded-probe shard key, and
+    frontier's url-hashing tasks behind seen_round_pass and
+    bloom_bits_for_urls) can never drift on the offsets/arr.offset
+    arithmetic. int32-offset ``string`` arrays only —
     Spark's Arrow exchange produces exactly those."""
     bufs = arr.buffers()
     offsets = np.frombuffer(bufs[1], dtype=np.int32,

@@ -32,7 +32,11 @@ from __future__ import annotations
 
 import os
 
-from .bloom import BloomExceedsErrorRate, BloomFilter, BloomOverflow
+import numpy as np
+
+from .bloom import (BloomDelta, BloomExceedsErrorRate, BloomFilter,
+                    BloomOverflow)
+from .murmur import hash128_batch
 
 _BLOOM_ERRORS = (BloomOverflow, BloomExceedsErrorRate)
 _MAGIC = b"RBF1\n"
@@ -64,6 +68,10 @@ class RollingBloomFilter:
         """Newest generation's bitmap content (single-generation engines
         compare on this; use generation_bit_positions for the full state)."""
         return self.gen0.bit_positions()
+
+    @property
+    def delta_kernel(self) -> BloomDelta:
+        return BloomDelta(self.max_n, self.p)
 
     def generation_bit_positions(self) -> list:
         return [b.bit_positions() for b in self.blooms]
@@ -112,11 +120,21 @@ class RollingBloomFilter:
     def contains(self, data) -> bool:
         return any(b.contains(data) for b in self.blooms)
 
-    def contains_batch(self, items):
-        import numpy as np
-        out = np.zeros(len(items), dtype=bool)
+    def contains_batch(self, items) -> np.ndarray:
+        if len(items) == 0:
+            return np.zeros(0, dtype=bool)
+        return self.contains_batch_hashed(*hash128_batch(list(items)))
+
+    def contains_batch_hashed(self, upper: np.ndarray,
+                              lower: np.ndarray) -> np.ndarray:
+        """Any-generation membership from murmur halves
+        (rolling_bloom.go:203-213). Every generation shares (max_n, p),
+        hence m, k and the probe positions, so this is an OR of the
+        per-generation bit tests over ONE position array."""
+        pos = self.gen0._probes_from_hash(upper, lower)
+        out = np.zeros(len(upper), dtype=bool)
         for b in self.blooms:
-            out |= b.contains_batch(items)
+            out |= b._has_positions(pos)
         return out
 
     # -- reference-parity persistence (generation 0 only) --------------------

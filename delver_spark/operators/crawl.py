@@ -100,7 +100,7 @@ from .frontier import (
     dequeue,
     make_robots_udf,
 )
-from .seen import from_blob, new_seen
+from .seen import from_blob, new_seen, seen_family
 
 _STORE_SCHEMA_W_HOST = STORE_SCHEMA.add("host", "string", False)
 
@@ -315,9 +315,7 @@ class CrawlEngine:
         # stash/refill, maxDepth=1, articles = depth>0 fetched pages)
         if mode not in ("dfs", "news"):
             raise ValueError(f"mode must be 'dfs' or 'news', got {mode!r}")
-        if seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError("seen_filter must be 'bloom' or 'cuckoo', got "
-                             f"{seen_filter!r}")
+        seen_family(seen_filter)  # raises on an unknown family
         self.mode = mode
         # rows-per-host count above which the dequeue pre-cuts a host with
         # the exact salted two-phase ranking (frontier.dequeue docstring).
@@ -702,7 +700,7 @@ class CrawlEngine:
         marker row per unquarantined fetched page) and
         :func:`_admission_keep` probes the live seen-set filter; winners
         rank by ``(page_pos, link_pos)``; the seen-set delta comes from
-        the same hashes (``frontier.seen_delta``). The
+        the same hashes (``seen.delta``, the family's delta kernel). The
         admitted and stash rows join the frontier and the url_store as
         local relations, which launch no job."""
         import pyarrow.compute as pc
@@ -909,7 +907,7 @@ class CrawlEngine:
           seen-set's probe plan, broadcast or shard files;
         - ONE seen-set pass over the round's inserts (non-quarantined
           fetched urls ∪ admitted ``(url, partition_id)``;
-          ``frontier.seen_round_pass``): per-partition admitted counts
+          ``seen.round_pass``): per-partition admitted counts
           plus the seen-set delta, one ``toArrow``, overlapping the
           stash union.
 

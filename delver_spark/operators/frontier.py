@@ -1,19 +1,21 @@
-"""Frontier primitives: politeness dequeue, bloom probe/merge, robots gate.
+"""Frontier primitives: politeness dequeue, the seen-set's round pass
+and admission mask, robots gate.
 
 Scale notes (10^10-row frontier, SURVEY §4.2):
   - dequeue is per-host ranking (distributed window over the host-hash
     partitioning) followed by a global top-G, which Spark executes as
     TakeOrdered (per-partition top-G, then merge of G-row heaps) — no
     single-partition global sort ever touches the full frontier;
-  - a big crawl round's seen-set delta is built per task in numpy by
+  - a big crawl round's seen-set delta is built per task by
     :func:`seen_round_pass` — in the same pass that counts the admitted
-    rows — and OR-merged on the driver after one collect of at most
-    one bitset per task; a small round runs the same kernel,
-    :func:`seen_delta`, on the driver over the hashes it already holds;
-    :func:`bloom_bits_for_urls` keeps the ``treeAggregate(depth=2)``
-    merge (BASELINE.json names this topology) for inputs with no round
-    bound. A big round broadcasts the merged filter for its membership
-    probes;
+    rows — with the delta kernel of the seen-set's family (the bloom's
+    ``BloomDelta``, the cuckoo's ``CuckooDelta``), and merged on the
+    driver after one collect of at most one delta per task; a small
+    round runs the same kernel on the driver over the hashes it already
+    holds (operators/seen.py). :func:`bloom_bits_for_urls` keeps the
+    ``treeAggregate(depth=2)`` merge (BASELINE.json names this topology)
+    for inputs with no round bound. The admission mask probes whichever
+    filter it is given through its ``contains_batch_hashed``;
   - the politeness budget is applied BEFORE any salting (it is a semantic
     limit, not an optimization — SURVEY §4.2.2).
 """
@@ -27,8 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..engine.bloom import BloomFilter
+from ..engine.bloom import BloomDelta
+from ..engine.cuckoo import CuckooDelta
 from ..engine.robots import allowed_batch
+from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import path_of
 
 FRONTIER_SCHEMA = T.StructType([
@@ -210,16 +214,28 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
     return batch.withColumn("pos", F.row_number().over(w_pos) - 1)
 
 
+def _url_hashes(batches):
+    """The murmur halves of the first column of a task's Arrow batches,
+    hashed zero-copy from the string buffers (no python string objects);
+    ``None`` when the task has no rows."""
+    from ..engine.murmur import hash128_batch_buf, string_buf_views
+    hashes = [hash128_batch_buf(*string_buf_views(rb.column(0)))
+              for rb in batches if rb.num_rows]
+    if not hashes:
+        return None
+    return tuple(np.concatenate(h) for h in zip(*hashes))
+
+
 def bloom_bits_for_urls(urls_df: DataFrame, max_n: int, p: float,
                         partitions: int | None = None) -> np.ndarray:
     """Per-partition numpy bitsets OR-merged via treeAggregate(depth=2)
     (SURVEY §4.2.3). ``urls_df`` must have a single string column.
 
-    The per-partition bitset is built inside mapInPandas (Arrow transfer,
-    no per-row pickling); only the P partition bitsets flow through the
+    The per-partition bitset is the bloom kernel's delta
+    (``BloomDelta``), built inside mapInArrow (Arrow transfer, no
+    per-row pickling); only the P partition bitsets flow through the
     RDD treeAggregate."""
-    proto = BloomFilter(max_n, p)
-    nwords = len(proto.words)
+    kernel = BloomDelta(max_n, p)
     if partitions is not None:
         # callers that know the url count bound the number of bitsets
         # (each is m/8 bytes through the treeAggregate) — small rounds
@@ -229,68 +245,35 @@ def bloom_bits_for_urls(urls_df: DataFrame, max_n: int, p: float,
     def build(it):
         import pyarrow as pa
 
-        from ..engine.murmur import string_buf_views
-        local = BloomFilter(max_n, p)
-        any_rows = False
-        for rb in it:
-            arr = rb.column(0)
-            if len(arr) == 0:
-                continue
-            any_rows = True
-            # hash straight from the Arrow string buffers — zero python
-            # string objects for the whole batch
-            local._set_positions(
-                local.probes_batch_buf(*string_buf_views(arr)))
-        if any_rows:
+        hashes = _url_hashes(it)
+        if hashes is not None:
             yield pa.RecordBatch.from_arrays(
-                [pa.array([local.words.tobytes()], type=pa.binary())],
+                [pa.array([kernel(*hashes).tobytes()], type=pa.binary())],
                 names=["words"])
 
     bitsets = urls_df.mapInArrow(build, "words binary")
     rdd = bitsets.rdd.map(lambda r: np.frombuffer(r[0], dtype=np.uint64))
-    zero = np.zeros(nwords, dtype=np.uint64)
-    return rdd.treeAggregate(zero, lambda a, b: a | b, lambda a, b: a | b, depth=2)
+    return rdd.treeAggregate(kernel.merge([]), lambda a, b: a | b,
+                             lambda a, b: a | b, depth=2)
 
 
 def cuckoo_pairs_for_urls(urls_df: DataFrame, shards: int, m: int,
                           partitions: int | None = None) -> np.ndarray:
     """Cuckoo-mode twin of :func:`bloom_bits_for_urls`: hash the single
     string column zero-copy on the executors and derive the seen-set's
-    (shard, i1, fp) rows there — only the 24-byte numeric rows reach the
-    driver (no python strings ever materialize), where
+    (shard, i1, fp) rows there (``CuckooDelta``) — only the 24-byte rows
+    reach the driver (no python strings ever materialize), where
     ``ShardedCuckoo.add_pairs_canonical`` applies them. Unlike bloom
     bitsets, cuckoo inserts can't OR-merge, so the rows themselves are
-    the minimal transferable round state. Returns an (n, 3) int64 array;
-    i1 < m and fp <= 0xFFFF make the int64 view lossless. (The same
-    kernel as the crawl round's :func:`seen_round_pass`, with no
-    admitted rows to count.)"""
+    the minimal transferable round state. Returns an (n, 3) int64
+    array. (The crawl round's :func:`seen_round_pass`, with no admitted
+    rows to count.)"""
     rows = urls_df.select(F.col(urls_df.columns[0]).alias("url"),
                           F.lit(None).cast("int").alias("partition_id"))
-    return seen_round_pass(rows, "cuckoo", (shards, m), partitions)[1]
+    return seen_round_pass(rows, CuckooDelta(shards, m), partitions)[1]
 
 
-def seen_delta(seen_filter: str, params: tuple, h1: np.ndarray,
-               h2: np.ndarray) -> np.ndarray:
-    """The seen-set delta of the urls whose murmur halves are ``(h1,
-    h2)``: the bitset words of a ``BloomFilter(max_n, p)``
-    (``seen_filter="bloom"``, ``params=(max_n, p)``), or the derived
-    cuckoo ``(shard, i1, fp)`` rows as an (n, 3) int64 array
-    (``"cuckoo"``, ``params=(shards, m)``); i1 < m and fp <= 0xFFFF make
-    the int64 view lossless. The one kernel of both round plans: the
-    tasks of :func:`seen_round_pass` and a small round's driver."""
-    if seen_filter == "bloom":
-        local = BloomFilter(*params)
-        local._set_positions(local._probes_from_hash(h1, h2))
-        return local.words
-    from ..engine.cuckoo import _derive, shard_of
-    shards, m = params
-    i1, fp = _derive(h1, h2, m)
-    return np.stack([shard_of(h2, shards).view(np.int64), i1.view(np.int64),
-                     fp.view(np.int64)], axis=1)
-
-
-def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
-                    partitions: int | None = None):
+def seen_round_pass(rows: DataFrame, kernel, partitions: int | None = None):
     """A crawl round's seen-set inserts and admitted counts in ONE Arrow
     pass and one ``toArrow`` collect.
 
@@ -299,47 +282,41 @@ def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
     rows that only insert (the round's fetched pages). Each task hashes
     its urls zero-copy from the Arrow string buffers and emits one row
     per partition_id it saw (the admitted count) plus one ``blob`` row
-    with its :func:`seen_delta` (``seen_filter`` and ``params`` are
-    that function's). The driver merges: bitsets OR, cuckoo rows
-    concatenate (the caller's per-shard canonical commit sorts them) and
-    counts add, so the result does not depend on the partitioning.
+    with ``kernel(h1, h2).tobytes()``. ``kernel`` is a seen-set family's
+    delta kernel (``BloomDelta`` or ``CuckooDelta``): it carries only the
+    family's parameters into the task closure, never the live filter,
+    and its ``merge`` combines the tasks' blobs on the driver, so the
+    result does not depend on the partitioning.
 
     Returns ``(counts, delta)``: ``{partition_id: admitted rows}`` and
-    the OR-merged uint64 words (bloom) or an (n, 3) int64 array
-    (cuckoo)."""
-    assert seen_filter in ("bloom", "cuckoo")
+    the merged delta."""
     if partitions is not None:
         # callers size this from the round: small rounds want ONE
-        # bitset, not one per input partition (each is m/8 bytes
-        # through the collect)
+        # delta, not one per input partition (a bloom delta is m/8
+        # bytes through the collect)
         rows = rows.coalesce(max(1, partitions))
-    if seen_filter == "bloom":
-        nwords = len(BloomFilter(*params).words)
 
     def seen_pass(it):
         import pyarrow as pa
 
-        from ..engine.murmur import hash128_batch_buf, string_buf_views
         counts: dict[int, int] = {}
-        h1s, h2s = [], []
-        for rb in it:
-            if rb.num_rows == 0:
-                continue
-            pids = rb.column(1).drop_null().to_numpy()
-            for pid, n in zip(*np.unique(pids, return_counts=True)):
-                counts[int(pid)] = counts.get(int(pid), 0) + int(n)
-            h1, h2 = hash128_batch_buf(*string_buf_views(rb.column(0)))
-            h1s.append(h1)
-            h2s.append(h2)
-        if not h1s:
+
+        def counted(it):
+            for rb in it:
+                pids = rb.column(1).drop_null().to_numpy()
+                for pid, n in zip(*np.unique(pids, return_counts=True)):
+                    counts[int(pid)] = counts.get(int(pid), 0) + int(n)
+                yield rb
+
+        hashes = _url_hashes(counted(it))
+        if hashes is None:
             return
-        blob = seen_delta(seen_filter, params, np.concatenate(h1s),
-                          np.concatenate(h2s)).tobytes()
         pids = list(counts)
         yield pa.RecordBatch.from_arrays(
             [pa.array(pids + [None], pa.int64()),
              pa.array([counts[p] for p in pids] + [None], pa.int64()),
-             pa.array([None] * len(pids) + [blob], pa.binary())],
+             pa.array([None] * len(pids) + [kernel(*hashes).tobytes()],
+                      pa.binary())],
             names=["partition_id", "n", "blob"])
 
     tbl = rows.mapInArrow(
@@ -352,40 +329,10 @@ def seen_round_pass(rows: DataFrame, seen_filter: str, params: tuple,
             blobs.append(blob)
         else:
             counts[pid] = counts.get(pid, 0) + n
-    if seen_filter == "bloom":
-        words = np.zeros(nwords, dtype=np.uint64)
-        for b in blobs:
-            words |= np.frombuffer(b, dtype=np.uint64)
-        return counts, words
-    if not blobs:
-        return counts, np.zeros((0, 3), dtype=np.int64)
-    return counts, np.concatenate(
-        [np.frombuffer(b, dtype=np.int64).reshape(-1, 3) for b in blobs])
+    return counts, kernel.merge(blobs)
 
 
 _SENTINEL = np.int64(1 << 62)
-
-
-def _seen_mask(seen, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-    """Seen-set membership from murmur halves — a single BloomFilter, a
-    rolling bloom or its generation LIST (any-match read per
-    rolling_bloom.go:203-213: all generations share (max_n, p) hence m
-    and the probe positions, so membership is an OR of the per-generation
-    bit tests over one shared position array), or any filter exposing
-    ``contains_batch_hashed`` (the cuckoo seen-set,
-    engine/cuckoo.py)."""
-    if hasattr(seen, "contains_batch_hashed"):
-        return seen.contains_batch_hashed(h1, h2)
-    blooms = seen if isinstance(seen, list) else getattr(seen, "blooms",
-                                                         [seen])
-    pos = blooms[0]._probes_from_hash(h1, h2)
-    widx = (pos >> np.uint64(6)).astype(np.int64)
-    shift = pos & np.uint64(63)
-    out = np.zeros(len(h1), dtype=bool)
-    for bf in blooms:
-        bits = (bf.words[widx] >> shift) & np.uint64(1)
-        out |= bits.all(axis=1)
-    return out
 
 
 def admission_keep_mask(h1: np.ndarray, h2: np.ndarray,
@@ -421,9 +368,14 @@ def admission_keep_mask(h1: np.ndarray, h2: np.ndarray,
     (P ~ n^2 / 2^129) and lets the whole pass run without materializing
     a single python string.
 
-    ``bloom`` may be anything :func:`_seen_mask` accepts — a single
-    BloomFilter, a rolling-bloom generation list, or the cuckoo
-    seen-set; the gate semantics are filter-agnostic."""
+    ``bloom`` is the seen-set: any filter with a
+    ``contains_batch_hashed(h1, h2)`` probe — a BloomFilter, a
+    RollingBloomFilter, a ShardedCuckoo or a ShardFileProbe — or a plain
+    list of rolling-bloom generations; the gate semantics are
+    filter-agnostic."""
+    if isinstance(bloom, list):
+        bloom = RollingBloomFilter(len(bloom), bloom[0].max_n, bloom[0].p,
+                                   blooms=bloom)
     n = len(h1)
     idx = np.lexsort((h2, h1))
     h1s, h2s = h1[idx], h2[idx]
@@ -438,9 +390,9 @@ def admission_keep_mask(h1: np.ndarray, h2: np.ndarray,
     run_fp_min = np.minimum.reduceat(fm[idx], run_starts)
 
     # gate (a): seen-set membership straight from the hashes
-    in_bloom = _seen_mask(bloom, h1, h2)
+    in_seen = bloom.contains_batch_hashed(h1, h2)
 
-    elig = (~is_marker) & (~in_bloom) & (run_fp_min[run_id] > page_pos)
+    elig = (~is_marker) & (~in_seen) & (run_fp_min[run_id] > page_pos)
 
     # gate (c): min proposing page among eligible proposals of the run
     pp = np.where(elig, page_pos, _SENTINEL)

@@ -1,16 +1,21 @@
 """The crawl engine's URL-seen set: one class per filter family, each
-owning its filter, probe plan and snapshot format (a third family is one
-more class). ``BloomSeen`` is the reference's rolling murmur3 bloom,
-``CuckooSeen`` the deletion-capable sharded cuckoo. Both serve
-``CrawlEngine``'s operations. A small round probes ``filter``, the
-driver-resident filter ``frontier.admission_keep_mask`` accepts, and
-takes its delta from ``delta`` (``frontier.seen_delta`` over the hashes
-it holds). A big round opens ``open_probe`` (a handle whose ``colocate``
-puts every proposal of a url into one task and whose ``load()`` gives
-the tasks that filter) and takes its delta from ``round_pass`` (the
-round's ``frontier.seen_round_pass``). Both ``commit`` the delta; the
-``to_bytes``/``n``/``stats`` snapshot and :func:`from_blob` restore
-complete the interface. ``probe`` reports the set's own big-round plan."""
+owning its filter, probe plan and snapshot format, and binding its
+family's kernels (next to the filter: engine/bloom.py and
+engine/rolling_bloom.py for the bloom, engine/cuckoo.py for the cuckoo)
+to the crawl. ``BloomSeen`` is the reference's rolling murmur3 bloom,
+``CuckooSeen`` the deletion-capable sharded cuckoo; :func:`seen_family`
+maps a ``seen_filter`` name to its class (a third family is one more
+class). Both serve ``CrawlEngine``'s operations. A small round probes
+``filter`` on the driver (``frontier.admission_keep_mask`` calls its
+``contains_batch_hashed``) and takes its delta from ``delta``, the
+family's delta kernel over the hashes it holds. A big round opens
+``open_probe`` (a handle whose ``colocate`` puts every proposal of a
+url into one task and whose ``load()`` gives the tasks that filter)
+and takes its delta from ``round_pass`` (``frontier.seen_round_pass``
+with the same kernel). Both ``commit`` the delta through the family's
+canonical insert; the ``to_bytes``/``n``/``stats`` snapshot and
+:func:`from_blob` restore complete the interface. ``probe`` reports the
+set's own big-round plan."""
 
 from __future__ import annotations
 
@@ -29,7 +34,7 @@ from ..engine.cuckoo import (ShardedCuckoo, ShardFileProbe,
 from ..engine.rolling_bloom import RollingBloomFilter
 from ..engine.urlnorm import canonicalize, host_of
 from ..sources.snapshot import write_atomic
-from .frontier import seen_delta, seen_round_pass
+from .frontier import seen_round_pass
 
 
 def _colocate(df: DataFrame, n: int, key: str) -> DataFrame:
@@ -92,18 +97,7 @@ class _ShardFilesProbe(ShardFileProbe):
         pass  # the shard files outlive the round; the next sync GCs them
 
 
-class _SeenSet:
-    """The delta of a round's inserts, by either plan; subclasses give
-    ``kind`` and ``_params`` (``frontier.seen_delta``'s)."""
-
-    def delta(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        return seen_delta(self.kind, self._params, h1, h2)
-
-    def round_pass(self, rows: DataFrame, partitions: int):
-        return seen_round_pass(rows, self.kind, self._params, partitions)
-
-
-class BloomSeen(_SeenSet):
+class BloomSeen:
     """The reference's rolling bloom (rolling_bloom.go), including the
     lost-insert quirk at a rotation."""
 
@@ -114,12 +108,24 @@ class BloomSeen(_SeenSet):
     def __init__(self, bloom: RollingBloomFilter):
         self.bloom = bloom
 
+    @classmethod
+    def empty(cls, params: dict, workdir: str) -> "BloomSeen":
+        return cls(RollingBloomFilter(params.get("bloom_count", 1),
+                                      params["bloom_max_n"],
+                                      params["bloom_p"]))
+
     @property
     def n(self) -> int:
         return self.bloom.n
 
     filter = property(lambda self: self.bloom)
-    _params = property(lambda self: (self.bloom.max_n, self.bloom.p))
+
+    def delta(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """The bitset words of a round's inserts (``BloomDelta``)."""
+        return self.bloom.delta_kernel(h1, h2)
+
+    def round_pass(self, rows: DataFrame, partitions: int):
+        return seen_round_pass(rows, self.bloom.delta_kernel, partitions)
 
     def open_probe(self, sc) -> _BroadcastProbe:
         return _BroadcastProbe(sc, self.bloom.to_bytes(),
@@ -162,7 +168,8 @@ class BloomSeen(_SeenSet):
         return self.bloom.to_bytes()
 
     def stats(self) -> dict:
-        return {"bloom_bits": int(np.count_nonzero(self.bloom.words)),
+        # set bits of the newest generation, the one the round writes
+        return {"bloom_bits": self.bloom.gen0.bit_count(),
                 "seen_n": self.bloom.n}
 
     def _cannot_delete(self, *args, **kwargs):
@@ -174,7 +181,7 @@ class BloomSeen(_SeenSet):
     delete_urls = derive_df = delete_rows = _cannot_delete
 
 
-class CuckooSeen(_SeenSet):
+class CuckooSeen:
     """The deletion-capable sharded cuckoo, its semantics DEFINED in
     oracle/crawler.py: the round's insert set commits at round END in
     canonical per-shard order, so the filter is bit-identical to the
@@ -206,6 +213,13 @@ class CuckooSeen(_SeenSet):
         # (keep-last-2: no round in flight can read two generations back)
         self._gc_paths: list[str] = []
 
+    @classmethod
+    def empty(cls, params: dict, workdir: str) -> "CuckooSeen":
+        return cls(ShardedCuckoo.empty(
+            params.get("cuckoo_shards", 4),
+            params.get("cuckoo_capacity") or params["bloom_max_n"]),
+            workdir)
+
     @property
     def n(self) -> int:
         return self.cuckoo.n
@@ -218,8 +232,14 @@ class CuckooSeen(_SeenSet):
         return "sharded" if nbytes > floor else "broadcast"
 
     filter = property(lambda self: self.cuckoo)
-    _params = property(lambda self: (self.cuckoo.shards,
-                                     self.cuckoo.filters[0].m))
+
+    def delta(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        """The (shard, i1, fp) rows of a round's inserts
+        (``CuckooDelta``)."""
+        return self.cuckoo.delta_kernel(h1, h2)
+
+    def round_pass(self, rows: DataFrame, partitions: int):
+        return seen_round_pass(rows, self.cuckoo.delta_kernel, partitions)
 
     def open_probe(self, sc):
         if self.probe == "sharded":
@@ -296,13 +316,12 @@ class CuckooSeen(_SeenSet):
         24-byte rows reach the driver. ``with_keys`` adds the canonical
         ``url`` and ``host`` in front and the sign-flipped hash halves
         ``h1s``/``h2s``, whose int64 order is the unsigned (h1, h2) order,
-        at the end. (frontier.seen_round_pass derives the same rows from
-        ALREADY-canonical urls.)"""
-        m, shards = self.cuckoo.filters[0].m, self.cuckoo.shards
+        at the end. The rows come from the cuckoo's delta kernel
+        (``CuckooDelta``), the one a crawl round's inserts take."""
+        kernel = self.cuckoo.delta_kernel
         flip = np.uint64(1 << 63)
 
         def derive_pass(it):
-            from ..engine.cuckoo import _derive, shard_of
             from ..engine.murmur import hash128_batch
             for rb in it:
                 keep = [c for c in map(canonicalize, rb.column(0).to_pylist())
@@ -310,10 +329,7 @@ class CuckooSeen(_SeenSet):
                 if not keep:
                     continue
                 h1, h2 = hash128_batch(np.array(keep, dtype=object))
-                i1, fp = _derive(h1, h2, m)
-                cols = [pa.array(shard_of(h2, shards).astype(np.int64)),
-                        pa.array(i1.view(np.int64)),
-                        pa.array(fp.view(np.int64))]
+                cols = [pa.array(c) for c in kernel(h1, h2).T.copy()]
                 names = ["shard", "i1", "fp"]
                 if with_keys:
                     cols = [pa.array(keep, pa.string()),
@@ -337,19 +353,22 @@ class CuckooSeen(_SeenSet):
             rows.column("fp").to_numpy(zero_copy_only=False).view(np.uint64))
 
 
+_FAMILIES = {cls.kind: cls for cls in (BloomSeen, CuckooSeen)}
+
+
+def seen_family(seen_filter: str):
+    """The seen-set class of a ``seen_filter`` name: the one check of
+    that option."""
+    if seen_filter not in _FAMILIES:
+        raise ValueError("seen_filter must be "
+                         + " or ".join(map(repr, _FAMILIES))
+                         + f", got {seen_filter!r}")
+    return _FAMILIES[seen_filter]
+
+
 def new_seen(seen_filter: str, params: dict, workdir: str):
     """An empty seen-set sized from the corpus ``params``."""
-    if seen_filter == "bloom":
-        return BloomSeen(RollingBloomFilter(params.get("bloom_count", 1),
-                                            params["bloom_max_n"],
-                                            params["bloom_p"]))
-    if seen_filter == "cuckoo":
-        return CuckooSeen(ShardedCuckoo.empty(
-            params.get("cuckoo_shards", 4),
-            params.get("cuckoo_capacity") or params["bloom_max_n"]),
-            workdir)
-    raise ValueError("seen_filter must be 'bloom' or 'cuckoo', got "
-                     f"{seen_filter!r}")
+    return seen_family(seen_filter).empty(params, workdir)
 
 
 def from_blob(blob: bytes, params: dict, workdir: str):

@@ -15,13 +15,19 @@ def oracle_result(unit_corpus):
 
 
 @pytest.fixture(scope="module")
-def engine_result(spark, unit_corpus, tmp_path_factory):
+def engine_run(spark, unit_corpus, tmp_path_factory):
+    """The engine after a full crawl of the unit corpus, and what
+    ``run()`` returned."""
     from delver_spark.operators.crawl import CrawlEngine
 
     wd = str(tmp_path_factory.mktemp("crawl_wd"))
     eng = CrawlEngine(spark, unit_corpus, wd)
-    eng.run()
-    return eng
+    return eng, eng.run()
+
+
+@pytest.fixture(scope="module")
+def engine_result(engine_run):
+    return engine_run[0]
 
 
 def _order_tuples_oracle(res):
@@ -69,6 +75,12 @@ def test_seen_set_bit_for_bit(oracle_result, engine_result):
     assert np.array_equal(oracle_result.bloom.bit_positions(),
                           engine_result.bloom.bit_positions())
     assert oracle_result.bloom.n == engine_result.bloom.n
+
+
+def test_run_stats_count_set_bloom_bits(engine_run):
+    eng, stats = engine_run
+    assert stats["bloom_bits"] == len(eng.bloom.bit_positions())
+    assert stats["seen_n"] == eng.bloom.n
 
 
 def test_lineage_counters_match(oracle_result, engine_result):

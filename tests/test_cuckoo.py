@@ -1,6 +1,6 @@
 """Cuckoo URL-seen filter pins (engine/cuckoo.py): membership,
-deletion, determinism, merge, load limit, and the sharded distributed
-build's bit-equality vs a local canonical build."""
+deletion, determinism, load limit, and the distributed build's
+bit-equality vs a local canonical build."""
 
 import numpy as np
 import pytest
@@ -62,27 +62,17 @@ def test_determinism_and_serialization():
     assert c.contains_batch(keys).all()
 
 
-def test_merge_is_union():
-    ka, kb = _urls(0, 3000), _urls(2000, 6000)
-    fa = CuckooFilter(8000)
-    fa.add_many(ka)
-    fb = CuckooFilter(8000)
-    fb.add_many(kb)
-    fa.merge(fb)
-    assert fa.contains_batch(ka + kb).all()
-    # idempotent on the 1000-key overlap: n equals distinct pairs of
-    # the plain union build
-    ref = CuckooFilter(8000)
-    ref.add_many(ka + kb)
-    assert fa.n == ref.n
-
-
 @pytest.mark.parametrize("canonical", [False, True])
 def test_full_raises(canonical):
+    """Both inserts raise at the load limit: the sequential
+    ``add_many`` and the one canonical insert (a one-shard filter)."""
     f = CuckooFilter(100)
-    h1, h2 = hash128_batch(_urls(0, f.m * SLOTS + 1))
+    urls = _urls(0, f.m * SLOTS + 1)
     with pytest.raises(CuckooFull):
-        f.add_many_hashed(h1, h2, canonical=canonical)
+        if canonical:
+            ShardedCuckoo([f]).add_many_canonical(urls)
+        else:
+            f.add_many(urls)
 
 
 def test_bulk_insert_byte_equal_to_insert_pair_loop():
@@ -94,9 +84,8 @@ def test_bulk_insert_byte_equal_to_insert_pair_loop():
     keys = _urls(0, 7000)
     h1, h2 = hash128_batch(keys)
     fast = CuckooFilter(7000)
-    fast.add_many_hashed(h1, h2, canonical=True)
+    ShardedCuckoo([fast]).add_many_canonical(keys)
     slow = CuckooFilter(7000)
-    from delver_spark.engine.cuckoo import _derive
     i1, fp = _derive(h1, h2, slow.m)
     pairs = np.unique(np.stack([i1, fp], axis=1), axis=0)
     n_slow = 0
@@ -108,21 +97,29 @@ def test_bulk_insert_byte_equal_to_insert_pair_loop():
 
 def test_canonical_order_is_partition_invariant():
     keys = _urls(0, 4000)
-    h1, h2 = hash128_batch(keys)
-    a = CuckooFilter(4000)
-    a.add_many_hashed(h1, h2, canonical=True)
+    a = ShardedCuckoo.empty(4, 4000)
+    rows = a.delta_kernel(*hash128_batch(keys))
+    a.add_pairs_canonical(rows[:, 0], rows[:, 1], rows[:, 2])
     rng = np.random.RandomState(7)
     perm = rng.permutation(len(keys))
-    b = CuckooFilter(4000)
-    b.add_many_hashed(h1[perm], h2[perm], canonical=True)
+    b = ShardedCuckoo.empty(4, 4000)
+    b.add_pairs_canonical(rows[perm, 0], rows[perm, 1], rows[perm, 2])
     assert a.to_bytes() == b.to_bytes()
 
 
 def test_sharded_build_bit_equal_and_probes(spark):
+    """The distributed build (executors derive the rows, the driver
+    applies them canonically) equals a local per-shard build that
+    inserts each shard's sorted-unique pairs one by one."""
+    from delver_spark.operators.frontier import cuckoo_pairs_for_urls
+
     keys = _urls(0, 30000)
     df = spark.createDataFrame([(k,) for k in keys], "url string")
     shards = 4
-    sc = ShardedCuckoo.from_urls_df(df.repartition(8), shards)
+    sc = ShardedCuckoo.empty(shards, len(keys))
+    pairs = cuckoo_pairs_for_urls(df.repartition(8), shards,
+                                  sc.filters[0].m)
+    sc.add_pairs_canonical(pairs[:, 0], pairs[:, 1], pairs[:, 2])
 
     # local canonical reference build per shard
     h1, h2 = hash128_batch(keys)
@@ -131,7 +128,9 @@ def test_sharded_build_bit_equal_and_probes(spark):
     for s in range(shards):
         ref = CuckooFilter(cap_shard)
         ix = np.nonzero(sh == s)[0]
-        ref.add_many_hashed(h1[ix], h2[ix], canonical=True)
+        i1, fp = _derive(h1[ix], h2[ix], ref.m)
+        for a, b in np.unique(np.stack([i1, fp], axis=1), axis=0):
+            ref._insert_pair(int(a), int(b))
         assert sc.filters[s].to_bytes() == ref.to_bytes(), s
 
     assert sc.contains_batch(keys).all()
@@ -145,8 +144,8 @@ def test_sharded_build_bit_equal_and_probes(spark):
     assert sc.add(keys[7])
     assert sc.contains(keys[7])
 
-    # shard blobs round-trip (the broadcast/probe wire format)
-    rt = ShardedCuckoo.from_bytes_list(sc.to_bytes_list())
+    # the filter round-trips through its broadcast/snapshot blob
+    rt = ShardedCuckoo.from_bytes(sc.to_bytes())
     assert rt.contains_batch(keys).all()
 
 

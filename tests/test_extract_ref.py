@@ -8,7 +8,6 @@ from delver_spark.engine.extract_ref import (
     detect_language,
     extract_text,
     extract_title,
-    extract_urls_fast,
     extract_urls_fsm,
     match_companies,
     match_countries,
@@ -128,14 +127,6 @@ def test_adversarial_subdomain_explosion():
     assert boom
     _, boom = adversarial(origin, urls[:10])
     assert not boom
-
-
-def test_fast_extractor_matches_fsm_on_wellformed():
-    caption = (
-        'Look <a href="/a/b">here</a> and <a href=\'../c\'>there</a> or '
-        "http://d3.test/x/y plus https://d4.test/z?q=1 end"
-    )
-    assert extract_urls_fast(caption) == extract_urls_fsm(caption.encode())
 
 
 def test_language_trigram_refinement():

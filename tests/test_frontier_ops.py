@@ -2,6 +2,7 @@
 distributed rank, bloom bitset merge, salted repartition)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from delver_spark.engine.bloom import BloomFilter
@@ -11,7 +12,6 @@ from delver_spark.operators.frontier import (
     bloom_bits_for_urls,
     dequeue,
     salted_repartition,
-    seen_round_pass,
 )
 
 
@@ -114,13 +114,24 @@ def test_bloom_bits_match_driver_side(spark):
     assert np.array_equal(words, ref.words)
 
 
-def test_seen_round_pass_matches_driver_side(spark):
-    """One pass returns the admitted counts per partition_id (NULL rows
-    insert but are not counted) and the seen-set delta — the bloom words
-    and the cuckoo rows equal a driver-side build over every url, under
-    any partitioning and task count."""
-    from delver_spark.engine.cuckoo import ShardedCuckoo
+def test_seen_round_pass_matches_driver_side(spark, tmp_path):
+    """The seen-set family matrix. For each family, one round's inserts
+    commit to byte-identical filter bytes whichever way the delta is
+    built: the driver delta over the urls' hashes, the task-side round
+    pass at 1 and 7 partitions (which also returns the admitted counts
+    per partition_id; NULL rows insert but are not counted), the
+    bare-url builders and the oracle's own adds. The admission mask is
+    then the same through every probe form of the committed filters."""
+    from delver_spark.engine.cuckoo import ShardedCuckoo, ShardFileProbe
+    from delver_spark.engine.murmur import hash128_batch
+    from delver_spark.engine.rolling_bloom import RollingBloomFilter
+    from delver_spark.operators.frontier import (admission_keep_mask,
+                                                 cuckoo_pairs_for_urls)
+    from delver_spark.operators.seen import new_seen
 
+    params = {"bloom_max_n": 2000, "bloom_p": 0.01, "bloom_count": 2,
+              "cuckoo_shards": 4}
+    wd = str(tmp_path)
     urls = [f"http://d{i % 7}.test/p/{i}" for i in range(600)]
     rows = [(u, None if i % 3 == 0 else i % 5) for i, u in enumerate(urls)]
     want_counts = {}
@@ -128,23 +139,67 @@ def test_seen_round_pass_matches_driver_side(spark):
         if pid is not None:
             want_counts[pid] = want_counts.get(pid, 0) + 1
     df = spark.createDataFrame(rows, "url string, partition_id int")
-    ref = BloomFilter(2000, 0.01)
-    ref.add_many(urls)
+    urls_df = df.select("url")
+    h1, h2 = hash128_batch(np.array(urls, dtype=object))
+
+    rbf = RollingBloomFilter(2, 2000, 0.01)
+    assert rbf.add_many(urls) is None
     ck_ref = ShardedCuckoo.empty(4, 2000)
-    ck_ref.add_many_canonical(urls)
-    for frame, parts in ((df, 1), (df.repartition(7), None)):
-        counts, words = seen_round_pass(frame, "bloom", (2000, 0.01), parts)
-        assert counts == want_counts
-        assert np.array_equal(words, ref.words)
-        counts, pairs = seen_round_pass(
-            frame, "cuckoo", (4, ck_ref.filters[0].m), parts)
-        assert counts == want_counts and pairs.shape == (600, 3)
-        ck = ShardedCuckoo.empty(4, 2000)
-        ck.add_pairs_canonical(pairs[:, 0], pairs[:, 1], pairs[:, 2])
-        assert ck.to_bytes() == ck_ref.to_bytes()
-    counts, words = seen_round_pass(df.filter("false"), "bloom",
-                                    (2000, 0.01), 1)
-    assert counts == {} and not words.any()
+    ck_ref.add_many_canonical(np.array(urls, dtype=object))
+    oracle = {"bloom": rbf, "cuckoo": ck_ref}
+    m = ck_ref.filters[0].m
+    bare = {"bloom": lambda parts: bloom_bits_for_urls(urls_df, 2000, 0.01,
+                                                       parts),
+            "cuckoo": lambda parts: cuckoo_pairs_for_urls(urls_df, 4, m,
+                                                          parts)}
+
+    def committed(kind, delta, n=len(urls)):
+        seen = new_seen(kind, params, wd)
+        seen.commit(delta, n,
+                    lambda: pytest.fail("no rotation boundary in this round"))
+        return seen
+
+    committed_sets = {}
+    for kind in ("bloom", "cuckoo"):
+        want = oracle[kind].to_bytes()
+        deltas = [new_seen(kind, params, wd).delta(h1, h2),
+                  bare[kind](None), bare[kind](3)]
+        for frame, parts in ((df, 1), (df.repartition(7), 7)):
+            counts, delta = new_seen(kind, params, wd).round_pass(frame,
+                                                                  parts)
+            assert counts == want_counts, (kind, parts)
+            deltas.append(delta)
+        for i, delta in enumerate(deltas):
+            assert committed(kind, delta).to_bytes() == want, (kind, i)
+        committed_sets[kind] = committed(kind, deltas[0])
+        counts, delta = new_seen(kind, params, wd).round_pass(
+            df.filter("false"), 1)
+        assert counts == {}
+        assert committed(kind, delta, 0).to_bytes() \
+            == new_seen(kind, params, wd).to_bytes()
+
+    # the admission mask through every probe form: candidates are half
+    # the inserted urls plus 200 fresh ones, each fresh url proposed by
+    # two pages (the earlier page wins)
+    fresh = [f"http://d{i % 7}.test/q/{i}" for i in range(200)]
+    cand = urls[::2] + fresh + fresh
+    page_pos = np.arange(len(cand), dtype=np.int64)
+    f_pos = np.full(len(cand), -1, dtype=np.int64)
+    marker = np.zeros(len(cand), dtype=bool)
+    c1, c2 = hash128_batch(np.array(cand, dtype=object))
+    want_mask = np.r_[np.zeros(300, bool), np.ones(200, bool),
+                      np.zeros(200, bool)]
+    bloom = committed_sets["bloom"].bloom
+    cuckoo = committed_sets["cuckoo"].cuckoo
+    manifest = {}
+    for s, f in enumerate(cuckoo.filters):
+        manifest[s] = str(tmp_path / f"matrix_shard{s}.bin")
+        with open(manifest[s], "wb") as fh:
+            fh.write(f.to_bytes())
+    for probe in (bloom, bloom.blooms, cuckoo,
+                  ShardFileProbe(cuckoo.shards, manifest)):
+        got = admission_keep_mask(c1, c2, page_pos, f_pos, marker, probe)
+        assert np.array_equal(got, want_mask), type(probe)
 
 
 def test_salted_repartition_spreads_hot_key(spark):

@@ -50,13 +50,12 @@ def test_seen_set_contract(spark, tmp_path, kind, probe):
 
         from delver_spark.engine.murmur import (hash128_batch_buf,
                                                 string_buf_views)
-        from delver_spark.operators.frontier import _seen_mask
         loaded = probe_plan.load()
         for rb in it:
             if rb.num_rows:
                 h1, h2 = hash128_batch_buf(*string_buf_views(rb.column(0)))
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(_seen_mask(loaded, h1, h2))], names=["hit"])
+                    [pa.array(loaded.contains_batch_hashed(h1, h2))], names=["hit"])
 
     probe_plan = seen.open_probe(spark.sparkContext)
     try:
