@@ -16,11 +16,12 @@ Each round (SURVEY §3.1 "Spark translation"):
 
 Each round picks its physical plan from its BOUND, the most rows it can
 dequeue: ``min(G, frontier_count)``, where ``frontier_count`` is the
-exact row count the merge-on-read bookkeeping keeps on the driver. The
-bound only picks the plan; the dequeue limit stays G, so the crawl is the
-same under either plan. At or below ``BIG_ROUND_FLOOR`` a round takes
-the small-round plan: the dequeue is one ``toArrow`` that comes back as
-a local relation, the fetch pushes an IN-list into the payload scan and
+exact live row count the driver keeps in either state representation
+(below). The bound only picks the plan; the dequeue limit stays G, so
+the crawl is the same under either plan. At or below ``BIG_ROUND_FLOOR``
+a round takes the small-round plan: the dequeue comes back as a local
+relation (the driver kernel's batch, or one ``toArrow`` of a Spark
+frontier's), the fetch pushes an IN-list into the payload scan and
 broadcast-joins the pruned payload, and the extract comes back in ONE
 more ``toArrow`` — the artifacts, the gated candidates and the pages'
 urls — after which the round finishes on the driver with the same
@@ -34,18 +35,20 @@ admission is a distributed Arrow pass through the seen-set's probe plan
 and Spark writes the artifacts every round. Each artifact is defined
 once (``_artifacts``), so both layouts write one schema.
 
-A steady small round launches 4 Spark jobs: the dequeue collect (2: the
-host window's shuffle, the ordered take — the tombstones ride it as one
-parsed ``NOT IN`` literal while the driver knows all of them and they
-number at most ``BIG_ROUND_FLOOR``), the payload broadcast (1) and the
-extract collect (1). No order, admission or seen-set job and no filter
-broadcast is left. Golden pixels, in a corpus that has them, are
-attached to the dequeued keys on the driver in either plan
-(``_with_golden``), not joined in Spark. On a 4-core box each small job
-costs 0.1-0.64 s of process-tree CPU, much of it the JVM compiling each
-distinct code path the round runs, so the count, not the data, sets a
-small round's cost — which is why a G=20000 crawl whose frontier holds a
-few hundred urls takes the small plan.
+A steady small round over a driver frontier table launches 2 Spark jobs:
+the payload broadcast and the extract collect; its dequeue is the numpy
+kernel ``frontier.dequeue_arrow``. Over a Spark frontier the dequeue is
+one collect of 2 more jobs (the host window's shuffle, the ordered take
+— the tombstones ride it as one parsed ``NOT IN`` literal while the
+driver knows all of them and they number at most ``BIG_ROUND_FLOOR``).
+No order, admission or seen-set job and no filter broadcast is left.
+Golden pixels, in a corpus that has them, are attached to the dequeued
+keys on the driver in either plan (``_with_golden``), not joined in
+Spark. On a 4-core box each small job costs 0.1-0.64 s of process-tree
+CPU, much of it the JVM compiling each distinct code path the round
+runs, so the count, not the data, sets a small round's cost — which is
+why a G=20000 crawl whose frontier holds a few hundred urls takes the
+small plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -62,13 +65,25 @@ repartitioning on hash(host)"), by stage:
     `frontier.salted_repartition` remains the generic salting primitive
     for order-insensitive host-keyed stages.
 
-State is distributed (frontier / url_store DataFrames, installed only
-by ``CrawlEngine._rebase``); only round-bounded artifacts (the <= G
-fetched rows with their candidate links, a small round's admitted and
-stash rows, counters) touch the driver. A checkpoint re-bases the engine
-on lazy reads of the state it committed, the reads resume makes: lineage
-and partition count restart, and an uninterrupted crawl runs on exactly
-the state a resume would load. The url_store is APPEND-ONLY —
+The frontier's representation follows its size, as the round plan
+does: ``CrawlEngine._rebase``, the one place the state is installed,
+picks it from ``frontier_count`` against the same floor. At or below it
+the frontier is ONE driver Arrow table: seeds, admitted rows, readmits
+and refills concatenate onto it, a dequeue deletes its rows (no
+tombstones), and a checkpoint writes it with pyarrow, so seed, readmit
+and the frontier's commit launch no Spark job. An append that takes it
+past the floor folds it into Spark in one ``localCheckpoint``; from
+there the frontier is a merge-on-read DataFrame (a base, admitted
+deltas, tombstones) until a checkpoint or compaction at or below the
+floor brings it back. The url_store is a DataFrame in both. A
+checkpoint re-bases the engine on the state it committed, as resume
+loads it — pyarrow's read of a frontier at or below the floor, else
+lazy parquet reads: lineage and partition count restart, and an
+uninterrupted crawl runs on exactly the state a resume would load. Only
+round-bounded artifacts (the <= G fetched rows with their candidate
+links, a small round's admitted and stash rows, counters) and a
+frontier below the floor live on the driver. The url_store is
+APPEND-ONLY —
 last-wins dedupe happens once per refill on the single published domain,
 not per round, so no full-store shuffle ever runs (SURVEY J4/O5 + Badger
 Set overwrite semantics, resource/maps/persistent.go:23-41).
@@ -82,6 +97,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -95,9 +111,11 @@ from ..engine.urlnorm import canonicalize, host_of
 from ..sources.snapshot import SnapshotStore
 from .extract import EXTRACT_SCHEMA, make_extractor_arrow
 from .frontier import (
+    FRONTIER_ARROW,
     FRONTIER_SCHEMA,
     STORE_SCHEMA,
     dequeue,
+    dequeue_arrow,
     make_robots_udf,
 )
 from .seen import from_blob, new_seen, seen_family
@@ -155,6 +173,12 @@ def _outlink_domain(host_col):
     toks = F.split(host_col, "\\.")
     return F.when(F.size(toks) <= 1, host_col) \
         .otherwise(F.array_join(F.slice(toks, -2, 2), "."))
+
+
+def _arrow_frontier(rows: pa.Table) -> pa.Table:
+    """``rows`` (the frontier's columns, in any order and with any
+    nullability) in the driver frontier table's schema."""
+    return rows.select(FRONTIER_ARROW.names).cast(FRONTIER_ARROW)
 
 
 def _in_list(col: str, values: list[str]):
@@ -378,11 +402,12 @@ class CrawlEngine:
         self._link_cols = [c.alias(name) for name, c in links.items()]
         self._cand_cols = [] if mode == "news" else _page_cand_counts(links)
 
-        # mutable state. The frontier is held MOR-style (Iceberg
-        # merge-on-read semantics): `frontier` is the BASE that _rebase
-        # installs, with admitted rows unioned on as DELTAS; dequeued seqs
-        # accumulate as TOMBSTONES (filtered at read time — a map-side
-        # filter, no shuffle). The round's state transition is therefore
+        # mutable state. `frontier` is a driver Arrow table at or below
+        # the round floor (_rebase). Past it, it is held MOR-style
+        # (Iceberg merge-on-read semantics): `frontier` is the BASE that
+        # _rebase installs, with admitted rows unioned on as DELTAS;
+        # dequeued seqs accumulate as TOMBSTONES (filtered at read time —
+        # a map-side filter, no shuffle). The round's state transition is therefore
         # O(G), not an O(frontier) rewrite; compaction folds the view
         # into a new base when tombstones exceed ~30% of it, and a
         # checkpoint re-bases on the state it committed. On the 10^10
@@ -425,25 +450,51 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ seed
     def seed(self):
+        """The corpus seeds, canonicalized, become the whole frontier at
+        round 0 with the first seqs. Installed by :meth:`_rebase`, so at
+        or below the round floor they stay a driver Arrow table and the
+        seed launches no Spark job."""
         seeds = pq.read_table(os.path.join(self.corpus_dir, "seeds.parquet")).to_pylist()
         rows = []
         for s in seeds:
             c = canonicalize(s["url"])
             if c is None:
                 continue
-            rows.append((int(s["priority"]), 0, self.seq, c, host_of(c), 0, None))
+            rows.append(dict(priority=int(s["priority"]), enqueue_round=0,
+                             enqueue_seq=self.seq, url=c, host=host_of(c),
+                             depth=0, origin=None))
             self.seq += 1
         self.frontier_count = len(rows)
-        self._rebase(self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
-                     .localCheckpoint(eager=True))
-        self._seq_orderable = all(r[0] == 0 for r in rows)
+        self._rebase(pa.Table.from_pylist(rows, FRONTIER_ARROW))
+        self._seq_orderable = all(r["priority"] == 0 for r in rows)
 
     # ----------------------------------------------------------------- view
-    def _rebase(self, frontier: DataFrame | None,
-                url_store: DataFrame | None = None):
-        """The one place the crawl state is installed: ``frontier``
-        (materialized, or None before the seed) as the merge-on-read base
-        of all ``frontier_count`` rows, no tombstones; ``url_store`` too."""
+    def _rebase(self, frontier, url_store: DataFrame | None = None):
+        """The one place the crawl state is installed. ``frontier``
+        holds all ``frontier_count`` live rows: a driver Arrow table, a
+        compaction's frontier view, or a committed frontier dir (None
+        before the seed). ``frontier_count`` picks the representation.
+        At or below the round floor the frontier is ONE driver Arrow
+        table (``FRONTIER_ARROW``): a round dequeues it with
+        ``frontier.dequeue_arrow`` and deletes the dequeued rows, so it
+        keeps no tombstones; a committed dir is read with pyarrow and a
+        view comes back in one ``toArrow``. Above the floor it is the
+        merge-on-read base of a Spark frontier, with no tombstones yet: a
+        table folds in with one ``localCheckpoint``, a view is
+        checkpointed, a committed dir is a lazy, schema-given read. A
+        big round needs ``min(G, frontier_count)`` above the floor, so
+        driver state always means a small round. ``url_store`` too."""
+        small = self.frontier_count <= self._big_round_floor
+        if isinstance(frontier, str):
+            frontier = pq.read_table(frontier, schema=FRONTIER_ARROW) \
+                if small else \
+                self.spark.read.schema(FRONTIER_SCHEMA).parquet(frontier)
+        elif isinstance(frontier, DataFrame):
+            frontier = _arrow_frontier(frontier.toArrow()) if small \
+                else frontier.localCheckpoint(eager=True)
+        elif frontier is not None and not small:
+            frontier = self.spark.createDataFrame(
+                frontier, FRONTIER_SCHEMA).localCheckpoint(eager=True)
         self.frontier = frontier
         if url_store is not None:
             self.url_store = url_store
@@ -456,6 +507,8 @@ class CrawlEngine:
         self._base_count = self.frontier_count
 
     def _frontier_view(self) -> DataFrame:
+        """The live rows of a Spark-resident frontier: the base and its
+        deltas less the tombstones."""
         v = self.frontier
         if self._tomb_seqs:
             # one parsed literal: broadcasting even a local relation
@@ -467,11 +520,22 @@ class CrawlEngine:
                        "left_anti")
         return v
 
-    def _append_delta(self, rows: DataFrame, n: int):
-        """Union ``rows``, already materialized (checkpointed or a local
-        relation), onto the frontier: a merge-on-read delta."""
-        self.frontier = self.frontier.unionByName(rows)
+    def _append(self, rows, n: int):
+        """Enqueue ``n`` rows: an Arrow table of the frontier's columns,
+        or (a big round's) materialized DataFrame. A driver table
+        concatenates them, and :meth:`_rebase` folds it into Spark if
+        that takes ``frontier_count`` past the floor; a Spark frontier
+        unions them on as a merge-on-read delta, an Arrow table as a
+        local relation, which launches no job."""
         self.frontier_count += n
+        if isinstance(self.frontier, pa.Table):
+            self._rebase(pa.concat_tables(
+                [self.frontier, _arrow_frontier(rows)]).combine_chunks())
+            return
+        if isinstance(rows, pa.Table):
+            rows = self.spark.createDataFrame(_arrow_frontier(rows),
+                                              FRONTIER_SCHEMA)
+        self.frontier = self.frontier.unionByName(rows)
 
     def _maybe_compact(self):
         # 30%-of-base keeps compaction amortized, but the tombstone set is
@@ -482,7 +546,7 @@ class CrawlEngine:
         if self._tomb_count > max(self._compact_floor,
                                   min(int(0.3 * self._base_count),
                                       self._tomb_abs_cap)):
-            self._rebase(self._frontier_view().localCheckpoint(eager=True))
+            self._rebase(self._frontier_view())
 
     # ---------------------------------------------------------------- refill
     def _refresh_robots(self, rnd: int):
@@ -520,10 +584,10 @@ class CrawlEngine:
                    (F.lit(self.seq) + F.col("seq_off")).alias("enqueue_seq"),
                    F.col("url"), F.col("host"),
                    F.lit(0).alias("depth"), F.col("origin"))
-               .localCheckpoint(eager=True))
-        n = pub.count()
+               .toArrow())
+        n = pub.num_rows
         self.seq += n
-        self._append_delta(pub, n)
+        self._append(pub, n)
         self.url_store = self.url_store.filter(F.col("domain") != first) \
             .localCheckpoint(eager=True)
         return n
@@ -539,42 +603,57 @@ class CrawlEngine:
         # dequeue (module docstring). Only the plan: the dequeue limit
         # stays G, so a wrong frontier_count can never change the crawl
         big = min(self.G, self.frontier_count) > self._big_round_floor
-        deq_stats: dict = {}
-        batch = dequeue(self._frontier_view(), self.B, self.G,
-                        hot_host_threshold=self.hot_host_threshold,
-                        seq_hint=self.seq if big and self._seq_orderable
-                        else None,
-                        out_stats=deq_stats,
-                        host_budgets=self.host_budgets or None)
-        batch_urls = None
-        if not big:
-            # ONE collect: the <= bound rows reach the driver anyway (their
-            # urls are the fetch's IN-list), so they come back as an
-            # Arrow-backed local frame instead of a localCheckpoint job
-            # followed by a second collect of the checkpoint
-            batch_tbl = self._with_golden(batch.toArrow())
-            batch = self.spark.createDataFrame(batch_tbl)
-            batch_urls = batch_tbl.column("url").to_pylist()
-            batch_count = len(batch_urls)
+        if big and isinstance(self.frontier, pa.Table):
+            # the floor was lowered under driver state: fold it into Spark
+            self._rebase(self.frontier)
+        driver = isinstance(self.frontier, pa.Table)
+        if driver:
+            # driver state: the dequeue is one numpy kernel, no job, and
+            # the dequeued rows leave the table as row deletes
+            batch_tbl, taken = dequeue_arrow(self.frontier, self.B, self.G,
+                                             self.host_budgets)
+            self.frontier = self.frontier.filter(pa.array(~taken))
         else:
+            deq_stats: dict = {}
+            batch = dequeue(self._frontier_view(), self.B, self.G,
+                            hot_host_threshold=self.hot_host_threshold,
+                            seq_hint=self.seq if big and self._seq_orderable
+                            else None,
+                            out_stats=deq_stats,
+                            host_budgets=self.host_budgets or None)
+        batch_urls = None
+        if big:
             batch = batch.localCheckpoint(eager=True)
             # the distributed rank derives the count from its own offsets
             # — no extra count job
             batch_count = deq_stats["batch_count"] \
                 if "batch_count" in deq_stats else batch.count()
+        else:
+            if not driver:
+                # ONE collect: the <= bound rows reach the driver anyway
+                # (their urls are the fetch's IN-list), so they come back
+                # as an Arrow-backed local frame instead of a
+                # localCheckpoint job followed by a second collect
+                batch_tbl = batch.toArrow()
+            batch_tbl = self._with_golden(batch_tbl)
+            batch = self.spark.createDataFrame(batch_tbl)
+            batch_urls = batch_tbl.column("url").to_pylist()
+            batch_count = len(batch_urls)
         if batch_count == 0:
             return False
-        # MOR delete: the dequeued seqs become tombstones (batch is local
-        # or checkpointed, so this union holds only materialized frames)
-        seqs = batch.select("enqueue_seq")
-        self._tombstones = seqs if self._tombstones is None \
-            else self._tombstones.unionByName(seqs)
-        if big or self._tomb_seqs is None \
-                or len(self._tomb_seqs) + batch_count > BIG_ROUND_FLOOR:
-            self._tomb_seqs = None
-        else:
-            self._tomb_seqs += batch_tbl.column("enqueue_seq").to_pylist()
-        self._tomb_count += batch_count
+        if not driver:
+            # MOR delete: the dequeued seqs become tombstones (batch is
+            # local or checkpointed, so this union holds only
+            # materialized frames)
+            seqs = batch.select("enqueue_seq")
+            self._tombstones = seqs if self._tombstones is None \
+                else self._tombstones.unionByName(seqs)
+            if big or self._tomb_seqs is None \
+                    or len(self._tomb_seqs) + batch_count > BIG_ROUND_FLOOR:
+                self._tomb_seqs = None
+            else:
+                self._tomb_seqs += batch_tbl.column("enqueue_seq").to_pylist()
+            self._tomb_count += batch_count
         self.frontier_count -= batch_count
 
         # ---- fetch (J1): a small round pushes its IN-list into the parquet
@@ -763,8 +842,7 @@ class CrawlEngine:
         seq0 = self.seq
         self.seq += n_adm
         if n_adm:
-            self._append_delta(
-                self.spark.createDataFrame(admitted, FRONTIER_SCHEMA), n_adm)
+            self._append(admitted, n_adm)
         self._maybe_compact()
 
         if not news:
@@ -983,8 +1061,8 @@ class CrawlEngine:
             admitted_count = sum(adm_counts.values())
             self.seq += admitted_count
             # MOR append + maybe-compact instead of an O(frontier) rewrite
-            self._append_delta(admitted.drop("partition_id", "page_pos"),
-                               admitted_count)
+            self._append(admitted.drop("partition_id", "page_pos"),
+                         admitted_count)
             self._maybe_compact()
 
             # ---- gather + driver-side merges -------------------------------
@@ -1043,13 +1121,13 @@ class CrawlEngine:
             # orphan the readmit delta; seeds keep the first seqs
             # (oracle parity: OracleCrawler.readmit seeds too)
             self.seed()
-        rows = [(0, self.round, self.seq + i, c, host_of(c), 0, "readmit")
-                for i, c in enumerate(canon)]
+        rows = [dict(priority=0, enqueue_round=self.round,
+                     enqueue_seq=self.seq + i, url=c, host=host_of(c),
+                     depth=0, origin="readmit") for i, c in enumerate(canon)]
         self.seq += len(rows)
         if rows:
-            df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA) \
-                .localCheckpoint(eager=True)
-            self._append_delta(df, len(rows))
+            self._append(pa.Table.from_pylist(rows, FRONTIER_ARROW),
+                         len(rows))
         return len(rows)
 
     def readmit_df(self, urls_df: DataFrame) -> int:
@@ -1060,14 +1138,17 @@ class CrawlEngine:
         executors; enqueue order is defined as ascending UNSIGNED
         (h1, h2) — deterministic and partition-invariant — with seqs
         assigned by the sharded global rank (no single-partition
-        window). URL strings never reach the driver: the frontier rows
-        stay a checkpointed DataFrame delta, and only the 24-byte
-        derived rows are collected for the driver-resident filter's
-        bucket edits (same G-bounded contract as the round commit).
-        Equivalent to ``readmit(victims sorted by unsigned (h1, h2))``
-        — pinned in t:test_crawl_cuckoo. Returns the number re-enqueued
-        (invalid/uncanonicalizable urls are dropped). Raises ValueError
-        under the bloom seen-set."""
+        window). While the frontier is a driver table, the ranked rows
+        and their derived rows come back in ONE ``toArrow`` and join
+        the table (folding it into Spark only if they take it past the
+        floor). Past the floor, URL strings never reach the driver: the
+        frontier rows stay a checkpointed DataFrame delta, and only the
+        24-byte derived rows are collected for the driver-resident
+        filter's bucket edits (same G-bounded contract as the round
+        commit). Equivalent to ``readmit(victims sorted by unsigned
+        (h1, h2))`` — pinned in t:test_crawl_cuckoo. Returns the number
+        re-enqueued (invalid/uncanonicalizable urls are dropped). Raises
+        ValueError under the bloom seen-set."""
         derived = self.seen.derive_df(urls_df, with_keys=True)
         if self.frontier is None:
             self.seed()  # see readmit(): never let seed() run AFTER us
@@ -1087,12 +1168,20 @@ class CrawlEngine:
             "url", "host",
             F.lit(0).cast("int").alias("depth"),
             F.lit("readmit").alias("origin"),
-            "shard", "i1", "fp").localCheckpoint(eager=True)
+            "shard", "i1", "fp")
         n = st.get("total", 0)
         if n == 0:
             return 0
-        self.seen.delete_rows(rows.select("shard", "i1", "fp").toArrow())
-        self._append_delta(rows.drop("shard", "i1", "fp"), n)
+        keys = ["shard", "i1", "fp"]
+        if isinstance(self.frontier, pa.Table):
+            rows = rows.toArrow()
+            self.seen.delete_rows(rows.select(keys))
+            rows = rows.drop_columns(keys)
+        else:
+            rows = rows.localCheckpoint(eager=True)
+            self.seen.delete_rows(rows.select(*keys).toArrow())
+            rows = rows.drop(*keys)
+        self._append(rows, n)
         self.seq += n
         return n
 
@@ -1112,14 +1201,23 @@ class CrawlEngine:
 
     # ------------------------------------------------------------- checkpoint
     def checkpoint(self):
-        """Commit the state as of ``self.round`` (the frontier view,
-        url_store and seen-set blob to the new commit's own paths), then
-        re-base the engine on it."""
+        """Commit the state as of ``self.round`` (the frontier, url_store
+        and seen-set blob to the new commit's own paths), then re-base
+        the engine on it. A driver frontier table is written with
+        pyarrow and kept; a Spark frontier's view is written by Spark
+        and the engine re-bases on the committed dir (:meth:`_rebase`
+        reads it back on the driver if it is at or below the floor)."""
         commit = self.store.next_commit()
         fdir = self.store.commit_dir("frontier", commit)
         sdir = self.store.commit_dir("url_store", commit)
         # overwrite: a checkpoint that died may have left these uncommitted
-        self._frontier_view().write.mode("overwrite").parquet(fdir)
+        driver = isinstance(self.frontier, pa.Table)
+        if driver:
+            shutil.rmtree(fdir, ignore_errors=True)
+            os.makedirs(fdir)
+            pq.write_table(self.frontier, os.path.join(fdir, "part.parquet"))
+        else:
+            self._frontier_view().write.mode("overwrite").parquet(fdir)
         self.url_store.write.mode("overwrite").parquet(sdir)
         self.store.save_bloom(commit, self.seen.to_bytes())
         # the buffers flush into the part dirs of the round this manifest
@@ -1139,14 +1237,14 @@ class CrawlEngine:
         }
         self.store.commit(manifest)
         self.store.gc(commit)
-        self._rebase(*self._committed_state(manifest))
+        self._rebase(self.frontier if driver else fdir,
+                     self._committed_store(manifest))
 
-    def _committed_state(self, m: dict) -> tuple[DataFrame, DataFrame]:
-        """Manifest ``m``'s frontier and url_store: lazy, schema-given
-        parquet reads, which launch no job."""
-        read = self.spark.read
-        return (read.schema(FRONTIER_SCHEMA).parquet(m["frontier_dir"]),
-                read.schema(_STORE_SCHEMA_W_HOST).parquet(m["url_store_dir"]))
+    def _committed_store(self, m: dict) -> DataFrame:
+        """Manifest ``m``'s url_store: a lazy, schema-given parquet read,
+        which launches no job."""
+        return self.spark.read.schema(_STORE_SCHEMA_W_HOST) \
+            .parquet(m["url_store_dir"])
 
     # ----------------------------------------------------------------- resume
     @classmethod
@@ -1177,7 +1275,7 @@ class CrawlEngine:
         # the first sharded round re-sync every shard file from it)
         eng._seen = from_blob(eng.store.load_bloom(m["commit"]), eng.params,
                               workdir)
-        eng._rebase(*eng._committed_state(m))
+        eng._rebase(m["frontier_dir"], eng._committed_store(m))
         return eng
 
     # -------------------------------------------------------------- accessors

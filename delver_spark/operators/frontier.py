@@ -2,6 +2,10 @@
 and admission mask, robots gate.
 
 Scale notes (10^10-row frontier, SURVEY §4.2):
+  - a frontier small enough to live on the driver (the crawl engine's
+    Arrow table below its round floor) dequeues with
+    :func:`dequeue_arrow`, one numpy kernel with no Spark job; the
+    Spark :func:`dequeue` is the same greedy for a distributed frontier;
   - dequeue is per-host ranking (distributed window over the host-hash
     partitioning) followed by a global top-G, which Spark executes as
     TakeOrdered (per-partition top-G, then merge of G-row heaps) — no
@@ -24,10 +28,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..engine.bloom import BloomDelta
 from ..engine.cuckoo import CuckooDelta
@@ -44,6 +50,8 @@ FRONTIER_SCHEMA = T.StructType([
     T.StructField("depth", T.IntegerType(), False),
     T.StructField("origin", T.StringType(), True),
 ])
+# the same schema for a driver-resident frontier table
+FRONTIER_ARROW = to_arrow_schema(FRONTIER_SCHEMA)
 
 STORE_SCHEMA = T.StructType([
     T.StructField("domain", T.StringType(), False),
@@ -212,6 +220,43 @@ def dequeue(frontier: DataFrame, per_host_budget: int, global_budget: int,
     # pos over <= G rows: single-partition window is bounded by the budget
     w_pos = Window.orderBy(*[F.col(c) for c in ORDER_COLS])
     return batch.withColumn("pos", F.row_number().over(w_pos) - 1)
+
+
+def dequeue_arrow(frontier: pa.Table, per_host_budget: int,
+                  global_budget: int, host_budgets: dict | None = None):
+    """:func:`dequeue` as one numpy kernel over a driver-resident
+    frontier table (``FRONTIER_ARROW``), for the crawl engine's state
+    below its round floor: no Spark job. Rows sort by
+    ``(priority, enqueue_round, enqueue_seq)``; a stable sort of the
+    sorted rows' host dictionary codes ranks each row within its host;
+    a row is kept iff its rank is below ``host_budgets.get(host,
+    per_host_budget)``; the first ``global_budget`` kept rows are the
+    batch. Returns ``(batch, taken)``: the batch in :func:`dequeue`'s
+    schema (the frontier's columns plus an int32 ``pos``) and the
+    boolean mask of the frontier rows it took."""
+    n = frontier.num_rows
+    taken = np.zeros(n, dtype=bool)
+    order = np.lexsort([frontier.column(c).to_numpy()
+                        for c in reversed(ORDER_COLS)])
+    hosts = frontier.column("host").combine_chunks().dictionary_encode()
+    codes = hosts.indices.to_numpy(zero_copy_only=False)[order]
+    by_host = np.argsort(codes, kind="stable")
+    # each host's rows are one run of the stably sorted codes
+    first = np.diff(codes[by_host], prepend=-1) != 0
+    starts = np.maximum.accumulate(np.where(first, np.arange(n), 0))
+    rank = np.empty(n, dtype=np.int64)
+    rank[by_host] = np.arange(n) - starts
+    if host_budgets:
+        budget = np.array([host_budgets.get(h, per_host_budget)
+                           for h in hosts.dictionary.to_pylist()],
+                          dtype=np.int64)[codes]
+    else:
+        budget = per_host_budget
+    picked = order[np.flatnonzero(rank < budget)[:global_budget]]
+    taken[picked] = True
+    batch = frontier.take(picked).append_column(
+        "pos", pa.array(np.arange(len(picked), dtype=np.int32)))
+    return batch, taken
 
 
 def _url_hashes(batches):

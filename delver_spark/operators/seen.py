@@ -374,11 +374,14 @@ def new_seen(seen_filter: str, params: dict, workdir: str):
 def from_blob(blob: bytes, params: dict, workdir: str):
     """The seen-set of a snapshot blob by its magic: ``SCK1`` (cuckoo),
     ``RBF1`` (all rolling-bloom generations), or neither — a pre-rolling
-    single ``BloomFilter``, generation 0 of a bloom sized from ``params``."""
+    single ``BloomFilter``, generation 0 of a rolling bloom of
+    ``params``' generation count. Its own header's ``max_n`` and ``p``
+    size the rolling bloom, as ``RollingBloomFilter.load`` lets the
+    file's values win: every generation shares one geometry."""
     if blob.startswith(b"SCK1\n"):
         return CuckooSeen(ShardedCuckoo.from_bytes(blob), workdir)
     if blob.startswith(b"RBF1\n"):
         return BloomSeen(RollingBloomFilter.from_bytes(blob))
+    gen0 = BloomFilter.from_bytes(blob)
     return BloomSeen(RollingBloomFilter(
-        params.get("bloom_count", 1), params["bloom_max_n"],
-        params["bloom_p"], blooms=[BloomFilter.from_bytes(blob)]))
+        params.get("bloom_count", 1), gen0.max_n, gen0.p, blooms=[gen0]))

@@ -4,6 +4,7 @@
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from delver_spark.oracle.crawler import run_oracle
@@ -48,16 +49,33 @@ def _lineage_tuples(rows):
 
 def _spy_dequeue_plans(monkeypatch, crawl):
     """Record, per engine dequeue, whether it took the distributed rank
-    (the big-round plan passes seq_hint)."""
+    (the big-round plan passes seq_hint); a driver-state dequeue, the
+    Arrow kernel, is always a small round."""
     hints = []
-    real = crawl.dequeue
+    real, real_arrow = crawl.dequeue, crawl.dequeue_arrow
 
     def spy(*args, **kwargs):
         hints.append(kwargs.get("seq_hint") is not None)
         return real(*args, **kwargs)
 
+    def spy_arrow(*args, **kwargs):
+        hints.append(False)
+        return real_arrow(*args, **kwargs)
+
     monkeypatch.setattr(crawl, "dequeue", spy)
+    monkeypatch.setattr(crawl, "dequeue_arrow", spy_arrow)
     return hints
+
+
+def _on_driver(eng):
+    """True while the engine's frontier is the driver Arrow table."""
+    return isinstance(eng.frontier, pa.Table)
+
+
+def _frontier_rows(eng):
+    """The live frontier's real row count, in either representation."""
+    return eng.frontier.num_rows if _on_driver(eng) \
+        else eng._frontier_view().count()
 
 
 def _spark_written(part_dir):
@@ -184,24 +202,29 @@ def test_mor_compaction_every_round_stays_exact(spark, tmp_path_factory):
 
 def test_tombstone_literal_cap_falls_back_to_anti_join(
         spark, unit_corpus, oracle_result, tmp_path, monkeypatch):
-    """A small round filters the tombstones as one NOT IN literal while
-    they number at most BIG_ROUND_FLOOR; past it the frontier view
-    falls back to the broadcast anti-join. Lowered to 30 rows here,
-    with every round still small: both forms run, ``frontier_count``
-    equals the view's row count after each round, and the crawl equals
-    the oracle."""
+    """A small round over a Spark-resident frontier filters the
+    tombstones as one NOT IN literal while they number at most
+    BIG_ROUND_FLOOR; past it the frontier view falls back to the
+    broadcast anti-join. Lowered to 60 rows here. The round floor is G,
+    so every round is small and the frontier is Spark-resident from the
+    round that takes it past G rows: both forms filter its tombstones,
+    ``frontier_count`` equals the live row count after each round, and
+    the crawl equals the oracle."""
     from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
 
-    monkeypatch.setattr(crawl, "BIG_ROUND_FLOOR", 30)
+    monkeypatch.setattr(crawl, "BIG_ROUND_FLOOR", 60)
     eng = CrawlEngine(spark, unit_corpus, str(tmp_path))
-    eng._big_round_floor = 10 ** 9
+    eng._big_round_floor = eng.G
+    hints = _spy_dequeue_plans(monkeypatch, crawl)
     eng.seed()
     literal = []
     while eng.round < eng.max_rounds and eng.run_round():
-        literal.append(bool(eng._tomb_seqs))
-        assert eng.frontier_count == eng._frontier_view().count()
+        if not _on_driver(eng) and eng._tomb_count:
+            literal.append(eng._tomb_seqs is not None)
+        assert eng.frontier_count == _frontier_rows(eng)
     eng.checkpoint()
+    assert not any(hints)
     assert True in literal and False in literal, literal
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle_result)
     assert np.array_equal(oracle_result.bloom.bit_positions(),
@@ -273,9 +296,10 @@ def _halve(path):
 def _inject_kill(monkeypatch, wd, target):
     """Make the checkpoint's write of ``target`` under workdir ``wd``
     stop halfway and raise: the frontier or url_store dir (Spark's
-    write, then every file halved), the seen-set blob (half its bytes
-    written) or a part flush (the driver buffer's file, halved). Returns
-    the list the fault appends its path to when it fires."""
+    write, then every file halved; a driver frontier table's pyarrow
+    file, halved), the seen-set blob (half its bytes written) or a part
+    flush (the driver buffer's file, halved). Returns the list the
+    fault appends its path to when it fires."""
     import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -299,17 +323,18 @@ def _inject_kill(monkeypatch, wd, target):
                 kill(path)
 
         monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    elif target == "part":
+    if target in ("frontier", "part"):
         real_write = pq.write_table
 
         def write_table(table, where, *args, **kwargs):
             real_write(table, where, *args, **kwargs)
-            kill(where)
+            part = os.path.basename(os.path.dirname(where)) \
+                .startswith("round_")
+            if part if target == "part" else where.startswith(under):
+                kill(where)
 
         monkeypatch.setattr(pq, "write_table", write_table)
-    else:
-        assert target == "seen_blob"
-
+    if target == "seen_blob":
         class HalfWriter:
             def __init__(self, f, path):
                 self.f, self.path = f, path
@@ -341,7 +366,10 @@ def committed_crawl(spark, unit_corpus, tmp_path_factory):
     """A crawl of 6 rounds, each committed by ``run(checkpoint_every=1)``,
     then committed once more (a second commit of round 6). Returns the
     workdir, each commit's manifest, the number ``run`` made, and the
-    state paths each commit wrote."""
+    state paths each commit wrote: a Spark write's dir, a pyarrow
+    write's file and its dir (a driver frontier table is written by
+    pyarrow), a blob's file."""
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameWriter
 
     from delver_spark.operators.crawl import CrawlEngine
@@ -352,10 +380,15 @@ def committed_crawl(spark, unit_corpus, tmp_path_factory):
     mp = pytest.MonkeyPatch()
     real_parquet, real_write = DataFrameWriter.parquet, snapshot.write_atomic
     real_commit = snapshot.SnapshotStore.commit
+    real_table = pq.write_table
 
     def parquet(self, path, *args, **kwargs):
         written[-1].append(path)
         return real_parquet(self, path, *args, **kwargs)
+
+    def write_table(table, where, *args, **kwargs):
+        written[-1] += [where, os.path.dirname(where)]
+        return real_table(table, where, *args, **kwargs)
 
     def write_atomic(path, data):
         written[-1].append(path)
@@ -367,6 +400,7 @@ def committed_crawl(spark, unit_corpus, tmp_path_factory):
         return real_commit(self, manifest)
 
     mp.setattr(DataFrameWriter, "parquet", parquet)
+    mp.setattr(pq, "write_table", write_table)
     mp.setattr(snapshot, "write_atomic", write_atomic)
     mp.setattr(snapshot.SnapshotStore, "commit", commit)
     try:
@@ -543,13 +577,16 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
 
 
 def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
-    """Each steady small-G dfs round, rounds 1-4, launches at most 4
-    Spark jobs: the dequeue is one collect (2 jobs), the extract comes
-    back in one more (plus the payload broadcast), and the round
-    finishes on the driver; the url_store's stash unions add none. The
-    corpus has golden pixels: they ride the dequeued keys, so they add
-    no job. A resume launches one, the engine construction's schema
-    inference of the payload table: it reads the committed state lazily.
+    """The frontier of the unit crawl stays a driver Arrow table, so
+    the seed launches no Spark job and each steady small-G dfs round,
+    rounds 1-4, at most 2: the dequeue is the driver kernel, the
+    extract comes back in one collect (plus the payload broadcast), and
+    the round finishes on the driver; the url_store's stash unions add
+    none. The corpus has golden pixels: they ride the dequeued keys, so
+    they add no job. A checkpoint launches at most one, the url_store's
+    write (pyarrow writes the frontier). A resume launches one, the
+    engine construction's schema inference of the payload table: it
+    reads the committed url_store lazily and the frontier with pyarrow.
     Jobs are counted from the status tracker, ungrouped — a thread
     pool's threads do not inherit a job group, so a group tag would miss
     their jobs."""
@@ -566,17 +603,19 @@ def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
 
     wd = str(tmp_path_factory.mktemp("crawl_jobs"))
     eng = CrawlEngine(spark, unit_corpus, wd)
-    eng.seed()
-    assert eng.run_round()  # round 0 has no tombstones yet
+    _, n = jobs_of(eng.seed)
+    assert n == 0
+    assert eng.run_round()  # round 0 compiles the round's code paths
     jobs = []
     for _ in range(4):
         ok, n = jobs_of(eng.run_round)
-        assert ok
+        assert ok and _on_driver(eng)
         jobs.append(n)
-    assert all(0 < n <= 4 for n in jobs), jobs
-    eng.checkpoint()
+    assert all(0 < n <= 2 for n in jobs), jobs
+    _, n = jobs_of(eng.checkpoint)
+    assert _on_driver(eng) and n <= 1
     resumed, n = jobs_of(lambda: CrawlEngine.resume(spark, unit_corpus, wd))
-    assert resumed.round == 5
+    assert resumed.round == 5 and _on_driver(resumed)
     assert n <= 1
 
 
@@ -584,8 +623,9 @@ def test_big_g_small_round_job_budget(spark, tmp_path_factory,
                                       monkeypatch):
     """A G=20000 engine whose frontier holds a few dozen urls plans each
     round by that bound, not by G: a steady round takes the small-round
-    plan and launches at most 4 Spark jobs, the budget of
-    test_small_g_round_job_budget (the big-round plan launches ~16)."""
+    plan over the driver frontier table and launches at most 2 Spark
+    jobs, the budget of test_small_g_round_job_budget (the big-round
+    plan launches ~16)."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
@@ -599,12 +639,12 @@ def test_big_g_small_round_job_budget(spark, tmp_path_factory,
     eng = CrawlEngine(spark, d, str(tmp_path_factory.mktemp("crawl_bj")))
     hints = _spy_dequeue_plans(monkeypatch, crawl)
     eng.seed()
-    assert eng.run_round()  # round 0 has no tombstones yet
+    assert eng.run_round()  # round 0 compiles the round's code paths
     before = set(st.getJobIdsForGroup(None))
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
-    assert hints == [False, False]
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert hints == [False, False] and _on_driver(eng)
+    assert 0 < len(jobs) <= 2, sorted(jobs)
 
 
 @pytest.fixture(scope="module")
@@ -626,15 +666,23 @@ def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
                                          tmp_path, monkeypatch,
                                          seen_filter):
     """A floor of 40 rows makes the crawl switch plans as its frontier
-    grows and drains: small, big, big, big, then small rounds. Crawl
-    order, lineage and seen-set bytes equal the oracle's, and the
-    driver's ``frontier_count`` (which picks the plan) equals the
-    frontier's real row count after every round. bloom: dfs with
-    documents, checkpointed every round, so every artifact table holds
-    parts of both layouts and reads in one ``spark.read.parquet``;
-    cuckoo: ``readmit_df`` after round 3, checkpoints after round 1 (the
-    first big round: its Spark parts and round 0's buffered rows share
-    the part dir of snapshot round 2) and at the end."""
+    grows and drains: small, big, big, big, then small rounds. It also
+    switches the frontier's representation (``states``: D a driver
+    table, S Spark, after the seed, then after each round and after its
+    checkpoint): the seeds are a driver table, the append that takes it
+    past 40 rows folds it into Spark, and a checkpoint at or below 40
+    rows brings it back to the driver. Crawl order, lineage and
+    seen-set bytes equal the oracle's, and the driver's
+    ``frontier_count`` (which picks the plan) equals the frontier's
+    real row count after every round. Round 5 is killed once: it runs
+    on a driver table, the crawl dies before its checkpoint, and the
+    resumed engine reads the committed frontier back as a driver table
+    and runs it again. bloom: dfs with documents, checkpointed every
+    round, so every artifact table holds parts of both layouts and
+    reads in one ``spark.read.parquet``; cuckoo: ``readmit_df`` after
+    round 3 (on a Spark frontier), checkpoints after round 1 (the first
+    big round: its Spark parts and round 0's buffered rows share the
+    part dir of snapshot round 2), round 4 and at the end."""
     from delver_spark.engine.murmur import hash128_batch
     from delver_spark.oracle.crawler import OracleCrawler, load_corpus
     from delver_spark.operators import crawl
@@ -642,7 +690,9 @@ def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
     from delver_spark.sources import payload_scan
 
     d = mixed_plan_corpus
-    rounds, readmit_after = 8, 3
+    rounds, readmit_after, killed = 8, 3, 5
+    states_want = {"bloom": "D SS SS SS SD DD DD DD DD",
+                   "cuckoo": "D S SS S S SD D D D"}[seen_filter]
     pages, robots, seeds, p = load_corpus(d)
     oc = OracleCrawler(
         pages, robots, seeds, max_depth=p["max_depth"],
@@ -672,18 +722,32 @@ def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
     eng = CrawlEngine(spark, d, str(tmp_path), seen_filter=seen_filter)
     eng._big_round_floor = 40
     eng.seed()
+
+    def state():
+        return "D" if _on_driver(eng) else "S"
+
+    states = [state()]
     for r in range(rounds):
         if r == readmit_after and victims:
             df = spark.createDataFrame([(u,) for u in victims], "url string")
+            assert not _on_driver(eng)
             assert eng.readmit_df(df) == len(victims)
-            assert eng.frontier_count == eng._frontier_view().count()
+            assert eng.frontier_count == _frontier_rows(eng)
+        if r == killed:
+            assert _on_driver(eng) and eng.run_round()
+            eng = CrawlEngine.resume(spark, d, str(tmp_path))
+            eng._big_round_floor = 40
+            assert eng.round == r and _on_driver(eng)
         if not eng.run_round():
             break
-        assert eng.frontier_count == eng._frontier_view().count(), r
-        if seen_filter == "bloom" or r == 1:
+        states.append(state())
+        assert eng.frontier_count == _frontier_rows(eng), r
+        if seen_filter == "bloom" or r in (1, 4):
             eng.checkpoint()
+            states[-1] += state()
     eng.checkpoint()
 
+    assert " ".join(states) == states_want
     assert True in hints and False in hints[hints.index(True):], hints
     assert len(direct) == sum(hints) > 0
     assert _order_tuples_engine(eng) == _order_tuples_oracle(oracle)

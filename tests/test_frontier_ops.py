@@ -2,21 +2,40 @@
 distributed rank, bloom bitset merge, salted repartition)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from delver_spark.engine.bloom import BloomFilter
 from delver_spark.operators.frontier import (
+    FRONTIER_ARROW,
     FRONTIER_SCHEMA,
     assign_global_rank,
     bloom_bits_for_urls,
     dequeue,
+    dequeue_arrow,
     salted_repartition,
 )
 
 
 def _frontier(spark, rows):
     return spark.createDataFrame(rows, FRONTIER_SCHEMA)
+
+
+def _kernel_batch(rows, B, G, host_budgets=None):
+    """The driver kernel's batch over ``rows`` as frontier-row tuples
+    plus ``pos``, in pos order; checks its ``taken`` mask and its
+    schema (the Spark dequeue's)."""
+    tbl = pa.Table.from_pylist(
+        [dict(zip(FRONTIER_ARROW.names, r)) for r in rows], FRONTIER_ARROW)
+    batch, taken = dequeue_arrow(tbl, B, G, host_budgets)
+    assert batch.schema.names == [*FRONTIER_ARROW.names, "pos"]
+    assert batch.schema.field("pos").type == pa.int32()
+    assert batch.column("pos").to_pylist() == list(range(batch.num_rows))
+    assert sorted(tbl.filter(pa.array(taken)).column("enqueue_seq")
+                  .to_pylist()) == sorted(batch.column("enqueue_seq")
+                                          .to_pylist())
+    return [tuple(r.values()) for r in batch.to_pylist()]
 
 
 def test_dequeue_greedy_equivalence(spark):
@@ -86,9 +105,17 @@ def test_dequeue_hot_host_guard_exact(spark):
 
 
 def test_dequeue_priority_first(spark):
+    """Priority orders before round and seq, in the Spark dequeue and in
+    the driver kernel; ties in priority and round fall to the seq."""
     rows = [(5, 0, 0, "low", "h1", 0, None), (0, 9, 9, "hi", "h2", 0, None)]
     got = dequeue(_frontier(spark, rows), 1, 1).collect()
     assert [r["url"] for r in got] == ["hi"]
+    assert [r[3] for r in _kernel_batch(rows, 1, 1)] == ["hi"]
+    tied = [(0, 2, 7, "c", "h1", 0, None), (0, 2, 3, "b", "h2", 0, None),
+            (0, 1, 9, "a", "h1", 0, None)]
+    want = dequeue(_frontier(spark, tied), 5, 3).orderBy("pos").collect()
+    assert [r["url"] for r in want] == ["a", "b", "c"]
+    assert _kernel_batch(tied, 5, 3) == [tuple(r) for r in want]
 
 
 def test_assign_global_rank_matches_sort_order(spark):
@@ -249,6 +276,9 @@ def test_dequeue_host_budget_overrides(spark):
         [fld.name for fld in FRONTIER_SCHEMA]
     got_rows = [(r["pos"], r["url"]) for r in got.collect()]
     assert got_rows == want
+    # the driver kernel: the same batch, rows and pos
+    assert _kernel_batch(rows, B, G, budgets) == \
+        [tuple(r) for r in got.collect()]
     assert not any(u.startswith("u") and
                    rows[int(u[1:])][4] == "blocked.test"
                    for _, u in got_rows)
@@ -265,6 +295,8 @@ def test_dequeue_host_budget_overrides(spark):
         .orderBy("pos").collect()
     want2 = _python_dequeue_budgets(rows, 1 << 30, 50, {"slow.test": 1})
     assert [(r["pos"], r["url"]) for r in got2] == want2
+    assert _kernel_batch(rows, 1 << 30, 50, {"slow.test": 1}) == \
+        [tuple(r) for r in got2]
 
 
 def test_budgets_from_crawl_delay():

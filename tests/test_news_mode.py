@@ -4,6 +4,7 @@ bloom marking of admitted urls only, no stash/refill, maxDepth=1,
 articles = depth>0 fetched pages."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from delver_spark.oracle.crawler import run_oracle
@@ -77,9 +78,9 @@ def test_news_articles_match_oracle(news_oracle, news_engine):
 
 def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     """The news twin of test_crawl_spark::test_small_g_round_job_budget:
-    a steady small news round launches at most 4 Spark jobs. Its robots
-    gate runs on the driver over the collected candidates, so no
-    separate count job rides along."""
+    a steady small news round over the driver frontier table launches
+    at most 2 Spark jobs. Its robots gate runs on the driver over the
+    collected candidates, so no separate count job rides along."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
@@ -87,11 +88,12 @@ def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     st = sc.statusTracker()
     eng = CrawlEngine(spark, news_corpus, str(tmp_path), mode="news")
     eng.seed()
-    assert eng.run_round()  # round 0 has no tombstones yet
+    assert eng.run_round()  # round 0 compiles the round's code paths
     before = set(st.getJobIdsForGroup(None))
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert isinstance(eng.frontier, pa.Table)
+    assert 0 < len(jobs) <= 2, sorted(jobs)
 
 
 def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):

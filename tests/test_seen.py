@@ -74,6 +74,30 @@ def test_seen_set_contract(spark, tmp_path, kind, probe):
     assert back.to_bytes() == blob
 
 
+def test_single_generation_blob_keeps_its_geometry(tmp_path):
+    """A pre-rolling snapshot blob (one plain ``BloomFilter``, no RBF1
+    magic) restored under other sizing params keeps its own header's
+    ``max_n`` and ``p``: the next round's delta commits into it and the
+    probe then reports every url, equal to the plain filter's own
+    adds."""
+    from delver_spark.engine.bloom import BloomFilter
+    from delver_spark.engine.murmur import hash128_batch
+    from delver_spark.operators.seen import from_blob
+
+    gen0 = BloomFilter(1000, 0.01)
+    gen0.add_many(URLS[:100])
+    seen = from_blob(gen0.to_bytes(), PARAMS, str(tmp_path))
+    fresh = URLS[100:200]
+    seen.commit(seen.delta(*hash128_batch(np.array(fresh, dtype=object))),
+                len(fresh), lambda: [fresh])
+    assert (seen.bloom.max_n, seen.bloom.p) == (1000, 0.01)
+    assert seen.bloom.contains_batch_hashed(
+        *hash128_batch(np.array(URLS[:200], dtype=object))).all()
+    gen0.add_many(fresh)
+    assert seen.bloom.gen0.to_bytes() == gen0.to_bytes()
+    assert seen.bloom.bloom_count == PARAMS["bloom_count"]
+
+
 def test_probe_plan_follows_shard_cache_budget(tmp_path, monkeypatch):
     """The cuckoo takes the shard plan exactly when its bucket bytes
     exceed the per-worker shard-cache budget."""
