@@ -29,8 +29,10 @@ blacklists at news.go:22-76) — with every quirk kept:
 ``news_url_allowed`` is the pure column-expression predicate over
 (path, host, origin_host) covering gates 1/2/4/5; robots and bloom are
 separate operators in this engine (F5/F7) exactly as they are separate
-resources in the reference. ``url_allowed_py`` is the scalar twin used
-for the news_test.go golden and edge-case pins.
+resources in the reference. ``path_allowed_py`` is the scalar twin of
+gates 2/4/5, which the crawl's gate kernel runs; ``url_allowed_py``
+adds gate 1 over full URLs for the news_test.go golden and edge-case
+pins.
 """
 
 from __future__ import annotations
@@ -107,17 +109,18 @@ def _looks_like_article_py(path: str) -> bool:
     return True
 
 
+def path_allowed_py(path: str) -> bool:
+    """Gates 2/4/5 of urlAllowed over a url's path: the scalar twin of
+    ``news_url_allowed`` less its host gate. The crawl's gate kernel
+    (``operators.extract.link_gates``) runs it per outlink."""
+    return (not path.endswith(tuple(BLACKLISTED_EXTENSIONS))
+            and _looks_like_article_py(path)
+            and not (":" in path and "=" in path))
+
+
 def url_allowed_py(url: str, origin: str) -> bool:
     """Scalar urlAllowed twin over full URLs (robots/bloom excluded, as
-    in the news_test.go setup: NullFilter robots + fresh bloom)."""
+    in the news_test.go setup: NullFilter robots + fresh bloom). It
+    compares ``netloc``, so a port counts; the crawl compares hosts."""
     u = urlsplit(url)
-    o = urlsplit(origin)
-    if u.netloc != o.netloc:
-        return False
-    if any(u.path.endswith(e) for e in BLACKLISTED_EXTENSIONS):
-        return False
-    if not _looks_like_article_py(u.path):
-        return False
-    if ":" in u.path and "=" in u.path:
-        return False
-    return True
+    return u.netloc == urlsplit(origin).netloc and path_allowed_py(u.path)

@@ -1,54 +1,45 @@
-"""The crawl engine: delver's pipeline as one DataFrame job per round.
+"""The crawl engine: delver's pipeline, one round at a time.
 
 Each round (SURVEY §3.1 "Spark translation"):
 
-  refill-if-empty (S3) → dequeue under politeness budget (O1/O2, window +
-  TakeOrdered) → payload join (J1) → decode + extract in ONE mapInArrow
-  pass with zero-copy binary views (X1-X11) → admission split (F6):
-  same-domain candidates seen-set-gated (F7/J3) vs cross-domain stash
-  (append-only url_store) → assign enqueue_seq → union frontier delta →
+  refill-if-empty (S3) → dequeue under politeness budget (O1/O2) →
+  payload fetch (J1) → decode + extract with zero-copy binary views
+  (X1-X11), which also gates each page's outlinks → admission split
+  (F6): same-domain candidates seen-set-gated (F7/J3) vs cross-domain
+  stash (append-only url_store) → assign enqueue_seq → frontier append →
   the round's seen-set delta committed on the driver → snapshot commit
   (T8). The seen-set — the rolling bloom or the sharded cuckoo, and how
   a big round probes it — lives behind one interface in
-  operators/seen.py; the admission gates are defined once, as per-page
-  link arrays (``_page_links``) both plans read, and so is the winner
-  rule (``_admission_keep``) both plans run.
+  operators/seen.py; the admission gates are one per-page kernel the
+  extractor runs in both plans (``extract.link_gates``, emitting
+  ``same_links`` and ``stash_links``), and the winner rule
+  (``_admission_keep``) is one kernel both plans run.
 
 Each round picks its physical plan from its BOUND, the most rows it can
 dequeue: ``min(G, frontier_count)``, where ``frontier_count`` is the
 exact live row count the driver keeps in either state representation
 (below). The bound only picks the plan; the dequeue limit stays G, so
 the crawl is the same under either plan. At or below ``BIG_ROUND_FLOOR``
-a round takes the small-round plan: the dequeue comes back as a local
-relation (the driver kernel's batch, or one ``toArrow`` of a Spark
-frontier's), the fetch pushes an IN-list into the payload scan and
-broadcast-joins the pruned payload, and the extract comes back in ONE
-more ``toArrow`` — the artifacts, the gated candidates and the pages'
-urls — after which the round finishes on the driver with the same
-Arrow/numpy kernels the big plan runs in its tasks (admission mask,
-winner rank, seen-set delta), and its admitted and stash rows re-enter
-Spark as local relations. Above it, the big-round plan: the dequeue
-ranks distributed (``frontier.dequeue`` ``seq_hint``), the extract tasks
-read their payload row-group splits directly
+a round takes the driver plan, which launches no Spark job over a
+driver frontier: the numpy dequeue ``frontier.dequeue_arrow``, one
+filtered pyarrow read of the payload rows (``_rows_by_url``), the
+extractor called in-process, then Arrow/numpy kernels for the artifact
+split, admission mask, winner rank and seen-set delta. Over a Spark
+frontier its dequeue is one collect of 2 jobs (the host window's
+shuffle, the ordered take; the tombstones ride it as one parsed ``NOT
+IN`` literal while the driver knows all of them and they number at most
+``BIG_ROUND_FLOOR``). Above the floor, the big-round plan: the dequeue
+ranks distributed (``frontier.dequeue`` ``seq_hint``), the extract
+tasks read their payload row-group splits directly
 (``sources/payload_scan.py``, payload bytes never shuffle), the
 admission is a distributed Arrow pass through the seen-set's probe plan
 and Spark writes the artifacts every round. Each artifact is defined
-once (``_artifacts``), so both layouts write one schema.
-
-A steady small round over a driver frontier table launches 2 Spark jobs:
-the payload broadcast and the extract collect; its dequeue is the numpy
-kernel ``frontier.dequeue_arrow``. Over a Spark frontier the dequeue is
-one collect of 2 more jobs (the host window's shuffle, the ordered take
-— the tombstones ride it as one parsed ``NOT IN`` literal while the
-driver knows all of them and they number at most ``BIG_ROUND_FLOOR``).
-No order, admission or seen-set job and no filter broadcast is left.
-Golden pixels, in a corpus that has them, are attached to the dequeued
-keys on the driver in either plan (``_with_golden``), not joined in
-Spark. On a 4-core box each small job costs 0.1-0.64 s of process-tree
-CPU, much of it the JVM compiling each distinct code path the round
-runs, so the count, not the data, sets a small round's cost — which is
-why a G=20000 crawl whose frontier holds a few hundred urls takes the
-small plan.
+once (``_artifacts``), so both layouts write one schema. On a 4-core box
+the driver plan used less CPU than the big plan up to 20 000 urls and
+less wall time up to 10 000 (CHANGES.md); each Spark job costs 0.1-0.64
+s of process-tree CPU, much of it the JVM compiling each distinct code
+path, so a G=20000 crawl whose frontier holds a few hundred urls takes
+the driver plan.
 
 Hot-host skew strategy (BASELINE.json north_star: "explicit salted
 repartitioning on hash(host)"), by stage:
@@ -61,9 +52,7 @@ repartitioning on hash(host)"), by stage:
     exact — see its docstring and bench_frontier.py);
   - admission: shuffled by url (uniform by canonicalized-url hash, not by
     host) — hot hosts do not concentrate;
-  - residual shuffle skew: AQE skew-join/coalesce is on (session.py);
-    `frontier.salted_repartition` remains the generic salting primitive
-    for order-insensitive host-keyed stages.
+  - residual shuffle skew: AQE skew-join/coalesce is on (session.py).
 
 The frontier's representation follows its size, as the round plan
 does: ``CrawlEngine._rebase``, the one place the state is installed,
@@ -80,10 +69,10 @@ checkpoint re-bases the engine on the state it committed, as resume
 loads it — pyarrow's read of a frontier at or below the floor, else
 lazy parquet reads: lineage and partition count restart, and an
 uninterrupted crawl runs on exactly the state a resume would load. Only
-round-bounded artifacts (the <= G fetched rows with their candidate
-links, a small round's admitted and stash rows, counters) and a
-frontier below the floor live on the driver. The url_store is
-APPEND-ONLY —
+round-bounded data (a small round's payload rows, its extract with the
+candidate links, its admitted and stash rows, counters) and a frontier
+below the floor live on the driver: about 10 KB of payload a row, so the
+floor bounds the driver's memory. The url_store is APPEND-ONLY —
 last-wins dedupe happens once per refill on the single published domain,
 not per round, so no full-store shuffle ever runs (SURVEY J4/O5 + Badger
 Set overwrite semantics, resource/maps/persistent.go:23-41).
@@ -102,6 +91,7 @@ import shutil
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -109,7 +99,7 @@ from pyspark.sql import functions as F
 from ..engine.robots import RobotsCache
 from ..engine.urlnorm import canonicalize, host_of
 from ..sources.snapshot import SnapshotStore
-from .extract import EXTRACT_SCHEMA, make_extractor_arrow
+from .extract import EXTRACT_SCHEMA, link_gates, make_extractor_arrow
 from .frontier import (
     FRONTIER_ARROW,
     FRONTIER_SCHEMA,
@@ -133,105 +123,92 @@ _PART_TABLES = ("crawl_order", "lineage", "quarantine", "documents")
 _COUNTERS = ("round", "seq", "fetch_seq", "frontier_count")
 
 
-# the documents artifact: every extract column but the outlinks and the
-# entity lists, plus the round
+# the documents artifact: every extract column but the link arrays and
+# the entity lists, plus the round
 _DOC_COLS = [f.name for f in EXTRACT_SCHEMA.fields
-             if f.name not in ("outlinks", "countries", "companies")]
+             if f.name not in ("outlinks", "same_links", "stash_links",
+                               "countries", "companies")]
+
+# an artifact row test (_artifacts) on Spark columns and on Arrow arrays
+_SPARK_TESTS = {"true": lambda c: c, "null": lambda c: c.isNull(),
+                "valid": lambda c: c.isNotNull(),
+                "positive": lambda c: c > 0}
+_ARROW_TESTS = {"true": lambda a: a, "null": pc.is_null,
+                "valid": pc.is_valid,
+                "positive": lambda a: pc.greater(a, 0)}
 
 
 def _artifacts(rnd: int, fetch_seq0: int, news: bool,
                documents: bool) -> dict:
     """The one definition of each artifact table a round appends to:
-    ``{name: (row predicate, columns)}``, SQL over the extract frame.
-    Spark writes ``extracted.filter(pred).selectExpr(*cols)``; the driver
-    buffer collects every table as a struct column of ``cols`` plus
-    ``pred`` as a mask (:meth:`CrawlEngine._order_job`). ``round`` is a
-    non-NULL INT literal in both."""
+    ``{name: (tests, columns)}`` over the extract table. A row belongs
+    to the table when each ``(column, test)`` of ``tests`` holds (a
+    ``_SPARK_TESTS``/``_ARROW_TESTS`` key). A column is ``(name,
+    source, k)``: ``source`` renamed (k None), ``source + k``, or the
+    non-NULL INT literal ``k`` (source None); a bare name keeps an
+    extract column as it is. A big round's tables are Spark writes of
+    :func:`_spark_artifact`, a small round's the Arrow tables of
+    :func:`_arrow_artifact`, in one schema."""
+    rnd_col = ("round", None, rnd)
     arts = {
-        "crawl_order": ("true", [f"pos + {fetch_seq0} AS seq", "url_canon",
-                                 "depth", f"{rnd} AS round", "host",
-                                 "success"]),
-        "quarantine": ("quarantined IS NOT NULL",
-                       ["url_canon", "quarantined AS error",
-                        f"{rnd} AS round"]),
+        "crawl_order": ([], [("seq", "pos", fetch_seq0), "url_canon",
+                             "depth", rnd_col, "host", "success"]),
+        "quarantine": ([("quarantined", "valid")],
+                       ["url_canon", ("error", "quarantined", None),
+                        rnd_col]),
     }
     if documents:
         # news: articles only, processArticle skips depth 0
         arts["documents"] = (
-            "success AND quarantined IS NULL" + (" AND depth > 0" if news
-                                                 else ""),
-            _DOC_COLS + [f"{rnd} AS round"])
-    return arts
+            [("success", "true"), ("quarantined", "null")]
+            + ([("depth", "positive")] if news else []),
+            _DOC_COLS + [rnd_col])
+    return {name: (tests, [(c, c, None) if isinstance(c, str) else c
+                           for c in cols])
+            for name, (tests, cols) in arts.items()}
 
 
-def _outlink_domain(host_col):
-    """GetSLDAndTLD (util/util.go:92-101) as a JVM column expression:
-    last two dot-tokens, single token as-is. Exactly mirrors
-    engine.urlnorm.sld_tld so the admission gate stays oracle-equal
-    while the domain never has to be computed in python or carried
-    through the extracted checkpoint."""
-    toks = F.split(host_col, "\\.")
-    return F.when(F.size(toks) <= 1, host_col) \
-        .otherwise(F.array_join(F.slice(toks, -2, 2), "."))
+def _spark_artifact(df: DataFrame, tests: list, cols: list) -> DataFrame:
+    """One :func:`_artifacts` table of the extract frame ``df``."""
+    for name, test in tests:
+        df = df.filter(_SPARK_TESTS[test](F.col(name)))
+    return df.select(*[
+        (F.lit(k) if src is None else F.col(src) if k is None
+         else F.col(src) + k).alias(name)
+        for name, src, k in cols])
+
+
+def _arrow_artifact(t: pa.Table, tests: list, cols: list) -> pa.Table:
+    """One :func:`_artifacts` table of the extract table ``t``, in the
+    schema Spark writes: every column nullable but the literal."""
+    for name, test in tests:
+        t = t.filter(_ARROW_TESTS[test](t.column(name)))
+    fields, arrays = [], []
+    for name, src, k in cols:
+        if src is None:
+            a = pa.array(np.full(t.num_rows, k, dtype=np.int32))
+        else:
+            a = t.column(src) if k is None else pc.add(t.column(src), k)
+        fields.append(pa.field(name, a.type, nullable=src is not None))
+        arrays.append(a)
+    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+
+
+def _rows_by_url(path: str, urls: pa.Array, columns: list) -> pa.Table:
+    """``columns`` of the parquet table at ``path`` taken at each of
+    ``urls`` by its ``url_canon`` key, in ``urls`` order: one filtered
+    pyarrow read (the filter prunes row groups by their url stats). A
+    url held twice gets its row twice, a url with no row NULLs."""
+    t = pq.read_table(path, columns=["url_canon", *columns],
+                      filters=pc.field("url_canon").isin(urls))
+    at = pc.index_in(urls, value_set=t.column("url_canon").combine_chunks())
+    return t.select(columns).take(at)
 
 
 def _arrow_frontier(rows: pa.Table) -> pa.Table:
     """``rows`` (the frontier's columns, in any order and with any
     nullability) in the driver frontier table's schema."""
     return rows.select(FRONTIER_ARROW.names).cast(FRONTIER_ARROW)
-
-
-def _in_list(col: str, values: list[str]):
-    """``col IN (values)`` parsed from ONE SQL string. ``Column.isin``
-    makes two JVM calls per value, ~1 s of process-tree CPU for a
-    512-url fetch list on a 4-core box; the parser takes the whole list
-    in one call and yields the same In/InSet predicate, which still
-    pushes down to the parquet scan. ``values`` must be non-empty."""
-    quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-              for v in values)
-    return F.expr(f"`{col}` IN ({','.join(quoted)})")
-
-
-def _page_links(news: bool, max_depth: int) -> dict:
-    """Each fetched page's admission candidates, gated per page as JVM
-    higher-order filters over ``outlinks`` — the one definition of the
-    admission gates, which both round plans read. ``same_links``: the
-    links the seen-set admission considers (dfs: same registrable domain
-    under the depth gate; news: news.go urlAllowed's column gates, with
-    robots applied by the caller). ``stash_links`` (dfs): the
-    cross-domain links, each with its ``domain``. Failed pages and NULL
-    outlinks give NULL; a NULL domain on either side fails both gates."""
-    ok = F.col("success")
-    if news:
-        # news.go urlAllowed: exact host + extension/path blacklists +
-        # ':'+'=' (functions/news.py); maxDepth=1
-        from ..functions.news import NEWS_MAX_DEPTH, news_url_allowed
-
-        def allowed(link):
-            path = F.coalesce(F.parse_url(link["url"], F.lit("PATH")),
-                              F.lit(""))
-            return news_url_allowed(path, link["host"], F.col("host"))
-
-        return {"same_links": F.when(
-            ok & (F.col("depth") < NEWS_MAX_DEPTH),
-            F.filter("outlinks", allowed))}
-    linked = F.transform("outlinks", lambda link: link.withField(
-        "domain", _outlink_domain(link["host"])))
-    return {
-        "same_links": F.when(
-            ok & (F.col("depth") < max_depth),
-            F.filter("outlinks", lambda link:
-                     _outlink_domain(link["host"]) == F.col("domain"))),
-        "stash_links": F.when(ok, F.filter(
-            linked, lambda link: link["domain"] != F.col("domain")))}
-
-
-def _page_cand_counts(links: dict) -> list:
-    """Each fetched page's ``same_n`` and ``stash_n``, the sizes of its
-    dfs :func:`_page_links` ``links`` (0 for NULL), for the big round's
-    lineage counters: no explode, shuffle or extra job."""
-    return [F.when(c.isNull(), 0).otherwise(F.size(c)).alias(
-                name.replace("_links", "_n")) for name, c in links.items()]
 
 
 def _seen_ops(news: bool, pages: list, admitted: list) -> list:
@@ -367,13 +344,14 @@ class CrawlEngine:
         self.max_rounds = p["max_rounds"]
         self._big_round_floor = BIG_ROUND_FLOOR
 
-        # payload table: at 100 TB this is the Iceberg table bucketed/sorted
-        # by url_canon; per-round access is an IN-filter over <= G keys that
-        # pushes down to parquet row-group stats (no full scan per round).
-        self.pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet")) \
-            .select("url_canon", "bytes", "fmt", "caption", "phash", "pix_md5")
-        # the original pixels of lossy payloads, for the extract's PSNR
-        # check; attached to the dequeued keys on the driver (_with_golden)
+        # the payload table (at 100 TB the Iceberg table bucketed/sorted
+        # by url_canon) is read per round, never here: a small round
+        # reads its keys' rows with pyarrow (_fetch_on_driver), a big
+        # round's tasks read its row-group splits (payload_scan). The
+        # original pixels of lossy payloads, for the extract's PSNR
+        # check, are attached to the dequeued keys on the driver
+        # (_with_golden)
+        self._pages_path = os.path.join(corpus_dir, "pages.parquet")
         golden = os.path.join(corpus_dir, "golden_pixels.parquet")
         self._golden_path = golden if os.path.exists(golden) else None
 
@@ -393,14 +371,11 @@ class CrawlEngine:
         # sharded cuckoo whose payoff is readmit(), per-URL recrawl.
         # Built on first use (see `seen`)
         self._seen = None
-        self.extractor = make_extractor_arrow(n_partitions,
-                                              emit_text=collect_documents)
-        # the admission gates and the big round's dfs lineage count
-        # columns, built once: each Column is several JVM calls (~0.4 ms
-        # of CPU each), ~0.1 s a round if rebuilt
-        links = _page_links(mode == "news", self.max_depth)
-        self._link_cols = [c.alias(name) for name, c in links.items()]
-        self._cand_cols = [] if mode == "news" else _page_cand_counts(links)
+        # the extract, which emits each page's gated admission candidates
+        # (extract.link_gates) in both round plans
+        self._gates = link_gates(mode == "news", self.max_depth)
+        self.extractor = make_extractor_arrow(
+            n_partitions, emit_text=collect_documents, gates=self._gates)
 
         # mutable state. `frontier` is a driver Arrow table at or below
         # the round floor (_rebase). Past it, it is held MOR-style
@@ -621,7 +596,6 @@ class CrawlEngine:
                             else None,
                             out_stats=deq_stats,
                             host_budgets=self.host_budgets or None)
-        batch_urls = None
         if big:
             batch = batch.localCheckpoint(eager=True)
             # the distributed rank derives the count from its own offsets
@@ -630,22 +604,17 @@ class CrawlEngine:
                 if "batch_count" in deq_stats else batch.count()
         else:
             if not driver:
-                # ONE collect: the <= bound rows reach the driver anyway
-                # (their urls are the fetch's IN-list), so they come back
-                # as an Arrow-backed local frame instead of a
-                # localCheckpoint job followed by a second collect
+                # ONE collect: the <= bound rows are fetched on the driver
                 batch_tbl = batch.toArrow()
-            batch_tbl = self._with_golden(batch_tbl)
-            batch = self.spark.createDataFrame(batch_tbl)
-            batch_urls = batch_tbl.column("url").to_pylist()
-            batch_count = len(batch_urls)
+            batch_count = batch_tbl.num_rows
         if batch_count == 0:
             return False
         if not driver:
-            # MOR delete: the dequeued seqs become tombstones (batch is
-            # local or checkpointed, so this union holds only
-            # materialized frames)
-            seqs = batch.select("enqueue_seq")
+            # MOR delete: the dequeued seqs become tombstones (a
+            # checkpointed batch's or a local relation, so this union holds
+            # only materialized frames)
+            seqs = batch.select("enqueue_seq") if big else \
+                self.spark.createDataFrame(batch_tbl.select(["enqueue_seq"]))
             self._tombstones = seqs if self._tombstones is None \
                 else self._tombstones.unionByName(seqs)
             if big or self._tomb_seqs is None \
@@ -656,24 +625,18 @@ class CrawlEngine:
             self._tomb_count += batch_count
         self.frontier_count -= batch_count
 
-        # ---- fetch (J1): a small round pushes its IN-list into the parquet
-        # scan (row-group pruning on url_canon stats) and broadcasts the
-        # pruned payload; a big round's extract tasks read the payload
-        # splits directly. Payload rows are ~10 KB of binary each: the
-        # 256-row Arrow batch rule (measured rationale in
-        # session.scoped_arrow_batch — the one shared copy of this logic),
-        # scoped to the fetch/extract job only. A small round's extract
-        # comes back to the driver in that same job and the round
-        # finishes there; a big round runs the post-extract job DAG
-        from ..session import scoped_arrow_batch
-        with scoped_arrow_batch(self.spark, 256):
-            extracted = self._fetch_extract(batch, batch_count, batch_urls)
-            if not big:
-                pages, tables = self._collect_pages(extracted, rnd)
+        # ---- fetch (J1) + extract: a big round's tasks read the payload
+        # splits under the 256-row Arrow batch rule for ~10 KB payload
+        # rows (session.scoped_arrow_batch); a small round runs on the
+        # driver
         if big:
+            from ..session import scoped_arrow_batch
+            with scoped_arrow_batch(self.spark, 256):
+                extracted = self._fetch_extract(batch, batch_count)
             self._finish_round(extracted, batch_count, rnd)
         else:
-            self._finish_on_driver(pages, tables, batch_count, rnd)
+            self._finish_on_driver(self._fetch_on_driver(batch_tbl),
+                                   batch_count, rnd)
         self.round += 1
         return True
 
@@ -681,52 +644,46 @@ class CrawlEngine:
     def _with_golden(self, keys: pa.Table) -> pa.Table:
         """``keys`` plus each ``url``'s original pixels as
         ``golden_pixels`` (NULL where it has none) when the corpus has
-        them: one filtered pyarrow read on the driver. The extract finds
-        the column by name; without golden pixels ``keys`` is returned
-        as it is."""
+        them (:func:`_rows_by_url`). The extract finds the column by
+        name; without golden pixels ``keys`` is returned as it is."""
         if self._golden_path is None:
             return keys
-        import pyarrow.compute as pc
+        golden = _rows_by_url(self._golden_path,
+                              keys.column("url").combine_chunks(), ["pixels"])
+        return keys.append_column("golden_pixels", golden.column(0))
 
+    def _fetch_on_driver(self, keys: pa.Table) -> pa.Table:
+        """A small round's fetch + extract in the driver process, with
+        no Spark job: the dequeued ``keys``' payload rows and golden
+        pixels (:func:`_rows_by_url`), then the extractor in-process. A
+        url with no payload row extracts as a failed fetch, as in the
+        big plan. Returns the extract table in ``pos`` order."""
+        from ..sources.payload_scan import PAYLOAD_COLS
+
+        keys = self._with_golden(keys.sort_by("pos"))
         urls = keys.column("url").combine_chunks()
-        golden = pq.read_table(self._golden_path,
-                               filters=pc.field("url_canon").isin(urls))
-        at = pc.index_in(urls, value_set=golden.column("url_canon")
-                         .combine_chunks())
-        return keys.append_column("golden_pixels",
-                                  golden.column("pixels").take(at))
+        payload = _rows_by_url(self._pages_path, urls, PAYLOAD_COLS[1:])
+        rows = {"url_canon": urls,
+                **{c: keys.column(c) for c in keys.column_names
+                   if c in ("pos", "depth", "host", "golden_pixels")},
+                **dict(zip(payload.column_names, payload.columns))}
+        return pa.Table.from_batches(
+            self.extractor(pa.table(rows).to_batches()))
 
-    def _fetch_extract(self, batch: DataFrame, batch_count: int,
-                       batch_urls: list | None) -> DataFrame:
-        """Fetch + extract for one round; returns the ``extracted``
-        frame. Golden pixels ride the dequeued keys in both plans
-        (:meth:`_with_golden`). ``batch_urls`` non-None selects the
-        small-round plan: the list (the already-collected batch keys)
-        is pushed into the payload scan as an IN-list and the pruned
-        payload broadcast-joins the local batch; the frame stays lazy
-        for the round's one collect. None selects the big-round plan,
-        the direct payload scan, whose frame is checkpointed."""
-        payload_cols = ["bytes", "fmt", "caption", "phash", "pix_md5"]
-        if batch_urls is not None:
-            payload = self.pages.filter(_in_list("url_canon", batch_urls))
-            golden = [batch.golden_pixels] if self._golden_path else []
-            fetched = batch.join(F.broadcast(payload),
-                                 batch.url == payload.url_canon, "left") \
-                .select(batch.pos, batch.url.alias("url_canon"), batch.depth,
-                        batch.host, *payload_cols, *golden)
-            return fetched.mapInArrow(self.extractor, EXTRACT_SCHEMA)
-        # big batch: payload bytes never cross ANY process boundary — the
-        # extract tasks read their parquet row-group splits directly and
-        # probe the G-bounded broadcast key map in place
-        # (sources/payload_scan.py has the measurements and the 100 TB
-        # story). Misses = anti-join on the url column only (JVM columnar
-        # scan, no payload IO).
-        from ..sources.payload_scan import fetch_extract_direct
+    def _fetch_extract(self, batch: DataFrame,
+                       batch_count: int) -> DataFrame:
+        """A big round's fetch + extract; returns the checkpointed
+        ``extracted`` frame. Payload bytes never cross ANY process
+        boundary: the extract tasks read their parquet row-group splits
+        and probe the broadcast keys (golden pixels attached) in place
+        (sources/payload_scan.py). Misses = anti-join on the payload
+        table's url column only (no payload IO)."""
+        from ..sources.payload_scan import PAYLOAD_COLS, fetch_extract_direct
         keys_tbl = self._with_golden(
             batch.select("url", "pos", "depth", "host").toArrow())
         hits_df, fetch_key_bc = fetch_extract_direct(
-            self.spark, os.path.join(self.corpus_dir, "pages.parquet"),
-            keys_tbl, self.n_partitions, emit_text=self.collect_documents)
+            self.spark, self._pages_path, keys_tbl, self.n_partitions,
+            emit_text=self.collect_documents, gates=self._gates)
         try:
             hits_df = hits_df.localCheckpoint(eager=True)
             n_hits = hits_df.count()
@@ -737,54 +694,31 @@ class CrawlEngine:
             # miss anti-join (a full scan of the url column) and the extra
             # union materialization entirely
             return hits_df
-        misses = (batch.join(self.pages.select(F.col("url_canon").alias("u")),
-                             batch.url == F.col("u"), "left_anti")
+        urls = self.spark.read.parquet(self._pages_path) \
+            .select(F.col("url_canon").alias("u"))
+        misses = (batch.join(urls, batch.url == F.col("u"), "left_anti")
                   .select("pos", F.col("url").alias("url_canon"), "depth",
                           "host",
-                          *[F.lit(None).alias(c) for c in payload_cols]))
+                          *[F.lit(None).alias(c) for c in PAYLOAD_COLS[1:]]))
         return (hits_df
                 .unionByName(misses.mapInArrow(self.extractor, EXTRACT_SCHEMA))
                 .localCheckpoint(eager=True))
 
     # ---------------------------------------------------- round finish
-    def _collect_pages(self, extracted: DataFrame, rnd: int):
-        """A small round's ONE collect: the extract frame's
-        round-bounded columns in one ``toArrow``, straight off the
-        ``mapInArrow`` (no checkpoint). Each artifact (:func:`_artifacts`)
-        rides as a struct column plus its predicate as a mask, and the
-        admission candidates as the gated :func:`_page_links` arrays.
-        (A NULL struct for a filtered-out row would fail the
-        ``toArrow``: ``round`` is a non-NULL child.) Returns the page
-        table, sorted by ``pos``, and the split artifact tables."""
-        arts = _artifacts(rnd, self.fetch_seq, self.mode == "news",
-                          self.collect_documents)
-        t = extracted.select(
-            "pos", "partition_id", "url_canon", "depth",
-            F.expr("quarantined IS NOT NULL AS quarantined"),
-            *self._link_cols,
-            *[F.expr(f"struct({', '.join(cols)}) AS {name}")
-              for name, (_, cols) in arts.items()],
-            *[F.expr(f"{pred} AS in_{name}")
-              for name, (pred, _) in arts.items()]
-        ).toArrow().sort_by("pos")
-        tables = {name: pa.Table.from_struct_array(t.column(name))
-                  .filter(t.column("in_" + name)) for name in arts}
-        return t, tables
-
-    def _finish_on_driver(self, pages: pa.Table, tables: dict,
-                          batch_count: int, rnd: int):
-        """The small round after its one collect, on the driver with the
-        Arrow/numpy kernels the big round runs in its tasks: the
-        candidates flatten out of the gated link arrays (plus, dfs, one
-        marker row per unquarantined fetched page) and
-        :func:`_admission_keep` probes the live seen-set filter; winners
-        rank by ``(page_pos, link_pos)``; the seen-set delta comes from
-        the same hashes (``seen.delta``, the family's delta kernel). The
-        admitted and stash rows join the frontier and the url_store as
-        local relations, which launch no job."""
-        import pyarrow.compute as pc
-
+    def _finish_on_driver(self, pages: pa.Table, batch_count: int,
+                          rnd: int):
+        """The small round after its extract ``pages`` (in ``pos``
+        order), with the Arrow/numpy kernels the big round runs in its
+        tasks: the artifacts split by :func:`_arrow_artifact`; the gated
+        link arrays flattened (plus, dfs, one marker row per
+        unquarantined page) through :func:`_admission_keep` against the
+        live seen-set; winners ranked by ``(page_pos, link_pos)``; the
+        seen-set delta from the same hashes (``seen.delta``). Admitted
+        and stash rows join the state as local relations (no job)."""
         news = self.mode == "news"
+        tables = {name: _arrow_artifact(pages, *art) for name, art in
+                  _artifacts(rnd, self.fetch_seq, news,
+                             self.collect_documents).items()}
         pos = pages.column("pos").to_numpy()
         depth = pages.column("depth").to_numpy()
         urls = pages.column("url_canon").combine_chunks()
@@ -818,7 +752,7 @@ class CrawlEngine:
         # dfs markers: the unquarantined fetched pages (news.go never
         # marks the fetched page: none there), after the candidates
         marked = np.zeros(len(pos), dtype=bool) if news \
-            else ~pages.column("quarantined").to_numpy(zero_copy_only=False)
+            else pc.is_null(pages.column("quarantined")).to_numpy()
         marked_urls = urls.filter(pa.array(marked))
         page_pos = pos[page]
         none_c, none_m = np.full(n_c, -1), np.full(len(marked_urls), -1)
@@ -892,28 +826,29 @@ class CrawlEngine:
     def _order_job(self, extracted: DataFrame, rnd: int, fetch_seq0: int):
         """A big round's artifacts (:func:`_artifacts`), {partition_id:
         lineage counters} and the quarantined count, in one job; dfs
-        lineage candidate counts ride it as per-page columns. Spark
-        writes the artifacts into the part dirs of the snapshot round
-        that will commit them (``rnd + 1``: an uncommitted round's parts
-        stay invisible, see ``SnapshotStore``)."""
+        lineage candidate counts are the sizes of the extractor's gated
+        link arrays. Spark writes the artifacts into the part dirs of the
+        snapshot round that will commit them (``rnd + 1``: an
+        uncommitted round's parts stay invisible, see
+        ``SnapshotStore``)."""
         news = self.mode == "news"
-        cand_names = [] if news else ["same_n", "stash_n"]
-        arts = _artifacts(rnd, fetch_seq0, news, self.collect_documents)
-        parts = extracted.select("*", *self._cand_cols) \
-            .groupBy("partition_id").agg(
-                F.count("*").alias("count"),
-                F.expr(f"count_if({arts['quarantine'][0]})").alias("q_n"),
-                *[F.sum(c).alias(c) for c in cand_names]).collect()
+        cands = [] if news else ["same_links", "stash_links"]
+        parts = extracted.groupBy("partition_id").agg(
+            F.count("*").alias("count"),
+            F.count("quarantined").alias("q_n"),
+            *[F.sum(F.when(F.col(c).isNull(), 0).otherwise(F.size(c)))
+              .alias(c) for c in cands]).collect()
         agg = {int(r["partition_id"]): {
                    "fetched": int(r["count"]),
-                   "deduped": int(r["same_n"]) if cand_names else 0,
+                   "deduped": int(r["same_links"]) if cands else 0,
                    "enqueued": 0,
-                   "stashed": int(r["stash_n"]) if cand_names else 0}
+                   "stashed": int(r["stash_links"]) if cands else 0}
                for r in parts}
         q_total = sum(int(r["q_n"]) for r in parts)
-        for name, (pred, cols) in arts.items():
+        for name, art in _artifacts(rnd, fetch_seq0, news,
+                                    self.collect_documents).items():
             if name != "quarantine" or q_total:
-                extracted.filter(pred).selectExpr(*cols).write \
+                _spark_artifact(extracted, *art).write \
                     .mode("overwrite").parquet(
                         self.store.state_dir(name, rnd + 1))
         return agg, q_total
@@ -977,12 +912,12 @@ class CrawlEngine:
         - the order job (:meth:`_order_job`, thread pool): per-round
           Spark writes of the artifact tables, per-partition
           fetched/quarantined counts and — dfs — the pages' candidate
-          counts (``_page_cand_counts``). News runs one more count job:
-          its gate calls the robots pandas UDF, which cannot run inside a
-          higher-order function;
+          counts, the sizes of their gated link arrays. News runs one
+          more count job: its robots gate is a pandas UDF over the
+          exploded candidates;
         - the critical path: fused Arrow admission (:meth:`_admit`) over
-          the exploded ``same_links`` (:func:`_page_links`) through the
-          seen-set's probe plan, broadcast or shard files;
+          the exploded ``same_links`` (``extract.link_gates``) through
+          the seen-set's probe plan, broadcast or shard files;
         - ONE seen-set pass over the round's inserts (non-quarantined
           fetched urls ∪ admitted ``(url, partition_id)``;
           ``seen.round_pass``): per-partition admitted counts
@@ -996,11 +931,8 @@ class CrawlEngine:
         from concurrent.futures import ThreadPoolExecutor
 
         news = self.mode == "news"
-        links = extracted.select("pos", "url_canon", "depth", "partition_id",
-                                 *self._link_cols)
-
         def explode(name):
-            return links.select(F.col("pos").alias("page_pos"),
+            return extracted.select(F.col("pos").alias("page_pos"),
                                 F.col("url_canon").alias("page_url"),
                                 F.col("depth").alias("page_depth"),
                                 "partition_id", F.explode(name).alias("l"))

@@ -29,20 +29,23 @@ from ..engine.extract_ref import (
     match_countries,
     sentiment_binary,
 )
-from ..engine.urlnorm import canonicalize, host_of, sld_tld
+from ..engine.urlnorm import canonicalize, host_of, path_of, sld_tld
 from ..fixtures.codecs import decode, phash64, psnr
 from ..oracle.crawler import partition_of
 
-# the outlink's registrable domain is NOT stored: it is derived JVM-side
-# inside the admission gates (exact GetSLDAndTLD split semantics,
-# util/util.go:92-101) — see crawl.py _outlink_domain and _page_links.
-# Dropping it saves ~30 B x fan-out per page in the extracted checkpoint
-# and the admission shuffle, plus one python sld_tld call per outlink.
+# a page's outlinks, and its gated admission candidates (link_gates)
 OUTLINK_TYPE = T.ArrayType(T.StructType([
     T.StructField("link_pos", T.IntegerType()),
     T.StructField("url", T.StringType()),
     T.StructField("host", T.StringType()),
 ]))
+# a stash candidate carries its registrable domain, the url_store's key.
+# The gate kernel computes it with one python sld_tld per outlink:
+# ~0.36 us a call on a 4-core box (timeit, 4 host shapes), against
+# ~0.4 ms of decode and extract per page (a 20k-page round in-process)
+STASH_LINK_TYPE = T.ArrayType(T.StructType(
+    OUTLINK_TYPE.elementType.fields
+    + [T.StructField("domain", T.StringType())]))
 
 EXTRACT_SCHEMA = T.StructType([
     T.StructField("pos", T.LongType()),
@@ -68,6 +71,9 @@ EXTRACT_SCHEMA = T.StructType([
     T.StructField("enumeration", T.BooleanType()),
     T.StructField("subdomain_explosion", T.BooleanType()),
     T.StructField("outlinks", OUTLINK_TYPE),
+    # the crawl's admission candidates (link_gates); NULL without gates
+    T.StructField("same_links", OUTLINK_TYPE),
+    T.StructField("stash_links", STASH_LINK_TYPE),
     # DLQ (T8, queue/file.go:167-204): non-null = the decode/extract
     # exception for this row; the row is quarantined instead of failing
     # the whole stage, and the engine routes it to the quarantine artifact
@@ -75,13 +81,15 @@ EXTRACT_SCHEMA = T.StructType([
 ])
 
 
-def make_extractor_arrow(n_partitions: int = 8, emit_text: bool = True):
+def make_extractor_arrow(n_partitions: int = 8, emit_text: bool = True,
+                         gates=None):
     """mapInArrow variant: converts each RecordBatch to pandas with the
     binary payload column REPLACED by zero-copy numpy views into the Arrow
     data buffer. Measured on this host: the stock Arrow→pandas conversion
     of large binary columns anti-scales with worker count (per-element
     PyBytes allocation → allocator/page-fault contention); the zero-copy
-    path restores linear scaling of the decode stage."""
+    path restores linear scaling of the decode stage. ``gates``: the
+    crawl's :func:`link_gates` kernel (None: the link columns NULL)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -108,7 +116,7 @@ def make_extractor_arrow(n_partitions: int = 8, emit_text: bool = True):
                 if blob_views is not None else None
             if "golden_pixels" in names:
                 pdf["golden_pixels"] = pd.Series(golden_views, dtype=object)
-            for out in _extract(iter([pdf]), n_partitions):
+            for out in _extract(iter([pdf]), n_partitions, gates):
                 if not emit_text:
                     # features computed; the raw text payload itself is only
                     # needed when documents are collected
@@ -149,20 +157,59 @@ def _binary_views(arr):
             for i in range(n)]
 
 
-def _extract(it: Iterator[pd.DataFrame], n_partitions: int) -> Iterator[pd.DataFrame]:
+def link_gates(news: bool, max_depth: int):
+    """The crawl's admission gates as one per-page kernel, which
+    :func:`_extract` runs on every successful, unquarantined page in
+    both round plans: ``gate(outlinks, host, domain, depth) ->
+    (same_links, stash_links)``. ``same_links``: the links the seen-set
+    admission considers — dfs, those whose registrable domain
+    (``urlnorm.sld_tld``) is the page's, under the depth gate; news,
+    urlAllowed's exact-host, extension, article and ':'+'=' gates
+    (``functions.news.path_allowed_py`` over ``urlnorm.path_of``, as the
+    oracle) under maxDepth=1, robots left to the caller. ``stash_links``
+    (dfs): the cross-domain links, each with its ``domain``. NULL
+    outlinks, a page past the depth gate (``same_links``) and news
+    (``stash_links``) give NULL; a link with a NULL host fails both."""
+    if news:
+        from ..functions.news import NEWS_MAX_DEPTH, path_allowed_py
+
+        def gate(links, host, domain, depth):
+            if links is None or depth >= NEWS_MAX_DEPTH:
+                return None, None
+            return [link for link in links if link["host"] == host
+                    and path_allowed_py(path_of(link["url"]))], None
+        return gate
+
+    def gate(links, host, domain, depth):
+        if links is None:
+            return None, None
+        linked = [(link, sld_tld(link["host"])) for link in links
+                  if link["host"] is not None]
+        return ([link for link, d in linked if d == domain]
+                if depth < max_depth else None,
+                [{**link, "domain": d} for link, d in linked if d != domain])
+    return gate
+
+
+def _extract(it: Iterator[pd.DataFrame], n_partitions: int,
+             gates=None) -> Iterator[pd.DataFrame]:
     """Input batch columns: pos, url_canon, depth, host, bytes, fmt,
     caption, phash, pix_md5 [, golden_pixels].  Rows with null ``caption``
     are fetch misses (reference fetcher emits the error row,
-    worker/fetcher/http.go:37-100)."""
+    worker/fetcher/http.go:37-100). ``gates``: :func:`link_gates`'s
+    kernel, run on each successful, unquarantined page."""
     for pdf in it:
         n = len(pdf)
         out = {k: [None] * n for k in (
             "content_md5", "payload_ok", "phash_ok", "psnr", "title", "text",
             "text_len", "lang", "lang_conf", "sentiment", "countries",
             "companies", "enumeration", "subdomain_explosion", "outlinks",
-            "quarantined")}
+            "same_links", "stash_links", "quarantined")}
         success = pdf["caption"].notna().to_numpy()
         has_golden = "golden_pixels" in pdf.columns
+        hosts = pdf["host"].tolist()
+        domains = [sld_tld(h) for h in hosts]
+        depths = pdf["depth"].tolist()
         for i in range(n):
             if not success[i]:
                 continue
@@ -175,14 +222,17 @@ def _extract(it: Iterator[pd.DataFrame], n_partitions: int) -> Iterator[pd.DataF
                 for k in out:
                     out[k][i] = None
                 out["quarantined"][i] = f"{type(ex).__name__}: {ex}"
+                continue
+            if gates is not None:
+                out["same_links"][i], out["stash_links"][i] = gates(
+                    out["outlinks"][i], hosts[i], domains[i], depths[i])
 
-        hosts = pdf["host"].tolist()
         yield pd.DataFrame({
             "pos": pdf["pos"].astype("int64"),
             "url_canon": pdf["url_canon"],
             "depth": pdf["depth"].astype("int32"),
             "host": pdf["host"],
-            "domain": [sld_tld(h) for h in hosts],
+            "domain": domains,
             "partition_id": np.int32([partition_of(h, n_partitions) for h in hosts]),
             "success": success,
             "http_code": np.where(success, 200, 404).astype("int32"),

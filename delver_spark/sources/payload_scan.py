@@ -55,7 +55,7 @@ def payload_splits(pages_path: str) -> list[tuple[str, int]]:
 
 def fetch_extract_direct(spark: SparkSession, pages_path: str,
                          keys_tbl, n_partitions: int,
-                         emit_text: bool = False) -> DataFrame:
+                         emit_text: bool = False, gates=None) -> DataFrame:
     """Fetch (J1) + decode/extract (X1-X11) in ONE Python pass per
     row-group split.
 
@@ -64,6 +64,8 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
     (pickles via IPC bytes; no per-key python objects on the driver).
     Any further key column (the crawl's optional ``golden_pixels``)
     reaches ``_extract`` as an input column of the same name.
+    ``gates``: the crawl's ``extract.link_gates`` kernel (None leaves
+    the gated link columns NULL).
     Returns ``(df, key_bc)``: a DataFrame with EXTRACT_SCHEMA covering
     the HIT rows only (payload found; misses are the caller's cheap
     anti-join on the url column) and the key broadcast, which the caller
@@ -149,7 +151,7 @@ def fetch_extract_direct(spark: SparkSession, pages_path: str,
                     "pix_md5": sub.column("pix_md5").to_pylist(),
                     **cols,
                 })
-                for out in _extract(iter([inp]), n_partitions):
+                for out in _extract(iter([inp]), n_partitions, gates):
                     if not emit_text:
                         out["text"] = None
                     yield pa.RecordBatch.from_pandas(

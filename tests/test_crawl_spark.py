@@ -6,6 +6,8 @@ import os
 import numpy as np
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from delver_spark.oracle.crawler import run_oracle
 
@@ -578,18 +580,17 @@ def test_host_budgets_survive_resume(spark, tmp_path_factory):
 
 def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
     """The frontier of the unit crawl stays a driver Arrow table, so
-    the seed launches no Spark job and each steady small-G dfs round,
-    rounds 1-4, at most 2: the dequeue is the driver kernel, the
-    extract comes back in one collect (plus the payload broadcast), and
-    the round finishes on the driver; the url_store's stash unions add
-    none. The corpus has golden pixels: they ride the dequeued keys, so
-    they add no job. A checkpoint launches at most one, the url_store's
-    write (pyarrow writes the frontier). A resume launches one, the
-    engine construction's schema inference of the payload table: it
-    reads the committed url_store lazily and the frontier with pyarrow.
-    Jobs are counted from the status tracker, ungrouped — a thread
-    pool's threads do not inherit a job group, so a group tag would miss
-    their jobs."""
+    the seed launches no Spark job and neither does a steady small-G dfs
+    round, rounds 1-4: the dequeue is the driver kernel, the fetch one
+    pyarrow read, the extract runs in the driver process and the round
+    finishes there; the url_store's stash unions are local relations.
+    The corpus has golden pixels: they ride the dequeued keys, read with
+    pyarrow too. A checkpoint launches at most one, the url_store's
+    write (pyarrow writes the frontier). A resume launches none: the
+    engine construction reads no table, the committed url_store is a
+    lazy read and the frontier is read with pyarrow. Jobs are counted
+    from the status tracker, ungrouped — a thread pool's threads do not
+    inherit a job group, so a group tag would miss their jobs."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
@@ -611,21 +612,21 @@ def test_small_g_round_job_budget(spark, unit_corpus, tmp_path_factory):
         ok, n = jobs_of(eng.run_round)
         assert ok and _on_driver(eng)
         jobs.append(n)
-    assert all(0 < n <= 2 for n in jobs), jobs
+    assert jobs == [0, 0, 0, 0], jobs
     _, n = jobs_of(eng.checkpoint)
     assert _on_driver(eng) and n <= 1
     resumed, n = jobs_of(lambda: CrawlEngine.resume(spark, unit_corpus, wd))
     assert resumed.round == 5 and _on_driver(resumed)
-    assert n <= 1
+    assert n == 0
 
 
 def test_big_g_small_round_job_budget(spark, tmp_path_factory,
                                       monkeypatch):
     """A G=20000 engine whose frontier holds a few dozen urls plans each
     round by that bound, not by G: a steady round takes the small-round
-    plan over the driver frontier table and launches at most 2 Spark
-    jobs, the budget of test_small_g_round_job_budget (the big-round
-    plan launches ~16)."""
+    plan over the driver frontier table and launches no Spark job, the
+    budget of test_small_g_round_job_budget (the big-round plan launches
+    ~16)."""
     from delver_spark.fixtures.gen import generate_corpus
     from delver_spark.operators import crawl
     from delver_spark.operators.crawl import CrawlEngine
@@ -644,7 +645,7 @@ def test_big_g_small_round_job_budget(spark, tmp_path_factory,
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
     assert hints == [False, False] and _on_driver(eng)
-    assert 0 < len(jobs) <= 2, sorted(jobs)
+    assert len(jobs) == 0, sorted(jobs)
 
 
 @pytest.fixture(scope="module")
@@ -769,19 +770,109 @@ def test_mixed_plan_crawl_matches_oracle(spark, mixed_plan_corpus,
         assert spark.read.parquet(*parts).count() == n, name
 
 
-def test_page_candidate_counts_equal_explode_groupby(spark):
-    """The per-page ``same_n``/``stash_n`` columns summed per partition
-    equal the explode + groupBy counts they replace, and the gated link
-    arrays both round plans admit from (``_page_links``) hold exactly
-    the exploded candidates, on pages that hit every branch: failed
-    fetches (NULL and empty outlinks, and a failed page that still
-    carries outlinks), quarantined rows, single-token hosts (the no-dot
-    domain branch), NULL link hosts and pages at max_depth."""
+def _jvm_outlink_domain(host_col):
+    """GetSLDAndTLD (util/util.go:92-101) as a JVM column expression:
+    last two dot-tokens, single token as-is — the JVM form of
+    ``urlnorm.sld_tld`` the admission gates ran before
+    ``extract.link_gates``, kept as the kernel's reference."""
     from pyspark.sql import functions as F
 
+    toks = F.split(host_col, "\\.")
+    return F.when(F.size(toks) <= 1, host_col) \
+        .otherwise(F.array_join(F.slice(toks, -2, 2), "."))
+
+
+def _jvm_page_links(news: bool, max_depth: int) -> dict:
+    """The admission gates as JVM higher-order filters over
+    ``outlinks`` of an extract frame, the reference for
+    ``extract.link_gates``: ``{name: Column}``. Failed pages and NULL
+    outlinks give NULL; a NULL domain on either side fails both gates.
+    News takes the path with ``parse_url``, NULL read as ''."""
+    from pyspark.sql import functions as F
+
+    from delver_spark.functions.news import NEWS_MAX_DEPTH, news_url_allowed
+
+    ok = F.col("success")
+    if news:
+        def allowed(link):
+            path = F.coalesce(F.parse_url(link["url"], F.lit("PATH")),
+                              F.lit(""))
+            return news_url_allowed(path, link["host"], F.col("host"))
+
+        return {"same_links": F.when(
+            ok & (F.col("depth") < NEWS_MAX_DEPTH),
+            F.filter("outlinks", allowed))}
+    linked = F.transform("outlinks", lambda link: link.withField(
+        "domain", _jvm_outlink_domain(link["host"])))
+    return {
+        "same_links": F.when(
+            ok & (F.col("depth") < max_depth),
+            F.filter("outlinks", lambda link:
+                     _jvm_outlink_domain(link["host"]) == F.col("domain"))),
+        "stash_links": F.when(ok, F.filter(
+            linked, lambda link: link["domain"] != F.col("domain")))}
+
+
+def _extract_rows(pages):
+    """Extract-frame rows (EXTRACT_SCHEMA dicts) of ``pages``: (pos,
+    depth, host, partition_id, success, outlinks, quarantined), the
+    domain derived from the host as the extractor does."""
     from delver_spark.engine.urlnorm import sld_tld
-    from delver_spark.operators.crawl import (_outlink_domain, _page_links,
-                                              _page_cand_counts)
+    from delver_spark.operators.extract import EXTRACT_SCHEMA
+
+    full = {f.name: None for f in EXTRACT_SCHEMA.fields}
+    names = ["pos", "depth", "host", "partition_id", "success", "outlinks",
+             "quarantined"]
+    return [dict(full, **dict(zip(names, p)), url_canon=f"http://p{p[0]}/",
+                 domain=sld_tld(p[2])) for p in pages]
+
+
+def _kernel_links(rows, news: bool, max_depth: int) -> list:
+    """``(same_links, stash_links)`` of each row as ``_extract`` emits
+    them: the gate kernel on successful, unquarantined pages, else
+    NULL."""
+    from delver_spark.operators.extract import link_gates
+
+    gate = link_gates(news, max_depth)
+    return [gate([dict(zip(("link_pos", "url", "host"), link))
+                  for link in r["outlinks"]] if r["outlinks"] is not None
+                 else None, r["host"], r["domain"], r["depth"])
+            if r["success"] and r["quarantined"] is None else (None, None)
+            for r in rows]
+
+
+def _as_tuples(links):
+    if links is None:
+        return None
+    return [tuple(link.values()) if isinstance(link, dict) else tuple(link)
+            for link in links]
+
+
+def _jvm_links(spark, rows, news: bool, max_depth: int) -> list:
+    """``(same_links, stash_links)`` of each row by the JVM reference."""
+    from pyspark.sql import functions as F
+
+    from delver_spark.operators.extract import EXTRACT_SCHEMA
+
+    cols = _jvm_page_links(news, max_depth)
+    got = {r["pos"]: r for r in spark.createDataFrame(rows, EXTRACT_SCHEMA)
+           .select("pos", *[c.alias(n) for n, c in cols.items()]).collect()}
+    return [tuple(_as_tuples(got[r["pos"]][n]) if n in cols else None
+                  for n in ("same_links", "stash_links")) for r in rows]
+
+
+def test_page_candidate_counts_equal_explode_groupby(spark):
+    """The sizes of the extractor's gated link arrays
+    (``extract.link_gates``), which the big round sums per partition
+    for its lineage, equal the explode + groupBy counts of the gates
+    applied after the explode, and the arrays equal the JVM gates'
+    (``_jvm_page_links``), on pages that hit every branch: failed
+    fetches (NULL and empty outlinks, and a failed page that still
+    carries outlinks), quarantined rows (their outlinks NULL, as the
+    extractor emits them), single-token hosts (the no-dot domain
+    branch), NULL link hosts and pages at max_depth."""
+    from pyspark.sql import functions as F
+
     from delver_spark.operators.extract import EXTRACT_SCHEMA
 
     max_depth = 2
@@ -790,8 +881,8 @@ def test_page_candidate_counts_equal_explode_groupby(spark):
         return [(i, f"http://{h}/p{i}" if h else "http://x/", h)
                 for i, h in enumerate(hosts)]
 
-    # (pos, depth, domain, partition_id, success, outlinks, quarantined)
-    pages = [
+    # (pos, depth, host, partition_id, success, outlinks, quarantined)
+    rows = _extract_rows([
         (0, 0, "a.test", 0, True, links("a.test", "www.a.test", "b.test",
                                         "localhost"), None),
         (1, 1, "a.test", 0, True, links("sub.a.test", "c.test"), None),
@@ -801,27 +892,25 @@ def test_page_candidate_counts_equal_explode_groupby(spark):
         (5, 0, "a.test", 4, False, [], None),  # failed, empty outlinks
         (6, 0, "a.test", 4, False, links("a.test", "b.test"), None),
         (7, 0, "a.test", 4, False, None, "ValueError: bad payload"),
-        (8, 0, "a.test", 2, True, links("a.test"), "ValueError: late"),
+        (8, 0, "a.test", 2, True, None, "ValueError: late"),
         (9, 0, "localhost", 3, True, links("localhost", "intranet",
                                            "a.test"), None),  # no dot
         (10, 1, "intranet", 3, True, links(None, "intranet"), None),
         (11, 0, "a.test", 3, True, [], None),  # success, no links
-    ]
-    names = ["pos", "depth", "domain", "partition_id", "success",
-             "outlinks", "quarantined"]
-    full = {f.name: None for f in EXTRACT_SCHEMA.fields}
-    rows = [dict(full, **dict(zip(names, p)), url_canon=f"http://p{p[0]}/",
-                 host=p[2]) for p in pages]
-    extracted = spark.createDataFrame(rows, EXTRACT_SCHEMA)
+        (12, 0, "www.a.test", 2, True, links("a.test", "b.a.test"), None),
+    ])
+    got = _kernel_links(rows, False, max_depth)
+    assert [tuple(map(_as_tuples, g)) for g in got] == \
+        _jvm_links(spark, rows, False, max_depth)
 
-    # the reference: one row per successful page's outlink, gated after
-    # the explode
+    # the reference counts: one row per successful page's outlink, gated
+    # after the explode
+    extracted = spark.createDataFrame(rows, EXTRACT_SCHEMA)
     cands = (extracted.filter("success")
-             .select("pos", "partition_id",
-                     F.col("depth").alias("page_depth"),
+             .select("partition_id", F.col("depth").alias("page_depth"),
                      F.col("domain").alias("page_domain"),
                      F.explode("outlinks").alias("l"))
-             .withColumn("domain", _outlink_domain(F.col("l.host"))))
+             .withColumn("domain", _jvm_outlink_domain(F.col("l.host"))))
     is_same = (F.col("domain") == F.col("page_domain")) \
         & (F.col("page_depth") < max_depth)
     is_stash = F.col("domain") != F.col("page_domain")
@@ -830,26 +919,135 @@ def test_page_candidate_counts_equal_explode_groupby(spark):
                 F.sum(F.when(is_same, 1).otherwise(0)).alias("same_n"),
                 F.sum(F.when(is_stash, 1).otherwise(0)).alias("stash_n"))
             .collect()}
-    for name, gate in (("same_links", is_same), ("stash_links", is_stash)):
-        ref = sorted((r["pos"], r["link_pos"], r["url"], r["host"])
-                     for r in cands.filter(gate)
-                     .select("pos", "l.link_pos", "l.url", "l.host")
-                     .collect())
-        arrays = extracted.select(
-            "pos", F.explode(_page_links(False, max_depth)[name]).alias("l"))
-        assert sorted((r["pos"], r["link_pos"], r["url"], r["host"])
-                      for r in arrays.select("pos", "l.*").collect()) == ref
-    stash = extracted.select(F.explode(_page_links(False, max_depth)
-                                       ["stash_links"]).alias("l"))
-    assert all(r["domain"] == sld_tld(r["host"])
-               for r in stash.select("l.*").collect())
-    got = {r["partition_id"]: (r["same_n"], r["stash_n"]) for r in
-           extracted.select("partition_id", *_page_cand_counts(
-               _page_links(False, max_depth)))
-           .groupBy("partition_id")
-           .agg(F.sum("same_n").alias("same_n"),
-                F.sum("stash_n").alias("stash_n")).collect()}
+    sizes: dict = {}
+    for r, (same, stash) in zip(rows, got):
+        n = sizes.setdefault(r["partition_id"], [0, 0])
+        n[0] += len(same or [])
+        n[1] += len(stash or [])
     # partition 4 holds only failed pages: no candidates, so no group
-    assert got.pop(4) == (0, 0)
-    assert got == want
-    assert want == {0: (3, 3), 1: (0, 1), 2: (1, 0), 3: (2, 2)}
+    assert sizes.pop(4) == [0, 0]
+    assert {p: tuple(n) for p, n in sizes.items()} == want
+    assert want == {0: (3, 3), 1: (0, 1), 2: (2, 0), 3: (2, 2)}
+
+
+# hosts: 1-3 labels, so no-dot, empty-label and trailing-dot hosts occur
+_HOSTS = st.lists(st.sampled_from(["a", "b", "www", "sub", "test", "x", ""]),
+                  min_size=1, max_size=3).map(".".join)
+# path segments that hit every news gate: article, blacklisted first
+# tokens (as substrings too), long slugs, blacklisted extensions, ':'
+# and '='
+_SEGMENTS = st.sampled_from([
+    "article", "article", "articles", "news", "tag", "stags", "img",
+    "2024", "a-very-long-story-slug-here", "a-very-long-story-slug-here",
+    "photo.jpg", "x.JPG", "doc.pdf", "a:b=c", "a:b", "q=1", ""])
+
+
+@st.composite
+def _outlink(draw, link_pos, page_host):
+    """One outlink: a canonical-form url (a port and a query string
+    sometimes; an empty path sometimes) or an opaque 'http:' url, whose
+    ``parse_url`` PATH is NULL; on the page's host, a subdomain of it or
+    another host; its ``host`` field the url's, the page's, another one
+    or NULL."""
+    from delver_spark.engine.urlnorm import host_of
+
+    host = draw(st.sampled_from([page_host, "www." + page_host,
+                                 draw(_HOSTS)]))
+    path = "/".join(draw(st.lists(_SEGMENTS, max_size=4)))
+    if draw(st.booleans()):
+        url = f"http://{host or 'h'}{draw(st.sampled_from(['', ':8080']))}" \
+            f"/{path}{draw(st.sampled_from(['', '?a=1:b', '?id=7']))}"
+    else:
+        url = f"http:{path or 'x'}"
+    link_host = draw(st.sampled_from([host_of(url), page_host, None,
+                                      draw(_HOSTS)]))
+    return link_pos, url, link_host
+
+
+@st.composite
+def _pages(draw):
+    """Extract-frame rows: successful, failed (NULL or some outlinks)
+    and quarantined pages (NULL outlinks) at depths 0-3."""
+    rows = []
+    for pos in range(draw(st.integers(20, 60))):
+        kind = draw(st.sampled_from(["ok", "ok", "ok", "failed",
+                                     "quarantined"]))
+        host = draw(_HOSTS)
+        links = [draw(_outlink(i, host))
+                 for i in range(draw(st.integers(0, 5)))]
+        if kind == "quarantined" or draw(st.integers(0, 9)) == 0:
+            links = None
+        rows.append((pos, draw(st.sampled_from([0, 0, 1, 2, 3])), host,
+                     pos % 3,
+                     kind != "failed", links,
+                     "ValueError: x" if kind == "quarantined" else None))
+    return _extract_rows(rows)
+
+
+@settings(max_examples=8, deadline=None)
+@given(pages=_pages())
+def test_dfs_link_gates_equal_jvm_gates(spark, pages):
+    """dfs: the extractor's gate kernel equals the JVM gates per page,
+    NULL arrays included."""
+    got = _kernel_links(pages, False, 2)
+    assert [tuple(map(_as_tuples, g)) for g in got] == \
+        _jvm_links(spark, pages, False, 2)
+
+
+@settings(max_examples=8, deadline=None)
+@given(pages=_pages())
+def test_news_link_gates_equal_jvm_gates(spark, pages):
+    """news: the extractor's gate kernel equals the JVM gates per page,
+    but for a link whose ``parse_url`` PATH is NULL (an opaque url): the
+    JVM gates read its path as '' and reject it, the kernel reads it
+    with ``urlnorm.path_of`` as the oracle does. Hosts compare without
+    the port, as the oracle's ``host_of`` (``url_allowed_py`` compares
+    ``netloc``: test_news_gate_differences_pinned)."""
+    from delver_spark.engine.urlnorm import path_of
+    from delver_spark.functions.news import path_allowed_py
+
+    got = _kernel_links(pages, True, 0)
+    jvm = _jvm_links(spark, pages, True, 0)
+    for r, (same, stash), (ref, ref_stash) in zip(pages, got, jvm):
+        assert stash is None and ref_stash is None
+        if ref is not None:
+            kept = {link[0] for link in ref}
+            ref = [link for link in _as_tuples(r["outlinks"])
+                   if link[0] in kept or link[1].startswith("http:")
+                   and not link[1].startswith("http://")
+                   and link[2] is not None and link[2] == r["host"]
+                   and path_allowed_py(path_of(link[1]))]
+        assert _as_tuples(same) == ref
+
+
+def test_news_gate_differences_pinned(spark):
+    """Where the news gate kernel and its neighbours differ, on purpose:
+    a link with a port passes the kernel's host gate, as the JVM gates'
+    and the oracle's (``host_of`` drops the port), while
+    ``url_allowed_py`` compares ``netloc`` and rejects it; and a
+    canonical url that ``java.net.URI`` rejects (a space in the path)
+    passes the kernel, as the oracle's ``path_of`` gate, while the JVM
+    gates' ``parse_url`` fails the job under ANSI mode (or, without it,
+    reads a NULL path and rejects the link)."""
+    from delver_spark.engine.urlnorm import canonicalize, host_of
+    from delver_spark.functions.news import url_allowed_py
+
+    story = "/article/" + "a-long-story-slug-for-the-test"
+    ported = canonicalize("http://a.test:8080" + story)
+    spaced = canonicalize("http://a.test" + story + " x")
+    assert ported.endswith(story) and spaced.endswith(" x")
+    rows = _extract_rows([
+        (0, 0, "a.test", 0, True, [(0, ported, host_of(ported))], None),
+        (1, 0, "a.test", 0, True, [(0, spaced, host_of(spaced))], None)])
+    got = _kernel_links(rows, True, 0)
+    assert [_as_tuples(same) for same, _ in got] == \
+        [[(0, ported, "a.test")], [(0, spaced, "a.test")]]
+    assert not url_allowed_py(ported, "http://a.test/")
+    assert url_allowed_py(spaced, "http://a.test/")
+    assert _jvm_links(spark, rows[:1], True, 0)[0][0] == \
+        [(0, ported, "a.test")]
+    if spark.conf.get("spark.sql.ansi.enabled") == "true":
+        with pytest.raises(Exception, match="INVALID_URL"):
+            _jvm_links(spark, rows[1:], True, 0)
+    else:
+        assert _jvm_links(spark, rows[1:], True, 0)[0][0] == []

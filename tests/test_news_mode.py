@@ -79,8 +79,8 @@ def test_news_articles_match_oracle(news_oracle, news_engine):
 def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     """The news twin of test_crawl_spark::test_small_g_round_job_budget:
     a steady small news round over the driver frontier table launches
-    at most 2 Spark jobs. Its robots gate runs on the driver over the
-    collected candidates, so no separate count job rides along."""
+    no Spark job. Its robots gate runs on the driver over the
+    extractor's candidates, so no count job rides along either."""
     from delver_spark.operators.crawl import CrawlEngine
 
     sc = spark.sparkContext
@@ -93,7 +93,7 @@ def test_news_small_round_job_budget(spark, news_corpus, tmp_path):
     assert eng.run_round()
     jobs = set(st.getJobIdsForGroup(None)) - before
     assert isinstance(eng.frontier, pa.Table)
-    assert 0 < len(jobs) <= 2, sorted(jobs)
+    assert len(jobs) == 0, sorted(jobs)
 
 
 def test_rss_feeds_news_pipeline(spark, news_corpus, tmp_path_factory):

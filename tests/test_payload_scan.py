@@ -69,3 +69,45 @@ def test_direct_scan_passes_golden_pixels_to_duplicates(spark, unit_corpus,
     assert [r["pos"] for r in got] == [0, 1, 2]
     assert all(r["psnr"] >= 40.0 and r["payload_ok"] for r in got)
     assert got[0]["psnr"] == got[2]["psnr"]
+
+
+def test_driver_fetch_duplicates_and_misses(spark, unit_corpus, tmp_path):
+    """A small round's fetch on the driver (``CrawlEngine.
+    _fetch_on_driver``), with no Spark job: a url dequeued twice gets
+    its payload and its golden pixels at both positions, and a url with
+    no payload row extracts as a failed fetch (``success`` False, no
+    content), as the big plan's misses do. Rows come back in ``pos``
+    order."""
+    import hashlib
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from delver_spark.engine.urlnorm import host_of
+    from delver_spark.operators.crawl import CrawlEngine
+
+    pages = pq.read_table(os.path.join(unit_corpus, "pages.parquet"),
+                          columns=["url_canon", "fmt", "bytes"])
+    md5 = {u: hashlib.md5(b).hexdigest() for u, b in zip(
+        pages.column("url_canon").to_pylist(),
+        pages.column("bytes").to_pylist())}
+    lossy = sorted(pages.filter(pc.equal(pages.column("fmt"), "qjpg"))
+                   .column("url_canon").to_pylist())[0]
+    other = sorted(pages.filter(pc.equal(pages.column("fmt"), "ppm"))
+                   .column("url_canon").to_pylist())[0]
+    missing = "http://missing.test/none"
+    rows = [(lossy, 3, 1, host_of(lossy)), (other, 1, 0, host_of(other)),
+            (missing, 2, 0, "missing.test"), (lossy, 0, 0, host_of(lossy))]
+    eng = CrawlEngine(spark, unit_corpus, str(tmp_path))
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    got = eng._fetch_on_driver(_keys(rows)).to_pydict()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+    assert got["pos"] == [0, 1, 2, 3]
+    assert got["url_canon"] == [lossy, other, missing, lossy]
+    assert got["success"] == [True, True, False, True]
+    assert got["content_md5"] == [md5[lossy], md5[other], None, md5[lossy]]
+    assert got["psnr"][0] == got["psnr"][3] >= 40.0
+    assert got["payload_ok"] == [True, True, None, True]
+    assert got["outlinks"][2] is None and got["same_links"][2] is None

@@ -51,8 +51,9 @@ def test_anti_join_strategy(spark):
 
 
 def test_in_filter_pushdown_for_fetch(spark, tmp_path):
-    """The small-round fetch path pushes the batch's IN-list into the
-    payload scan (operators/crawl.py)."""
+    """A batch's IN-list over the payload table's url column pushes
+    into the parquet scan, the row-group pruning a Spark-side keyed
+    fetch relies on."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -66,31 +67,6 @@ def test_in_filter_pushdown_for_fetch(spark, tmp_path):
     pruned = pages.filter(F.col("url_canon").isin(["u1", "u2", "u3"]))
     plan = _plan(pruned)
     assert "PushedFilters" in plan and "url_canon" in plan.split("PushedFilters")[1].split("\n")[0]
-
-
-def test_engine_in_list_exact_and_pushed(spark, tmp_path):
-    """The engine builds the fetch IN-list from one SQL string
-    (crawl._in_list): quotes, backslashes, escape-like sequences and
-    non-ASCII must match exactly, and the predicate must still push
-    down to the payload scan."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from delver_spark.operators.crawl import _in_list
-
-    odd = ["http://a.test/it's", "http://a.test/back\\slash",
-           "http://a.test/\\n\\u0041%_", "http://ü.test/ß?q='x'",
-           'http://a.test/"dq"']
-    urls = [f"u{i}" for i in range(50)] + odd + ["http://a.test/its"]
-    d = tmp_path / "pages.parquet"
-    d.mkdir()
-    pq.write_table(pa.table({"url_canon": urls}), str(d / "part-0.parquet"))
-    pages = spark.read.parquet(str(d))
-    want = odd + ["u7"]
-    pruned = pages.filter(_in_list("url_canon", want))
-    assert sorted(r.url_canon for r in pruned.collect()) == sorted(want)
-    plan = _plan(pruned)
-    assert "url_canon" in plan.split("PushedFilters")[1].split("\n")[0]
 
 
 def test_whole_stage_codegen_on_textstats(spark):
